@@ -137,10 +137,8 @@ def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
     # set*, so multi-observer reference runs read a different (true
     # right-neighbor) cell there; parity is defined against the
     # per-observer crop, the only extent that is observer-independent.
-    cell_ids = np.arange(ncell)
-    shifted = cell_ids + 1
+    shifted = np.arange(ncell) + 1
     s_rows, s_cols = divmod(shifted, nc)      # may run off the last row
-    in_patch = shifted < ncell
     # patch-center xy in patch coordinates (cell units → meters)
     sx = (s_cols + 0.5) * res
     sy = -(s_rows + 0.5) * res                # ymax - (row+0.5)res, ymax=0
@@ -150,26 +148,32 @@ def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
     ring = np.floor(d_m + 0.5).astype(np.int64)   # round half away (d>0)
     ring = np.maximum(ring, 1)
 
+    # per-(observer, ring) visible-cell and green counts in one pass
+    obs, cell = np.nonzero(vis)
     # greenspace value at the shifted coordinates → shifted cell, 0 if
-    # off-patch (cellFromXY → NA → 0, vgvi.cpp:158-162)
-    gs_shift = np.zeros((nobs, ncell))
-    gs_shift[:, in_patch] = gs_patches[:, shifted[in_patch]]
-    gs_int = gs_shift.astype(np.int64)        # int accumulation quirk
-
+    # off-patch (cellFromXY → NA → 0, vgvi.cpp:158-162), truncated to
+    # int (the reference's int accumulation)
+    sc = cell + 1
+    green = np.where(sc < ncell,
+                     gs_patches[obs, np.minimum(sc, ncell - 1)], 0.0) \
+        .astype(np.int64)
+    kd = int(ring.max())
+    key = obs * kd + ring[cell] - 1
+    total = np.bincount(key, minlength=nobs * kd).reshape(nobs, kd)
+    gsum = np.bincount(key, weights=green,
+                       minlength=nobs * kd).reshape(nobs, kd) \
+        .astype(np.int64)
+    max_d = kd - np.argmax(total[:, ::-1] > 0, axis=1)
+    total = np.where(total == 0, 1, total)
+    # observers sharing max_d share the decay weights; each one's
+    # normalised sum runs over exactly its max_d rings
     out = np.zeros(nobs)
-    for o in range(nobs):
-        vcells = np.nonzero(vis[o])[0]
-        rings = ring[vcells]
-        green = gs_int[o, vcells]
-        max_d = int(rings.max())
-        total = np.bincount(rings - 1, minlength=max_d)
-        gsum = np.bincount(rings - 1, weights=green,
-                           minlength=max_d).astype(np.int64)
-        total = np.where(total == 0, 1, total)
-        if max_d == 1:
-            out[o] = float(gsum[0] // total[0])   # C++ int division
+    for d in np.unique(max_d):
+        g = max_d == d
+        if d == 1:
+            out[g] = gsum[g, 0] // total[g, 0]    # C++ int division
             continue
-        raw = gsum.astype(float) / total
-        w = decay_weights(max_d, radius, fun, m, b)
-        out[o] = float((raw * (w / w.sum())).sum())
+        w = decay_weights(int(d), radius, fun, m, b)
+        raw = gsum[g, :d].astype(float) / total[g, :d]
+        out[g] = (raw * (w / w.sum())).sum(axis=1)
     return out

@@ -53,14 +53,19 @@ def dtm(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return 10.0 + 5.0 * np.sin(x / 2000.0) * np.sin(y / 2000.0)
 
 
+# a block's height from its hash h: 6 + h % 25 m where h % 7 < 2,
+# else none — a function of h mod lcm(7, 25)
+_HEIGHT_BY_H175 = np.where(np.arange(175) % 7 < 2,
+                           6.0 + np.arange(175) % 25, 0.0)
+
+
 def building_height(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """Hash-placed buildings on a 20 m block grid: ~28% of blocks carry
     a 6–30 m building; parks are kept building-free by dsm()."""
     bx = np.floor(x / BLOCK).astype(np.int64)
     by = np.floor(y / BLOCK).astype(np.int64)
     h = (bx * BH_MUL1 + by * BH_MUL2) % BH_MOD
-    has = (h % 7) < 2
-    return np.where(has, 6.0 + (h % 25).astype(float), 0.0)
+    return _HEIGHT_BY_H175[h % 175]
 
 
 def dsm(x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -74,35 +79,37 @@ def greenspace(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     return in_park(x, y).astype(float)
 
 
-def in_park_rows(px: np.ndarray, py: np.ndarray,
-                 ox: np.ndarray, oy: np.ndarray,
-                 reach: float) -> np.ndarray:
-    """Park mask for per-observer patch arrays px/py of shape
-    (n_obs, n_cells), pruned per park: a park is tested against a row
-    only if its disc can reach that observer's patch (center distance ≤
-    radius + reach).  Cuts the 60×full-array sweep of in_park() to the
-    handful of parks actually near each observer — the same
-    candidate-pruning idea as the J7 join, applied inside the kernel.
-    """
-    discs = park_discs()
-    out = np.zeros(px.shape, dtype=bool)
-    for cx, cy, r in discs:
-        rows = np.nonzero((ox - cx) ** 2 + (oy - cy) ** 2
-                          <= (r + reach) ** 2)[0]
-        if not len(rows):
-            continue
-        sub_x = px[rows]
-        sub_y = py[rows]
-        out[rows] |= (sub_x - cx) ** 2 + (sub_y - cy) ** 2 <= r * r
-    return out
-
-
-def patch_fields(px: np.ndarray, py: np.ndarray,
+def patch_fields(cx: np.ndarray, ry: np.ndarray,
                  ox: np.ndarray, oy: np.ndarray,
                  reach: float) -> tuple[np.ndarray, np.ndarray]:
-    """(dsm, greenspace) for per-observer patches, computing the park
-    mask once with per-observer pruning."""
-    base = dtm(px, py)
-    b = building_height(px, py)
-    park = in_park_rows(px, py, ox, oy, reach)
-    return np.where(park, base, base + b), park.astype(float)
+    """(dsm, greenspace), each (n_obs, n_rows·n_cols), for per-observer
+    patches whose cell (row, col) sits at (cx[:, col], ry[:, row]).
+
+    Every field is separable, so the sines, the building-block hash
+    terms and the park-disc distances are evaluated once per column
+    and once per row, then broadcast — the same IEEE operations, so
+    the values are those of dsm()/greenspace() at each cell centre.
+    A park is tested only against observers its disc can reach
+    (centre distance ≤ radius + reach), the same candidate pruning as
+    the J7 join, applied inside the kernel."""
+    n = len(cx)
+    col = lambda a: a[:, None, :]
+    row = lambda a: a[:, :, None]
+    base = 10.0 + col(5.0 * np.sin(cx / 2000.0)) * row(np.sin(ry / 2000.0))
+    # building_height's hash as (column term + row term) mod BH_MOD,
+    # each term reduced first (their sum fits uint32)
+    hx, hy = ((np.floor(c / BLOCK).astype(np.int64) * mul % BH_MOD)
+              .astype(np.uint32) for c, mul in ((cx, BH_MUL1),
+                                                (ry, BH_MUL2)))
+    h = col(hx) + row(hy)
+    np.subtract(h, np.uint32(BH_MOD), out=h, where=h >= BH_MOD)
+    b = _HEIGHT_BY_H175[h % np.uint32(175)]
+    park = np.zeros(base.shape, dtype=bool)
+    for pcx, pcy, r in park_discs():
+        near = np.nonzero((ox - pcx) ** 2 + (oy - pcy) ** 2
+                          <= (r + reach) ** 2)[0]
+        if len(near):
+            park[near] |= (col((cx[near] - pcx) ** 2)
+                           + row((ry[near] - pcy) ** 2) <= r * r)
+    dsm = np.where(park, base, base + b)
+    return dsm.reshape(n, -1), park.reshape(n, -1).astype(float)

@@ -3,37 +3,45 @@
 Re-expresses GreenExp_R's `calc_ndvi` (ndvi_calc.R:332-344),
 `land_cover` (land_cover.R:368-399), `greenspace_pct`
 (park_coverage.R:337-358) and `canopy_pct` (canopy_coverage.R:334-345)
-as Spark plans:
+as Spark plans.  A buffer covers the raster cells whose *center* lies
+in its disc (covered_cells); the raster is "virtual": cell values are
+a closed-form function of the cell index (world.ndvi_int_expr), so no
+tile shuffle is needed.  The tile-table join variant (real raster
+arrays) lives in `operators/zonal_tiles.py` — same outputs, exercised
+by pytest.
 
-    points → enumerate covered raster cells (explode(sequence)) →
-    disc-membership filter → integer-exact aggregate per point.
+Two plan shapes:
+  * NDVI (ndvi_zonal): an Arrow-batched mapInPandas over (point_id,
+    x, y) → the row-interval kernel (kernels/ndvi_intervals.py) sums
+    the integer field and its square along each raster row's chord of
+    the disc from per-row prefix sums — ~2R/res differences per point
+    instead of ~π(R/res)² cells — then a per-point sum and the final
+    float expressions in Spark.  Prefix tables are tiles cached per
+    Python worker under a fixed cap.
+  * land cover and the cover percentages: points → explode(sequence)
+    of covered cells → disc-membership filter → integer aggregate per
+    point, all whole-stage-codegen JVM arithmetic.  Overlay joins use
+    the J7 shape (SURVEY.md §2.3): coarse bucket equi-join (hash
+    join, broadcastable small side) → exact distance refine.  Never a
+    nested-loop theta join.
 
-The raster is "virtual": cell values are a closed-form function of the
-cell index (world.ndvi_int_expr), so the zonal extract (J1) costs one
-narrow explode instead of a tile shuffle.  The tile-table join variant
-(real raster arrays) lives in `operators/zonal_tiles.py` — same
-outputs, exercised by pytest; this module is the Catalyst-native path.
-
-Scale notes (100 TB posture):
-  * the explode fans each point to ~(2R/res)² cells *map-side* — no
-    shuffle until the per-point aggregate, which Spark executes as
-    partial (map-side) + final hash aggregation; shuffle volume is
-    O(points), not O(points × cells).
-  * overlay joins use the J7 shape (SURVEY.md §2.3): coarse bucket
-    equi-join (hash join, broadcastable small side) → exact distance
-    refine.  Never a nested-loop theta join.
-  * everything is whole-stage-codegen JVM arithmetic; zero Python.
-  * integer sums (world.ndvi_int_expr) make results bit-identical
-    across engines and partition orders — also the right call at scale,
-    where float sums are nondeterministic under retries/AQE re-splits.
+Either way shuffle volume is O(points), not O(points × cells), and
+integer sums (world.ndvi_int_expr) make results bit-identical across
+engines and partition orders — also the right call at scale, where
+float sums are nondeterministic under retries/AQE re-splits.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import constants as C
 from .. import world
+from ..kernels import ndvi_intervals as NI
 
 
 def covered_cells(points: DataFrame, buffer_m: float, res: int) -> DataFrame:
@@ -61,15 +69,34 @@ def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
     Parity target: ndvi_calc.R:332-344 (NA→0 at :336, mean at :339,
     sample sd at :341-344).  Output: (point_id, mean_ndvi[, sd_ndvi],
     n_cells).
+
+    The integer moments come from the row-interval kernel
+    (kernels/ndvi_intervals.py) over Arrow batches of points: the
+    same cells as covered_cells, summed from per-row prefix sums.
     """
-    cells = covered_cells(points.select("point_id", "x", "y"),
-                          buffer_m, C.NDVI_RES)
-    v = F.expr(world.ndvi_int_expr("ci", "cj"))
-    agg = cells.groupBy("point_id").agg(
-        F.sum(v).alias("s1"),
-        F.sum(v * v).alias("s2"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
+    pts = points.select("point_id", "x", "y")
+    schema = StructType([
+        StructField("point_id", pts.schema["point_id"].dataType),
+        StructField("s1", LongType()),
+        StructField("s2", LongType()),
+        StructField("n_cells", LongType()),
+    ])
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            # a null coordinate enumerates no cells (sequence → null)
+            pdf = pdf[pdf["x"].notna() & pdf["y"].notna()]
+            s1, s2, n = NI.disc_sums(pdf["x"].to_numpy(),
+                                     pdf["y"].to_numpy(), buffer_m)
+            out = pd.DataFrame({"point_id": pdf["point_id"].to_numpy(),
+                                "s1": s1, "s2": s2, "n_cells": n})
+            # a disc holding no cell centre gets no row, as in the
+            # oracle's GROUP BY over covered cells
+            yield out[out["n_cells"] > 0]
+
+    # a point id may arrive in several rows: its moments add up
+    agg = pts.mapInPandas(run, schema).groupBy("point_id").agg(
+        *(F.sum(c).alias(c) for c in ("s1", "s2", "n_cells")))
     n = F.col("n_cells")
     mean = F.col("s1").cast("double") / (F.lit(800.0) * n)
     out = [F.col("point_id"), mean.alias("mean_ndvi")]

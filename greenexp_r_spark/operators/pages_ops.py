@@ -187,22 +187,31 @@ def pages_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                     status.alias("status"))
 
 
+def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (small, text-free) geocoded snapshot every exposure family
+    reads: (point_id, url, warc_ts, x, y, n_chars), one row per url.
+
+    Materialized once: without the checkpoint the snapshot shuffle +
+    parquet scan replays in each family branch (measured: 5 scans /
+    3 snapshot exchanges, zero ReusedExchange) — at corpus scale that
+    triples the ingest cost.  localCheckpoint output is O(urls) rows
+    of ~90 bytes."""
+    geo = geocode(pages_snapshot(spark, sf_dir))
+    return geo.select("point_id", "url", "warc_ts", "x", "y",
+                      "n_chars").localCheckpoint(eager=False)
+
+
 def exposure_over_pages(spark: SparkSession, sf_dir: str,
-                        parks: DataFrame | None = None) -> DataFrame:
+                        parks: DataFrame | None = None,
+                        pts: DataFrame | None = None) -> DataFrame:
     """The north-star query: per (deduplicated, geocoded) page,
     availability (buffer-zonal NDVI mean/sd) + accessibility (distance
     to nearest ≥400 m² park through the cell-index plan, strict-<
-    in-buffer flag), keyed by url."""
+    in-buffer flag), keyed by url.  Pass ``pts`` (geocoded_pages) to
+    share the snapshot with other consumers."""
     from .. import world
     parks = parks if parks is not None else world.parks_df(spark)
-    geo = geocode(pages_snapshot(spark, sf_dir))
-    # materialize the (small, text-free) geocoded snapshot once:
-    # without this the snapshot shuffle + parquet scan replays in each
-    # family branch (measured: 5 scans / 3 snapshot exchanges, zero
-    # ReusedExchange) — at corpus scale that triples the ingest cost.
-    # localCheckpoint output is O(urls) rows of ~90 bytes.
-    pts = geo.select("point_id", "url", "warc_ts", "x", "y",
-                     "n_chars").localCheckpoint(eager=False)
+    pts = pts if pts is not None else geocoded_pages(spark, sf_dir)
     av = availability.ndvi_zonal(pts)
     ac = euclidean_access_cells(pts, parks)
     return (pts.join(av, "point_id").join(ac, "point_id")

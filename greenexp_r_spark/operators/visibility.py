@@ -60,14 +60,13 @@ def _patches(xs: np.ndarray, ys: np.ndarray, r: int, res: float):
     ccx = (np.floor(xs / res) + 0.5) * res
     ccy = (np.floor(ys / res) + 0.5) * res
     offs = (np.arange(nc) - r) * res
-    # patch rows top→bottom (row 0 = north), matching raster order
-    px = ccx[:, None, None] + offs[None, None, :]
-    py = ccy[:, None, None] - offs[None, :, None]
-    px = np.broadcast_to(px, (len(xs), nc, nc)).reshape(len(xs), -1)
-    py = np.broadcast_to(py, (len(xs), nc, nc)).reshape(len(xs), -1)
+    # patch columns west→east, rows top→bottom (row 0 = north),
+    # matching raster order
+    cx = ccx[:, None] + offs[None, :]
+    ry = ccy[:, None] - offs[None, :]
     # patch corner is r*res*sqrt(2) from the center — the pruning reach
     reach = (r + 1) * res * float(np.sqrt(2.0))
-    dsm, gs = W.patch_fields(px, py, ccx, ccy, reach)
+    dsm, gs = W.patch_fields(cx, ry, ccx, ccy, reach)
     h0 = W.dtm(ccx, ccy) + C.OBSERVER_HEIGHT
     return dsm, gs, h0
 

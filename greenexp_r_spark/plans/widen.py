@@ -49,23 +49,24 @@ def widen(df: DataFrame,
     many jobs of a query than the extra cores return.  The target
     grows with the input and saturates at the core count, so it is
     not a local[32]-only constant; pass bytes_per_task=None to force
-    the flat defaultParallelism target."""
-    sc = df.sparkSession.sparkContext
-    tot = None
+    the flat defaultParallelism target.  An input whose size cannot be
+    read (non-local filesystems) is not widened."""
+    # an input of unknown size (no file listing, or a non-local
+    # s3a/hdfs path) stays as scanned: widening it blind is the
+    # overhead the size gate exists to avoid
     try:
         files = df.inputFiles()
     except Exception:
-        files = []
-    if files:
-        try:
-            tot = sum(os.path.getsize(urlparse(f).path) for f in files)
-            if tot < WIDEN_MIN_BYTES:
-                return df
-        except OSError:
-            pass
-    target = sc.defaultParallelism
-    if bytes_per_task and tot:
-        target = max(2, min(target, int(tot) // int(bytes_per_task)))
+        return df
+    try:
+        tot = sum(os.path.getsize(urlparse(f).path) for f in files)
+    except OSError:
+        return df
+    if not files or tot < WIDEN_MIN_BYTES:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if bytes_per_task:
+        target = max(2, min(target, tot // int(bytes_per_task)))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -410,10 +410,13 @@ def flagship_exposure_pages(spark, sf):
     visibility join of BASELINE.json's metric on Common-Crawl-shaped
     input."""
     from .operators import pages_ops
-    base = pages_ops.exposure_over_pages(spark, sf)
+    # one geocoded snapshot feeds all three families: each document is
+    # one url with the world's LCG, so its rows are the address points
+    pts = pages_ops.geocoded_pages(spark, sf)
+    base = pages_ops.exposure_over_pages(spark, sf, pts=pts)
     pid = F.regexp_extract(F.col("url"), "page/([0-9]+)$", 1) \
            .cast("long").alias("point_id")
-    v = visibility.vgvi_points(world.points_df(spark, sf), sample_mod=10)
+    v = visibility.vgvi_points(pts, sample_mod=10)
     return (base.withColumn("point_id", pid)
             .join(v, "point_id", "left").drop("point_id"))
 

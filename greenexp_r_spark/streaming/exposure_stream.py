@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import constants as C, world
+from ..kernels import ndvi_intervals as NI
 from ..operators import pages_ops
 from ..sources import pages as P
 from .events_stream import stage_as_dir
@@ -56,67 +57,40 @@ def exposure_scorer(park_cx: np.ndarray, park_cy: np.ndarray,
                     buffer_m: int = C.BUFFER_M,
                     res: int = C.NDVI_RES):
     """mapInPandas scorer replicating the batch operators exactly:
-    NDVI from the integer world-field hash with NA→0 fold
-    (world.ndvi_int_expr ≡ sources/tiles.ndvi_tile_values), distances
+    NDVI disc sums from the same row-interval kernel as
+    availability.ndvi_zonal (kernels/ndvi_intervals.py), distances
     as BIGINT d² minima with one final sqrt."""
-    span = buffer_m // res            # 30 cells each side
-    # ci runs floor((x−R)/res) .. floor((x+R)/res) — 2·span+1 cells
-    # for integer x — so offsets start AT the lower floor
-    offs = np.arange(0, 2 * span + 1, dtype=np.int64)
-    r2 = float(buffer_m) ** 2
-
-    chunk_rows = 1024                 # (rows, 61, 61) int64 ≈ 30 MB
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in it:
-            for lo in range(0, len(full), chunk_rows):
-                pdf = full.iloc[lo:lo + chunk_rows]
-                if not len(pdf):
-                    continue
-                yield _score_chunk(pdf)
+        for pdf in it:
+            if len(pdf):
+                yield _score(pdf)
 
-    def _score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-            x = pdf["x"].to_numpy(dtype=np.int64)
-            y = pdf["y"].to_numpy(dtype=np.int64)
-            # availability: per-point buffer cells (61×61 offsets on
-            # the integer lattice — the ci range for integer x is
-            # exactly floor((x−R)/res) + 0..2·span)
-            ci = ((x - buffer_m) // res)[:, None] + offs[None, :]
-            cj = ((y - buffer_m) // res)[:, None] + offs[None, :]
-            cx = (ci + 0.5) * res
-            cy = (cj + 0.5) * res
-            dx = cx - x[:, None]
-            dy = cy - y[:, None]
-            in_disc = (dx[:, :, None] ** 2 + dy[:, None, :] ** 2) <= r2
-            h = (ci[:, :, None] * C.NDVI_H_A
-                 + cj[:, None, :] * C.NDVI_H_B) % C.P31
-            h = (h + C.P31) % C.P31
-            v = h % C.NDVI_MOD - 200
-            v = np.where(h % C.NDVI_NA_MOD == 0, 0, v)   # NA→0 fold
-            v = np.where(in_disc, v, 0)
-            s1 = v.sum(axis=(1, 2))
-            n = in_disc.sum(axis=(1, 2))
-            mean_ndvi = s1 / (800.0 * n)
-            # accessibility: BIGINT d² minimum over the park dim.
-            # Empty dim (every park filtered by min_area): match the
-            # batch operator's left-join semantics — no nearest park
-            # (inf distance), nothing in buffer (ADVICE r04: the bare
-            # d2.min(axis=1) raised on the (n, 0) shape).
-            if len(park_cx) == 0:
-                min_d2 = np.full(len(x), np.inf)
-            else:
-                d2 = ((x[:, None] - park_cx[None, :]) ** 2
-                      + (y[:, None] - park_cy[None, :]) ** 2)
-                min_d2 = d2.min(axis=1)
-            return pd.DataFrame({
-                "url": pdf["url"].to_numpy(),
-                "warc_ts": pdf["warc_ts"].to_numpy(),
-                "point_id": pdf["point_id"].to_numpy(),
-                "mean_ndvi": mean_ndvi,
-                "n_cells": n.astype(np.int64),
-                "closest_greenspace": np.sqrt(min_d2.astype(np.float64)),
-                "greenspace_in_buffer": min_d2 < int(buffer_m) ** 2,
-            })
+    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = pdf["x"].to_numpy(dtype=np.int64)
+        y = pdf["y"].to_numpy(dtype=np.int64)
+        s1, _, n = NI.disc_sums(x, y, buffer_m, res)
+        mean_ndvi = s1 / (800.0 * n)
+        # accessibility: BIGINT d² minimum over the park dim.
+        # Empty dim (every park filtered by min_area): match the
+        # batch operator's left-join semantics — no nearest park
+        # (inf distance), nothing in buffer (ADVICE r04: the bare
+        # d2.min(axis=1) raised on the (n, 0) shape).
+        if len(park_cx) == 0:
+            min_d2 = np.full(len(x), np.inf)
+        else:
+            d2 = ((x[:, None] - park_cx[None, :]) ** 2
+                  + (y[:, None] - park_cy[None, :]) ** 2)
+            min_d2 = d2.min(axis=1)
+        return pd.DataFrame({
+            "url": pdf["url"].to_numpy(),
+            "warc_ts": pdf["warc_ts"].to_numpy(),
+            "point_id": pdf["point_id"].to_numpy(),
+            "mean_ndvi": mean_ndvi,
+            "n_cells": n,
+            "closest_greenspace": np.sqrt(min_d2.astype(np.float64)),
+            "greenspace_in_buffer": min_d2 < int(buffer_m) ** 2,
+        })
 
     return run
 
