@@ -1,23 +1,22 @@
 """LoS prefix-trie: the viewshed kernel's cross-ray state as a DAG.
 
-`kernels/vgvi.viewshed_batch` replays viewshed_cpp exactly, including
-the stateful shared-prefix optimization (bresenham.cpp:170-187 +
-vgvi.cpp:84-85): ray i reuses the running max-tangent vector of the
-previous ray up to its divergence index k_i, and the reference resets
-the seed to -9999 when k_i == 1 (the "k_i==1 quirk"), which makes cell
-visibility depend on the *sequence* of rays, not each ray alone.
+viewshed_cpp replays the stateful shared-prefix optimization
+(bresenham.cpp:170-187 + vgvi.cpp:84-85): ray i reuses the running
+max-tangent vector of the previous ray up to its divergence index k_i,
+and the reference resets the seed to -9999 when k_i == 1 (the "k_i==1
+quirk"), which makes cell visibility depend on the *sequence* of rays,
+not each ray alone.
 
 That stateful sweep is equivalent to a static **trie**: one node per
 (ray, position ≥ k_i), whose parent is the node that owned the
 running-max slot at position−1 when the ray was processed (None when
 position == 0, or when position == k_i == 1 — the reset).  A cell is
 visible iff some node carrying it has tangent > max(ancestor
-tangents).  The trie depends only on the radius, so it can be
+tangents).  `kernels/vgvi.viewshed_batch` sweeps the trie one depth
+at a time; tests/test_lostrie.py keeps the sequential ray sweep as
+its oracle.  The trie depends only on the radius, so it can be
 exported as a literal SQL table — the bridge that lets a DuckDB
 recursive CTE replay the viewshed bit-for-bit (q_viewshed_flat).
-
-`trie_visibility` is the pure-numpy replay used by tests to prove
-trie ≡ viewshed_batch on random fields.
 """
 
 from __future__ import annotations
@@ -27,8 +26,6 @@ from functools import lru_cache
 import numpy as np
 
 from . import bresenham
-
-NEG = -9999.0
 
 
 @lru_cache(maxsize=4)
@@ -69,31 +66,6 @@ def los_trie(radius: int):
             np.array(parent, dtype=np.int64),
             np.array(dxs, dtype=np.int64),
             np.array(dys, dtype=np.int64))
-
-
-def trie_visibility(heights: np.ndarray, h0: float,
-                    radius: int) -> np.ndarray:
-    """Numpy replay of the trie semantics for ONE observer patch.
-    heights: (2r+1)² row-major patch; returns boolean visibility of
-    every patch cell (center always True; inactive observer — h0 ≤
-    center height — sees only the center), to compare against
-    viewshed_batch."""
-    r = radius
-    nc = 2 * r + 1
-    vis = np.zeros(nc * nc, dtype=bool)
-    vis[r * nc + r] = True
-    if not (h0 > heights[r * nc + r]):
-        return vis
-    nid, parent, dx, dy = los_trie(r)
-    cell = (r - dy) * nc + (dx + r)
-    t = (heights[cell] - h0) / np.sqrt((dx * dx + dy * dy).astype(float))
-    run = np.full(len(nid), NEG)
-    for i in range(len(nid)):       # parents precede children
-        p = parent[i]
-        if p >= 0:
-            run[i] = max(run[p], t[p])
-    vis[cell[t > run]] = True
-    return vis
 
 
 def trie_rows(radius: int):

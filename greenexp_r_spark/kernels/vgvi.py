@@ -30,11 +30,18 @@ for interior observers.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 
-from . import bresenham
+from . import lostrie
 
 NEG = -9999.0
+
+# observers per numpy batch: bounds patch memory to ~500·(2r+1)²·8B
+# (~26 MB at r=40) regardless of partition size, keeping the kernel's
+# working set cache-friendly and partition-count-independent
+KERNEL_BATCH = 500
 
 
 def decay_weights(max_d: int, radius: float, fun: int, m: float,
@@ -57,6 +64,27 @@ def decay_weights(max_d: int, radius: float, fun: int, m: float,
     return h / 2.0 * (y[:, 0] + y[:, n]) + mid
 
 
+@lru_cache(maxsize=4)
+def _trie_levels(r: int):
+    """The LoS trie of radius r (kernels/lostrie.py): the node ids of
+    each depth; each node's parent (-1 for a root), patch cell and
+    distance in cells; the node ids grouped by cell (1-5 a cell at
+    r=40), each group's start and cell."""
+    _, parent, dx, dy = lostrie.los_trie(r)
+    depth = np.zeros(len(parent), np.int64)
+    for i, p in enumerate(parent):    # parents precede children
+        if p >= 0:
+            depth[i] = depth[p] + 1
+    levels = [np.nonzero(depth == d)[0] for d in range(depth.max() + 1)]
+    cell = (r - dy) * (2 * r + 1) + (dx + r)
+    # the float operations of sqrt((x0-col)² + (y0-row)²),
+    # viewshed.cpp:146-149
+    dist = np.sqrt(dx.astype(float) ** 2 + dy.astype(float) ** 2)
+    by_cell = np.argsort(cell, kind="stable")
+    cells, starts = np.unique(cell[by_cell], return_index=True)
+    return levels, parent, cell, dist, by_cell, starts, cells
+
+
 def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
                    r: int) -> np.ndarray:
     """Vectorized max-tangent sweep for a batch of observers.
@@ -65,15 +93,15 @@ def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
     the center cell.  h0: (n_obs,) eye heights.  Returns a boolean
     (n_obs, (2r+1)²) visibility mask (center always visible).
 
-    Rays are processed in the reference's exact order with the shared
-    max_tan_vec carried between rays (including the k_i==1 reset
-    quirk); within a ray and across observers everything is numpy.
+    The reference's ray sweep with the shared max_tan_vec (k_i==1 reset
+    included) is the static LoS trie of kernels/lostrie.py, swept one
+    depth at a time (r steps, not 8r rays); arrays are node-major
+    (nodes, observers), so parent gathers read contiguous rows.  The
+    mask is the ray sweep's bit for bit (tests/test_lostrie.py).
     """
     nobs = dsm_patches.shape[0]
     nc = 2 * r + 1
     c0 = r * nc + r
-    ref = bresenham.los_reference(r)          # (8r, r)
-    starts = bresenham.shared_los(r)          # (8r,)
     vis = np.zeros((nobs, nc * nc), dtype=bool)
     vis[:, c0] = True
 
@@ -81,36 +109,31 @@ def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
     active = h0 > dsm_patches[:, c0]
     if not active.any():
         return vis
-
-    # per ref-cell distance (cell units) from center — identical to
-    # sqrt((x0-col)² + (y0-row)²) of viewshed.cpp:146-149
-    rows, cols = divmod(np.arange(nc * nc), nc)
-    dist = np.sqrt((r - cols).astype(float) ** 2
-                   + (r - rows).astype(float) ** 2)
-
     act_idx = np.nonzero(active)[0]
-    hp = dsm_patches[act_idx]                 # (na, ncell)
-    h0a = h0[act_idx]
-    na = len(act_idx)
-    max_tan_vec = np.full((na, r), NEG)
-
-    for i in range(8 * r):
-        cells = ref[i]                        # (r,)
-        valid = cells != bresenham.NA
-        n_valid = int(valid.sum())            # NA tail is contiguous
-        if n_valid == 0:
-            continue
-        cells_v = cells[:n_valid]
-        k = int(starts[i])
-        if k >= n_valid:
-            continue
-        t = (hp[:, cells_v[k:]] - h0a[:, None]) / dist[cells_v[k:]][None, :]
-        init = max_tan_vec[:, k - 1] if k > 1 else np.full(na, NEG)
-        run = np.maximum.accumulate(
-            np.concatenate([init[:, None], t], axis=1), axis=1)
-        visible = t > run[:, :-1]
-        vis[np.ix_(act_idx, cells_v[k:])] |= visible
-        max_tan_vec[:, k:n_valid] = run[:, 1:]
+    levels, parent, cell, dist, by_cell, starts, cells = _trie_levels(r)
+    # tangent of every (node, observer)
+    t = np.ascontiguousarray(dsm_patches[act_idx][:, cell].T)
+    t -= h0[act_idx][None, :]
+    t /= dist[:, None]
+    # running maximum over each node and its ancestors
+    run = np.empty_like(t)
+    seen = np.empty(t.shape, dtype=bool)
+    for d, idx in enumerate(levels):
+        tl = t[idx]
+        prev = run[parent[idx]] if d else np.full(tl.shape, NEG)
+        seen[idx] = tl > prev
+        run[idx] = np.maximum(prev, tl)
+    # a cell is visible when any node carrying it is
+    seen = seen[by_cell]
+    hit = seen[starts]
+    more = np.diff(np.append(starts, len(by_cell)))
+    for k in range(1, int(more.max())):
+        g = np.nonzero(more > k)[0]
+        hit[g] |= seen[starts[g] + k]
+    out = np.zeros((nc * nc, len(act_idx)), dtype=bool)
+    out[cells] = hit
+    out[c0] = True
+    vis[act_idx] = out.T
     return vis
 
 

@@ -113,3 +113,23 @@ def patch_fields(cx: np.ndarray, ry: np.ndarray,
                            + row((ry[near] - pcy) ** 2) <= r * r)
     dsm = np.where(park, base, base + b)
     return dsm.reshape(n, -1), park.reshape(n, -1).astype(float)
+
+
+def observer_patches(xs: np.ndarray, ys: np.ndarray, r: int, res: float):
+    """Synthesize (n, (2r+1)²) DSM and greenspace patches centered on
+    each observer's cell center, plus eye heights (DTM + 1.7 m,
+    vgvi_from_sf.R:240-244)."""
+    nc = 2 * r + 1
+    # observer cell center on the world grid
+    ccx = (np.floor(xs / res) + 0.5) * res
+    ccy = (np.floor(ys / res) + 0.5) * res
+    offs = (np.arange(nc) - r) * res
+    # patch columns west→east, rows top→bottom (row 0 = north),
+    # matching raster order
+    cx = ccx[:, None] + offs[None, :]
+    ry = ccy[:, None] - offs[None, :]
+    # patch corner is r*res*sqrt(2) from the center — the pruning reach
+    reach = (r + 1) * res * float(np.sqrt(2.0))
+    dsm, gs = patch_fields(cx, ry, ccx, ccy, reach)
+    h0 = dtm(ccx, ccy) + C.OBSERVER_HEIGHT
+    return dsm, gs, h0

@@ -19,7 +19,9 @@ cell-ring kNN (operators/knn_cells.py) keeps the join equi on cell_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .. import constants as C
 
@@ -48,16 +50,33 @@ def euclidean_access(points: DataFrame, parks: DataFrame,
             .join(F.broadcast(p))
             .select("point_id", _dist2()))
     out = cand.groupBy("point_id").agg(F.min("d2").alias("min_d2"))
-    return out.select(
-        "point_id",
-        F.sqrt(F.col("min_d2").cast("double")).alias("closest_greenspace"),
-        # strict < : accessibility.R:313 flags dist < buffer_distance
-        (F.col("min_d2") < int(buffer_m) ** 2).alias("greenspace_in_buffer"),
-    )
+    return out.select("point_id", *nearest_columns(buffer_m))
+
+
+def nearest_columns(buffer_m: float = C.BUFFER_M) -> list[Column]:
+    """(closest_greenspace, greenspace_in_buffer) from the BIGINT
+    ``min_d2``; strict < : accessibility.R:313."""
+    d2 = F.col("min_d2")
+    return [F.sqrt(d2.cast("double")).alias("closest_greenspace"),
+            (d2 < int(buffer_m) ** 2).alias("greenspace_in_buffer")]
 
 
 BROADCAST_PARK_LIMIT = 200_000   # dim rows beyond which the broadcast
                                  # cross stops being the right plan
+
+
+def park_centroids(parks: DataFrame,
+                   min_area_m2: float = C.MIN_GREENSPACE_M2):
+    """(cx, cy) float arrays of the qualifying parks, or None when
+    there are more than BROADCAST_PARK_LIMIT of them: one bounded
+    collect both decides the route and fetches the dim."""
+    pdf = (parks.where(F.col("area_m2") > min_area_m2)
+           .select("cx", "cy").limit(BROADCAST_PARK_LIMIT + 1)
+           .toPandas())
+    if len(pdf) > BROADCAST_PARK_LIMIT:
+        return None
+    return (pdf["cx"].to_numpy(np.float64),
+            pdf["cy"].to_numpy(np.float64))
 
 
 def euclidean_access_auto(points: DataFrame, parks: DataFrame,

@@ -36,12 +36,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import constants as C
 from .. import world
-from ..kernels import ndvi_intervals as NI
+from ..kernels import exposure as XK
 
 
 def covered_cells(points: DataFrame, buffer_m: float, res: int) -> DataFrame:
@@ -83,23 +83,23 @@ def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
     ])
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # rows with a null coordinate or no cell centre in their disc
+        # are dropped, as in the oracle's GROUP BY over covered cells
         for pdf in it:
-            # a null coordinate enumerates no cells (sequence → null)
-            pdf = pdf[pdf["x"].notna() & pdf["y"].notna()]
-            s1, s2, n = NI.disc_sums(pdf["x"].to_numpy(),
-                                     pdf["y"].to_numpy(), buffer_m)
-            out = pd.DataFrame({"point_id": pdf["point_id"].to_numpy(),
-                                "s1": s1, "s2": s2, "n_cells": n})
-            # a disc holding no cell centre gets no row, as in the
-            # oracle's GROUP BY over covered cells
-            yield out[out["n_cells"] > 0]
+            yield XK.score(pdf, buffer_m=buffer_m)[list(schema.names)]
 
     # a point id may arrive in several rows: its moments add up
     agg = pts.mapInPandas(run, schema).groupBy("point_id").agg(
         *(F.sum(c).alias(c) for c in ("s1", "s2", "n_cells")))
+    return agg.select("point_id", *ndvi_columns(add_sd))
+
+
+def ndvi_columns(add_sd: bool = True) -> list[Column]:
+    """mean_ndvi[, sd_ndvi], n_cells from the integer moments (s1, s2,
+    n_cells) of the NDVI field over a disc."""
     n = F.col("n_cells")
     mean = F.col("s1").cast("double") / (F.lit(800.0) * n)
-    out = [F.col("point_id"), mean.alias("mean_ndvi")]
+    out = [mean.alias("mean_ndvi")]
     if add_sd:
         # sample sd (R `sd`, n-1) from exact integer moments, in a fixed
         # expression tree so both engines emit the same bits.
@@ -109,7 +109,7 @@ def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
         var = (s2d - s1d * s1d / nd) / (nd - F.lit(1.0))
         out.append((F.sqrt(var) / F.lit(800.0)).alias("sd_ndvi"))
     out.append(n)
-    return agg.select(*out)
+    return out
 
 
 def landcover_fractions(points: DataFrame,

@@ -1,16 +1,16 @@
 """Operators over the input_hint pages table (url, warc_ts, html,
 text, lang): snapshot dedup, byte-identical text extraction, url
 geocoding, cell bucketing with the broadcast cell→polygon index, and
-the end-to-end exposure join keyed by url — the north_rule pipeline:
+the per-url exposure of the north_rule pipeline:
 
     pages → latest capture per url → extract text from html →
-    geocode url → availability + accessibility exposure per page.
+    geocode url → availability + accessibility (+ sampled visibility)
+    exposure per page.
 
 Reference parity: the exposure math is exactly GreenExp_R's
-availability (ndvi_calc.R:332-344) and accessibility
-(accessibility.R:307-315) families — here addressed by url instead of
-a house point id, which is the graft's axis (web pages as address
-points).
+availability (ndvi_calc.R:332-344), accessibility
+(accessibility.R:307-315) and VGVI families — here addressed by url
+instead of a house point id (web pages as address points).
 
 Scale notes (100 TB posture):
   * ``latest_snapshot`` is ONE hash aggregate on url (max-struct →
@@ -18,10 +18,10 @@ Scale notes (100 TB posture):
     rides inside the struct only for the winning rows of each partial).
   * ``extract_text`` / ``geocode`` are narrow JVM projections
     (decode/substring/regexp) — zero Python, zero shuffle.
-  * the exposure join reuses the availability explode plan and the
-    cell-index equi-join accessibility plan (knn_cells) — never a
-    nested-loop; the two family results join back on the parsed
-    point id (equi, AQE-managed).
+  * exposure is per row: one Arrow pass (kernels/exposure.py) scores
+    every family with the small park dim as closure state — no join,
+    no checkpoint; a dim above BROADCAST_PARK_LIMIT keeps the
+    cell-index equi-join (knn_cells) for the access columns.
   * ``cell_page_stats`` is the H3/S2-analog bucketing: a broadcast
     cell→park membership index (per-park radius explode, corner
     pruned) joined on cell_id, then per-url then per-cell integer
@@ -32,12 +32,18 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .. import constants as C
-from ..sources import pages as P
 from ..functions.geo import dist2_long
-from . import availability
+from ..kernels import exposure as XK
+from ..sources import pages as P
+from . import accessibility, availability
 from .knn_cells import euclidean_access_cells
 
 
@@ -132,8 +138,9 @@ def geocode(pages: DataFrame) -> DataFrame:
     """Geocode urls to world coordinates: parse the page id out of the
     url (regexp, JVM) and apply the deterministic LCG the world uses
     for address points (world.x_expr/y_expr) — the pages analog of
-    the reference's geocoded address input (Ams_Houses)."""
-    pid = F.regexp_extract(F.col("url"), P.URL_ID_RE, 1).cast("long")
+    the reference's geocoded address input (Ams_Houses).  A url
+    without a page id geocodes to null."""
+    pid = F.regexp_extract(F.col("url"), P.URL_ID_RE, 1).try_cast("long")
     x = ((pid * C.X_MUL + C.X_ADD) % C.P31) % C.WORLD_SIZE
     y = ((pid * C.Y_MUL + C.Y_ADD) % C.P31) % C.WORLD_SIZE
     return pages.withColumn("point_id", pid) \
@@ -155,10 +162,7 @@ def latest_extracted_snapshot(pages: DataFrame) -> DataFrame:
 
 
 def pages_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exposure-path shape: latest capture per url with text
-    re-extracted from html (no delta columns — the exposure join
-    prunes them anyway, but keeping this entry narrow keeps the
-    north-star plan's agg state minimal)."""
+    """latest_extracted_snapshot of the pages table of ``sf_dir``."""
     return latest_extracted_snapshot(P.pages_df(spark, sf_dir))
 
 
@@ -187,37 +191,60 @@ def pages_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                     status.alias("status"))
 
 
-def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (small, text-free) geocoded snapshot every exposure family
-    reads: (point_id, url, warc_ts, x, y, n_chars), one row per url.
+def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
+                      sample_mod: int | None = None) -> DataFrame:
+    """The north-star query over a pages DataFrame: per (deduplicated,
+    geocoded) page, availability (buffer-zonal NDVI mean/sd) and
+    accessibility (distance to the nearest ≥400 m² park, strict-<
+    in-buffer flag), keyed by url; with ``sample_mod``, also VGVI on
+    the pages whose id is a multiple of it (null elsewhere).  One
+    mapInPandas pass (kernels/exposure.score) scores each row from its
+    own disc, also when other urls share its page id.
 
-    Materialized once: without the checkpoint the snapshot shuffle +
-    parquet scan replays in each family branch (measured: 5 scans /
-    3 snapshot exchanges, zero ReusedExchange) — at corpus scale that
-    triples the ingest cost.  localCheckpoint output is O(urls) rows
-    of ~90 bytes."""
-    geo = geocode(pages_snapshot(spark, sf_dir))
-    return geo.select("point_id", "url", "warc_ts", "x", "y",
-                      "n_chars").localCheckpoint(eager=False)
+    The geocoded rows are round-robined to one partition per core
+    before the pass: the snapshot aggregate's output is small, so AQE
+    coalesces it to a couple of partitions and the kernel would run on
+    that many cores only (a warm 20k-url operation took 2.31 / 1.85 /
+    2.41 s with 2 / 4 / 8 partitions on a 4-core host).  The count is
+    the session's parallelism, not a tuning knob."""
+    from .. import world
+    spark = pages.sparkSession
+    parks = parks if parks is not None else world.parks_df(spark)
+    geo = geocode(latest_extracted_snapshot(pages)).select(
+        "url", "warc_ts", "x", "y", "n_chars", "point_id")
+    dim = accessibility.park_centroids(parks)
+    # an empty dim has no nearest park: the cell plan's inner join then
+    # drops every row, as the oracle's does
+    cx, cy = dim if dim is not None and len(dim[0]) else (None, None)
+    extra = [StructField(c, LongType()) for c in ("s1", "s2", "n_cells")]
+    if cx is not None:
+        extra.append(StructField("min_d2", LongType()))
+    if sample_mod is not None:
+        extra.append(StructField("vgvi", DoubleType()))
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield XK.score(pdf, cx, cy, sample_mod)
+
+    scored = (geo.repartition(spark.sparkContext.defaultParallelism)
+              .mapInPandas(run, StructType(geo.schema.fields + extra)))
+    if cx is None:
+        scored = scored.join(euclidean_access_cells(geo, parks), "point_id")
+        access = ["closest_greenspace", "greenspace_in_buffer"]
+    else:
+        access = accessibility.nearest_columns()
+    vgvi = ["vgvi"] if sample_mod is not None else []
+    return scored.select("url", "warc_ts", "x", "y", "n_chars",
+                         *availability.ndvi_columns(), *access, *vgvi)
 
 
 def exposure_over_pages(spark: SparkSession, sf_dir: str,
                         parks: DataFrame | None = None,
-                        pts: DataFrame | None = None) -> DataFrame:
-    """The north-star query: per (deduplicated, geocoded) page,
-    availability (buffer-zonal NDVI mean/sd) + accessibility (distance
-    to nearest ≥400 m² park through the cell-index plan, strict-<
-    in-buffer flag), keyed by url.  Pass ``pts`` (geocoded_pages) to
-    share the snapshot with other consumers."""
-    from .. import world
-    parks = parks if parks is not None else world.parks_df(spark)
-    pts = pts if pts is not None else geocoded_pages(spark, sf_dir)
-    av = availability.ndvi_zonal(pts)
-    ac = euclidean_access_cells(pts, parks)
-    return (pts.join(av, "point_id").join(ac, "point_id")
-            .select("url", "warc_ts", "x", "y", "n_chars",
-                    "mean_ndvi", "sd_ndvi", "n_cells",
-                    "closest_greenspace", "greenspace_in_buffer"))
+                        sample_mod: int | None = None) -> DataFrame:
+    """:func:`exposure_of_pages` over the pages table of ``sf_dir``
+    (gate q_exposure_pages without ``sample_mod``; the flagship with
+    ``sample_mod=10``)."""
+    return exposure_of_pages(P.pages_df(spark, sf_dir), parks, sample_mod)
 
 
 def cell_membership_index(parks: DataFrame,

@@ -26,49 +26,14 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
 
 from .. import constants as C
 from ..kernels import vgvi as K
-from ..kernels import worldgrid as W
-
-VIS_SCHEMA = StructType([
-    StructField("point_id", LongType()),
-    StructField("visible_cells", LongType()),
-    StructField("disk_cells", LongType()),
-    StructField("visibility_proportion", DoubleType()),
-])
-
-VGVI_SCHEMA = StructType([
-    StructField("point_id", LongType()),
-    StructField("vgvi", DoubleType()),
-])
-
-# observers per numpy batch: bounds patch memory to ~500·(2r+1)²·8B
-# (~26 MB at r=40) regardless of partition size, keeping the kernel's
-# working set cache-friendly and partition-count-independent
-KERNEL_BATCH = 500
+from ..kernels.exposure import vgvi_at
+from ..kernels.vgvi import KERNEL_BATCH
+from ..kernels.worldgrid import observer_patches
 
 
 def _chunks(pdf: pd.DataFrame, size: int = KERNEL_BATCH):
     for lo in range(0, len(pdf), size):
         yield pdf.iloc[lo:lo + size]
-
-
-def _patches(xs: np.ndarray, ys: np.ndarray, r: int, res: float):
-    """Synthesize (n, (2r+1)²) DSM and greenspace patches centered on
-    each observer's cell center, plus eye heights (DTM + 1.7 m,
-    vgvi_from_sf.R:240-244)."""
-    nc = 2 * r + 1
-    # observer cell center on the world grid
-    ccx = (np.floor(xs / res) + 0.5) * res
-    ccy = (np.floor(ys / res) + 0.5) * res
-    offs = (np.arange(nc) - r) * res
-    # patch columns west→east, rows top→bottom (row 0 = north),
-    # matching raster order
-    cx = ccx[:, None] + offs[None, :]
-    ry = ccy[:, None] - offs[None, :]
-    # patch corner is r*res*sqrt(2) from the center — the pruning reach
-    reach = (r + 1) * res * float(np.sqrt(2.0))
-    dsm, gs = W.patch_fields(cx, ry, ccx, ccy, reach)
-    h0 = W.dtm(ccx, ccy) + C.OBSERVER_HEIGHT
-    return dsm, gs, h0
 
 
 OBS_PER_PARTITION = 2_000     # kernel cost is linear in observers; a
@@ -119,11 +84,9 @@ def viewshed_metrics(points: DataFrame,
         disk = int(mask.sum())
         for full in it:
             for pdf in _chunks(full):
-                if not len(pdf):
-                    continue
                 xs = pdf["x"].to_numpy()
                 ys = pdf["y"].to_numpy()
-                dsm, _, h0 = _patches(xs, ys, r, res)
+                dsm, _, h0 = observer_patches(xs, ys, r, res)
                 vis = K.viewshed_batch(dsm, h0, r)
                 nvis = (vis & mask[None, :]).sum(axis=1)
                 yield pd.DataFrame({
@@ -134,7 +97,8 @@ def viewshed_metrics(points: DataFrame,
                 })
 
     return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
-              .mapInPandas(run, VIS_SCHEMA)
+              .mapInPandas(run, "point_id long, visible_cells long, "
+                           "disk_cells long, visibility_proportion double")
 
 
 def viewshed_raster(points: DataFrame,
@@ -149,47 +113,42 @@ def viewshed_raster(points: DataFrame,
     cj=floor(y/res)) — the S8 raster-sink shape, one row per
     (observer, masked cell).
     Output: (point_id, ci, cj, visible)."""
-    from pyspark.sql.types import IntegerType
     r = int(round(max_distance / res))
     obs = points.where(F.col("point_id") % sample_mod == 0) \
                 .select("point_id", "x", "y")
+    # observer_patches gives (dsm, greenspace, eye heights)
+    return _viewshed_rows(
+        obs, r, res, lambda xs, ys: observer_patches(xs, ys, r, res)[::2],
+        n_obs_hint)
 
-    schema = StructType([
-        StructField("point_id", LongType()),
-        StructField("ci", LongType()),
-        StructField("cj", LongType()),
-        StructField("visible", IntegerType()),
-    ])
+
+def _viewshed_rows(obs: DataFrame, r: int, res: float, heights,
+                   n_obs_hint: int | None) -> DataFrame:
+    """Masked 0/1 viewshed raster rows (point_id, ci, cj, visible) of
+    each observer, one per cell of the radial mask, in world raster
+    indexing; ``heights(xs, ys)`` gives the observers' (n, (2r+1)²)
+    DSM patches and eye heights."""
+    midx = np.nonzero(_disk_mask(r))[0]
+    mrow, mcol = np.divmod(midx, 2 * r + 1)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nc = 2 * r + 1
-        mask = _disk_mask(r)
-        midx = np.nonzero(mask)[0]
-        mrow, mcol = np.divmod(midx, nc)
         for full in it:
             for pdf in _chunks(full):
-                if not len(pdf):
-                    continue
                 xs = pdf["x"].to_numpy()
                 ys = pdf["y"].to_numpy()
-                dsm, _, h0 = _patches(xs, ys, r, res)
-                vis = K.viewshed_batch(dsm, h0, r)
-                # world cell indices of each masked patch cell
+                vis = K.viewshed_batch(*heights(xs, ys), r)
                 ci0 = np.floor(xs / res).astype(np.int64)
                 cj0 = np.floor(ys / res).astype(np.int64)
-                n_obs, n_m = len(xs), len(midx)
-                ci = (ci0[:, None] + (mcol - r)[None, :]).reshape(-1)
-                cj = (cj0[:, None] - (mrow - r)[None, :]).reshape(-1)
                 yield pd.DataFrame({
-                    "point_id": np.repeat(
-                        pdf["point_id"].to_numpy(), n_m),
-                    "ci": ci, "cj": cj,
-                    "visible": vis[:, midx].reshape(-1)
-                    .astype("int32"),
+                    "point_id": np.repeat(pdf["point_id"].to_numpy(),
+                                          len(midx)),
+                    "ci": (ci0[:, None] + (mcol - r)[None, :]).reshape(-1),
+                    "cj": (cj0[:, None] - (mrow - r)[None, :]).reshape(-1),
+                    "visible": vis[:, midx].reshape(-1).astype("int32"),
                 })
 
     return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
-        .mapInPandas(run, schema)
+        .mapInPandas(run, "point_id long, ci long, cj long, visible int")
 
 
 def vgvi_points(points: DataFrame,
@@ -199,25 +158,10 @@ def vgvi_points(points: DataFrame,
                 sample_mod: int = 10,
                 n_obs_hint: int | None = None) -> DataFrame:
     """(point_id, vgvi) — vgvi_from_sf over every sample_mod-th point."""
-    r = int(round(max_distance / res))
     obs = points.where(F.col("point_id") % sample_mod == 0) \
                 .select("point_id", "x", "y")
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in it:
-            for pdf in _chunks(full):
-                if not len(pdf):
-                    continue
-                xs = pdf["x"].to_numpy()
-                ys = pdf["y"].to_numpy()
-                dsm, gs, h0 = _patches(xs, ys, r, res)
-                out = K.vgvi_batch(dsm, gs, h0, r, res,
-                                   max_distance, fun, m, b)
-                yield pd.DataFrame({"point_id": pdf["point_id"],
-                                    "vgvi": out})
-
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
-              .mapInPandas(run, VGVI_SCHEMA)
+    return _vgvi_over(obs, ["point_id"], max_distance, res, fun, m, b,
+                      n_obs_hint)
 
 
 def _vgvi_over(obs: DataFrame, id_cols: list[str],
@@ -228,24 +172,15 @@ def _vgvi_over(obs: DataFrame, id_cols: list[str],
     arbitrary id columns + (x, y); returns id columns + vgvi.
     Shared by point / line-sample / polygon-grid observers
     (vgvi_from_sf.R accepts all three geometry classes)."""
-    r = int(round(max_distance / res))
     schema = StructType(
         [f for f in obs.schema.fields if f.name in id_cols]
         + [StructField("vgvi", DoubleType())])
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in it:
-            for pdf in _chunks(full):
-                if not len(pdf):
-                    continue
-                xs = pdf["x"].to_numpy()
-                ys = pdf["y"].to_numpy()
-                dsm, gs, h0 = _patches(xs, ys, r, res)
-                out = K.vgvi_batch(dsm, gs, h0, r, res,
-                                   max_distance, fun, m, b)
-                res_pdf = pdf[id_cols].copy()
-                res_pdf["vgvi"] = out
-                yield res_pdf
+        for pdf in it:
+            yield pdf[id_cols].assign(vgvi=vgvi_at(
+                pdf["x"].to_numpy(), pdf["y"].to_numpy(),
+                max_distance, res, fun, m, b))
 
     return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
         .mapInPandas(run, schema)
@@ -318,7 +253,6 @@ def vgvi_from_address(points: DataFrame,
     buffer (vgvi_from_address.R:259-270 uses st_sample — we seed the
     rejection sampler by point_id for reproducibility, SURVEY P10).
     Output: (point_id, mean_vgvi, n_samples)."""
-    r = int(round(max_distance / res))
     obs = points.where(F.col("point_id") % sample_mod == 0) \
                 .select("point_id", "x", "y")
 
@@ -386,14 +320,10 @@ def vgvi_from_address(points: DataFrame,
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for full in it:
             for pdf in _chunks(full, pts_per_chunk):
-                if not len(pdf):
-                    continue
                 ids, xs, ys = sample_batch(
                     pdf["point_id"].to_numpy().astype(np.int64),
                     pdf["x"].to_numpy(), pdf["y"].to_numpy())
-                dsm, gs, h0 = _patches(xs, ys, r, res)
-                v = K.vgvi_batch(dsm, gs, h0, r, res, max_distance,
-                                 fun, m, b)
+                v = vgvi_at(xs, ys, max_distance, res, fun, m, b)
                 out = (pd.DataFrame({"point_id": ids, "vgvi": v})
                        .groupby("point_id", as_index=False)
                        .agg(mean_vgvi=("vgvi", "mean"),
@@ -443,51 +373,21 @@ def viewshed_flat_raster(points: DataFrame,
     world — bit-identical to a DuckDB replay of the LoS trie
     (kernels/lostrie.py), shrinking the rows-only set to the pure
     sin-terrain/VGVI queries.  Output: (point_id, ci, cj, visible)."""
-    from pyspark.sql.types import IntegerType
     r = int(round(max_distance / res))
+    nc = 2 * r + 1
     obs = points.where(F.col("point_id") % sample_mod == 0) \
                 .select("point_id", "x", "y")
 
-    schema = StructType([
-        StructField("point_id", LongType()),
-        StructField("ci", LongType()),
-        StructField("cj", LongType()),
-        StructField("visible", IntegerType()),
-    ])
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nc = 2 * r + 1
-        mask = _disk_mask(r)
-        midx = np.nonzero(mask)[0]
-        mrow, mcol = np.divmod(midx, nc)
+    def heights(xs: np.ndarray, ys: np.ndarray):
+        n = len(xs)
         offs = np.arange(nc) - r
-        for full in it:
-            for pdf in _chunks(full):
-                if not len(pdf):
-                    continue
-                xs = pdf["x"].to_numpy()
-                ys = pdf["y"].to_numpy()
-                ci0 = np.floor(xs / res).astype(np.int64)
-                cj0 = np.floor(ys / res).astype(np.int64)
-                # patch row 0 = north (cj increasing southward here)
-                pci = ci0[:, None, None] + offs[None, None, :]
-                pcj = cj0[:, None, None] - offs[None, :, None]
-                pci = np.broadcast_to(pci, (len(xs), nc, nc)) \
-                    .reshape(len(xs), -1)
-                pcj = np.broadcast_to(pcj, (len(xs), nc, nc)) \
-                    .reshape(len(xs), -1)
-                dsm = flat_height(pci, pcj)
-                h0 = np.full(len(xs), FLAT_OBSERVER)
-                vis = K.viewshed_batch(dsm, h0, r)
-                n_m = len(midx)
-                ci = (ci0[:, None] + (mcol - r)[None, :]).reshape(-1)
-                cj = (cj0[:, None] - (mrow - r)[None, :]).reshape(-1)
-                yield pd.DataFrame({
-                    "point_id": np.repeat(
-                        pdf["point_id"].to_numpy(), n_m),
-                    "ci": ci, "cj": cj,
-                    "visible": vis[:, midx].reshape(-1).astype("int32"),
-                })
+        ci0 = np.floor(xs / res).astype(np.int64)
+        cj0 = np.floor(ys / res).astype(np.int64)
+        # patch row 0 = north (cj increasing southward here)
+        pci = np.broadcast_to(ci0[:, None, None] + offs[None, None, :],
+                              (n, nc, nc)).reshape(n, -1)
+        pcj = np.broadcast_to(cj0[:, None, None] - offs[None, :, None],
+                              (n, nc, nc)).reshape(n, -1)
+        return flat_height(pci, pcj), np.full(n, FLAT_OBSERVER)
 
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
-        .mapInPandas(run, schema)
+    return _viewshed_rows(obs, r, res, heights, n_obs_hint)

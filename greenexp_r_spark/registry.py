@@ -386,39 +386,16 @@ def _q_combined(spark, sf):
                                  world.parks_df(spark))
 
 
-def flagship_exposure(spark, sf):
-    """The full three-family exposure join of BASELINE.json's metric:
-    availability (zonal NDVI) + accessibility (nearest park) for every
-    point, plus visibility (VGVI) for the sampled observer subset
-    (every 10th point; null elsewhere — visibility is an expensive
-    kernel the reference also runs on samples).  The avail+access
-    core is gate-checked exactly as q_exposure_combined; the VGVI
-    column is kernel-verified (tests/test_vgvi_kernels.py)."""
-    # points read once, shared by all three families
-    points = world.points_df(spark, sf)
-    base = _combined_from_points(points, world.parks_df(spark))
-    v = visibility.vgvi_points(points, sample_mod=10)
-    return base.join(v, "point_id", "left")
-
-
 def flagship_exposure_pages(spark, sf):
     """The north-star flagship over the input_hint pages table:
     snapshot dedup → byte-exact extraction → url geocoding →
     availability + accessibility exposure keyed by url (gate-checked
     exactly as q_exposure_pages), plus visibility (VGVI) for the
     sampled observer subset — the full availability + accessibility +
-    visibility join of BASELINE.json's metric on Common-Crawl-shaped
-    input."""
+    visibility exposure of BASELINE.json's metric on Common-Crawl-shaped
+    input, scored in one per-row pass."""
     from .operators import pages_ops
-    # one geocoded snapshot feeds all three families: each document is
-    # one url with the world's LCG, so its rows are the address points
-    pts = pages_ops.geocoded_pages(spark, sf)
-    base = pages_ops.exposure_over_pages(spark, sf, pts=pts)
-    pid = F.regexp_extract(F.col("url"), "page/([0-9]+)$", 1) \
-           .cast("long").alias("point_id")
-    v = visibility.vgvi_points(pts, sample_mod=10)
-    return (base.withColumn("point_id", pid)
-            .join(v, "point_id", "left").drop("point_id"))
+    return pages_ops.exposure_over_pages(spark, sf, sample_mod=10)
 
 
 def _q_ndvi(spark, sf):

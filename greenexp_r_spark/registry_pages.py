@@ -62,25 +62,26 @@ FROM snap s JOIN delta dl ON s.url = dl.url
 
 
 def _oracle_exposure_pages(d: Dialect) -> str:
+    """Keyed per url, also where urls share a page id."""
     v = world.ndvi_int_expr("ci", "cj")
     cells = _buffer_cells_sql(d, C.NDVI_RES, C.BUFFER_M,
-                              src="SELECT point_id, x, y FROM geo")
+                              src="SELECT url, x, y FROM geo")
     return f"""
 WITH {_snap_ctes(d)},
 {_geo_cte(d)},
 parks AS ({world.parks_sql(d)}),
 cells AS ({cells}),
 agg AS (
-  SELECT point_id, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
-  FROM (SELECT point_id, {v} AS v FROM cells) _v
-  GROUP BY point_id
+  SELECT url, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
+  FROM (SELECT url, {v} AS v FROM cells) _v
+  GROUP BY url
 ),
 near AS (
-  SELECT point_id, MIN(CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
+  SELECT url, MIN(CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
        + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT)) AS min_d2
   FROM geo CROSS JOIN (SELECT * FROM parks
                        WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
-  GROUP BY point_id
+  GROUP BY url
 )
 SELECT g.url, g.warc_ts, g.x, g.y, g.n_chars,
        CAST(a.s1 AS DOUBLE) / (800.0 * a.n_cells) AS mean_ndvi,
@@ -91,8 +92,8 @@ SELECT g.url, g.warc_ts, g.x, g.y, g.n_chars,
        a.n_cells,
        sqrt(CAST(n.min_d2 AS DOUBLE)) AS closest_greenspace,
        n.min_d2 < {C.BUFFER_M ** 2} AS greenspace_in_buffer
-FROM geo g JOIN agg a ON g.point_id = a.point_id
-           JOIN near n ON g.point_id = n.point_id
+FROM geo g JOIN agg a ON g.url = a.url
+           JOIN near n ON g.url = n.url
 """
 
 

@@ -11,7 +11,8 @@ mapInPandas over the stream, so it runs identically under readStream
 (append mode) and batch, and scales by adding executors only.
 
 Parity contracts (tests/test_exposure_stream.py):
-  * the kernel's values equal the batch operators
+  * the kernel is the batch pipeline's (kernels/exposure.py), and its
+    values equal the batch operators
     (availability.ndvi_zonal ⋈ accessibility.euclidean_access)
     bit-for-bit — same integer raster hash, same BIGINT distance
     minimum, same final float expressions;
@@ -32,8 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import constants as C, world
-from ..kernels import ndvi_intervals as NI
-from ..operators import pages_ops
+from ..kernels import exposure as XK
+from ..operators import accessibility, pages_ops
 from ..sources import pages as P
 from .events_stream import stage_as_dir
 
@@ -42,63 +43,39 @@ EXPO_SCHEMA = ("url string, warc_ts timestamp, point_id long, "
                "closest_greenspace double, greenspace_in_buffer boolean")
 
 
-def _park_arrays(spark: SparkSession,
-                 min_area_m2: float = C.MIN_GREENSPACE_M2):
-    """The tiny park dim as numpy closure state (the broadcast-join
-    analog for a kernel)."""
-    pdf = (world.parks_df(spark)
-           .where(F.col("area_m2") > min_area_m2)
-           .select("cx", "cy").toPandas())
-    return (pdf["cx"].to_numpy(dtype=np.int64),
-            pdf["cy"].to_numpy(dtype=np.int64))
-
-
 def exposure_scorer(park_cx: np.ndarray, park_cy: np.ndarray,
                     buffer_m: int = C.BUFFER_M,
                     res: int = C.NDVI_RES):
-    """mapInPandas scorer replicating the batch operators exactly:
-    NDVI disc sums from the same row-interval kernel as
-    availability.ndvi_zonal (kernels/ndvi_intervals.py), distances
-    as BIGINT d² minima with one final sqrt."""
+    """mapInPandas scorer: the batch pipeline's per-row kernel
+    (kernels/exposure.score) finished with the batch operators' final
+    expressions; with no park, inf distance and nothing in buffer."""
+    parks = (park_cx, park_cy) if len(park_cx) else (None, None)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if len(pdf):
-                yield _score(pdf)
-
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf["x"].to_numpy(dtype=np.int64)
-        y = pdf["y"].to_numpy(dtype=np.int64)
-        s1, _, n = NI.disc_sums(x, y, buffer_m, res)
-        mean_ndvi = s1 / (800.0 * n)
-        # accessibility: BIGINT d² minimum over the park dim.
-        # Empty dim (every park filtered by min_area): match the
-        # batch operator's left-join semantics — no nearest park
-        # (inf distance), nothing in buffer (ADVICE r04: the bare
-        # d2.min(axis=1) raised on the (n, 0) shape).
-        if len(park_cx) == 0:
-            min_d2 = np.full(len(x), np.inf)
-        else:
-            d2 = ((x[:, None] - park_cx[None, :]) ** 2
-                  + (y[:, None] - park_cy[None, :]) ** 2)
-            min_d2 = d2.min(axis=1)
-        return pd.DataFrame({
-            "url": pdf["url"].to_numpy(),
-            "warc_ts": pdf["warc_ts"].to_numpy(),
-            "point_id": pdf["point_id"].to_numpy(),
-            "mean_ndvi": mean_ndvi,
-            "n_cells": n,
-            "closest_greenspace": np.sqrt(min_d2.astype(np.float64)),
-            "greenspace_in_buffer": min_d2 < int(buffer_m) ** 2,
-        })
+            out = XK.score(pdf, *parks, buffer_m=buffer_m, res=res)
+            d2 = (out["min_d2"].to_numpy() if parks[0] is not None
+                  else np.full(len(out), np.inf))
+            yield out.assign(
+                mean_ndvi=out["s1"] / (800.0 * out["n_cells"]),
+                closest_greenspace=np.sqrt(d2.astype(np.float64)),
+                greenspace_in_buffer=d2 < int(buffer_m) ** 2)[[
+                    "url", "warc_ts", "point_id", "mean_ndvi", "n_cells",
+                    "closest_greenspace", "greenspace_in_buffer"]]
 
     return run
 
 
 def score_captures(spark: SparkSession, captures: DataFrame) -> DataFrame:
     """Attach exposure scores to geocoded captures (stream or batch —
-    the plan is identical)."""
-    cx, cy = _park_arrays(spark)
+    the plan is identical).  The park dim rides in the scorer's
+    closure; above accessibility.BROADCAST_PARK_LIMIT parks this
+    raises ValueError (a stream has no cell-index join to fall back
+    on)."""
+    parks = accessibility.park_centroids(world.parks_df(spark))
+    if parks is None:
+        raise ValueError("park dim above BROADCAST_PARK_LIMIT")
+    cx, cy = parks
     geo = pages_ops.geocode(captures).select(
         "url", F.col("warc_ts").cast("timestamp").alias("warc_ts"),
         "point_id", "x", "y")

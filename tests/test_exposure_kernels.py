@@ -5,9 +5,10 @@ replaced, kept here as test oracles:
   a brute-force enumeration of every cell of the clipped square, and
   ndvi_zonal against the explode-and-aggregate plan over
   covered_cells;
-* the VGVI batch reduction against the per-observer loop, and the
-  separable patch synthesis against the full (n, (2r+1)²) evaluation,
-  both bit for bit at r=40 over 2,000 geocoded observers;
+* the VGVI batch reduction against the per-observer loop, the
+  separable patch synthesis against the full (n, (2r+1)²) evaluation
+  and the level-wise LoS-trie viewshed against the sequential ray
+  sweep, bit for bit at r=40 over 2,000 geocoded observers;
 * widen() on a source whose size cannot be read.
 """
 
@@ -21,7 +22,9 @@ from pyspark.sql import functions as F
 from greenexp_r_spark import api, constants as C, world
 from greenexp_r_spark.kernels import ndvi_intervals as NI
 from greenexp_r_spark.kernels import vgvi as K, worldgrid as W
-from greenexp_r_spark.operators import availability, visibility
+from greenexp_r_spark.operators import availability
+
+from .test_lostrie import ray_sweep
 
 
 # ------------------------------------------------ interval disc sums
@@ -167,7 +170,7 @@ R40 = int(round(C.VIS_MAX_DIST / C.VIS_RES))
 
 
 def _old_patches(xs, ys, r, res):
-    """visibility._patches as it evaluated every patch cell."""
+    """observer_patches as it evaluated every patch cell."""
     nc = 2 * r + 1
     ccx = (np.floor(xs / res) + 0.5) * res
     ccy = (np.floor(ys / res) + 0.5) * res
@@ -220,11 +223,20 @@ def observers():
     return x.astype(float), y.astype(float)
 
 
+def test_viewshed_matches_ray_sweep_exposure_observers(observers):
+    xs, ys = observers
+    for lo in range(0, len(xs), K.KERNEL_BATCH):
+        sl = slice(lo, lo + K.KERNEL_BATCH)
+        dsm, _, h0 = W.observer_patches(xs[sl], ys[sl], R40, C.VIS_RES)
+        got = K.viewshed_batch(dsm, h0, R40)
+        assert got.tobytes() == ray_sweep(dsm, h0, R40).tobytes()
+
+
 def test_separable_patches_byte_identical(observers):
     xs, ys = observers
-    for lo in range(0, len(xs), visibility.KERNEL_BATCH):
-        sl = slice(lo, lo + visibility.KERNEL_BATCH)
-        got = visibility._patches(xs[sl], ys[sl], R40, C.VIS_RES)
+    for lo in range(0, len(xs), K.KERNEL_BATCH):
+        sl = slice(lo, lo + K.KERNEL_BATCH)
+        got = W.observer_patches(xs[sl], ys[sl], R40, C.VIS_RES)
         want = _old_patches(xs[sl], ys[sl], R40, C.VIS_RES)
         for g, w in zip(got, want):
             assert g.shape == w.shape and g.tobytes() == w.tobytes()
@@ -257,9 +269,9 @@ def test_vgvi_reduction_bit_identical(observers, fun):
     radius, m, b = C.VIS_MAX_DIST, C.VGVI_M, C.VGVI_B
     shifted, ring = _rings(r, res)
     ncell = len(ring)
-    for lo in range(0, len(xs), visibility.KERNEL_BATCH):
-        sl = slice(lo, lo + visibility.KERNEL_BATCH)
-        dsm, gs, h0 = visibility._patches(xs[sl], ys[sl], r, res)
+    for lo in range(0, len(xs), K.KERNEL_BATCH):
+        sl = slice(lo, lo + K.KERNEL_BATCH)
+        dsm, gs, h0 = W.observer_patches(xs[sl], ys[sl], r, res)
         got = K.vgvi_batch(dsm, gs, h0, r, res, radius, fun, m, b)
         gs_int = np.zeros(gs.shape, np.int64)
         ok = shifted < ncell

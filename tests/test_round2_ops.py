@@ -23,9 +23,10 @@ def test_viewshed_raster_matches_kernel(spark):
     pid = int(got.point_id.iloc[0])
     row = pts.where(F.col("point_id") == pid).first()
     r = int(round(C.VIS_MAX_DIST / C.VIS_RES))
-    from greenexp_r_spark.operators.visibility import _disk_mask, _patches
-    dsm, _, h0 = _patches(np.array([row.x]), np.array([row.y]), r,
-                          C.VIS_RES)
+    from greenexp_r_spark.kernels.worldgrid import observer_patches
+    from greenexp_r_spark.operators.visibility import _disk_mask
+    dsm, _, h0 = observer_patches(np.array([row.x]), np.array([row.y]), r,
+                                  C.VIS_RES)
     vis = K.viewshed_batch(dsm, h0, r)[0]
     mask = _disk_mask(r)
     sub = got[got.point_id == pid]

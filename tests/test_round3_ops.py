@@ -138,8 +138,8 @@ def test_concave_fixture_rings_are_simple():
 
 def test_viewshed_flat_matches_trie(spark):
     from greenexp_r_spark import registry_geo3 as G3
-    from greenexp_r_spark.kernels import lostrie
     from greenexp_r_spark.operators import visibility as V
+    from tests.test_lostrie import ray_sweep
     out = G3._q_viewshed_flat(spark, SF_TEST).toPandas()
     r = int(round(G3.VSF_MAX_DIST / G3.VSF_RES))
     nc = 2 * r + 1
@@ -155,7 +155,8 @@ def test_viewshed_flat_matches_trie(spark):
     pci = ci0 + offs[None, :] + 0 * offs[:, None]
     pcj = cj0 - offs[:, None] + 0 * offs[None, :]
     heights = V.flat_height(pci.reshape(-1), pcj.reshape(-1))
-    vis = lostrie.trie_visibility(heights, V.FLAT_OBSERVER, r)
+    vis = ray_sweep(heights[None, :], np.array([V.FLAT_OBSERVER]),
+                    r)[0]
     got = {(int(rw.ci), int(rw.cj)): int(rw.visible)
            for rw in one.itertuples()}
     for (cij, v) in got.items():

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from greenexp_r_spark import constants as C, world
-from greenexp_r_spark.kernels import vgvi as K
+from greenexp_r_spark.kernels import vgvi as K, worldgrid as W
 from greenexp_r_spark.operators import visibility
 
 from .conftest import SF_TEST
@@ -28,7 +28,7 @@ def test_vgvi_points_matches_kernel(spark):
            .sort_values("point_id").reset_index(drop=True))
     pdf = _local_points(spark)
     r = int(round(C.VIS_MAX_DIST / C.VIS_RES))
-    dsm, gs, h0 = visibility._patches(
+    dsm, gs, h0 = W.observer_patches(
         pdf["x"].to_numpy(), pdf["y"].to_numpy(), r, C.VIS_RES)
     want = K.vgvi_batch(dsm, gs, h0, r, C.VIS_RES, C.VIS_MAX_DIST,
                         1, C.VGVI_M, C.VGVI_B)
@@ -72,10 +72,9 @@ def test_vgvi_lines_densification(spark):
     # value equality: the line observers run the SAME kernel as point
     # observers at the sampled coordinates
     row = got.iloc[0]
-    from greenexp_r_spark.operators.visibility import _patches
     r = int(round(C.VIS_MAX_DIST / C.VIS_RES))
-    dsm, gs, h0 = _patches(np.array([row.x]), np.array([row.y]),
-                           r, C.VIS_RES)
+    dsm, gs, h0 = W.observer_patches(np.array([row.x]), np.array([row.y]),
+                                     r, C.VIS_RES)
     want = K.vgvi_batch(dsm, gs, h0, r, C.VIS_RES, C.VIS_MAX_DIST,
                         1, C.VGVI_M, C.VGVI_B)[0]
     assert row.vgvi == want

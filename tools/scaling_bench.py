@@ -32,7 +32,7 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from greenexp_r_spark.session import build_session
 from greenexp_r_spark import world
-from greenexp_r_spark.operators import availability, accessibility, visibility
+from greenexp_r_spark.operators import availability, visibility
 from pyspark.sql import functions as F
 
 import numpy as _np
@@ -83,13 +83,8 @@ visibility.vgvi_points(world.synthetic_points(spark, 200),
 t0 = time.time()
 # the full north-star pages pipeline: snapshot dedup -> byte-exact
 # extract -> url geocode -> all three exposure families
-geo = pages_ops.geocode(pages_ops.extract_text(
-    pages_ops.latest_snapshot(pages)))
-pts = geo.select("point_id", "url", "x", "y")
-avail = availability.ndvi_zonal(pts, add_sd=True)
-acc = accessibility.euclidean_access(pts, parks)
-rows = avail.join(acc, "point_id").count()
-vg = visibility.vgvi_points(pts, sample_mod=sample_mod).count()
+out = pages_ops.exposure_of_pages(pages, parks, sample_mod=sample_mod)
+rows, vg = out.agg(F.count(F.lit(1)), F.count("vgvi")).first()
 dt = time.time() - t0
 c1 = control_burn(); p1 = parallel_burn_ratio()
 print(json.dumps({{"cpus": cpus, "n_points": n, "rows": rows,

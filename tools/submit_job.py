@@ -41,17 +41,7 @@ def main() -> None:
     if sf_dir.startswith("synthetic:"):
         n = int(sf_dir.split(":", 1)[1])
         from greenexp_r_spark.sources import pages as P
-        from greenexp_r_spark.operators import availability
-        from greenexp_r_spark import world
-        geo = pages_ops.geocode(pages_ops.latest_extracted_snapshot(
-            P.synthetic_pages(spark, n)))
-        pts = geo.select("point_id", "url", "x", "y") \
-                 .localCheckpoint(eager=False)
-        from greenexp_r_spark.operators.knn_cells import \
-            euclidean_access_cells
-        result = (availability.ndvi_zonal(pts)
-                  .join(euclidean_access_cells(
-                      pts, world.parks_df(spark)), "point_id"))
+        result = pages_ops.exposure_of_pages(P.synthetic_pages(spark, n))
         n_in = n
     else:
         result = pages_ops.exposure_over_pages(spark, sf_dir)
