@@ -19,8 +19,8 @@ Scale notes (the 100 TB shapes):
     Candidate generation is an equi-join on (band, h1, h2); the exact
     Jaccard verify joins shingle arrays for candidate pairs only and
     compares them row-locally with array_intersect.
-  * SimHash signatures are row-local too (per-bit majority via
-    size(filter(sh_arr, ...))).  60-bit signature, pigeonhole blocking
+  * SimHash signatures are row-local too (per-bit majority over the
+    shingle set, one numpy pass).  60-bit signature, pigeonhole blocking
     on 4 × 15-bit blocks: a pair within hamming ≤ 3 damages ≤ 3
     blocks, so it must agree on ≥ 1 — an equi-join with a 32_768-value
     keyspace per block (vs 16 for the round-1 nibble scheme, whose
@@ -157,13 +157,7 @@ def shingle_arrays(corpus: DataFrame) -> DataFrame:
 
     def shingle(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ids, arrs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sh = _doc_shingles_np(text)
-                if sh is None:
-                    continue
-                ids.append(doc_id)
-                arrs.append(pd.unique(sh))
+            ids, arrs = _doc_shingle_sets(pdf)
             if not ids:
                 continue      # an all-short-docs batch: empty typed
                               # frames trip Arrow's NumPyConverter
@@ -198,36 +192,19 @@ def shingle_table(corpus: DataFrame) -> DataFrame:
         + [StructField(f"mh{j}", LongType())
            for j in range(len(C.MINHASH_PERMS))]
         + [StructField("simhash", LongType())])
-    bit_perms = C.SIMHASH_BIT_PERMS[:C.SIMHASH_BITS]
 
     def kern(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            ids, arrs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                sh = _doc_shingles_np(text)
-                if sh is None:
-                    continue
-                ids.append(doc_id)
-                arrs.append(pd.unique(sh))
+            ids, arrs = _doc_shingle_sets(pdf)
             if not ids:
                 continue
-            sizes = np.fromiter((len(a) for a in arrs), dtype=np.int64,
-                                count=len(arrs))
-            flat = np.concatenate(arrs)
-            offs = np.zeros(len(arrs), dtype=np.int64)
-            np.cumsum(sizes[:-1], out=offs[1:])
+            flat, offs, sizes = _flat_shingles(arrs)
             out = {"doc_id": pd.Series(ids, dtype="int64"),
                    "sh_arr": pd.Series(arrs, dtype="object")}
             for j, (a, b) in enumerate(C.MINHASH_PERMS):
                 out[f"mh{j}"] = np.minimum.reduceat(
                     (flat * a + b) % C.P31, offs)
-            sim = np.zeros(len(arrs), dtype=np.int64)
-            for bnum, (a, bb) in enumerate(bit_perms):
-                ones = ((flat * a + bb) % C.P31) & 1
-                cb = np.add.reduceat(ones, offs)
-                sim += np.where(cb * 2 > sizes,
-                                np.int64(1) << bnum, 0)
-            out["simhash"] = sim
+            out["simhash"] = _simhash_majority(flat, offs, sizes)
             yield pd.DataFrame(out)
 
     from ..plans.widen import widen
@@ -236,11 +213,24 @@ def shingle_table(corpus: DataFrame) -> DataFrame:
         .mapInPandas(kern, schema)
 
 
-def _flat_shingles(pdf):
+def _doc_shingle_sets(pdf):
+    """(doc_ids, distinct shingle arrays) of a batch's documents with
+    ≥ 2 words (`_doc_shingles_np`); the distinct keeps FIRST-OCCURRENCE
+    order (pd.unique), matching array_distinct exactly."""
+    import pandas as pd
+    ids, arrs = [], []
+    for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+        sh = _doc_shingles_np(text)
+        if sh is not None:
+            ids.append(doc_id)
+            arrs.append(pd.unique(sh))
+    return ids, arrs
+
+
+def _flat_shingles(arrs):
     """Flatten a batch's shingle arrays → (flat int64 array, doc
     offsets for np.*.reduceat, per-doc sizes)."""
     import numpy as np
-    arrs = pdf["sh_arr"].to_numpy()
     sizes = np.fromiter((len(a) for a in arrs), dtype=np.int64,
                         count=len(arrs))
     flat = np.concatenate([np.asarray(a, dtype=np.int64) for a in arrs]) \
@@ -248,6 +238,19 @@ def _flat_shingles(pdf):
     offs = np.zeros(len(arrs), dtype=np.int64)
     np.cumsum(sizes[:-1], out=offs[1:])
     return flat, offs, sizes
+
+
+def _simhash_majority(flat, offs, sizes, bits: int = C.SIMHASH_BITS):
+    """SimHash per document of a flattened batch: bit b is set iff more
+    than half of the document's distinct shingles have parity 1 under
+    the affine rehash SIMHASH_BIT_PERMS[b] (one add.reduceat per bit)."""
+    import numpy as np
+    sim = np.zeros(len(offs), dtype=np.int64)
+    for b, (a, bb) in enumerate(C.SIMHASH_BIT_PERMS[:bits]):
+        ones = ((flat * a + bb) % C.P31) & 1
+        cb = np.add.reduceat(ones, offs)
+        sim += np.where(cb * 2 > sizes, np.int64(1) << b, 0)
+    return sim
 
 
 def minhash_signatures_from_arrays(sh: DataFrame) -> DataFrame:
@@ -275,7 +278,7 @@ def minhash_signatures_from_arrays(sh: DataFrame) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            flat, offs, _ = _flat_shingles(pdf)
+            flat, offs, _ = _flat_shingles(pdf["sh_arr"].to_numpy())
             out = {"doc_id": pdf["doc_id"].to_numpy()}
             for j, (a, b) in enumerate(C.MINHASH_PERMS):
                 h = (flat * a + b) % C.P31
@@ -384,7 +387,7 @@ def _signatures_with_arrays(sh: DataFrame) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            flat, offs, _ = _flat_shingles(pdf)
+            flat, offs, _ = _flat_shingles(pdf["sh_arr"].to_numpy())
             out = {"doc_id": pdf["doc_id"].to_numpy()}
             for j, (a, b) in enumerate(C.MINHASH_PERMS):
                 h = (flat * a + b) % C.P31
@@ -707,39 +710,38 @@ def simhash_signatures(corpus: DataFrame,
     """(doc_id, simhash): per bit, majority vote over the shingle set.
     Bit b of a shingle is the parity of an affine rehash
     (SIMHASH_BIT_PERMS), so every signature bit is a fair coin and
-    every 15-bit block key is uniformly distributed.
+    every 15-bit block key is uniformly distributed.  Documents with
+    fewer than 2 words have no shingle and no signature.
 
-    Computed as one Arrow-batched numpy pass over the flattened
-    shingle stream (add.reduceat per doc per bit) — the 60 per-bit
-    JVM filter() lambdas this replaces were interpreted (no codegen).
-    Identical integers to the SQL oracle; zero shuffle (narrow map).
-    """
-    import numpy as np
+    With `sh` (a `shingle_table`), its simhash column.  Otherwise one
+    Arrow-batched numpy pass from text: shingle, then sweep the bits
+    over the flattened batch (`_simhash_majority`, shared with
+    `shingle_table`) in the same Python task, so each task starts one
+    Python worker, not one per chained pass.  Identical integers to
+    the SQL oracle; zero shuffle."""
     import pandas as pd
     from collections.abc import Iterator
     from pyspark.sql.types import LongType, StructField, StructType
 
+    if sh is not None:
+        return sh.select("doc_id", "simhash")
     schema = StructType([StructField("doc_id", LongType()),
                          StructField("simhash", LongType())])
-    perms = C.SIMHASH_BIT_PERMS[:bits]
 
     def sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if not len(pdf):
+            ids, arrs = _doc_shingle_sets(pdf)
+            if not ids:
                 continue
-            flat, offs, sizes = _flat_shingles(pdf)
-            sim = np.zeros(len(pdf), dtype=np.int64)
-            for b, (a, bb) in enumerate(perms):
-                ones = ((flat * a + bb) % C.P31) & 1
-                cb = np.add.reduceat(ones, offs)
-                sim += np.where(cb * 2 > sizes, np.int64(1) << b, 0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].to_numpy(),
-                                "simhash": sim})
+            flat, offs, sizes = _flat_shingles(arrs)
+            yield pd.DataFrame({
+                "doc_id": pd.Series(ids, dtype="int64"),
+                "simhash": _simhash_majority(flat, offs, sizes, bits)})
 
-    if sh is not None and "simhash" in sh.columns:
-        return sh.select("doc_id", "simhash")
-    src = sh if sh is not None else shingle_arrays(corpus)
-    return src.select("doc_id", "sh_arr").mapInPandas(sig, schema)
+    from ..plans.widen import widen
+    return widen(corpus.select("doc_id", "text"),
+                 bytes_per_task=512 * 1024) \
+        .mapInPandas(sig, schema)
 
 
 def simhash_pairs(corpus: DataFrame,
@@ -750,17 +752,25 @@ def simhash_pairs(corpus: DataFrame,
     4 15-bit blocks, so it must agree on ≥1 — an equi-join whose
     blocking keyspace is 32_768 values per block (candidate volume
     stays O(n·dup_rate), not O(n²/16) like round 1's nibbles).
-    Output: (doc_a, doc_b, hamming)."""
+
+    One route at every size, all of it in the JVM after the signature
+    pass: the block self-join, distinct pairs, and the hamming
+    distance as bit_count(sim_a ^ sim_b).  A hot block is a wide join
+    key, which the sort-merge join spills and AQE's skew handling
+    splits; no task holds a bucket's pair matrix, and building the
+    plan runs no job.  Output: (doc_a, doc_b, hamming)."""
     sig = simhash_signatures(corpus, sh=sh)
     blk_arr = F.array(*[
         F.shiftright(F.col("simhash"), C.SIMHASH_BLOCK_BITS * k)
         .bitwiseAND((1 << C.SIMHASH_BLOCK_BITS) - 1)
         for k in range(C.SIMHASH_BLOCKS)])
+    # one exchange on the block key under both join sides (a sort-merge
+    # join needs this distribution anyway): Spark reuses it, so the
+    # signature pass runs once.  Over a cached input AQE cannot match
+    # the two sides' cache stages and the pass runs once per side.
     blk = sig.select("doc_id", "simhash",
-                     F.posexplode(blk_arr).alias("bk", "bv"))
-    n = sh.count() if sh is not None else corpus.count()
-    if n <= DEDUP_BUCKET_MAX:
-        return _simhash_pairs_bucketed(blk, max_hamming)
+                     F.posexplode(blk_arr).alias("bk", "bv")) \
+        .repartition("bk", "bv")
     l = blk.select(F.col("doc_id").alias("doc_a"),
                    F.col("simhash").alias("sim_a"), "bk", "bv")
     r = blk.select(F.col("doc_id").alias("doc_b"),
@@ -771,60 +781,3 @@ def simhash_pairs(corpus: DataFrame,
     ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (cand.select("doc_a", "doc_b", ham.alias("hamming"))
             .where(F.col("hamming") <= max_hamming))
-
-
-def _simhash_pairs_bucketed(blk: DataFrame,
-                            max_hamming: int) -> DataFrame:
-    """Bucket-local hamming verify: each (bk, bv) block bucket arrives
-    as a collect_list of (doc_id, simhash) members; pairwise
-    XOR-popcount runs as one vectorized pass per bucket (byte-LUT
-    popcount, numpy<2 has no bitwise_count) and only pairs with
-    hamming <= max leave Python.  Same semantics as the block
-    equi-join route (agree on >=1 block AND hamming <= max)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    buckets = (blk.groupBy("bk", "bv")
-               .agg(F.collect_list(F.struct("doc_id", "simhash"))
-                    .alias("members"))
-               .where(F.size("members") >= 2)
-               # tiny bucket table: AQE would coalesce it to 1-2
-               # partitions and run the popcount verify single-core
-               .repartition(
-                   blk.sparkSession.sparkContext.defaultParallelism))
-    schema = StructType([
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-        StructField("hamming", LongType()),
-    ])
-    LUT = np.array([bin(i).count("1") for i in range(256)],
-                   dtype=np.int64)
-
-    def popcount64(x):
-        return LUT[x.view(np.uint8).reshape(*x.shape, 8)].sum(axis=-1)
-
-    def verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            oa, ob, oh = [], [], []
-            for members in pdf["members"]:
-                ids = np.array([m["doc_id"] for m in members],
-                               dtype=np.int64)
-                sig = np.array([m["simhash"] for m in members],
-                               dtype=np.int64)
-                order = np.argsort(ids, kind="stable")
-                ids, sig = ids[order], sig[order]
-                x = sig[:, None] ^ sig[None, :]
-                ham = popcount64(x)
-                ii, jj = np.nonzero(ham <= max_hamming)
-                keep = ii < jj
-                oa.extend(ids[ii[keep]])
-                ob.extend(ids[jj[keep]])
-                oh.extend(ham[ii[keep], jj[keep]])
-            yield pd.DataFrame({"doc_a": pd.Series(oa, dtype="int64"),
-                                "doc_b": pd.Series(ob, dtype="int64"),
-                                "hamming": pd.Series(oh,
-                                                     dtype="int64")})
-
-    return buckets.mapInPandas(verify, schema).distinct()

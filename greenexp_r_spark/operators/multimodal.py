@@ -565,9 +565,12 @@ def synthesize_audio(text: str):
     rate = 8000 + (lt % 3) * 4000
     # empty text → a single zero code (the SQL twin gets this free:
     # ascii(substr(text, ..., 1)) over '' is 0 and the index wraps on
-    # GREATEST(lt, 1)); without the guard lt=0 crashes the modulo
-    codes = (np.frombuffer(text.encode("ascii"),
-                           dtype=np.uint8).astype(np.int64)
+    # GREATEST(lt, 1)); without the guard lt=0 crashes the modulo.
+    # code = the character's codepoint, as Spark's and DuckDB's
+    # ascii() return it for non-ASCII text too (UTF-32 = one 4-byte
+    # codepoint per character, so index i is character i)
+    codes = (np.frombuffer(text.encode("utf-32-le"),
+                           dtype="<u4").astype(np.int64)
              if lt else np.zeros(1, dtype=np.int64))
     i = np.arange(1, n + 1, dtype=np.int64)
     s = ((codes[(i - 1) % max(lt, 1)] * AUDIO_SAMPLE_MUL + i)

@@ -4,6 +4,21 @@ Scale posture (SURVEY.md §4.3): AQE on (skew-join splitting as the
 backstop behind our explicit salting), Arrow batches large enough to
 amortize the Python boundary, shuffle partitions sized for the test
 box but overridable for the bench's two-parallelism scaling runs.
+
+Persisted frames get AQE's size-based partition count
+(`canChangeCachedPlanOutputPartitioning`).  Spark otherwise turns
+final-stage coalescing off for cached plans, so a persisted aggregate
+keeps exactly `spark.sql.shuffle.partitions` partitions however small
+it is, and every consumer of it runs that many tasks per stage.  For
+a Python pass that count, not the row count, sets the cost at these
+sizes: each task's Python worker pays ~0.2 s of CPU before its first
+row (pyspark's per-task `importlib.invalidate_caches()` makes every
+zip importer on the worker path re-read its central directory on
+CPython 3.11), while the corpus kernels compute all 1.4 MB of a
+1k-document corpus in ~0.15 s.  Persisted scans and explicit
+`repartition(n)` outputs are never coalesced by AQE, so only
+persisted aggregates change; `localCheckpoint` is sized this way
+already.
 """
 
 from __future__ import annotations
@@ -26,6 +41,8 @@ def build_session(app: str = "greenexp", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # int64 micros (not legacy INT96) so parquet files carry
         # min/max statistics for timestamp columns — the icetable
         # manifest pruning and any engine's row-group skipping need them

@@ -70,3 +70,19 @@ def test_entry_queries_release_at_boundary(spark):
     qs["q_text_profile"](spark, SF_TEST)
     assert len(caching._live) == 0
     caching.release_caches()
+
+
+def test_persisted_small_aggregate_gets_aqe_partition_count(spark):
+    """A persisted aggregate is sized by AQE like any other final
+    stage instead of keeping spark.sql.shuffle.partitions partitions
+    (each one a task, and a Python worker, in every consumer)."""
+    from pyspark.sql import functions as F
+
+    agg = (spark.range(1000).groupBy((F.col("id") % 10).alias("k"))
+           .count().persist())
+    try:
+        assert agg.count() == 10
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert agg.rdd.getNumPartitions() < n_shuffle
+    finally:
+        agg.unpersist()

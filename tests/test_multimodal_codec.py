@@ -147,3 +147,27 @@ def test_audio_empty_text_is_defined():
     assert len(s) == 256 and rate == 8000
     d = M.decode_wav(M.encode_wav(s, rate))
     assert (d["samples"] == s).all()
+
+
+def test_audio_non_ascii_text_uses_codepoints(spark):
+    """Non-ASCII text synthesizes (it raised UnicodeEncodeError): each
+    code is the character's codepoint, as the SQL twin's
+    ascii(substr(text, i, 1)) reads it."""
+    import numpy as np
+    from greenexp_r_spark.operators import multimodal as M
+    text = "café ☕ naïve 𝄞 日本"
+    s, rate = M.synthesize_audio(text)
+    lt = len(text)
+    n = 256 + (lt * 3) % 1024
+    want = [(ord(text[(i - 1) % lt]) * M.AUDIO_SAMPLE_MUL + i)
+            % M.AUDIO_SAMPLE_MOD - M.AUDIO_SAMPLE_MOD // 2
+            for i in range(1, n + 1)]
+    assert rate == 8000 + (lt % 3) * 4000
+    assert s.tolist() == np.array(want, dtype=np.int16).tolist()
+    df = spark.createDataFrame([(text,)], "text string")
+    sql = df.selectExpr(
+        "length(text) AS lt",
+        *[f"ascii(substr(text, {i + 1}, 1)) AS c{i}" for i in range(lt)]
+    ).collect()[0]
+    assert sql["lt"] == lt
+    assert [sql[f"c{i}"] for i in range(lt)] == [ord(c) for c in text]
