@@ -125,8 +125,10 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
       1. TRAIN — per-batch integer count partials over the
          NB_BUCKETS-sized feature space (bucket presence per doc via
          `word_hashes_np` + np.unique; the stopword label per doc);
-         the tiny partials merge driver-side into the weight array
-         (SCALE·(n_pos+1)) // (n_all+2) — same positive-integer DIV.
+         the partials are summed per bucket in Spark, so the driver
+         collects ≤ NB_BUCKETS rows whatever the task count, into the
+         weight array (SCALE·(n_pos+1)) // (n_all+2) — same
+         positive-integer DIV.
       2. APPLY — the weight array broadcasts (dimension-sized by
          construction) and each doc scores locally: evidence = Σ
          W[distinct buckets], score = evidence // n_feat.
@@ -144,35 +146,9 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
     from .dedup import word_hashes_np
 
     B = C.NB_BUCKETS
-    stopset = frozenset(C.STOPWORDS_EN)
     sel = docs.select("doc_id", "text")
-
-    cnt_schema = StructType([StructField("bucket", LongType()),
-                             StructField("n_pos", LongType()),
-                             StructField("n_all", LongType())])
-
-    def counts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        allc = np.zeros(B, dtype=np.int64)
-        posc = np.zeros(B, dtype=np.int64)
-        for pdf in it:
-            for text in pdf["text"]:
-                ws = text.split(" ")
-                pos = (sum(w in stopset for w in ws) * C.NB_STOP_NUM
-                       >= len(ws))
-                bk = np.unique(word_hashes_np(text) % B)
-                allc[bk] += 1
-                if pos:
-                    posc[bk] += 1
-        nz = np.flatnonzero(allc)
-        yield pd.DataFrame({"bucket": nz, "n_pos": posc[nz],
-                            "n_all": allc[nz]})
-
-    part = sel.mapInPandas(counts, cnt_schema).toPandas()
-    agg = part.groupby("bucket").sum()
-    W = np.zeros(B, dtype=np.int64)
-    W[agg.index.to_numpy()] = (
-        (C.NB_SCALE * (agg["n_pos"].to_numpy() + 1))
-        // (agg["n_all"].to_numpy() + 2))
+    W = nb_weight_array(nb_bucket_counts(nb_count_partials(sel))
+                        .toPandas())
     bc = docs.sparkSession.sparkContext.broadcast(W)
 
     out_schema = StructType([
@@ -201,6 +177,60 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
                 "clf_keep": sc_ >= C.NB_KEEP_PM})
 
     return sel.mapInPandas(score, out_schema)
+
+
+def nb_count_partials(docs: DataFrame) -> DataFrame:
+    """(bucket, n_pos, n_all) per task of an Arrow pass over (text):
+    how many of the task's documents, all and stopword-labelled, have
+    a word in each bucket.  Buckets repeat across tasks."""
+    import numpy as np
+    import pandas as pd
+    from collections.abc import Iterator
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from .dedup import word_hashes_np
+
+    B = C.NB_BUCKETS
+    stopset = frozenset(C.STOPWORDS_EN)
+    cnt_schema = StructType([StructField("bucket", LongType()),
+                             StructField("n_pos", LongType()),
+                             StructField("n_all", LongType())])
+
+    def counts(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        allc = np.zeros(B, dtype=np.int64)
+        posc = np.zeros(B, dtype=np.int64)
+        for pdf in it:
+            for text in pdf["text"]:
+                ws = text.split(" ")
+                pos = (sum(w in stopset for w in ws) * C.NB_STOP_NUM
+                       >= len(ws))
+                bk = np.unique(word_hashes_np(text) % B)
+                allc[bk] += 1
+                if pos:
+                    posc[bk] += 1
+        nz = np.flatnonzero(allc)
+        yield pd.DataFrame({"bucket": nz, "n_pos": posc[nz],
+                            "n_all": allc[nz]})
+
+    return docs.select("text").mapInPandas(counts, cnt_schema)
+
+
+def nb_bucket_counts(partials: DataFrame) -> DataFrame:
+    """(bucket, n_pos, n_all) per-task count partials summed per
+    bucket: one row per bucket, at most NB_BUCKETS."""
+    return partials.groupBy("bucket").agg(
+        F.sum("n_pos").alias("n_pos"), F.sum("n_all").alias("n_all"))
+
+
+def nb_weight_array(counts):
+    """NB_BUCKETS-long int64 weights from per-bucket counts (one row
+    per bucket): (SCALE·(n_pos+1)) // (n_all+2), 0 where unseen."""
+    import numpy as np
+    W = np.zeros(C.NB_BUCKETS, dtype=np.int64)
+    W[counts["bucket"].to_numpy()] = (
+        (C.NB_SCALE * (counts["n_pos"].to_numpy() + 1))
+        // (counts["n_all"].to_numpy() + 2))
+    return W
 
 
 def nb_log_odds(weights: DataFrame) -> DataFrame:

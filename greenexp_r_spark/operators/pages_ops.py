@@ -155,7 +155,11 @@ def latest_extracted_snapshot(pages: DataFrame) -> DataFrame:
     corpus scale), then the same max-struct argmax per url.  Row-
     identical to extract_text(latest_snapshot(...)): extraction is a
     deterministic per-row map and capture times are tie-free."""
-    ext = extract_text(pages)
+    return _latest_capture(extract_text(pages))
+
+
+def _latest_capture(ext: DataFrame) -> DataFrame:
+    """The max-struct argmax per url over extracted captures."""
     s = F.max(F.struct("warc_ts", "text", "lang", "n_chars")).alias("s")
     return (ext.groupBy("url").agg(s)
             .select("url", "s.warc_ts", "s.text", "s.lang", "s.n_chars"))
@@ -201,16 +205,24 @@ def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
     mapInPandas pass (kernels/exposure.score) scores each row from its
     own disc, also when other urls share its page id.
 
-    The geocoded rows are round-robined to one partition per core
-    before the pass: the snapshot aggregate's output is small, so AQE
-    coalesces it to a couple of partitions and the kernel would run on
-    that many cores only (a warm 20k-url operation took 2.31 / 1.85 /
-    2.41 s with 2 / 4 / 8 partitions on a 4-core host).  The count is
-    the session's parallelism, not a tuning knob."""
+    One exchange feeds the pass: the extracted captures (text, not
+    html) are hash-partitioned on url into one partition per core, and
+    the snapshot aggregate, the geocode and the pass run behind it in
+    one stage.  The exchange is an explicit ``repartition(n, "url")``
+    because AQE never coalesces one: the snapshot is small, so AQE
+    would coalesce a plain aggregate's shuffle to a couple of
+    partitions and the kernel would run on that many cores only (a
+    warm 20k-url operation took 2.31 / 1.85 / 2.41 s with 2 / 4 / 8
+    partitions on a 4-core host).  The count is the session's
+    parallelism, not a tuning knob.  The exchange carries every
+    capture, not map-side partial winners: the synthetic tables
+    re-crawl 1/4 + 1/16 of their urls, ~31 % more rows of text."""
     from .. import world
     spark = pages.sparkSession
     parks = parks if parks is not None else world.parks_df(spark)
-    geo = geocode(latest_extracted_snapshot(pages)).select(
+    ext = extract_text(pages).repartition(
+        spark.sparkContext.defaultParallelism, "url")
+    geo = geocode(_latest_capture(ext)).select(
         "url", "warc_ts", "x", "y", "n_chars", "point_id")
     dim = accessibility.park_centroids(parks)
     # an empty dim has no nearest park: the cell plan's inner join then
@@ -226,8 +238,7 @@ def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
         for pdf in it:
             yield XK.score(pdf, cx, cy, sample_mod)
 
-    scored = (geo.repartition(spark.sparkContext.defaultParallelism)
-              .mapInPandas(run, StructType(geo.schema.fields + extra)))
+    scored = geo.mapInPandas(run, StructType(geo.schema.fields + extra))
     if cx is None:
         scored = scored.join(euclidean_access_cells(geo, parks), "point_id")
         access = ["closest_greenspace", "greenspace_in_buffer"]

@@ -11,14 +11,29 @@ final-stage coalescing off for cached plans, so a persisted aggregate
 keeps exactly `spark.sql.shuffle.partitions` partitions however small
 it is, and every consumer of it runs that many tasks per stage.  For
 a Python pass that count, not the row count, sets the cost at these
-sizes: each task's Python worker pays ~0.2 s of CPU before its first
-row (pyspark's per-task `importlib.invalidate_caches()` makes every
-zip importer on the worker path re-read its central directory on
-CPython 3.11), while the corpus kernels compute all 1.4 MB of a
-1k-document corpus in ~0.15 s.  Persisted scans and explicit
-`repartition(n)` outputs are never coalesced by AQE, so only
-persisted aggregates change; `localCheckpoint` is sized this way
-already.
+sizes: the corpus kernels compute all 1.4 MB of a 1k-document corpus
+in ~0.15 s.  Persisted scans and explicit `repartition(n)` outputs
+are never coalesced by AQE, so only persisted aggregates change;
+`localCheckpoint` is sized this way already.
+
+Python workers come from `worker_daemon`: pyspark's daemon and
+worker, with zip importers that skip re-reading unchanged archives,
+so pyspark's per-task `importlib.invalidate_caches()` no longer costs
+0.14-0.21 s of CPU per task on CPython 3.11 (details there).  The
+daemon is started as `python -m greenexp_r_spark.worker_daemon`, so
+the engine must be importable by the Python workers (from their
+working directory or `PYTHONPATH`), as its kernels already require.
+
+DataFrame building skips pyspark's per-call call-site capture
+(`spark.python.sql.dataFrameDebugging.enabled=false`).  With it on,
+every `Column` method and `F.col` makes about 5 py4j round trips
+(active session, a conf read, `PySparkCurrentOrigin.set`/`clear`) only
+to attach the Python call site to a later error: building the pages
+flagship at sf0.001 made 1,308 round trips instead of 498.  Errors
+keep their types and messages (an unknown column still raises
+`AnalysisException`); only the "DataFrame query context" lines that
+name the Python call site are gone.  pyspark reads the setting once
+per Python process, from the first active session.
 """
 
 from __future__ import annotations
@@ -47,6 +62,9 @@ def build_session(app: str = "greenexp", master: str | None = None,
         # min/max statistics for timestamp columns — the icetable
         # manifest pruning and any engine's row-group skipping need them
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.python.daemon.module",
+                "greenexp_r_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

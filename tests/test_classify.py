@@ -64,6 +64,24 @@ def test_stopword_rich_beats_gibberish(spark):
     assert s[3] > s[2] and s[5] > s[2]
 
 
+def test_bucket_counts_merge_in_spark(spark, sf_dir):
+    """Per-task partials over ≥ 8 partitions are summed in Spark: the
+    driver collects one row per bucket, and the weights equal the
+    driver-side pandas merge of the raw partials."""
+    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text").repartition(8))
+    partials = classify.nb_count_partials(docs)
+    raw = partials.toPandas()
+    assert partials.rdd.getNumPartitions() >= 8
+    assert raw["bucket"].duplicated().any()
+    want = classify.nb_weight_array(
+        raw.groupby("bucket", as_index=False).sum())
+    counts = classify.nb_bucket_counts(partials).toPandas()
+    assert counts["bucket"].is_unique
+    assert len(counts) <= C.NB_BUCKETS
+    assert (classify.nb_weight_array(counts) == want).all()
+
+
 def test_apply_is_broadcast_join(spark):
     docs = spark.createDataFrame(list(FIX.items()), "doc_id long, text string")
     df = classify.classify(docs, classify.nb_train(docs))

@@ -1,14 +1,19 @@
 """The one-pass pages exposure (pages_ops.exposure_of_pages): identity
 with the family composition it replaced, the rows it drops, both park
-routes, the distance kernel's row blocks, and the plan it builds."""
+routes, the distance kernel's row blocks, the plan it builds and the
+py4j round trips building it costs."""
 
 from __future__ import annotations
 
 import datetime as dt
+import re
+import threading
 
 import numpy as np
 import pandas as pd
 import pytest
+from py4j.clientserver import ClientServerConnection
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from .conftest import SF_TEST
@@ -140,3 +145,44 @@ def test_one_pass_plan_and_build_jobs(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
     assert "Join" not in plan and "RDD" not in plan
+
+
+def test_one_url_exchange_feeds_the_pass(spark):
+    """The captures are hashed on url once, into one partition per
+    core; the snapshot aggregate and the pass run behind that exchange
+    with no round-robin one between them."""
+    df = registry.flagship_exposure_pages(spark, SF_TEST)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = spark.sparkContext.defaultParallelism
+    assert plan.count("Exchange") == 1
+    assert re.search(rf"Exchange hashpartitioning\(url#\d+, {n}\)", plan)
+    assert "RoundRobinPartitioning" not in plan
+
+
+def test_flagship_build_py4j_round_trips(spark, monkeypatch):
+    """No per-Column call-site capture: building the flagship makes a
+    few hundred py4j round trips.  Only this thread's are counted: py4j
+    sends dereferences of collected objects from its own finalizer
+    thread, whenever they come due."""
+    registry.flagship_exposure_pages(spark, SF_TEST)
+    sent = []
+    send = ClientServerConnection.send_command
+    builder = threading.get_ident()
+
+    def counting(self, command):
+        if threading.get_ident() == builder:
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    registry.flagship_exposure_pages(spark, SF_TEST)
+    monkeypatch.undo()
+    assert len(sent) <= 700
+
+
+def test_bad_column_still_raises_analysis_exception(spark):
+    pages = P.pages_df(spark, SF_TEST)
+    with pytest.raises(AnalysisException):
+        pages_ops.exposure_of_pages(pages.withColumnRenamed("url", "u"))
+    with pytest.raises(AnalysisException):
+        pages.select(F.col("no_such_column"))

@@ -19,6 +19,14 @@ rule); wall seconds and throughput are included in the JSON line.
 
 Verified end-to-end by tests/test_submit.py (local[4], result equals
 the in-process q_exposure_pages plan bit-for-bit).
+
+The session is spark-submit's own, not `session.build_session`, so
+the Python workers come from pyspark's own daemon, not the engine's
+`worker_daemon`.  Spark starts the daemon with `python -m <module>`
+before any task runs, but under --py-files the engine zip reaches the
+workers only with each task, so the engine's daemon module could not
+be imported when the daemon starts.  Each task here therefore still
+pays pyspark's per-task zip re-reads (README "Performance notes").
 """
 
 from __future__ import annotations
