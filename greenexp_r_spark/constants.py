@@ -14,13 +14,6 @@ Reference analogs cited per SURVEY.md §2.
 WORLD_SIZE = 20_000          # meters, both axes
 P31 = 2_147_483_647          # Mersenne prime 2^31-1, the mixing modulus
 
-# fixed affine rows (a, b) for the portable multi-hash family — the
-# j-th hash of x is ((x*a_j + b_j) % P31) % range.  SINGLE source of
-# truth shared by the count-min sketch (operators/sketch.py) and the
-# bloom filter (operators/bloom.py): a drifted copy would silently
-# desynchronize their cross-engine SQL renderings.
-AFFINE_ROWS = ((40503, 17), (48271, 101), (69621, 257), (16807, 911))
-
 # ---- point geocoding (pages table; reference analog Ams_Houses,
 #      GreenExp_R R/data.R:19-34) ----------------------------------------
 X_MUL, X_ADD = 2_654_435_761, 12_345
@@ -133,14 +126,12 @@ VIS_RES = 5.0                # DSM/DTM/GS resolution at test scale
 VIS_MAX_DIST = 200.0         # max_distance default 800 scaled down
 OBSERVER_HEIGHT = 1.7        # vgvi_from_sf.R:240-244
 VGVI_M, VGVI_B = 0.5, 8.0    # decay defaults, vgvi_from_sf.R:89-93
-TRAPEZOID_N = 200            # src/vgvi.cpp:207-213 integral resolution
 
 # ---- cell bucketing (the H3-equivalent equi-join grid) -------------------
 CELL_SIZE = 500              # meters; cell_id = cx * 65536 + cy
 CELL_SHIFT = 65_536
 
 # ---- text / dedup --------------------------------------------------------
-SHINGLE_K = 2                          # word 2-gram shingles
 MINHASH_PERMS = [                      # (a, b) pairs, h' = (a*h+b) % P31
     (1_103_515_245, 12_345), (214_013, 2_531_011),
     (69_069, 1_234_567), (1_664_525, 1_013_904_223),
@@ -199,7 +190,6 @@ ANN_K = 3
 ANN_QUERIES = 10                       # first N vec_ids used as queries
 IVF_CENTROID_MOD = 50                  # vec_id % 50 == 0 → centroid (10 lists)
 IVF_NPROBE = 2
-NEARDUP_COS = 0.95
 
 # ---- stopwords for langid / quality (synthetic-corpus-aware) -------------
 STOPWORDS_EN = ["the", "a", "of", "and"]

@@ -60,14 +60,6 @@ def _to_mercator_udf():
     return to_mercator
 
 
-def _to_wgs84_udf():
-    @pandas_udf("lon double, lat double")
-    def to_wgs84(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        lon, lat = mercator_inverse(x.to_numpy(), y.to_numpy())
-        return pd.DataFrame({"lon": lon, "lat": lat})
-    return to_wgs84
-
-
 def reproject_points(df: DataFrame, lon: str = "lon",
                      lat: str = "lat") -> DataFrame:
     """Ingest-time P1: append projected (x, y) meters."""
@@ -75,13 +67,6 @@ def reproject_points(df: DataFrame, lon: str = "lon",
     return df.withColumn("_p", proj) \
              .withColumn("x", F.col("_p.x")) \
              .withColumn("y", F.col("_p.y")).drop("_p")
-
-
-def unproject_points(df: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
-    geo = _to_wgs84_udf()(F.col(x), F.col(y))
-    return df.withColumn("_g", geo) \
-             .withColumn("lon", F.col("_g.lon")) \
-             .withColumn("lat", F.col("_g.lat")).drop("_g")
 
 
 # ---------------------------------------------------------------------

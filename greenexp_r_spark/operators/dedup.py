@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import constants as C
-from ..functions import text as T
 
 EXACT_DUP_MOD = 10
 NEAR_DUP_MOD = 7
@@ -167,10 +166,9 @@ def shingle_arrays(corpus: DataFrame) -> DataFrame:
 
     from ..plans.widen import widen
     # several sequential dedup-arm jobs re-read the persisted result:
-    # size tasks at ~512 KB of source so scheduling overhead stays
+    # widen()'s ~512 KB of source per task keeps scheduling overhead
     # small (A/B: q_dedup_neardup 4.6 s vs 5.3 s at sf1.0)
-    return widen(corpus.select("doc_id", "text"),
-                 bytes_per_task=512 * 1024) \
+    return widen(corpus.select("doc_id", "text")) \
         .mapInPandas(shingle, schema)
 
 
@@ -208,8 +206,7 @@ def shingle_table(corpus: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     from ..plans.widen import widen
-    return widen(corpus.select("doc_id", "text"),
-                 bytes_per_task=512 * 1024) \
+    return widen(corpus.select("doc_id", "text")) \
         .mapInPandas(kern, schema)
 
 
@@ -315,10 +312,6 @@ def ngram_jaccard_pairs(corpus: DataFrame, n: int = 3,
     dup fixture in tests/test_round4_ops.py."""
     return minhash_lsh_pairs(corpus, jaccard_threshold,
                              shingler=lambda c: char_shingle_arrays(c, n))
-
-
-def minhash_signatures(corpus: DataFrame) -> DataFrame:
-    return minhash_signatures_from_arrays(shingle_arrays(corpus))
 
 
 # Above this corpus size the bucket-local routes (collect_list of one
@@ -739,8 +732,7 @@ def simhash_signatures(corpus: DataFrame,
                 "simhash": _simhash_majority(flat, offs, sizes, bits)})
 
     from ..plans.widen import widen
-    return widen(corpus.select("doc_id", "text"),
-                 bytes_per_task=512 * 1024) \
+    return widen(corpus.select("doc_id", "text")) \
         .mapInPandas(sig, schema)
 
 

@@ -690,42 +690,6 @@ def isochrone_nodes(points_sample: DataFrame, edges: DataFrame,
     return out
 
 
-def isochrone_hulls(points_sample: DataFrame, edges: DataFrame,
-                    max_dist: float = C.BUFFER_M,
-                    n_edges_hint: int | None = None) -> DataFrame:
-    """Isochrone summary per source: node count + convex-hull area of
-    the reached lattice nodes (A12 + P5, ndvi_calc.R:229-236).
-    Output: (point_id, n_nodes, hull_area_m2).  Size-routed through
-    isochrone_nodes_auto."""
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    from ..kernels import geom as G
-
-    iso = isochrone_nodes_auto(points_sample, edges, max_dist,
-                               n_edges_hint=n_edges_hint)
-    nodes = iso.select(
-        "point_id",
-        (F.col("node_id") % C.ROAD_N).cast("double").alias("nx"),
-        F.floor(F.col("node_id") / C.ROAD_N).cast("double").alias("ny"))
-
-    schema = StructType([
-        StructField("point_id", LongType()),
-        StructField("n_nodes", LongType()),
-        StructField("hull_area_m2", DoubleType()),
-    ])
-
-    def hull(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pts = pdf[["nx", "ny"]].to_numpy() * C.ROAD_SPACING
-        h = G.convex_hull(pts)
-        area = abs(G.polygon_area(h)) if len(h) >= 3 else 0.0
-        return pd.DataFrame({"point_id": [key[0]],
-                             "n_nodes": [len(pdf)],
-                             "hull_area_m2": [area]})
-
-    return nodes.groupBy("point_id").applyInPandas(hull, schema)
-
-
 def isochrone_summary(points_sample: DataFrame, edges: DataFrame,
                       max_dist: float = C.BUFFER_M,
                       n_edges_hint: int | None = None) -> DataFrame:

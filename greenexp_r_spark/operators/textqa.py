@@ -190,48 +190,6 @@ def c4_gate_columns(doc_id: Column | None = None,
     return c4_rule_columns(c4_augmented(doc_id, text))
 
 
-# -------------------------------------------------- compression signal
-# Gopher / Dolma-style compressibility: templated or repetitive spam
-# compresses far below prose, near-random bytes barely compress.  The
-# signal needs real DEFLATE, so this is one of the engine's few
-# Arrow-batched Python kernels (zlib level fixed → bit-deterministic;
-# verified against direct python zlib in tests/test_report.py).
-
-ZLIB_LEVEL = 6
-
-
-def compression_stats(docs: DataFrame) -> DataFrame:
-    """(doc_id, raw_bytes, zlib_bytes) per document — consumers divide
-    once for the ratio.  Partitioning follows the codec doctrine
-    (multimodal._codec_partitions): the small parquet arrives as one
-    scan partition, which would serialize the kernel on one core."""
-    import pandas as pd
-
-    from .multimodal import _codec_partitions
-
-    def fn(it):
-        import zlib
-        for pdf in it:
-            raw, comp = [], []
-            for t in pdf["text"]:
-                b = t.encode("utf-8")
-                # byte length of the SAME bytes zlib sees — a char
-                # count would overstate compressibility of non-ASCII
-                # text (1000 CJK chars ≈ 3000 UTF-8 bytes)
-                raw.append(len(b))
-                comp.append(len(zlib.compress(b, ZLIB_LEVEL)))
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "raw_bytes": pd.array(raw, dtype="int64"),
-                "zlib_bytes": pd.array(comp, dtype="int64"),
-            })
-
-    n_parts = _codec_partitions(docs)
-    return (docs.select("doc_id", "text").repartition(n_parts)
-            .mapInPandas(fn, "doc_id long, raw_bytes long, "
-                             "zlib_bytes long"))
-
-
 def text_profile(docs: DataFrame, extra=()) -> DataFrame:
     """token_profile + text_qa in ONE narrow projection — the r5
     slot-consolidation (both merged shapes were themselves single-scan

@@ -33,7 +33,7 @@ WIDEN_MIN_BYTES = 4 << 20
 
 
 def widen(df: DataFrame,
-          bytes_per_task: int | None = 512 * 1024) -> DataFrame:
+          bytes_per_task: int = 512 * 1024) -> DataFrame:
     """Ensure enough scan partitions; no-op when the input already
     has them, or when the source files are small enough
     (< WIDEN_MIN_BYTES) that the repartition exchange costs more than
@@ -48,9 +48,8 @@ def widen(df: DataFrame,
     32 near-empty partitions cost more per-task scheduling across the
     many jobs of a query than the extra cores return.  The target
     grows with the input and saturates at the core count, so it is
-    not a local[32]-only constant; pass bytes_per_task=None to force
-    the flat defaultParallelism target.  An input whose size cannot be
-    read (non-local filesystems) is not widened."""
+    not a local[32]-only constant.  An input whose size cannot be read
+    (non-local filesystems) is not widened."""
     # an input of unknown size (no file listing, or a non-local
     # s3a/hdfs path) stays as scanned: widening it blind is the
     # overhead the size gate exists to avoid
@@ -64,9 +63,8 @@ def widen(df: DataFrame,
         return df
     if not files or tot < WIDEN_MIN_BYTES:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if bytes_per_task:
-        target = max(2, min(target, tot // int(bytes_per_task)))
+    target = max(2, min(df.sparkSession.sparkContext.defaultParallelism,
+                        tot // bytes_per_task))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

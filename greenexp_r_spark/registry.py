@@ -22,8 +22,6 @@ from . import world
 from .dialect import DUCK, Dialect
 from .operators import accessibility, availability, network, visibility
 
-SF_DEFAULT = "/root/testdata/sf0.01"
-
 
 @dataclass
 class QSpec:

@@ -150,12 +150,6 @@ FROM arr
 """
 
 
-def _q_idw_grid(s, sf):
-    g = IDW_GRID
-    return idw.idw_to_grid(s, world.parks_df(s), g["xmin"], g["ymin"],
-                           g["size"], g["res"])
-
-
 def _q_idw_union(s, sf):
     """A13 both paths in one gate entry (point interpolation +
     S8 raster-grid sink), tagged by `kind` — consolidated so the
@@ -740,25 +734,6 @@ FROM t4
 """
 
 
-def _q_events_props(s, sf):
-    """Semi-structured extraction: JSON props field aggregated per
-    event type (get_json_object — JVM-side JSON path)."""
-    ev = s.read.parquet(f"{sf}/events.parquet")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (ev.groupBy("event_type")
-            .agg(F.sum(k).alias("k_sum"),
-                 F.count(F.lit(1)).alias("n_events")))
-
-
-_ORACLE_EVENTS_PROPS = """
-SELECT event_type,
-       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-            AS BIGINT) AS k_sum,
-       COUNT(*) AS n_events
-FROM events GROUP BY event_type
-"""
-
-
 def build_geo2_registry() -> dict[str, QSpec]:
     d = DUCK
     return {
@@ -777,7 +752,7 @@ def build_geo2_registry() -> dict[str, QSpec]:
         # domain-level filtering grouping of CC-style pipelines)
         "q_domain_stats": QSpec(_q_domain_stats, _oracle_domain_stats(d)),
         # q_events_props consolidated into registry_pipeline's
-        # q_events_rollup (r05) — operator retained below for API use
+        # q_events_rollup (r05)
         # A13 point + grid paths merged into one exact union entry
         # (was q_idw + q_idw_grid; both shapes still hash-verified)
         "q_idw": QSpec(_q_idw_union, _oracle_idw_union(d)),

@@ -403,22 +403,6 @@ JOIN c4 ON c4.c4_id = _g.doc_id
 """
 
 
-def _oracle_fingerprint(d: Dialect) -> str:
-    pow_case = "CASE ((pos - 1) % 8) " + " ".join(
-        f"WHEN {k} THEN {p}" for k, p in enumerate(textqa.FP_POWS)) + " END"
-    wh = T.word_hash_sql(d.elem("warr", "pos"))
-    inner = f"SELECT doc_id, {d.split('text')} AS warr FROM documents"
-    exploded = d.explode_range(inner, "pos", "1", d.asize("warr"))
-    return f"""
-SELECT doc_id, CAST(SUM(term) % {C.P31} AS BIGINT) AS fingerprint
-FROM (
-  SELECT doc_id, (CAST({wh} AS BIGINT) * ({pow_case})) % {C.P31} AS term
-  FROM ({exploded}) _e
-) _t
-GROUP BY doc_id
-"""
-
-
 def _oracle_fingerprint_rep(d: Dialect) -> str:
     """fingerprint + Gopher repetition stats (textqa.repetition_stats)
     merged on the same position-explode of documents — the r5 slot
@@ -952,18 +936,6 @@ SELECT date_trunc('hour', ts) AS hour, event_type,
 FROM events
 GROUP BY date_trunc('hour', ts), event_type
 """
-
-
-def _q_events_hourly(spark, sf):
-    # events: 1M cheap rows straight into aggregations — widen()'s
-    # exchange costs more than the scan parallelism it buys (A/B 3.5 s
-    # vs 6.4 s at sf1.0), so events reads stay un-widened
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    return (ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"),
-                       "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum(F.round(F.col("value") * 1000000).cast("long"))
-                 .alias("value_sum_micros")))
 
 
 def _q_events_rollup(spark, sf):

@@ -127,14 +127,6 @@ def ndvi_int_expr(ci: str, cj: str) -> str:
             f"ELSE ({h} % {C.NDVI_MOD}) - 200 END")
 
 
-def ndvi_expr(ci: str, cj: str, na_as_null: bool = False) -> str:
-    """NDVI value of raster cell (ci, cj) in [-0.25, 1.0)."""
-    h = cell_hash_expr(ci, cj, C.NDVI_H_A, C.NDVI_H_B)
-    na = "CAST(NULL AS DOUBLE)" if na_as_null else "CAST(0.0 AS DOUBLE)"
-    return (f"CASE WHEN {h} % {C.NDVI_NA_MOD} = 0 THEN {na} "
-            f"ELSE CAST(({h} % {C.NDVI_MOD}) - 200 AS DOUBLE) / 800.0 END")
-
-
 def band_expr(ci: str, cj: str, a: int, b: int, mod: int) -> str:
     """Positive integer band reflectance of raster cell (ci, cj) —
     the closed form of sources/tiles.band_tile_values (red/NIR bands

@@ -91,8 +91,7 @@ def test_url_without_page_id_is_dropped(spark):
 
 def test_empty_park_dim_drops_every_row(spark):
     """No qualifying park means no nearest park: the rows go, as the
-    oracle's inner join drops them (the stream keeps them with an
-    infinite distance, tests/test_exposure_stream.py)."""
+    oracle's inner join drops them."""
     pages = P.pages_df(spark, SF_TEST)
     parks = world.parks_df(spark).where(F.col("area_m2") < 0)
     assert pages_ops.exposure_of_pages(pages, parks).count() == 0

@@ -22,16 +22,6 @@ def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def test_bloom_probe_is_zero_shuffle(spark, sf_dir):
-    from greenexp_r_spark.operators import bloom as B
-    keys = _docs(spark, sf_dir).where("doc_id % 3 = 0") \
-        .select(F.col("doc_id").cast("string").alias("term"))
-    bl = B.bloom_build(keys)
-    probe = _docs(spark, sf_dir) \
-        .withColumn("term", F.col("doc_id").cast("string"))
-    assert _n_exchanges(B.bloom_semi_join(probe, bl)) == 0
-
-
 def test_sessionize_is_one_user_keyed_shuffle(spark, sf_dir):
     """Two windows + the session rollup share ONE exchange: the
     windows partition by user_id, and HashPartitioning(user_id)
@@ -40,28 +30,6 @@ def test_sessionize_is_one_user_keyed_shuffle(spark, sf_dir):
     from greenexp_r_spark.operators import sessions as SS
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     assert _n_exchanges(SS.sessionize_batch(ev)) == 1
-
-
-def test_corpus_report_is_one_aggregate_shuffle(spark, sf_dir):
-    from greenexp_r_spark.operators import report
-    assert _n_exchanges(report.corpus_report(_docs(spark, sf_dir))) == 1
-
-
-def test_cms_build_is_one_aggregate_shuffle(spark, sf_dir):
-    from greenexp_r_spark.operators import sketch as SK
-    assert _n_exchanges(SK.cms_build(_docs(spark, sf_dir))) == 1
-
-
-def test_conjunctive_lookup_shuffles_hits_not_blocks(spark, sf_dir):
-    """The lookup filters terms BEFORE exploding postings, then
-    aggregates: one shuffle keyed by doc_id over matched postings
-    only (plus the index build's own window/agg shuffles upstream —
-    bounded by asserting the total)."""
-    from greenexp_r_spark.operators import searchindex as SI
-    docs = _docs(spark, sf_dir)
-    idx = SI.packed_index(docs, block_docs=8).localCheckpoint()
-    q = SI.conjunctive_lookup(idx, ("the",))
-    assert _n_exchanges(q) == 1
 
 
 def test_asof_join_is_one_keyed_shuffle(spark, sf_dir):

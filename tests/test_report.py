@@ -1,40 +1,11 @@
-"""Dataset-card corpus statistics (operators/report.py) + the C4
-document-rule flags (textqa.c4_*)."""
+"""C4 document-rule flags (textqa.c4_*) on planted violations and on
+raw text."""
 
 from __future__ import annotations
 
-import duckdb
 from pyspark.sql import functions as F
 
-from greenexp_r_spark.dialect import DUCK
-from greenexp_r_spark.operators import report, textqa
-
-from .conftest import SF_TEST
-
-
-def test_corpus_report_matches_duckdb(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = sorted(map(tuple, report.corpus_report(docs).collect()))
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/documents.parquet')")
-    want = sorted(map(tuple,
-                      con.sql(report.report_sql(DUCK)).fetchall()))
-    assert got == want and len(got) > 0
-    # the grid is bounded: at most n_langs × 16 rows regardless of
-    # corpus size (the scale contract of the report shuffle)
-    n_langs = docs.select("lang").distinct().count()
-    assert len(got) <= n_langs * (report.LEN_BUCKET_MAX + 1)
-
-
-def test_corpus_summary_totals_consistent(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    s = report.corpus_summary(docs).collect()[0]
-    grid = report.corpus_report(docs).collect()
-    assert s["n_docs"] == sum(r["n_docs"] for r in grid)
-    assert s["total_tokens"] == sum(r["total_tokens"] for r in grid)
-    assert s["total_chars"] == sum(r["total_chars"] for r in grid)
-    assert s["n_langs"] == len({r["lang"] for r in grid})
+from greenexp_r_spark.operators import textqa
 
 
 def test_c4_rules_flag_planted_violations(spark):
@@ -62,45 +33,3 @@ def test_c4_rules_pure_text_api(spark):
     r = df.select("doc_id",
                   *textqa.c4_rule_columns(F.col("text"))).collect()[0]
     assert r["has_curly"] and not r["c4_keep"]
-
-
-def test_top_terms_match_duckdb(spark, sf_dir):
-    from .oracle_harness import compare
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = report.top_terms(docs, k=10)
-    compare(got, report.top_terms_sql(DUCK, k=10), sf_dir)
-    # exactly k rows per language with ranks 1..k (vocab >= k here)
-    per = {r["lang"]: r["n"] for r in got.groupBy("lang")
-           .agg(F.count("*").alias("n")).collect()}
-    assert all(n == 10 for n in per.values()) and per
-
-
-def test_exact_quantiles_match_duckdb(spark, sf_dir):
-    from .oracle_harness import compare
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = report.exact_quantiles(docs)
-    compare(got, report.exact_quantiles_sql(), sf_dir)
-    # sanity against a full exact sort (numpy 'inverted_cdf' ==
-    # quantile_disc lower semantics)
-    vals = sorted(r["n_chars"] for r in
-                  docs.select("n_chars").collect())
-    n = len(vals)
-    want = {q: vals[-(-n * q // 100) - 1] for q in (25, 50, 75, 90, 99)}
-    assert {r["q_pct"]: r["value"] for r in got.collect()} == want
-
-
-def test_compression_stats_match_zlib(spark, sf_dir):
-    import zlib
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = textqa.compression_stats(docs).collect()
-    texts = {r["doc_id"]: r["text"]
-             for r in docs.select("doc_id", "text").collect()}
-    assert len(out) == len(texts)
-    for r in out[:200]:
-        t = texts[r["doc_id"]]
-        assert r["raw_bytes"] == len(t.encode("utf-8"))
-        assert r["zlib_bytes"] == len(
-            zlib.compress(t.encode("utf-8"), textqa.ZLIB_LEVEL))
-    # prose compresses: ratio strictly below 1 for real documents
-    assert all(r["zlib_bytes"] < r["raw_bytes"] for r in out
-               if r["raw_bytes"] > 200)

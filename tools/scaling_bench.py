@@ -3,17 +3,20 @@
 Runs the SAME compute-bound exposure job on the SAME input at
 local[N_LOW] and local[N_HIGH] in separate JVMs, reports throughput at
 both and scaling efficiency = (qps_high / qps_low) / (N_HIGH / N_LOW).
+N_HIGH is the host's core count and N_LOW a quarter of it (1 → 4 on a
+4-core host), so the N → 4N protocol follows the machine it runs on.
 
-The job is the full north-star pages pipeline over a synthetic pages
-table large enough to be compute-bound (the sf0.1 suite is too small
-to measure parallel efficiency — Spark fixed overhead dominates):
+The job is the full north-star pages pipeline,
+`pages_ops.exposure_of_pages`, over a synthetic pages table large
+enough to be compute-bound (the sf0.1 suite is too small to measure
+parallel efficiency — Spark fixed overhead dominates):
     pages (url, warc_ts, html, text, lang; ~1.31 captures/url) →
-    latest-snapshot dedup → byte-exact extract from html → url
-    geocode → buffer-zonal NDVI (explode ~2.8k cells/point, integer
-    hash aggregate) + nearest-park join + VGVI sample → count.
+    one url-hashed exchange → latest-snapshot dedup, byte-exact
+    extract from html and url geocode → one Arrow pass scoring
+    NDVI chord sums, the nearest park and sampled VGVI per url.
 
-Usage: python tools/scaling_bench.py [n_points] → JSON on stdout and
-appends the evidence table to BENCH/BASELINE.md.
+Usage: python tools/scaling_bench.py [n_points] [trials] → JSON on
+stdout and appends the evidence table to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -24,8 +27,8 @@ import subprocess
 import sys
 import time
 
-N_LOW = int(os.environ.get("SCALE_N_LOW", "8"))
-N_HIGH = int(os.environ.get("SCALE_N_HIGH", "32"))
+N_HIGH = len(os.sched_getaffinity(0))
+N_LOW = max(1, N_HIGH // 4)
 
 CHILD = r"""
 import json, sys, time
@@ -165,16 +168,16 @@ def main() -> None:
         json.dump({"timestamp": stamp, "commit": head,
                    "protocol": "same job, separate JVMs, best clean "
                    "trial (control-burn-filtered host stalls)",
-                   "job": "pages pipeline: snapshot dedup + extract + "
-                   "geocode + 3-family exposure join",
+                   "job": "pages pipeline: exposure_of_pages (snapshot "
+                   "dedup + extract + geocode + one 3-family Arrow pass)",
                    "n_points": n, **result}, f, indent=1)
     with open(os.path.join(repo, "BENCH", "BASELINE.md"), "a") as f:
         f.write(f"""
 ## Scaling run {stamp}
 
 Same job (full pages pipeline: snapshot dedup → byte-exact extract →
-url geocode → zonal-NDVI + nearest-park + VGVI-sample exposure join
-over {n:,} synthetic pages/urls ≈ {int(n * 1.3125):,} captures,
+url geocode → one Arrow pass of NDVI + nearest-park + VGVI-sample
+exposure over {n:,} synthetic pages/urls ≈ {int(n * 1.3125):,} captures,
 identical input both runs), two parallelism levels, separate JVMs:
 
 | parallelism | wall sec (best of {trials}) | all trials | points/sec |
