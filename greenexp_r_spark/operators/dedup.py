@@ -14,11 +14,12 @@ Scale notes (the 100 TB shapes):
     by text (exact — collisions can't merge distinct texts).  Full
     documents are never shuffled corpus-wide.
   * MinHash signatures are 100% row-local: the distinct shingle set
-    and all 8 permutation mins are array expressions (array_distinct /
-    transform / array_min) — zero shuffle before the band stage.
-    Candidate generation is an equi-join on (band, h1, h2); the exact
-    Jaccard verify joins shingle arrays for candidate pairs only and
-    compares them row-locally with array_intersect.
+    and all 8 permutation mins come from one Arrow-batched numpy pass
+    — zero shuffle before the band stage.  One groupBy on (band, h1,
+    h2) gathers each bucket's members with their shingle arrays, and
+    `bucket_verify` scores the bucket's pairs with exact Jaccard in
+    blocks of BUCKET_CAP members, so a hot bucket costs time, not
+    memory.
   * SimHash signatures are row-local too (per-bit majority over the
     shingle set, one numpy pass).  60-bit signature, pigeonhole blocking
     on 4 × 15-bit blocks: a pair within hamming ≤ 3 damages ≤ 3
@@ -250,41 +251,6 @@ def _simhash_majority(flat, offs, sizes, bits: int = C.SIMHASH_BITS):
     return sim
 
 
-def minhash_signatures_from_arrays(sh: DataFrame) -> DataFrame:
-    """(doc_id, mh0..mh7): min over shingles of 8 affine permutations.
-
-    The mins are one Arrow-batched numpy pass (affine transform on the
-    flattened shingle stream + minimum.reduceat per doc) — round-2
-    lesson: per-element higher-order-function lambdas are interpreted
-    on the JVM (no codegen), ~5× slower than the vectorized batch.
-    Same integer formula as the SQL oracle ((sh·a + b) mod 2³¹−1, all
-    products < 2⁶², exact in int64).  Still zero-shuffle: mapInPandas
-    is a narrow map over the row-local shingle arrays.
-    """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [StructField("doc_id", LongType())]
-        + [StructField(f"mh{j}", LongType())
-           for j in range(len(C.MINHASH_PERMS))])
-
-    def sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            flat, offs, _ = _flat_shingles(pdf["sh_arr"].to_numpy())
-            out = {"doc_id": pdf["doc_id"].to_numpy()}
-            for j, (a, b) in enumerate(C.MINHASH_PERMS):
-                h = (flat * a + b) % C.P31
-                out[f"mh{j}"] = np.minimum.reduceat(h, offs)
-            yield pd.DataFrame(out)
-
-    return sh.mapInPandas(sig, schema)
-
-
 def char_shingle_arrays(corpus: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, sh_arr): distinct char n-gram hash set per document —
     the character-level dedup representation for text without reliable
@@ -314,56 +280,172 @@ def ngram_jaccard_pairs(corpus: DataFrame, n: int = 3,
                              shingler=lambda c: char_shingle_arrays(c, n))
 
 
-# Above this corpus size the bucket-local routes (collect_list of one
-# band bucket's member arrays in a single aggregation buffer) risk an
-# oversized task on a pathological bucket; route back to the banded
-# equi-join + join-attached verify.
-DEDUP_BUCKET_MAX = 2_000_000
+# Members per scoring block of an LSH bucket.  A bucket of n members
+# is scored one block pair at a time, so a pair kernel's working set
+# is O(BUCKET_CAP²) however hot the bucket: a 13,746-member MinHash
+# bucket of a Zipfian corpus, scored whole, took its Python worker
+# past 4.8 GB.
+BUCKET_CAP = 128
 
 
-def _group_pair_counts(arrs, ids):
-    """Exact pairwise set-intersection counts for one bucket.
+def bucket_verify(members: DataFrame, pair_kernel, threshold: float,
+                  names: tuple[str, str, str]) -> DataFrame:
+    """Exact pair verify inside LSH buckets: the one route of the
+    MinHash, incremental and embedding near-dup operators.
 
-    arrs: list of distinct-element int64 arrays (one per member, in
-    `ids` order).  Returns (ia, ib, inter, lens): member-index pairs
-    with ib < ia, their intersection sizes, and per-member set sizes.
-    Fully vectorized: group the flattened (member, element) stream by
-    element, enumerate all within-group index pairs with the
-    prefix-range trick, then count identical pairs.  Each member's
-    array is distinct, so pair multiplicity == |A∩B| exactly."""
+    `members` has one row per (bucket, member): a `bucket` key column,
+    then the member columns, one of them `id`.  Each bucket arrives in
+    Python once as the sorted list of its members (payload included),
+    ordered by the member columns in turn, so the leading column
+    decides which member of a pair comes first.  Member rows x before
+    y of one bucket are emitted as (id_x, id_y, score) iff the
+    kernel's score ≥ threshold, once however many buckets they share
+    (`_verify_buckets` has the kernel protocol).  Building the plan
+    runs no job."""
+    from functools import partial
+    from pyspark.sql.types import (DoubleType, LongType, StructField,
+                                   StructType)
+
+    cols = [c for c in members.columns if c != "bucket"]
+    buckets = (members.groupBy("bucket")
+               .agg(F.sort_array(F.collect_list(F.struct(*cols)))
+                    .alias("m"))
+               .where(F.size("m") >= 2)
+               .select("m"))
+    schema = StructType([StructField(names[0], LongType()),
+                         StructField(names[1], LongType()),
+                         StructField(names[2], DoubleType())])
+    verify = partial(_verify_buckets, cols=cols, pair_kernel=pair_kernel,
+                     threshold=threshold, names=names, cap=BUCKET_CAP)
+    return buckets.mapInArrow(verify, schema).distinct()
+
+
+def _verify_buckets(batches, cols, pair_kernel, threshold, names, cap):
+    """The `bucket_verify` task: Arrow batches of member lists in,
+    batches of verified (id_x, id_y, score) pairs out.
+
+    `pair_kernel(fields, cap)` takes a batch's flattened member columns
+    (name → Arrow array) and returns `score(a0, a1, b0, b1)`: the score
+    matrix of member rows [a0, a1) × [b0, b1), NaN where it rules a
+    pair out, or None when it rules out the whole block pair.  A
+    bucket is scored in blocks of `cap` members, one block pair at a
+    time, and verified pairs leave Python once cap²/4 of them are
+    held, so no working set grows with a hot bucket's square."""
     import numpy as np
-    K = len(arrs)
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=K)
-    mem = np.repeat(np.arange(K, dtype=np.int64), lens)
-    flat = np.concatenate(arrs) if K else np.empty(0, dtype=np.int64)
-    so = np.lexsort((mem, flat))
-    g = flat[so]
-    m = mem[so]
-    if not len(g):
-        return (np.empty(0, np.int64), np.empty(0, np.int64),
-                np.empty(0, np.int64), lens)
-    new = np.empty(len(g), dtype=bool)
-    new[0] = True
-    new[1:] = g[1:] != g[:-1]
-    starts = np.flatnonzero(new)
-    gid = np.cumsum(new) - 1
-    r = np.arange(len(g)) - starts[gid]
-    P = int(r.sum())
-    if P == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.int64),
-                np.empty(0, np.int64), lens)
-    a = np.repeat(m, r)
-    out_idx = (np.arange(P) - np.repeat(np.cumsum(r) - r, r)
-               + np.repeat(starts[gid], r))
-    b = m[out_idx]                      # b < a (secondary sort is mem)
-    uk, cnt = np.unique(a * K + b, return_counts=True)
-    return uk // K, uk % K, cnt, lens
+
+    out, n_out = [], 0
+    for rb in batches:
+        m = rb.column(0)
+        fields = dict(zip(cols, m.values.flatten()))
+        ids = fields["id"].to_numpy()
+        score = pair_kernel(fields, cap)
+        offs = m.offsets.to_numpy().tolist()
+        for lo, hi in zip(offs[:-1], offs[1:]):
+            for a0 in range(lo, hi, cap):
+                a1 = min(a0 + cap, hi)
+                for b0 in range(a0, hi, cap):
+                    s = score(a0, a1, b0, min(b0 + cap, hi))
+                    if s is None:
+                        continue
+                    keep = s >= threshold
+                    if a0 == b0:
+                        keep = np.triu(keep, 1)
+                    ii, jj = np.nonzero(keep)
+                    if not len(ii):
+                        continue
+                    out.append((ids[a0 + ii], ids[b0 + jj], s[ii, jj]))
+                    n_out += len(ii)
+                    if n_out >= cap * cap // 4:
+                        yield _pairs_batch(out, names)
+                        out, n_out = [], 0
+    if out:
+        yield _pairs_batch(out, names)
+
+
+def _pairs_batch(out, names):
+    """One Arrow batch from a list of (id_x, id_y, score) arrays."""
+    import numpy as np
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.concatenate(c)) for c in zip(*out)],
+        names=list(names))
+
+
+def _jaccard_kernel(fields, cap):
+    """`bucket_verify` kernel: exact Jaccard of the members' distinct
+    `sh_arr` sets.  With a `side` member column only pairs across the
+    two sides are scored (NaN within a side)."""
+    import numpy as np
+    sh = fields["sh_arr"]
+    offs = sh.offsets.to_numpy()
+    vals = sh.values.to_numpy()
+    lens = np.diff(offs)
+    side = fields["side"].to_numpy() if "side" in fields else None
+
+    def score(a0, a1, b0, b1):
+        if side is not None:
+            cross = side[a0:a1, None] != side[None, b0:b1]
+            if not cross.any():
+                return None
+        inter = _block_intersections(vals, offs, a0, a1, b0, b1, cap)
+        jac = inter / (lens[a0:a1, None] + lens[None, b0:b1] - inter)
+        if side is not None:
+            jac[~cross] = np.nan
+        return jac
+
+    return score
+
+
+def _block_intersections(vals, offs, a0, a1, b0, b1, cap):
+    """|A ∩ B| for member rows [a0, a1) × [b0, b1) of a flattened batch
+    of distinct-element sets (`vals` cut at `offs`): 0/1 incidence
+    GEMMs over the elements both blocks hold, `cap` element columns at
+    a time.  Counts are exact (float32 sums of at most `cap` ones); the
+    working set is O(cap²) plus the two blocks' own elements."""
+    import numpy as np
+    same = a0 == b0
+    ea = vals[offs[a0]:offs[a1]]
+    ra = np.repeat(np.arange(a1 - a0), np.diff(offs[a0:a1 + 1]))
+    if same:
+        # within one block an element held by a single member is in
+        # no pair's intersection
+        _, ia, cnt = np.unique(ea, return_inverse=True,
+                               return_counts=True)
+        shared = cnt >= 2
+        ib, rb = ia, ra
+    else:
+        eb = vals[offs[b0]:offs[b1]]
+        rb = np.repeat(np.arange(b1 - b0), np.diff(offs[b0:b1 + 1]))
+        u, inv = np.unique(np.concatenate([ea, eb]), return_inverse=True)
+        ia, ib = inv[:len(ea)], inv[len(ea):]
+        shared = ((np.bincount(ia, minlength=len(u)) > 0)
+                  & (np.bincount(ib, minlength=len(u)) > 0))
+    col = np.cumsum(shared) - 1
+    ka, kb = shared[ia], shared[ib]
+    ca, ra = col[ia[ka]], ra[ka]
+    cb, rb = col[ib[kb]], rb[kb]
+    inter = np.zeros((a1 - a0, b1 - b0))
+    for c0 in range(0, int(shared.sum()), cap):
+        A = _incidence(ra, ca - c0, a1 - a0, cap)
+        B = A if same else _incidence(rb, cb - c0, b1 - b0, cap)
+        inter += A @ B.T
+    return inter
+
+
+def _incidence(rows, cols, n, cap):
+    """(n, cap) float32 0/1 matrix of the (row, col) entries whose col
+    falls in [0, cap)."""
+    import numpy as np
+    keep = (cols >= 0) & (cols < cap)
+    M = np.zeros((n, cap), dtype=np.float32)
+    M[rows[keep], cols[keep]] = 1
+    return M
 
 
 def _signatures_with_arrays(sh: DataFrame) -> DataFrame:
-    """minhash_signatures_from_arrays + the sh_arr column riding
-    along, so band buckets can be built self-contained (no verify
-    join later)."""
+    """(doc_id, mh0..mh7, sh_arr): the MinHash signature (min over the
+    shingles of 8 affine permutations, one Arrow-batched numpy pass)
+    with the shingle array riding along for the bucket verify."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -391,75 +473,18 @@ def _signatures_with_arrays(sh: DataFrame) -> DataFrame:
     return sh.mapInPandas(sig, schema)
 
 
-def _minhash_pairs_bucketed(sh: DataFrame,
-                            jaccard_threshold: float) -> DataFrame:
-    """Bucket-local exact-Jaccard verify: every (band, h1, h2) bucket
-    arrives as a self-contained collect_list of (doc_id, sh_arr)
-    members, and only verified pairs ≥ threshold leave Python.  At
-    sf1.0 the joined route materialized 6.5M distinct candidate-pair
-    rows through a self-join + distinct + two array-attaching joins;
-    here the only corpus-sized shuffle is the band groupBy (each
-    doc's array rides once per band).  Semantics identical: a pair is
-    emitted iff it shares ≥1 band key AND exact shingle-set Jaccard ≥
-    threshold (hash-collision buckets yield jac 0 and drop in both
-    routes)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    bands = _band_keys_with_arrays(sh)
-    buckets = (bands.groupBy("band", "h1", "h2")
-               .agg(F.collect_list(F.struct("doc_id", "sh_arr"))
-                    .alias("members"))
-               .where(F.size("members") >= 2))
-    schema = StructType([
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-        StructField("jaccard", DoubleType()),
-    ])
-
-    def verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            oa, ob, oj = [], [], []
-            for members in pdf["members"]:
-                ids = np.array([m["doc_id"] for m in members],
-                               dtype=np.int64)
-                order = np.argsort(ids, kind="stable")
-                ids = ids[order]
-                arrs = [np.asarray(members[o]["sh_arr"], dtype=np.int64)
-                        for o in order]
-                ia, ib, inter, lens = _group_pair_counts(arrs, ids)
-                if not len(ia):
-                    continue
-                jac = inter / (lens[ia] + lens[ib] - inter)
-                keep = jac >= jaccard_threshold
-                # members sorted by doc_id and ib < ia → doc_a < doc_b
-                oa.extend(ids[ib[keep]])
-                ob.extend(ids[ia[keep]])
-                oj.extend(jac[keep])
-            yield pd.DataFrame({"doc_a": pd.Series(oa, dtype="int64"),
-                                "doc_b": pd.Series(ob, dtype="int64"),
-                                "jaccard": pd.Series(oj,
-                                                     dtype="float64")})
-
-    return buckets.mapInPandas(verify, schema).distinct()
-
-
-def _band_keys_with_arrays(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, h1, h2, sh_arr) — band keys with the shingle
-    array carried through the explode."""
+def _band_members(sh: DataFrame, *lead) -> DataFrame:
+    """(bucket, *lead, id, sh_arr): one row per document and MinHash
+    band, bucket = (band, h1, h2), the `bucket_verify` input."""
     sig = sh if "mh0" in sh.columns else _signatures_with_arrays(sh)
     n_bands = len(C.MINHASH_PERMS) // C.MINHASH_BAND_ROWS
-    band_arr = F.array(*[
-        F.struct(F.col(f"mh{2 * b}").alias("h1"),
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.col(f"mh{2 * b}").alias("h1"),
                  F.col(f"mh{2 * b + 1}").alias("h2"))
         for b in range(n_bands)])
-    return sig.select(
-        "doc_id", "sh_arr", F.posexplode(band_arr).alias("band", "hs")
-    ).select("doc_id", "band", F.col("hs.h1").alias("h1"),
-             F.col("hs.h2").alias("h2"), "sh_arr")
+    return sig.select(F.explode(bands).alias("bucket"), *lead,
+                      F.col("doc_id").alias("id"), "sh_arr")
 
 
 def minhash_lsh_pairs(corpus: DataFrame,
@@ -468,58 +493,20 @@ def minhash_lsh_pairs(corpus: DataFrame,
                       ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + exact Jaccard verify.
 
-    Plan: row-local signatures → posexplode to (band, h1, h2) keys →
-    self equi-join on the band key → distinct candidate pairs → join
-    each side's shingle *array* → row-local array_intersect Jaccard.
-    The only shuffles are the band join and the candidate-bounded
-    array joins.  Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
+    Plan: row-local shingle sets and signatures → one row per (band,
+    h1, h2) key with the shingle array riding along → one groupBy on
+    the key, the corpus-sized shuffle → `bucket_verify` scores each
+    bucket's pairs with exact shingle-set Jaccard.  A pair is emitted
+    iff it shares ≥ 1 band key AND its Jaccard ≥ threshold (a
+    hash-collision bucket scores low and drops).
+    Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
     """
     if sh is None:
-        from ..plans.caching import tracked_persist
         # plain shingle_arrays: the combined shingle_table would also
         # sweep the 60 simhash bit permutations this caller never uses
-        sh = tracked_persist((shingler or shingle_arrays)(corpus))
-    if sh.count() <= DEDUP_BUCKET_MAX:
-        return _minhash_pairs_bucketed(sh, jaccard_threshold)
-    return _minhash_pairs_joined(sh, jaccard_threshold)
-
-
-def _minhash_pairs_joined(sh: DataFrame,
-                          jaccard_threshold: float) -> DataFrame:
-    """Banded equi-join candidates + join-attached exact-Jaccard
-    verify — the arbitrarily-large-corpus route (no oversized
-    collect_list buckets)."""
-    sig = sh if "mh0" in sh.columns \
-        else minhash_signatures_from_arrays(sh)
-    bands = _band_keys(sig)
-    l = bands.select(F.col("doc_id").alias("doc_a"), "band", "h1", "h2")
-    r = bands.select(F.col("doc_id").alias("doc_b"), "band", "h1", "h2")
-    cand = (l.join(r, ["band", "h1", "h2"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").distinct())
-    verif = (cand
-             .join(sh.select(F.col("doc_id").alias("doc_a"),
-                             F.col("sh_arr").alias("sa")), "doc_a")
-             .join(sh.select(F.col("doc_id").alias("doc_b"),
-                             F.col("sh_arr").alias("sb")), "doc_b"))
-    n_inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    jac = (n_inter.cast("double")
-           / (F.size("sa") + F.size("sb") - n_inter).cast("double"))
-    return (verif.select("doc_a", "doc_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= jaccard_threshold))
-
-
-def _band_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, h1, h2) — one row per LSH band of a signature."""
-    n_bands = len(C.MINHASH_PERMS) // C.MINHASH_BAND_ROWS
-    band_arr = F.array(*[
-        F.struct(F.col(f"mh{2 * b}").alias("h1"),
-                 F.col(f"mh{2 * b + 1}").alias("h2"))
-        for b in range(n_bands)])
-    return sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band", "hs")
-    ).select("doc_id", "band", F.col("hs.h1").alias("h1"),
-             F.col("hs.h2").alias("h2"))
+        sh = (shingler or shingle_arrays)(corpus)
+    return bucket_verify(_band_members(sh), _jaccard_kernel,
+                         jaccard_threshold, ("doc_a", "doc_b", "jaccard"))
 
 
 def incremental_pairs(base: DataFrame, new: DataFrame,
@@ -531,12 +518,11 @@ def incremental_pairs(base: DataFrame, new: DataFrame,
     CC-style pipelines (each new dump is deduped against all previous
     dumps' keep-set, not just itself).
 
-    Genuinely a TWO-TABLE plan, not a filtered self-join: each side
-    computes its own row-local signatures, the band equi-join crosses
-    base×new only (no base×base or new×new candidates ever
-    materialize), and the verify joins fetch shingle arrays from
-    their own side.  At scale the base side's signatures are the
-    precomputed artifact of earlier runs — only `new` pays the
+    Each side computes its own row-local signatures; band buckets
+    carry both sides' members tagged by side (base first), and the
+    verify emits base × new pairs only — within-side pairs are masked
+    and a block pair all on one side is skipped.  At scale the base side's signatures are
+    the precomputed artifact of earlier runs — only `new` pays the
     signature scan per increment.  Output: (doc_a = base keeper,
     doc_b = new doc, jaccard ≥ threshold).
 
@@ -544,92 +530,14 @@ def incremental_pairs(base: DataFrame, new: DataFrame,
     two-table banding ≡ the cross-split slice of the self-join
     semantics via the shared DuckDB oracle.
     """
-    from ..plans.caching import tracked_persist
     if sh_b is None:
-        sh_b = tracked_persist(shingle_arrays(base))
+        sh_b = shingle_arrays(base)
     if sh_n is None:
-        sh_n = tracked_persist(shingle_arrays(new))
-    if sh_b.count() + sh_n.count() <= DEDUP_BUCKET_MAX:
-        return _incremental_pairs_bucketed(sh_b, sh_n, jaccard_threshold)
-    sig_b = sh_b if "mh0" in sh_b.columns \
-        else minhash_signatures_from_arrays(sh_b)
-    sig_n = sh_n if "mh0" in sh_n.columns \
-        else minhash_signatures_from_arrays(sh_n)
-    l = _band_keys(sig_b).withColumnRenamed("doc_id", "doc_a")
-    r = _band_keys(sig_n).withColumnRenamed("doc_id", "doc_b")
-    cand = (l.join(r, ["band", "h1", "h2"])
-            .select("doc_a", "doc_b").distinct())
-    verif = (cand
-             .join(sh_b.select(F.col("doc_id").alias("doc_a"),
-                               F.col("sh_arr").alias("sa")), "doc_a")
-             .join(sh_n.select(F.col("doc_id").alias("doc_b"),
-                               F.col("sh_arr").alias("sb")), "doc_b"))
-    n_inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    jac = (n_inter.cast("double")
-           / (F.size("sa") + F.size("sb") - n_inter).cast("double"))
-    return (verif.select("doc_a", "doc_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= jaccard_threshold))
-
-
-def _incremental_pairs_bucketed(sh_b: DataFrame, sh_n: DataFrame,
-                                jaccard_threshold: float) -> DataFrame:
-    """Bucket-local cross-corpus verify: band buckets carry BOTH
-    sides' members tagged by side; only base x new pairs are scored
-    (never base x base or new x new), exactly like the two-table band
-    join.  doc_a = base keeper, doc_b = new doc."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    bb = _band_keys_with_arrays(sh_b).withColumn("side", F.lit(0))
-    bn = _band_keys_with_arrays(sh_n).withColumn("side", F.lit(1))
-    buckets = (bb.unionByName(bn)
-               .groupBy("band", "h1", "h2")
-               .agg(F.collect_list(F.struct("doc_id", "side", "sh_arr"))
-                    .alias("members"))
-               .where(F.size("members") >= 2))
-    schema = StructType([
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-        StructField("jaccard", DoubleType()),
-    ])
-
-    def verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            oa, ob, oj = [], [], []
-            for members in pdf["members"]:
-                side = np.array([m["side"] for m in members],
-                                dtype=np.int64)
-                if side.min() == side.max():
-                    continue          # one-sided bucket: no cross pair
-                ids = np.array([m["doc_id"] for m in members],
-                               dtype=np.int64)
-                arrs = [np.asarray(m["sh_arr"], dtype=np.int64)
-                        for m in members]
-                ia, ib, inter, lens = _group_pair_counts(arrs, ids)
-                if not len(ia):
-                    continue
-                cross = side[ia] != side[ib]
-                ia, ib, inter = ia[cross], ib[cross], inter[cross]
-                if not len(ia):
-                    continue
-                jac = inter / (lens[ia] + lens[ib] - inter)
-                keep = jac >= jaccard_threshold
-                ia, ib, jac = ia[keep], ib[keep], jac[keep]
-                base_first = side[ia] == 0
-                a_idx = np.where(base_first, ia, ib)
-                b_idx = np.where(base_first, ib, ia)
-                oa.extend(ids[a_idx])
-                ob.extend(ids[b_idx])
-                oj.extend(jac)
-            yield pd.DataFrame({"doc_a": pd.Series(oa, dtype="int64"),
-                                "doc_b": pd.Series(ob, dtype="int64"),
-                                "jaccard": pd.Series(oj,
-                                                     dtype="float64")})
-
-    return buckets.mapInPandas(verify, schema).distinct()
+        sh_n = shingle_arrays(new)
+    members = _band_members(sh_b, F.lit(0).alias("side")).unionByName(
+        _band_members(sh_n, F.lit(1).alias("side")))
+    return bucket_verify(members, _jaccard_kernel, jaccard_threshold,
+                         ("doc_a", "doc_b", "jaccard"))
 
 
 def dedup_groups(corpus: DataFrame) -> DataFrame:

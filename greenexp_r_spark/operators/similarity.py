@@ -573,50 +573,58 @@ def _hyperplanes(dim: int) -> np.ndarray:
 
 
 def _lsh_band_keys_numpy(corpus: DataFrame) -> DataFrame:
-    """(vec_id, band, bkey): random-hyperplane sign-bit LSH keys via
-    ONE Arrow-batched numpy matmul per batch — projections = Q @ Rᵀ
-    (BANDS·BITS sign bits folded into BANDS keys of BITS bits).
+    """(vec_id, q, norm2, bkeys): the corpus with its random-hyperplane
+    sign-bit LSH keys, bkeys[band] for each of the NEARDUP_LSH_BANDS
+    bands, via ONE Arrow-batched numpy matmul per batch — projections
+    = Q @ Rᵀ (BANDS·BITS sign bits folded into BANDS keys of BITS
+    bits).  The vectors pass through as Arrow arrays, so the bucket
+    verify receives its payload without a join or a driver collect.
 
     Round-2 lesson: the same keys as nested JVM higher-order functions
     cost ~20 s at sf0.1 because HOF lambdas are *interpreted* (no
     whole-stage codegen); the BLAS matmul computes every bit of a
     batch in one GEMM.  Recall math lives at the NEARDUP_LSH_* block
-    above; raise BITS with corpus size to keep random buckets O(1) —
-    the downstream join stays an equi-join.
+    above; raise BITS with corpus size to keep random buckets O(1).
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StructField,
+    import pyarrow as pa
+    from pyspark.sql.types import (ArrayType, LongType, StructField,
                                    StructType)
 
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("band", IntegerType()),
-        StructField("bkey", LongType()),
-    ])
     n_bands, n_bits = NEARDUP_LSH_BANDS, NEARDUP_LSH_BITS
+    corpus = corpus.select("vec_id", "q", "norm2")
+    schema = StructType(corpus.schema.fields
+                        + [StructField("bkeys", ArrayType(LongType()))])
 
-    def keys(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def keys(batches):
         R = None
         pows = (1 << np.arange(n_bits - 1, -1, -1)).astype(np.int64)
-        for pdf in it:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            Q = np.stack(pdf["q"].to_numpy()).astype(np.int64)
+            Q = _member_matrix(rb.column(1))
             if R is None:
                 R = _hyperplanes(Q.shape[1])
             bits = _exact_gemm(Q, R.T) >= 0   # (batch, bands·bits)
             bk = (bits.reshape(len(Q), n_bands, n_bits)
                   .astype(np.int64) @ pows)           # (batch, bands)
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_bands),
-                "band": np.tile(np.arange(n_bands, dtype=np.int32),
-                                len(Q)),
-                "bkey": bk.reshape(-1),
-            })
+            offs = np.arange(0, bk.size + 1, n_bands, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.ListArray.from_arrays(
+                    offs, pa.array(bk.reshape(-1)))],
+                names=schema.names)
 
-    return corpus.select("vec_id", "q").mapInPandas(keys, schema)
+    return corpus.mapInArrow(keys, schema)
+
+
+def _member_matrix(q) -> np.ndarray:
+    """(n, dim) int64 matrix of an Arrow list<long> column of
+    equal-length vectors, read off the flattened values."""
+    offs = q.offsets.to_numpy()
+    vals = q.values.to_numpy()[offs[0]:offs[-1]]
+    dim = int(offs[1] - offs[0])
+    if (np.diff(offs) != dim).any():
+        raise ValueError("embedding vectors differ in length")
+    return vals.reshape(len(q), dim)
 
 
 def neardup_corpus(embeddings: DataFrame) -> DataFrame:
@@ -636,134 +644,37 @@ def neardup_corpus(embeddings: DataFrame) -> DataFrame:
     return qv.unionByName(shifted)
 
 
-# Above this corpus size the broadcast-matrix bucket verify would
-# broadcast >~100 MB; route back to the banded equi-join shape.
-NEARDUP_BCAST_MAX = 200_000
+def _cosine_kernel(fields, cap):
+    """`bucket_verify` kernel: exact quantized cosine of the members'
+    `q` vectors, dot/(√na·√nb) from one int64-exact GEMM per block
+    pair (a block pair is at most cap × cap already)."""
+    X = _member_matrix(fields["q"])
+    sn = np.sqrt(fields["norm2"].to_numpy().astype(np.float64))
 
+    def score(a0, a1, b0, b1):
+        return (_exact_gemm(X[a0:a1], X[b0:b1].T)
+                / (sn[a0:a1, None] * sn[None, b0:b1]))
 
-def _neardup_pairs_joined(corpus: DataFrame,
-                          threshold: float) -> DataFrame:
-    """Banded equi-join candidate generation + join-attached exact
-    verify — the arbitrarily-large-corpus shape (no driver-side
-    materialization).  Kept as the >NEARDUP_BCAST_MAX route."""
-    keys = _lsh_band_keys_numpy(corpus)
-    l = keys.select(F.col("vec_id").alias("vec_id_a"), "band", "bkey")
-    r = keys.select(F.col("vec_id").alias("vec_id_b"), "band", "bkey")
-    cand = (l.join(r, ["band", "bkey"])
-            .where(F.col("vec_id_a") < F.col("vec_id_b"))
-            .select("vec_id_a", "vec_id_b").distinct())
-    verif = (cand
-             .join(corpus.select(F.col("vec_id").alias("vec_id_a"),
-                                 F.col("q").alias("qa"),
-                                 F.col("norm2").alias("na")), "vec_id_a")
-             .join(corpus.select(F.col("vec_id").alias("vec_id_b"),
-                                 F.col("q").alias("qb"),
-                                 F.col("norm2").alias("nb")), "vec_id_b"))
-    pairs = verif.select(
-        "vec_id_a", "vec_id_b",
-        _cos(_dot(F.col("qa"), F.col("qb")),
-             F.col("na"), F.col("nb")).alias("cos_sim"))
-    return pairs.where(F.col("cos_sim") >= threshold)
-
-
-def _neardup_pairs_bucketed(corpus: DataFrame,
-                            threshold: float) -> DataFrame:
-    """Bucket-local GEMM verify: the clustered corpus makes LSH
-    buckets huge (sf1.0: 36.2M distinct candidate pairs from 22k
-    vectors), so the joined shape shuffles tens of millions of pair
-    rows and runs an interpreted-HOF cosine per pair (68 s at sf1.0).
-    Here each (band, bkey) bucket's member ids are collect_list-ed
-    (one shuffle of 8·n short key rows), every bucket scores its own
-    i<j pairs with a chunked int64 GEMM against the broadcast corpus
-    matrix, and only pairs ≥ threshold leave Python — the final
-    distinct sees just the ~8× band duplicates of true pairs.
-
-    Semantics identical to the joined route: a pair is emitted iff it
-    shares ≥1 band key AND exact cos ≥ threshold; cos is the same
-    dot/(√na·√nb) in the same IEEE order (a < b)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    pdf0 = corpus.select("vec_id", "q", "norm2").orderBy("vec_id") \
-        .toPandas()                       # Arrow path — ~5x collect()
-    ids = pdf0["vec_id"].to_numpy().astype(np.int64)
-    M = np.stack(pdf0["q"].to_numpy()).astype(np.int64)
-    sn = np.sqrt(pdf0["norm2"].to_numpy().astype(np.float64))
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((ids, M, sn))
-
-    keys = _lsh_band_keys_numpy(corpus)
-    # identical member sets across bands (whole clusters collide in
-    # every band) would be GEMM-scored once per band; sorting the
-    # member list and deduping buckets on it removes the ~8x repeat
-    # without changing the pair set (identical members => identical
-    # verified pairs; the final distinct already collapsed them)
-    buckets = (keys.groupBy("band", "bkey")
-               .agg(F.sort_array(F.collect_list("vec_id"))
-                    .alias("members"))
-               .where(F.size("members") >= 2)
-               .dropDuplicates(["members"]))
-    # the bucket table is tiny (~1.4 MB of ids), so AQE coalesces it
-    # to ONE post-shuffle partition and the GEMM verify runs
-    # single-core; an explicit round-robin repartition (user
-    # repartitions are never coalesced) spreads the buckets
-    buckets = buckets.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism)
-
-    schema = StructType([
-        StructField("vec_id_a", LongType()),
-        StructField("vec_id_b", LongType()),
-        StructField("cos_sim", DoubleType()),
-    ])
-    CHUNK = 2048
-
-    def verify(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, cM, csn = bc.value
-        for pdf in it:
-            out_a, out_b, out_c = [], [], []
-            for members in pdf["members"]:
-                bid = np.asarray(members, dtype=np.int64)  # pre-sorted
-                idx = np.searchsorted(cids, bid)
-                X = cM[idx]
-                s = csn[idx]
-                for lo in range(0, len(bid), CHUNK):
-                    hi = min(lo + CHUNK, len(bid))
-                    cos = (_exact_gemm(X[lo:hi], X.T)
-                           / (s[lo:hi, None] * s[None, :]))
-                    ii, jj = np.nonzero(cos >= threshold)
-                    keep = jj > (ii + lo)
-                    ii, jj = ii[keep], jj[keep]
-                    out_a.extend(bid[ii + lo])
-                    out_b.extend(bid[jj])
-                    out_c.extend(cos[ii, jj])
-            yield pd.DataFrame({"vec_id_a": pd.Series(out_a, dtype="int64"),
-                                "vec_id_b": pd.Series(out_b, dtype="int64"),
-                                "cos_sim": pd.Series(out_c,
-                                                     dtype="float64")})
-
-    return buckets.mapInPandas(verify, schema).distinct()
+    return score
 
 
 def neardup_pairs(embeddings: DataFrame,
                   threshold: float = 0.99) -> DataFrame:
     """Embedding-cosine near-duplicate pairs.
 
-    Round 1 ran an all-pairs BroadcastNestedLoopJoin (O(n²) — a
-    scale-killer); round 5's shape was LSH band keys → band equi-join
-    → distinct candidate pairs → exact verify on candidates.  Round 6
-    size-routes the verify: corpora whose quantized matrix fits a
-    broadcast (≤ NEARDUP_BCAST_MAX vectors) use bucket-local GEMM
-    scoring (`_neardup_pairs_bucketed` — no candidate-pair shuffle at
-    all); larger corpora keep the banded equi-join + join-attached
-    verify.  Both routes emit exactly the pairs that share ≥1 LSH
-    band AND have exact quantized cosine ≥ threshold.
+    Sign-bit LSH keys per vector, one groupBy on (band, bkey) whose
+    buckets carry their members' quantized vectors, and
+    `bucket_verify` scores each bucket's pairs with a blocked GEMM —
+    no candidate-pair shuffle, no driver collect, no broadcast.  A
+    pair is emitted iff it shares ≥ 1 LSH band AND its exact quantized
+    cosine ≥ threshold.
     Output: (vec_id_a, vec_id_b, cos_sim), a < b.
     """
-    from ..plans.caching import tracked_persist
-    corpus = tracked_persist(neardup_corpus(embeddings))
-    if corpus.count() <= NEARDUP_BCAST_MAX:
-        return _neardup_pairs_bucketed(corpus, threshold)
-    return _neardup_pairs_joined(corpus, threshold)
+    from .dedup import bucket_verify
+    members = _lsh_band_keys_numpy(neardup_corpus(embeddings)).select(
+        F.posexplode("bkeys").alias("band", "bkey"),
+        F.col("vec_id").alias("id"), "q", "norm2")
+    members = members.select(F.struct("band", "bkey").alias("bucket"),
+                             "id", "q", "norm2")
+    return bucket_verify(members, _cosine_kernel, threshold,
+                         ("vec_id_a", "vec_id_b", "cos_sim"))

@@ -1,7 +1,8 @@
 """Session-scoped cache bookkeeping.
 
-Operators that persist an intermediate (MinHash shingle arrays,
-quantized embedding corpora) register the DataFrame here instead of
+Registry queries that persist an intermediate their arms read
+several times (the shingle table of the dedup union, the quantized
+corpus of the ANN union) register the DataFrame here instead of
 calling .persist() bare.  Spark's CacheManager never drops a persisted
 DataFrame on its own, so in a long-lived session running the whole
 query registry those caches accumulate in storage memory.
@@ -56,8 +57,9 @@ class cache_scope:
     at exit, caches from outer scopes are left alone.
 
     >>> with cache_scope():
-    ...     pairs = minhash_lsh_pairs(docs)   # persists internally
-    ...     pairs.count()
+    ...     sh = tracked_persist(shingle_table(corpus))
+    ...     minhash_lsh_pairs(corpus, sh=sh).count()
+    ...     simhash_pairs(corpus, sh=sh).count()   # reads the cache
     """
 
     def __enter__(self) -> "cache_scope":

@@ -40,10 +40,13 @@ def _emb(spark, sf):
 
 
 def _emb_raw(spark, sf):
-    """Un-widened embeddings scan — the neardup bucket route's first
-    step is a driver toPandas + one GEMM key pass whose cost is
-    dominated by the groupBy shuffle, not scan parallelism (A/B
-    5.1 s raw vs 6.1 s widened at sf1.0)."""
+    """Un-widened embeddings scan for the embedding near-dup queries:
+    their one Python pass (the GEMM band keys) is cheap next to the
+    band groupBy that carries the vectors to their buckets, so a wider
+    scan buys nothing but an exchange (A/B 5.1 s raw vs 6.1 s widened
+    at sf1.0, measured when the verify still pulled the whole corpus
+    through toPandas; not re-measured since: no sf1.0 input on the
+    4-core host)."""
     return spark.read.parquet(f"{sf}/embeddings.parquet")
 
 

@@ -14,27 +14,26 @@ def _cache_manager_empty(spark) -> bool:
 
 
 def test_composed_operators_share_scope(spark):
-    from greenexp_r_spark.operators import dedup, similarity
+    from greenexp_r_spark import registry_pipeline as rp
     from greenexp_r_spark.plans import caching
     from greenexp_r_spark.plans.caching import release_caches
 
-    docs = spark.read.parquet(f"{SF_TEST}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
-
     release_caches()
-    n1 = dedup.minhash_lsh_pairs(docs).count()
+    # each query persists an intermediate its arms read several
+    # times: the shingle table, the quantized corpus
+    n1 = rp._q_dedup_neardup_union(spark, SF_TEST).count()
     assert not _cache_manager_empty(spark)   # cache live while in use
     n_after_first = len(caching._live)
-    n2 = similarity.neardup_pairs(emb).count()
-    # building the second operator must NOT evict the first's cache
+    n2 = rp._q_ann_topk_union(spark, SF_TEST).count()
+    # building the second query must NOT evict the first's cache
     assert len(caching._live) > n_after_first
     assert not _cache_manager_empty(spark)
     # query boundary: everything tracked is dropped
     release_caches()
     assert _cache_manager_empty(spark)
     # results unaffected by cache lifecycle
-    assert n1 == dedup.minhash_lsh_pairs(docs).count()
-    assert n2 == similarity.neardup_pairs(emb).count()
+    assert n1 == rp._q_dedup_neardup_union(spark, SF_TEST).count()
+    assert n2 == rp._q_ann_topk_union(spark, SF_TEST).count()
     release_caches()
 
 

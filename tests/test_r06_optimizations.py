@@ -27,18 +27,24 @@ def test_exact_gemm_falls_back_when_unsafe():
 
 
 # ------------------------------------------- pairwise intersection
-def test_group_pair_counts_matches_set_intersections():
+@pytest.mark.parametrize("cap", [2, 3, 128])
+def test_block_intersections_match_set_intersections(cap):
+    """Every block pair of a bucket, including element columns split
+    into chunks of `cap` (2 and 3 force the chunking)."""
     rng = np.random.RandomState(11)
     arrs = [np.unique(rng.randint(0, 40, size=rng.randint(1, 25))
                       .astype(np.int64)) for _ in range(9)]
-    ids = np.arange(9, dtype=np.int64)
-    ia, ib, inter, lens = dedup._group_pair_counts(arrs, ids)
-    got = {(int(b), int(a)): int(c) for a, b, c in zip(ia, ib, inter)}
-    for i in range(9):
-        assert lens[i] == len(arrs[i])
-        for j in range(i + 1, 9):
-            want = len(set(arrs[i]) & set(arrs[j]))
-            assert got.get((i, j), 0) == want
+    offs = np.concatenate([[0], np.cumsum([len(a) for a in arrs])])
+    vals = np.concatenate(arrs)
+    for a0, a1, b0, b1 in [(0, 9, 0, 9), (0, 4, 4, 9), (2, 5, 2, 5),
+                           (1, 3, 6, 8)]:
+        got = dedup._block_intersections(vals, offs, a0, a1, b0, b1, cap)
+        for i in range(a0, a1):
+            for j in range(b0, b1):
+                if i == j:
+                    continue          # a member with itself: no pair
+                want = len(set(arrs[i]) & set(arrs[j]))
+                assert got[i - a0, j - b0] == want
 
 
 # ------------------------------------------------- shingle kernel

@@ -160,6 +160,22 @@ def test_network_access_probes_when_no_hint(spark, sf_dir):
 
 # ----------------------------------------- char n-gram Jaccard dedup
 
+def all_pairs_jaccard(sh, threshold):
+    """Exhaustive oracle: (doc_a, doc_b, jaccard) for every pair of
+    (doc_id, sh_arr) rows with doc_a < doc_b and exact set Jaccard ≥
+    threshold — a crossJoin, no LSH."""
+    l = sh.select(F.col("doc_id").alias("doc_a"),
+                  F.col("sh_arr").alias("sa"))
+    r = sh.select(F.col("doc_id").alias("doc_b"),
+                  F.col("sh_arr").alias("sb"))
+    n_inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+    jac = (n_inter.cast("double")
+           / (F.size("sa") + F.size("sb") - n_inter).cast("double"))
+    return (l.crossJoin(r).where(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b", jac.alias("jaccard"))
+            .where(F.col("jaccard") >= threshold))
+
+
 def test_ngram_jaccard_pairs_sound_and_highJ_complete(spark, sf_dir):
     """Char-3-gram Jaccard near-dup (the character-level dedup family
     member) vs exhaustive all-pairs Jaccard: every reported pair must
@@ -182,18 +198,8 @@ def test_ngram_jaccard_pairs_sound_and_highJ_complete(spark, sf_dir):
     got_map = {(a, b): j for a, b, j in got.itertuples(index=False)}
 
     # exhaustive oracle: all-pairs exact Jaccard over the same arrays
-    sh = dedup.char_shingle_arrays(corpus)
-    l = sh.select(F.col("doc_id").alias("doc_a"),
-                  F.col("sh_arr").alias("sa"))
-    r = sh.select(F.col("doc_id").alias("doc_b"),
-                  F.col("sh_arr").alias("sb"))
-    n_inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-    jac = (n_inter.cast("double")
-           / (F.size("sa") + F.size("sb") - n_inter).cast("double"))
-    want = (l.crossJoin(r).where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-            .where(F.col("jaccard") >= C.JACCARD_THRESHOLD)
-            .toPandas())
+    want = all_pairs_jaccard(dedup.char_shingle_arrays(corpus),
+                             C.JACCARD_THRESHOLD).toPandas()
     want_map = {(a, b): j for a, b, j in want.itertuples(index=False)}
     assert len(want_map) > 0              # fixture has near-dups
     # soundness: reported ⊆ true, values exact
