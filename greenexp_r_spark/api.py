@@ -71,8 +71,8 @@ def greenspace_access(address_location: DataFrame,
                       euclidean: bool = True,
                       pseudo_entrance: bool = False,
                       buffer_distance: float = C.BUFFER_M,
-                      minimum_greenspace_size: float = C.MIN_GREENSPACE_M2,
-                      min_edge_m: float = C.WEDGE_BASE) -> DataFrame:
+                      minimum_greenspace_size: float = C.MIN_GREENSPACE_M2
+                      ) -> DataFrame:
     """`greenspace_access(address, ..., euclidean, pseudo_entrance)`
     (accessibility.R:48-369): Euclidean kNN distance to park centroids
     (or to pseudo-entrance nodes when pseudo_entrance=TRUE, mirroring
@@ -82,7 +82,11 @@ def greenspace_access(address_location: DataFrame,
     searches within the buffer and reports NA beyond,
     accessibility.R:339-349).  Network / pseudo-entrance variants need
     `edges` / an `entrances` table with column entrance_node (the
-    dissolved 20 m-buffer node set, accessibility.R:223-247)."""
+    dissolved 20 m-buffer node set, accessibility.R:223-247).
+
+    The network variant solves the road graph on the driver
+    (`network.network_access`); a graph of more than
+    `network.DRIVER_EDGE_LIMIT` directed edges raises ValueError."""
     from pyspark.sql import functions as F
 
     def entrance_points():
@@ -110,14 +114,11 @@ def greenspace_access(address_location: DataFrame,
             min_area_m2=minimum_greenspace_size)
     if edges is None or entrances is None:
         raise ValueError("network access needs `edges` and `entrances`")
-    # weighted relaxation honors heterogeneous length_m (uniform
-    # lattices give the same answer as the BFS fast path); the search
-    # bound follows the requested buffer
-    return network.network_access_weighted(
+    # the search bound follows the requested buffer
+    return network.network_access(
         address_location, edges, entrances,
         buffer_m=buffer_distance,
-        max_dist=max(buffer_distance, C.NET_MAX_DIST),
-        min_edge_m=min_edge_m)
+        max_dist=max(buffer_distance, C.NET_MAX_DIST))
 
 
 def viewshed(observer: DataFrame,

@@ -168,16 +168,6 @@ def points_in_rings(px: np.ndarray, py: np.ndarray,
     return inside
 
 
-def area_with_holes(rings: list[np.ndarray]) -> float:
-    """|outer| − Σ|holes| (holes disjoint and inside the outer, as
-    make_valid_polygon enforces)."""
-    outer, holes = rings[0], rings[1:]
-    a = abs(geom.polygon_area(outer))
-    for h in holes:
-        a -= abs(geom.polygon_area(h))
-    return a
-
-
 def intersection_area_holes(rings: list[np.ndarray],
                             clip_convex_ring: np.ndarray) -> float:
     """|polygon-with-holes ∩ convex clip| = |outer ∩ clip| −

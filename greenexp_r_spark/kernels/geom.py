@@ -3,8 +3,8 @@
 shapely is not available in this container (SURVEY.md §7 plan B), so
 the vector-geometry surface is implemented directly:
 
-    WKB point/polygon encode/decode (little-endian, geometry types
-    1/3 only — the fixture world is convex polygons and points)
+    WKB linestring/polygon encode/decode (little-endian, geometry
+    types 2/3/5/6 — the fixture world is polygons and road lines)
     polygon area / centroid (shoelace)
     point-in-convex-polygon (half-plane test, vectorized over points)
     convex hull (Andrew monotone chain)
@@ -24,25 +24,12 @@ import struct
 
 import numpy as np
 
-WKB_POINT = 1
 WKB_LINESTRING = 2
 WKB_POLYGON = 3
-WKB_MULTIPOINT = 4
 WKB_MULTILINESTRING = 5
 
 
 # ---------------------------------------------------------------- WKB
-
-def wkb_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, WKB_POINT, x, y)
-
-
-def parse_wkb_point(b: bytes) -> tuple[float, float]:
-    _, typ, x, y = struct.unpack("<BIdd", b)
-    if typ != WKB_POINT:
-        raise ValueError(f"not a WKB point: type {typ}")
-    return x, y
-
 
 def wkb_linestring(pts: np.ndarray) -> bytes:
     """pts: (n, 2) vertex sequence, n >= 2."""
@@ -88,26 +75,6 @@ def parse_wkb_lines(b: bytes) -> list:
                                    offset=off + 9).reshape(m, 2).copy())
         off += 9 + 16 * m
     return parts
-
-
-def wkb_multipoint(pts: np.ndarray) -> bytes:
-    """pts: (n, 2) — each member a full WKB POINT per spec."""
-    pts = np.asarray(pts, dtype=float)
-    out = [struct.pack("<BII", 1, WKB_MULTIPOINT, len(pts))]
-    for x, y in pts:
-        out.append(wkb_point(x, y))
-    return b"".join(out)
-
-
-def parse_wkb_multipoint(b: bytes) -> np.ndarray:
-    byte_order, typ = struct.unpack_from("<BI", b, 0)
-    if byte_order != 1 or typ != WKB_MULTIPOINT:
-        raise ValueError(f"not a WKB multipoint: type {typ}")
-    (n,) = struct.unpack_from("<I", b, 5)
-    out = np.empty((n, 2))
-    for i in range(n):
-        out[i] = struct.unpack_from("<dd", b, 9 + i * 21 + 5)
-    return out
 
 
 def wkb_polygon(ring: np.ndarray) -> bytes:
@@ -353,33 +320,6 @@ def make_valid(ring: np.ndarray) -> np.ndarray:
         raise ValueError("non-convex ring: full make_valid requires a "
                          "general geometry library")
     return ring
-
-
-def wkb_multipolygon(rings: list) -> bytes:
-    """Encode a MULTIPOLYGON of single-ring polygons."""
-    out = [struct.pack("<BII", 1, 6, len(rings))]
-    for r in rings:
-        out.append(wkb_polygon(np.asarray(r, dtype=float)))
-    return b"".join(out)
-
-
-def explode_multipolygon(b: bytes) -> list:
-    """P6 (st_cast MULTI→single): split a WKB MULTIPOLYGON into its
-    member polygon rings; a plain POLYGON returns a 1-element list."""
-    byte_order, typ = struct.unpack_from("<BI", b, 0)
-    if typ == WKB_POLYGON:
-        return [parse_wkb_polygon(b)]
-    if typ != 6:
-        raise ValueError(f"not a (multi)polygon: type {typ}")
-    (n,) = struct.unpack_from("<I", b, 5)
-    rings, off = [], 9
-    for _ in range(n):
-        (n_rings,) = struct.unpack_from("<I", b, off + 5)
-        (n_pts,) = struct.unpack_from("<I", b, off + 9)
-        end = off + 13 + 16 * n_pts
-        rings.append(parse_wkb_polygon(b[off:end]))
-        off = end
-    return rings
 
 
 def aggregate_block_mean(values: np.ndarray, nrow: int, ncol: int,

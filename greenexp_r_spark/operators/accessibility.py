@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .. import constants as C
+from ..plans.bounded import fetch_at_most
 
 
 def _dist2(px="x", py="y", cx="cx", cy="cy"):
@@ -70,10 +71,10 @@ def park_centroids(parks: DataFrame,
     """(cx, cy) float arrays of the qualifying parks, or None when
     there are more than BROADCAST_PARK_LIMIT of them: one bounded
     collect both decides the route and fetches the dim."""
-    pdf = (parks.where(F.col("area_m2") > min_area_m2)
-           .select("cx", "cy").limit(BROADCAST_PARK_LIMIT + 1)
-           .toPandas())
-    if len(pdf) > BROADCAST_PARK_LIMIT:
+    pdf = fetch_at_most(
+        parks.where(F.col("area_m2") > min_area_m2).select("cx", "cy"),
+        BROADCAST_PARK_LIMIT)
+    if pdf is None:
         return None
     return (pdf["cx"].to_numpy(np.float64),
             pdf["cy"].to_numpy(np.float64))

@@ -144,14 +144,3 @@ def collection_reduce_summary(scene_tiles: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return comp.mapInPandas(summ, SUMMARY_SCHEMA)
-
-
-def collection_count_valid(scene_tiles: DataFrame) -> DataFrame:
-    """(tile_id, n_cells_all_cloudy, n_obs_total): collection-level
-    QA stats — one narrow aggregate, array HOFs avoided in favor of
-    the same Arrow reduce."""
-    comp = collection_mean(scene_tiles)
-    n_zero = F.expr("size(filter(n_scenes, c -> c = 0))")
-    n_obs = F.expr("aggregate(n_scenes, 0L, (a, c) -> a + c)")
-    return comp.select("tile_id", n_zero.alias("n_cells_all_cloudy"),
-                       n_obs.alias("n_obs_total"))

@@ -558,11 +558,7 @@ def dedup_groups(corpus: DataFrame) -> DataFrame:
     eb = (e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
           .unionByName(
               e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-          .distinct()
-          # materialize: label propagation re-reads the edge set every
-          # iteration — without this the whole exact+minhash pair
-          # pipeline re-executes per round (measured ~2x the query)
-          .localCheckpoint(eager=True))
+          .distinct())
     labels = network.component_labels(eb)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("group_size"))
     return (labels.join(sizes, "label")

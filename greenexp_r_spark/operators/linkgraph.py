@@ -25,13 +25,15 @@ input_hint pages table:
      oracle replays the whole iteration bit-for-bit (the Lloyd
      k-means / NB-classifier train→apply precedent).
 
-Size-routing (the network.component_labels doctrine): edge sets under
-``PR_DRIVER_EDGE_LIMIT`` solve on the driver with vectorized numpy
-(int64 ``np.add.at`` scatter per round); larger graphs run the
-distributed path — per round one edges⋈ranks join, one dst aggregate,
-one broadcast 1-row dangling aggregate, ranks localCheckpointed EVERY
-round so no round replays the previous join tree.  Values are
-bit-identical across the two paths (tests/test_linkgraph.py).
+Size-routing (the network.component_labels rule): one bounded fetch
+of at most ``network.DRIVER_EDGE_LIMIT`` edges both picks the route
+and hands the driver path its edges.  Edge sets within the limit
+solve on the driver with vectorized numpy (int64 ``np.add.at``
+scatter per round); larger graphs run the distributed path — per
+round one edges⋈ranks join, one dst aggregate, one broadcast 1-row
+dangling aggregate, ranks localCheckpointed EVERY round so no round
+replays the previous join tree.  Values are bit-identical across the
+two paths (tests/test_linkgraph.py).
 
 100 TB posture: the corpus is touched ONCE (href explode + distinct);
 everything after runs on the host dimension.  At 10^8 hosts the
@@ -46,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..dialect import Dialect
+from ..plans.bounded import fetch_at_most
+from . import network
 
 # --- augmentation + extraction contract ---------------------------
 HOST_MOD = 1000           # matches world.points_sql's site{id%1000} hosts
@@ -61,7 +65,6 @@ SRC_RE = "^https?://([^/]+)/"
 PR_TOTAL = 10**12         # total rank mass, micro-ish units
 PR_ROUNDS = 5
 PR_DAMP_NUM, PR_BASE_NUM, PR_DEN = 85, 15, 100
-PR_DRIVER_EDGE_LIMIT = 5_000_000   # same bound as dedup candidates
 
 
 def anchors_sql(doc: str = "doc_id") -> str:
@@ -112,8 +115,7 @@ def graph_nodes(points: DataFrame, edges: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------------
 def pagerank(nodes: DataFrame, edges: DataFrame,
-             rounds: int = PR_ROUNDS, total: int = PR_TOTAL,
-             n_edges_hint: int | None = None) -> DataFrame:
+             rounds: int = PR_ROUNDS, total: int = PR_TOTAL) -> DataFrame:
     """(host, outdeg, pagerank_micro) after ``rounds`` exact integer
     power-iteration steps:
 
@@ -126,13 +128,13 @@ def pagerank(nodes: DataFrame, edges: DataFrame,
     Python ``//`` ≡ numpy int64 division — the driver, distributed and
     SQL-oracle paths agree bit-for-bit.
 
-    Callers should localCheckpoint `edges` first so the size probe
-    doesn't re-run the extraction scan (the component_labels rule)."""
-    n_edges = (n_edges_hint if n_edges_hint is not None
-               else edges.limit(PR_DRIVER_EDGE_LIMIT + 1).count())
-    if n_edges <= PR_DRIVER_EDGE_LIMIT:
-        return _pagerank_driver(nodes, edges, rounds, total)
-    return _pagerank_distributed(nodes, edges, rounds, total)
+    `nodes` is collected on the driver route, so a caller whose nodes
+    derive from `edges` should localCheckpoint `edges` first: the
+    extraction scan then runs once."""
+    ep = fetch_at_most(edges.select("src", "dst"), network.DRIVER_EDGE_LIMIT)
+    if ep is None:
+        return _pagerank_distributed(nodes, edges, rounds, total)
+    return _pagerank_driver(nodes, ep, rounds, total)
 
 
 def pagerank_arrays(n: int, src_i: np.ndarray, dst_i: np.ndarray,
@@ -155,7 +157,7 @@ def pagerank_arrays(n: int, src_i: np.ndarray, dst_i: np.ndarray,
     return outdeg, pr
 
 
-def _pagerank_driver(nodes: DataFrame, edges: DataFrame,
+def _pagerank_driver(nodes: DataFrame, ep: pd.DataFrame,
                      rounds: int, total: int) -> DataFrame:
     """Dimension-sized graphs solve on the driver: factorized host
     index, int64 scatter-add per round.  Bit-identical to the
@@ -166,7 +168,6 @@ def _pagerank_driver(nodes: DataFrame, edges: DataFrame,
     if n == 0:
         return spark.createDataFrame(
             [], schema="host string, outdeg bigint, pagerank_micro bigint")
-    ep = edges.select("src", "dst").toPandas()
     idx = pd.Index(hosts)
     src_i = idx.get_indexer(ep["src"].to_numpy())
     dst_i = idx.get_indexer(ep["dst"].to_numpy())

@@ -162,21 +162,15 @@ def smooth(edges: DataFrame) -> DataFrame:
     passthrough = e.where(~F.col("s2") & ~F.col("d2")) \
                    .select("src", "dst", "length_m")
     interior = e.where(F.col("s2") & F.col("d2"))
-    # chain labels: components over interior edges; deg-2 nodes with no
-    # interior edge are single-node chains labeled by themselves
-    if interior.take(1):
-        # `e` is checkpointed above, so the probe/solve reads a leaf
-        int_bidir = bidirectional(interior.select("src", "dst",
-                                                  "length_m"))
-        labeled = component_labels(int_bidir)
-    else:
-        labeled = None
-    if labeled is not None:
-        labels = deg2.join(labeled, "node_id", "left") \
-                     .select("node_id",
-                             F.coalesce("label", "node_id").alias("label"))
-    else:
-        labels = deg2.select("node_id", F.col("node_id").alias("label"))
+    # chain labels: components over interior edges (`e` is
+    # checkpointed above, so the bounded fetch reads a leaf); deg-2
+    # nodes with no interior edge are single-node chains labeled by
+    # themselves
+    labeled = component_labels(
+        bidirectional(interior.select("src", "dst", "length_m")))
+    labels = deg2.join(labeled, "node_id", "left") \
+                 .select("node_id",
+                         F.coalesce("label", "node_id").alias("label"))
     # anchor edges: exactly one endpoint in a chain
     anch1 = e.where(F.col("d2") & ~F.col("s2")).select(
         F.col("src").alias("anchor"), F.col("dst").alias("cnode"),

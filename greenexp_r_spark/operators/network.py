@@ -1,69 +1,38 @@
 """Network accessibility: bounded multi-source shortest paths on the
-road graph, as an iterative DataFrame relaxation (SURVEY.md J6/A12).
+road graph, solved on the driver and broadcast back (SURVEY.md J6/A12).
 
 Reference semantics: sfnetworks::st_network_cost Dijkstra from each
 address's snapped node to park pseudo-entrances, min per address,
-NA → unreachable → flag FALSE (accessibility.R:320-358).
+NA → unreachable → flag FALSE (accessibility.R:320-358).  The
+reference solves the graph in memory on one node; so does this
+module.
 
-Spark mapping: the graph is a DataFrame of directed edges; park
-entrance nodes seed a frontier at dist 0; each round relaxes
-    frontier ⋈ edges → candidate dists → min per node vs settled
-until no improvement or the distance bound is hit (≤ NET_MAX_DIST,
-so ≤ bound/hop rounds — the reference's buffer bound gives the same
-cutoff).  This is Bellman-Ford with early exit ≈ pregel-on-DataFrames.
+Spark mapping: the road network is a *dimension* (a country's OSM
+extract is 10^7-10^8 edges, KBs-GBs) while the points table is the
+fact side.  One bounded fetch (`plans.bounded.fetch_at_most`) brings
+the directed edge set to the driver, a vectorized numpy solve
+(`dijkstra_buckets`, `labeled_bfs_layers`) runs there, and the
+distance table is broadcast back onto the points — the plan shape of
+broadcasting a park dim, with no iterative shuffle round.  A road
+graph of more than DRIVER_EDGE_LIMIT directed edges raises
+`ValueError` naming the limit rather than taking a path no test runs
+at that size.
 
-Scale notes: each round is one shuffle on node_id; `localCheckpoint`
-every few rounds truncates the exploding lineage (classic iterative-
-algorithm hygiene on Spark); the frontier shrinks monotonically.  The
-settled table stays small (nodes within the bound of any park), so the
-final points⋈dist join is a broadcast.
+Connected components (`component_labels`) also serve the dedup and
+near-dup pair sets, whose size grows with the corpus, so they keep a
+distributed min-label propagation past the same limit; the bounded
+fetch picks the route.
 """
 
 from __future__ import annotations
 
-import warnings
-
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 from .. import constants as C
-
-
-def _warn_if_expensive_probe(df: DataFrame, what: str) -> None:
-    """Size-probe contract guard (VERDICT r03 'What's wrong #3'): when
-    no n_edges_hint is given, the bounded limit-count probe executes
-    the input's plan once extra.  That is fine for a scan or a
-    checkpointed/cached input, but silently doubles the work when the
-    input is a raw join/aggregate pipeline (e.g. un-checkpointed dedup
-    candidate pairs).  Heuristic: warn when the input is neither
-    persisted nor a leaf-ish plan (no Join/Aggregate in the analyzed
-    plan — localCheckpoint collapses to a LogicalRDD leaf).
-
-    HARD CONTRACT (VERDICT r04 ask #8): this function reads the
-    PRIVATE py4j surface (`df._jdf.queryExecution()`), which any
-    Spark upgrade may drift.  It must therefore stay warn-only and
-    fail OPEN — it returns None, no caller branches on it, and every
-    exception (including py4j drift) exits silently.  Routing (probe
-    vs hint, driver vs distributed) must NEVER depend on anything
-    computed here; tests/test_network_parity.py asserts routing is
-    unchanged when this introspection raises."""
-    try:
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            return
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:          # pragma: no cover - py4j introspection only
-        return
-    # in-memory range/VALUES fixtures are cheap to recompute even
-    # through a join — only file-backed pipelines make the double
-    # execution expensive
-    reads_files = any(t in plan for t in ("parquet", "orc", "csv", "json"))
-    if ("Join" in plan or "Aggregate" in plan) and reads_files:
-        warnings.warn(
-            f"{what}: size probe will re-execute an un-persisted "
-            "join/aggregate pipeline — localCheckpoint/cache the edge "
-            "set first, or pass n_edges_hint", RuntimeWarning,
-            stacklevel=3)
+from ..plans.bounded import fetch_at_most
 
 
 def bidirectional(edges: DataFrame) -> DataFrame:
@@ -74,57 +43,24 @@ def bidirectional(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev)
 
 
-def multi_source_dist(edges_bidir: DataFrame, sources: DataFrame,
-                      max_dist: float = C.NET_MAX_DIST,
-                      hop: float = C.NET_HOP) -> DataFrame:
-    """Min network distance from any source node, bounded by max_dist
-    (general weighted Bellman-Ford relaxation; `hop` = the smallest
-    edge weight, bounding the round count at max_dist/hop).
-
-    sources: DataFrame with column `node_id`.  Returns
-    (node_id, net_dist) for every node within max_dist of a source.
-
-    Same iteration hygiene as multi_source_dist_bfs (measured there):
-    frontier and settled are localCheckpointed EVERY round — batching
-    re-runs the batch's join tree per materialization — and coalesced
-    so stage task counts stay flat as rounds accumulate.
-    """
-    settled = sources.select("node_id").distinct() \
-                     .withColumn("net_dist", F.lit(0.0)) \
-                     .localCheckpoint(eager=True)
-    n_parts = max(settled.rdd.getNumPartitions(), 1)
-    frontier = settled
-    max_rounds = int(max_dist // hop) + 1
-    for it in range(max_rounds):
-        relaxed = (frontier.join(edges_bidir,
-                                 frontier["node_id"] == edges_bidir["src"])
-                   .select(F.col("dst").alias("node_id"),
-                           (F.col("net_dist") + F.col("length_m"))
-                           .alias("net_dist"))
-                   .where(F.col("net_dist") <= max_dist)
-                   .groupBy("node_id").agg(F.min("net_dist").alias("net_dist")))
-        # keep only genuine improvements → new frontier
-        joined = relaxed.alias("r").join(
-            settled.alias("s"), on="node_id", how="left")
-        frontier = (joined
-                    .where(F.col("s.net_dist").isNull()
-                           | (F.col("r.net_dist") < F.col("s.net_dist")))
-                    .select("node_id", F.col("r.net_dist").alias("net_dist"))
-                    .localCheckpoint(eager=True))
-        if not frontier.take(1):
-            break
-        settled = (settled.unionByName(frontier)
-                   .groupBy("node_id").agg(F.min("net_dist").alias("net_dist"))
-                   .coalesce(n_parts)
-                   .localCheckpoint(eager=True))
-    return settled
+DRIVER_EDGE_LIMIT = 8_000_000   # directed edges that fit a driver
+# solve: ~200 MB Arrow transfer; at the limit the bucket Dijkstra takes
+# 2.3 s and the component solve 5.8 s on a 4-core Xeon
+# (tools/microbench_solvers.py, best of 3)
 
 
-DRIVER_GRAPH_EDGE_LIMIT = 8_000_000   # directed edges that fit a
-# driver-side solve: ~200 MB Arrow transfer, 1.6 s vectorized solve
-# measured at the limit (tools/microbench_solvers.py; the r03 Python
-# heap was the reason the limit sat at 2M — the bucket solver scales
-# linearly: 2M→0.30 s, 8M→1.60 s, 16M→3.66 s best-of-3)
+def _fetch_road_graph(edges: DataFrame, cols: tuple[str, ...],
+                      per_row: int = 1) -> pd.DataFrame:
+    """The road graph's `cols` on the driver in one bounded job;
+    `per_row` is the number of directed edges a row stands for (2 for
+    a stored undirected table the caller mirrors).  Road graphs have
+    no distributed route, so a larger graph raises."""
+    pdf = fetch_at_most(edges.select(*cols), DRIVER_EDGE_LIMIT // per_row)
+    if pdf is None:
+        raise ValueError(
+            f"road graph exceeds DRIVER_EDGE_LIMIT = {DRIVER_EDGE_LIMIT:,}"
+            " directed edges; network solves run on the driver only")
+    return pdf
 
 
 def dijkstra_buckets(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
@@ -138,9 +74,9 @@ def dijkstra_buckets(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
     bucket is reached — an in-bucket improvement would need an edge
     shorter than delta — so each bucket settles in one vectorized
     gather + minimum.at relaxation.  Values are bit-identical to a
-    heap Dijkstra and to the distributed relaxation: every node's
-    distance is the same source→node prefix sum of doubles, and min
-    over equal candidates is order-independent.
+    heap Dijkstra: every node's distance is the same source→node
+    prefix sum of doubles, and min over equal candidates is
+    order-independent.
 
     Returns (node_ids, dists) for nodes with dist ≤ max_dist.
     """
@@ -148,7 +84,6 @@ def dijkstra_buckets(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
     # sort-based np.unique(return_inverse) at this scale (no global
     # sort, one hash pass); compact order is first-appearance, which
     # is irrelevant here — distances map back through `nodes`
-    import pandas as pd
     inv, nodes = pd.factorize(np.concatenate([src, dst, seed_ids]))
     s_c = inv[:len(src)]
     d_c = inv[len(src):len(src) + len(dst)]
@@ -208,28 +143,15 @@ def dijkstra_buckets(src: np.ndarray, dst: np.ndarray, w: np.ndarray,
     return nodes[keep], dist[keep]
 
 
-def multi_source_dist_driver(edges_bidir: DataFrame, sources: DataFrame,
-                             max_dist: float = C.NET_MAX_DIST
-                             ) -> DataFrame:
-    """Driver-side multi-source Dijkstra for graphs that fit in driver
-    memory — the road network is a *dimension* (a country's OSM
-    extract is 10^7-10^8 edges, KBs-GBs), while the 10^12-row points
-    table is the fact side; solving the dim once on the driver and
-    broadcasting the distance table back is the same plan shape as
-    broadcasting a park dim, and removes every iterative shuffle
-    round.  The distributed relaxations above remain the path for
-    continental graphs past DRIVER_GRAPH_EDGE_LIMIT (see
-    multi_source_dist_auto).
-
-    The solve itself is the vectorized `dijkstra_buckets` (no Python
-    per-edge loop — VERDICT r03 'What's wrong #2'; ~2M-edge lattice
-    solves in ~0.2 s, tools/microbench_solvers.py).  Values are
-    bit-identical to the distributed relaxation (parity asserted in
-    tests/test_network_parity.py).
-    """
-    import pandas as pd
+def multi_source_dist(edges_bidir: DataFrame, sources: DataFrame,
+                      max_dist: float = C.NET_MAX_DIST) -> DataFrame:
+    """(node_id, net_dist): min network distance from any `sources`
+    node_id, for every node within max_dist — one bounded edge fetch,
+    the vectorized `dijkstra_buckets` solve on the driver (a ~2M-edge
+    lattice solves in ~0.2 s), and the table handed back as a local
+    DataFrame for the caller to broadcast."""
     spark = edges_bidir.sparkSession
-    pdf = edges_bidir.select("src", "dst", "length_m").toPandas()
+    pdf = _fetch_road_graph(edges_bidir, ("src", "dst", "length_m"))
     seeds = np.array(
         [r[0] for r in sources.select("node_id").distinct().collect()],
         dtype=np.int64)
@@ -243,114 +165,6 @@ def multi_source_dist_driver(edges_bidir: DataFrame, sources: DataFrame,
         "node_id long, net_dist double")
 
 
-def multi_source_dist_auto(edges_bidir: DataFrame, sources: DataFrame,
-                           max_dist: float = C.NET_MAX_DIST,
-                           hop: float = C.NET_HOP,
-                           uniform: bool = False,
-                           n_edges_hint: int | None = None) -> DataFrame:
-    """Size-routed shortest paths: dimension-sized graphs solve on the
-    driver in one pass (no iterative shuffles); larger graphs take the
-    distributed relaxation (BFS layering for uniform weights,
-    hop-doubling Bellman-Ford otherwise).  Pass `n_edges_hint` when
-    the graph's size is known (fixture constant / table statistics);
-    otherwise the probe is one bounded limit-count."""
-    if n_edges_hint is None:
-        _warn_if_expensive_probe(edges_bidir, "multi_source_dist_auto")
-    n = (n_edges_hint if n_edges_hint is not None
-         else edges_bidir.limit(DRIVER_GRAPH_EDGE_LIMIT + 1).count())
-    if n <= DRIVER_GRAPH_EDGE_LIMIT:
-        return multi_source_dist_driver(edges_bidir, sources, max_dist)
-    if uniform:
-        return multi_source_dist_bfs(edges_bidir, sources,
-                                     max_dist=max_dist, hop=hop)
-    return multi_source_dist_hopset(edges_bidir, sources,
-                                    max_dist=max_dist, hop=hop, k_log2=2)
-
-
-def multi_source_dist_bfs(edges_bidir: DataFrame, sources: DataFrame,
-                          max_dist: float = C.NET_MAX_DIST,
-                          hop: float = C.NET_HOP) -> DataFrame:
-    """Uniform-weight fast path: every edge costs `hop`, so Dijkstra
-    degenerates to BFS layering — a node's distance is final the first
-    time it is reached.  Each round is frontier ⋈ edges → distinct →
-    anti-join settled; ~2 narrow shuffles per layer, frontier-sized.
-
-    Iteration hygiene, all measured at sf0.01 on the 75-layer
-    extended search:
-      * frontier AND seen are localCheckpointed every layer — batching
-        either multiplies recompute or bloats plans (batched-both:
-        518 s; frontier-only-per-layer: 280 s; per-layer: 57 s);
-      * `seen` is coalesced to a flat partition count before each
-        checkpoint — unionByName accumulates the frontiers'
-        partitions, and by layer 75 every stage was scheduling ~80
-        near-empty tasks (pure task-launch overhead).
-    """
-    frontier = sources.select("node_id").distinct().localCheckpoint(eager=True)
-    seen = frontier
-    n_parts = max(frontier.rdd.getNumPartitions(), 1)
-    layers = [frontier.withColumn("net_dist", F.lit(0.0))]
-    n_layers = int(max_dist // hop)
-    for layer in range(1, n_layers + 1):
-        nxt = (frontier.join(edges_bidir,
-                             frontier["node_id"] == edges_bidir["src"])
-               .select(F.col("dst").alias("node_id")).distinct()
-               .join(seen, "node_id", "left_anti")
-               .localCheckpoint(eager=True))
-        if not nxt.take(1):
-            break
-        layers.append(nxt.withColumn("net_dist", F.lit(float(layer) * hop)))
-        seen = (seen.unionByName(nxt).coalesce(n_parts)
-                .localCheckpoint(eager=True))
-        frontier = nxt
-    out = layers[0]
-    for l in layers[1:]:
-        out = out.unionByName(l)
-    return out
-
-
-def khop_edges(edges_bidir: DataFrame, k_log2: int,
-               max_dist: float) -> DataFrame:
-    """Min-dist edge set over paths of ≤ 2^k_log2 edges, by repeated
-    relational squaring: E_{2h} = min(E_h ∪ E_h ⋈ E_h), pruned to
-    max_dist.  Each squaring halves the rounds a downstream
-    Bellman-Ford needs — the asymptotic fix for deep searches where
-    the per-round driver barrier dominates (O(diameter) → O(diameter /
-    2^k) rounds at the cost of k self-join shuffles and an edge set
-    that grows with the 2^k-hop neighborhood size).
-    """
-    E = (edges_bidir.select("src", "dst", "length_m")
-         .where(F.col("src") != F.col("dst")))
-    for _ in range(k_log2):
-        a, b = E.alias("a"), E.alias("b")
-        two = (a.join(b, F.col("a.dst") == F.col("b.src"))
-               .select(F.col("a.src").alias("src"),
-                       F.col("b.dst").alias("dst"),
-                       (F.col("a.length_m") + F.col("b.length_m"))
-                       .alias("length_m"))
-               .where(F.col("src") != F.col("dst")))
-        E = (E.unionByName(two)
-             .groupBy("src", "dst")
-             .agg(F.min("length_m").alias("length_m"))
-             .where(F.col("length_m") <= max_dist)
-             .localCheckpoint(eager=True))
-    return E
-
-
-def multi_source_dist_hopset(edges_bidir: DataFrame, sources: DataFrame,
-                             max_dist: float,
-                             hop: float = C.NET_HOP,
-                             k_log2: int = 3) -> DataFrame:
-    """multi_source_dist over the 2^k_log2-hop min-dist edge set:
-    identical results (a shortest path of L edges decomposes into
-    ⌈L/2^k⌉ hop-set edges, and every hop-set edge is a real path, so
-    the relaxation neither over- nor under-estimates), with the round
-    count divided by 2^k_log2.  Equality with the BFS layering is
-    asserted by tests/test_network_parity.py."""
-    E = khop_edges(edges_bidir, k_log2, max_dist)
-    return multi_source_dist(E, sources, max_dist=max_dist,
-                             hop=hop * (1 << k_log2))
-
-
 def snap_node_expr(coord: str):
     """Snap a coordinate to the nearest lattice index (exact — lattice
     spacing 100 m, coordinates integer meters)."""
@@ -362,28 +176,22 @@ def snap_node_expr(coord: str):
 def network_access(points: DataFrame, edges: DataFrame,
                    entrances: DataFrame,
                    buffer_m: float = C.BUFFER_M,
-                   max_dist: float = C.NET_MAX_DIST,
-                   n_edges_hint: int | None = None) -> DataFrame:
+                   max_dist: float = C.NET_MAX_DIST) -> DataFrame:
     """(point_id, network_dist, reachable_in_buffer): bounded network
     distance from each point's snapped node to the nearest park
     entrance; NA→FALSE semantics of accessibility.R:345-349.
 
-    Size-routed (multi_source_dist_auto): the fixture lattice (and any
-    real city/country OSM extract) is dimension-sized → one driver
-    Dijkstra, zero iterative shuffles; continental graphs past
-    DRIVER_GRAPH_EDGE_LIMIT take the BFS layering.  Values identical
-    either way (tests/test_network_parity.py).
-
-    `n_edges_hint` is a pass-through for callers that KNOW their edge
-    table's size (the fixture registry passes its lattice constant);
-    with no hint the bounded limit-count probe decides — never assume
-    a size for a parameterized edge table (ADVICE r03 #1: a hardcoded
-    fixture constant here would silently route an arbitrarily large
-    caller graph to the driver solve)."""
-    dist = multi_source_dist_auto(
+    Edge weights are `length_m` — the reference's
+    `weight = edge_length()` Dijkstra (accessibility.R:343-356), so the
+    heterogeneous-weight lattice and the uniform one take the same
+    solve.  With max_dist = EXT_MAX_DIST (≥ the world's max finite
+    shortest path) this is the full-OD fallback (accessibility.R:
+    352-358, golden Max 27,532 m): distances are exact for every
+    connected node and only disconnected islands stay null."""
+    dist = multi_source_dist(
         bidirectional(edges),
         entrances.select(F.col("entrance_node").alias("node_id")),
-        max_dist=max_dist, uniform=True, n_edges_hint=n_edges_hint)
+        max_dist=max_dist)
     return _attach_points(points, dist, buffer_m)
 
 
@@ -438,14 +246,13 @@ def network_access_prefilter(points: DataFrame, edges: DataFrame,
     broadcast equi-join refined by exact integer d².  No per-address
     loop anywhere (the reference iterates addresses one by one with a
     progress bar — 7.2/sec; this is three joins)."""
-    import pandas as pd
     spark = points.sparkSession
     qualifying = parks.where(F.col("area_m2") > C.MIN_GREENSPACE_M2) \
         .select("park_id", "cx", "cy")
     # per-park bounded distance tables, driver-solved (dimension-sized);
     # collect the stored (undirected) edges once and mirror numpy-side
     # — half the Arrow transfer of collecting bidirectional()
-    epdf = edges.select("src", "dst", "length_m").toPandas()
+    epdf = _fetch_road_graph(edges, ("src", "dst", "length_m"), per_row=2)
     s1 = epdf["src"].to_numpy(dtype=np.int64)
     d1 = epdf["dst"].to_numpy(dtype=np.int64)
     w1 = epdf["length_m"].to_numpy(dtype=np.float64)
@@ -515,56 +322,6 @@ def network_access_prefilter(points: DataFrame, edges: DataFrame,
                     .alias("prefilter_in_buffer")))
 
 
-def network_access_weighted(points: DataFrame, edges_weighted: DataFrame,
-                            entrances: DataFrame,
-                            buffer_m: float = C.BUFFER_M,
-                            max_dist: float = C.NET_MAX_DIST,
-                            min_edge_m: float = C.WEDGE_BASE,
-                            n_edges_hint: int | None = None) -> DataFrame:
-    """Heterogeneous-weight variant of `network_access` — the
-    reference's true Dijkstra semantics (`weight = edge_length()`,
-    accessibility.R:343-356), which the uniform lattice reduces to BFS
-    and therefore cannot distinguish.  Runs the general Bellman-Ford
-    relaxation over the 4-hop min-dist edge set (rounds ÷ 4; measured
-    7.6 s vs 10.7 s plain at sf0.01, identical results — hop-doubling
-    composes with weights since khop_edges carries min path sums).
-    Size-routed like network_access: dimension-sized graphs solve on
-    the driver; the hop-doubling relaxation is the big-graph path."""
-    dist = multi_source_dist_auto(
-        bidirectional(edges_weighted),
-        entrances.select(F.col("entrance_node").alias("node_id")),
-        max_dist=max_dist, hop=min_edge_m, n_edges_hint=n_edges_hint)
-    return _attach_points(points, dist, buffer_m)
-
-
-def network_access_extended(points: DataFrame, edges: DataFrame,
-                            entrances: DataFrame,
-                            buffer_m: float = C.BUFFER_M,
-                            ext_max_dist: float = C.EXT_MAX_DIST,
-                            n_edges_hint: int | None = None) -> DataFrame:
-    """The full-OD fallback (accessibility.R:352-358): when no
-    entrance lies within the buffer, the reference computes the dense
-    OD matrix and reports the true min distance (its golden stats show
-    Max 27,532 m).  Here the bounded search simply continues to
-    EXT_MAX_DIST — chosen ≥ the world's max finite shortest path, so
-    distances are exact for every connected node; only genuinely
-    disconnected islands stay null (NA in the reference too).
-    Runs hop-doubling with k_log2=2 (4-hop min-dist edge set → rounds
-    ÷ 4): measured 25.1 s vs 42.9 s plain BFS layering at sf0.01 for
-    identical results (40,356 settled nodes).  k_log2=3 LOSES (53.5 s)
-    — the E₄⋈E₄ squaring's 64M-row intermediate costs more than the
-    rounds it saves; pick k so the 2^k-hop neighborhood stays small
-    relative to round overhead.  Size-routed: the fixture lattice is
-    dimension-sized, so the default run is ONE driver Dijkstra (the
-    measured numbers above are the big-graph distributed path, still
-    taken past DRIVER_GRAPH_EDGE_LIMIT)."""
-    dist = multi_source_dist_auto(
-        bidirectional(edges),
-        entrances.select(F.col("entrance_node").alias("node_id")),
-        max_dist=ext_max_dist, n_edges_hint=n_edges_hint)
-    return _attach_points(points, dist, buffer_m)
-
-
 def labeled_bfs_layers(src: np.ndarray, dst: np.ndarray,
                        seed_pids: np.ndarray, seed_nodes: np.ndarray,
                        n_layers: int, hop: float
@@ -573,7 +330,6 @@ def labeled_bfs_layers(src: np.ndarray, dst: np.ndarray,
     set, vectorized per layer (the driver-side isochrone solve).
     Returns (point_ids, node_ids, dists) — one row per (source,
     reached node)."""
-    import pandas as pd
     inv, nodes = pd.factorize(np.concatenate([src, dst, seed_nodes]))
     s_c = inv[:len(src)]
     d_c = inv[len(src):len(src) + len(dst)]
@@ -612,17 +368,16 @@ def labeled_bfs_layers(src: np.ndarray, dst: np.ndarray,
             np.concatenate(out_d))
 
 
-def isochrone_nodes_driver(points_sample: DataFrame, edges: DataFrame,
-                           max_dist: float = C.BUFFER_M,
-                           hop: float = C.NET_HOP) -> DataFrame:
-    """Driver-side isochrones for dimension-sized road graphs: one
-    Arrow transfer + per-source vectorized BFS layers, zero iterative
-    shuffles.  Distances identical to the distributed layering
-    (uniform weights → layer·hop; parity in
-    tests/test_network_parity.py)."""
-    import pandas as pd
+def isochrone_nodes(points_sample: DataFrame, edges: DataFrame,
+                    max_dist: float = C.BUFFER_M,
+                    hop: float = C.NET_HOP) -> DataFrame:
+    """Per-source isochrone node sets (A12, ndvi_calc.R:204-211):
+    (point_id, node_id, net_dist) for every node within max_dist of
+    each sample point's snapped node.  One bounded edge fetch +
+    per-source vectorized BFS layers on the driver (uniform weights →
+    net_dist = layer·hop)."""
     spark = edges.sparkSession
-    pdf = bidirectional(edges).select("src", "dst").toPandas()
+    pdf = _fetch_road_graph(bidirectional(edges), ("src", "dst"))
     seeds = points_sample.select(
         "point_id",
         (snap_node_expr("y") * C.ROAD_N + snap_node_expr("x"))
@@ -638,78 +393,23 @@ def isochrone_nodes_driver(points_sample: DataFrame, edges: DataFrame,
         "point_id long, node_id long, net_dist double")
 
 
-def isochrone_nodes_auto(points_sample: DataFrame, edges: DataFrame,
-                         max_dist: float = C.BUFFER_M,
-                         hop: float = C.NET_HOP,
-                         n_edges_hint: int | None = None) -> DataFrame:
-    """Size-routed isochrones: dimension-sized graphs solve on the
-    driver (isochrone_nodes_driver); larger graphs keep the
-    distributed labeled BFS.  Same routing contract as
-    multi_source_dist_auto."""
-    eb = bidirectional(edges)
-    if n_edges_hint is None:
-        _warn_if_expensive_probe(eb, "isochrone_nodes_auto")
-    n = (n_edges_hint if n_edges_hint is not None
-         else eb.limit(DRIVER_GRAPH_EDGE_LIMIT + 1).count())
-    if n <= DRIVER_GRAPH_EDGE_LIMIT:
-        return isochrone_nodes_driver(points_sample, edges,
-                                      max_dist, hop)
-    return isochrone_nodes(points_sample, edges, max_dist, hop)
-
-
-def isochrone_nodes(points_sample: DataFrame, edges: DataFrame,
-                    max_dist: float = C.BUFFER_M,
-                    hop: float = C.NET_HOP) -> DataFrame:
-    """Per-source isochrone node sets (A12, ndvi_calc.R:204-211):
-    labeled multi-source BFS — state is (src_id, node_id), so one
-    Spark loop serves every source simultaneously.  Returns
-    (point_id, node_id, net_dist)."""
-    eb = bidirectional(edges)
-    seeds = points_sample.select(
-        "point_id",
-        (snap_node_expr("y") * C.ROAD_N + snap_node_expr("x"))
-        .alias("node_id"))
-    frontier = seeds.distinct().localCheckpoint(eager=True)
-    seen = frontier
-    layers = [frontier.withColumn("net_dist", F.lit(0.0))]
-    for layer in range(1, int(max_dist // hop) + 1):
-        nxt = (frontier.join(eb, frontier["node_id"] == eb["src"])
-               .select("point_id", F.col("dst").alias("node_id"))
-               .distinct()
-               .join(seen, ["point_id", "node_id"], "left_anti")
-               .localCheckpoint(eager=True))
-        if not nxt.take(1):
-            break
-        layers.append(nxt.withColumn("net_dist",
-                                     F.lit(float(layer) * hop)))
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    out = layers[0]
-    for l in layers[1:]:
-        out = out.unionByName(l)
-    return out
-
-
 def isochrone_summary(points_sample: DataFrame, edges: DataFrame,
-                      max_dist: float = C.BUFFER_M,
-                      n_edges_hint: int | None = None) -> DataFrame:
+                      max_dist: float = C.BUFFER_M) -> DataFrame:
     """A12 node count + total network distance + P5 convex-hull area
     in ONE isochrone computation (ndvi_calc.R:204-236) — the r5
     slot-consolidation of q_isochrone_nodes + q_isochrone_hull: both
-    shapes shared isochrone_nodes_auto, so one applyInPandas pass now
+    shapes shared isochrone_nodes, so one applyInPandas pass now
     emits every per-source summary column.
     Output: (point_id, n_nodes, total_dist, hull_area_m2).
 
     Exactness: net_dist values are multiples of the lattice hop
     (100 m), so the per-group float sum is exact under any order —
     the oracle's SUM(net_dist) matches bit-for-bit."""
-    import pandas as pd
     from pyspark.sql.types import (DoubleType, LongType, StructField,
                                    StructType)
     from ..kernels import geom as G
 
-    iso = isochrone_nodes_auto(points_sample, edges, max_dist,
-                               n_edges_hint=n_edges_hint)
+    iso = isochrone_nodes(points_sample, edges, max_dist)
     nodes = iso.select(
         "point_id", "net_dist",
         (F.col("node_id") % C.ROAD_N).cast("double").alias("nx"),
@@ -732,9 +432,6 @@ def isochrone_summary(points_sample: DataFrame, edges: DataFrame,
                              "hull_area_m2": [area]})
 
     return nodes.groupBy("point_id").applyInPandas(summarize, schema)
-
-
-COMPONENT_DRIVER_EDGE_LIMIT = 5_000_000
 
 
 def min_label_components(src: np.ndarray, dst: np.ndarray
@@ -760,7 +457,6 @@ def min_label_components(src: np.ndarray, dst: np.ndarray
     # min-compact-code fixpoint is an arbitrary-but-consistent
     # component representative; the true min MEMBER ID is restored by
     # one segment-min remap at the end
-    import pandas as pd
     inv, uniques = pd.factorize(np.concatenate([src, dst]))
     nodes = np.asarray(uniques, dtype=np.int64)
     if not len(nodes):
@@ -795,58 +491,48 @@ def min_label_components(src: np.ndarray, dst: np.ndarray
     return nodes, rep_min[label]
 
 
-def _component_labels_driver(edges_bidir: DataFrame) -> DataFrame:
-    """Driver-side components for edge sets that fit in driver memory.
-    The component edge set is candidate-pair-sized (dedup clusters) or
-    dimension-sized (a road graph) — orders of magnitude below the
-    corpus — so one vectorized solve replaces O(log diameter) shuffle
-    rounds.  Labels are identical to the distributed propagation: the
-    minimum member id of each component."""
-    import pandas as pd
-    spark = edges_bidir.sparkSession
-    pdf = edges_bidir.select("src", "dst").toPandas()
+COMPONENT_MAX_ROUNDS = 64   # distributed propagation's round cap;
+# pointer jumping needs O(log diameter) rounds
+
+
+def component_labels(edges_bidir: DataFrame) -> DataFrame:
+    """(node_id, label): connected-component labels, label = the
+    minimum node_id of the component (stable canonical
+    representative).  Shared by A10 (largest component) and the dedup
+    and near-dup capstones (clusters → canonical doc).
+
+    Size-routed by one bounded fetch: an edge set of at most
+    DRIVER_EDGE_LIMIT rows (candidate pairs, a road graph) arrives in
+    that same job and is solved by `min_label_components` on the
+    driver; a larger one takes the distributed min-label propagation.
+    Labels are identical either way (tests/test_network_parity.py)."""
+    pdf = fetch_at_most(edges_bidir.select("src", "dst"), DRIVER_EDGE_LIMIT)
+    if pdf is None:
+        return _component_labels_distributed(edges_bidir)
     node_ids, labels = min_label_components(
         pdf["src"].to_numpy(dtype=np.int64),
         pdf["dst"].to_numpy(dtype=np.int64))
-    return spark.createDataFrame(
+    return edges_bidir.sparkSession.createDataFrame(
         pd.DataFrame({"node_id": node_ids, "label": labels}),
         "node_id long, label long")
 
 
-def component_labels(edges_bidir: DataFrame,
-                     max_iters: int = 64,
-                     checkpoint_every: int = 4,
-                     n_edges_hint: int | None = None) -> DataFrame:
-    """(node_id, label): connected-component labels via min-label
-    propagation with pointer jumping, to fixpoint.  label = the
-    minimum node_id of the component (stable canonical
-    representative).  Iterations are bounded by graph diameter;
-    pointer jumping collapses label chains exponentially.
-    Shared by A10 (largest component) and the dedup-group capstone
-    (near-dup clusters → canonical doc).
-
-    Size-routed like multi_source_dist_auto: edge sets under
-    COMPONENT_DRIVER_EDGE_LIMIT (candidate pairs / dimension graphs)
-    solve with one driver union-find, labels identical
-    (tests/test_network_parity.py); the iterative propagation is the
-    corpus-sized-edge-set path."""
-    if n_edges_hint is None:
-        _warn_if_expensive_probe(edges_bidir, "component_labels")
-    n = (n_edges_hint if n_edges_hint is not None
-         else edges_bidir.limit(COMPONENT_DRIVER_EDGE_LIMIT + 1).count())
-    if n <= COMPONENT_DRIVER_EDGE_LIMIT:
-        return _component_labels_driver(edges_bidir)
+def _component_labels_distributed(edges_bidir: DataFrame) -> DataFrame:
+    """Min-label propagation with pointer jumping, to fixpoint, for
+    corpus-sized edge sets.  The edge set is re-read every round, so
+    it is checkpointed first; pointer jumping collapses label chains
+    exponentially (O(log diameter) rounds instead of O(diameter))."""
+    edges_bidir = edges_bidir.select("src", "dst").localCheckpoint(eager=True)
     nodes = (edges_bidir.select(F.col("src").alias("node_id"))
              .union(edges_bidir.select(F.col("dst").alias("node_id")))
              .distinct())
     labels = nodes.withColumn("label", F.col("node_id"))
-    for it in range(max_iters):
+    for it in range(COMPONENT_MAX_ROUNDS):
         # neighbor min (label propagation step)
         nbr = (labels.join(edges_bidir,
                            labels["node_id"] == edges_bidir["src"])
                .select(F.col("dst").alias("node_id"), "label"))
-        # pointer jump: label[label[v]] — collapses label chains
-        # exponentially (O(log diameter) rounds instead of O(diameter))
+        # pointer jump: label[label[v]]
         lmap = labels.select(F.col("node_id").alias("label"),
                              F.col("label").alias("jump"))
         jumped = (labels.join(lmap, "label")
@@ -854,24 +540,20 @@ def component_labels(edges_bidir: DataFrame,
         prop = (nbr.unionByName(labels).unionByName(jumped)
                 .groupBy("node_id").agg(F.min("label").alias("label")))
         prop = prop.localCheckpoint(eager=True)
-        if (it + 1) % checkpoint_every == 0 or it >= 4:
-            changed = (prop.alias("p").join(labels.alias("l"), "node_id")
-                       .where(F.col("p.label") != F.col("l.label"))
-                       .limit(1).count())
-            labels = prop
-            if changed == 0:
-                break
-        else:
-            labels = prop
+        # convergence is checked from the fourth round on
+        done = it >= 3 and (prop.alias("p").join(labels.alias("l"), "node_id")
+                            .where(F.col("p.label") != F.col("l.label"))
+                            .limit(1).count()) == 0
+        labels = prop
+        if done:
+            break
     return labels
 
 
-def largest_component_size(edges_bidir: DataFrame,
-                           max_iters: int = 64,
-                           checkpoint_every: int = 4) -> DataFrame:
+def largest_component_size(edges_bidir: DataFrame) -> DataFrame:
     """Size of the largest connected component (A10,
     ndvi_calc.R:151-171).  Returns a 1-row DataFrame
     (component_size BIGINT)."""
-    labels = component_labels(edges_bidir, max_iters, checkpoint_every)
+    labels = component_labels(edges_bidir)
     return (labels.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n").alias("component_size")))

@@ -129,31 +129,6 @@ def greenspace_polygon_pct(points: DataFrame, parks: DataFrame,
     return out.select("point_id", pct.alias("greenspace_poly_pct"))
 
 
-def holed_parks_wkb_df(spark) -> DataFrame:
-    """The round-4 holed/multipolygon park fixture
-    (registry_geo3.holed_park_rings) as a WKB layer: one row per park,
-    geometry = MULTIPOLYGON whose members may carry interior rings
-    (lakes) — the general OSM greenspace shape the reference gets via
-    GEOS (accessibility.R:210).  Returns (park_id, bxmin, bymin,
-    bxmax, bymax, geom_wkb)."""
-    import numpy as np
-
-    from .. import registry_geo3 as G3
-    from ..kernels import concave as CK
-
-    rows = []
-    for g in range(G3.N_HOLED):
-        members = [CK.make_valid_polygon(m)
-                   for m in G3.holed_park_rings(g)]
-        outer = np.vstack([m[0] for m in members])
-        rows.append((g, float(outer[:, 0].min()), float(outer[:, 1].min()),
-                     float(outer[:, 0].max()), float(outer[:, 1].max()),
-                     bytearray(G.wkb_multipolygon_rings(members))))
-    return spark.createDataFrame(
-        rows, "park_id long, bxmin double, bymin double, "
-              "bxmax double, bymax double, geom_wkb binary")
-
-
 def greenspace_rings_pct(points: DataFrame, parks_wkb: DataFrame,
                          buffer_m: float = C.BUFFER_M,
                          bucket: int = 2000) -> DataFrame:

@@ -99,15 +99,3 @@ def gate_columns(doc_id: Column | None = None,
     cols.append(((raw[0] + raw[1] + raw[2]) > 0).alias("has_pii"))
     cols.append(cur.alias("text_scrubbed"))
     return cols
-
-
-def pii_stats(df: DataFrame, col: str = "text") -> DataFrame:
-    """Corpus-level PII rates: one aggregate over the scrubbed frame
-    (docs scanned once; shuffle carries six partial sums)."""
-    s = scrub_pii(df, col)
-    return s.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_email").alias("n_email"),
-        F.sum("n_ip").alias("n_ip"),
-        F.sum("n_phone").alias("n_phone"),
-        F.sum(F.col("has_pii").cast("long")).alias("n_docs_with_pii"))

@@ -58,44 +58,3 @@ def sample_sql(doc_id: str = "doc_id", source: str = "source") -> tuple:
     rate = f"CAST({RATE_BASE_PM} + {sh} % {RATE_SPREAD_PM} AS BIGINT)"
     draw = f"(({doc_id} * {DRAW_MUL} + {DRAW_ADD}) % 1000)"
     return rate, f"{draw} < ({rate})"
-
-
-# ------------------------------------------------ stratified exact-k
-# Rate sampling above keeps a deterministic FRACTION per source; eval
-# sets and ablations need an exact COUNT per stratum ("5k docs per
-# language").  The draw key is the same portable affine hash, so
-# which k documents win is deterministic and engine-portable; the
-# rank is a per-stratum window (one shuffle keyed by the stratum —
-# strata counts are what they are; if one stratum dominates the
-# corpus, its window sort is the skew, and the standard fix is
-# pre-filtering with an oversampled rate cut before ranking, which
-# composes with this operator unchanged).
-
-def stratified_sample(df, group_col: str, k: int,
-                      key_col: str = "doc_id"):
-    """Exactly min(k, |stratum|) rows per ``group_col`` value, chosen
-    by the deterministic per-document draw (ties broken by key) —
-    adds ``strat_rank`` (1-based within the stratum)."""
-    from pyspark.sql import Window
-    draw = (F.col(key_col) * DRAW_MUL + DRAW_ADD) % 1000
-    w = (Window.partitionBy(group_col)
-         .orderBy(draw.asc(), F.col(key_col).asc()))
-    return (df.withColumn("strat_rank",
-                          F.row_number().over(w).cast("long"))
-            .where(F.col("strat_rank") <= k))
-
-
-def stratified_sql(group_col: str, k: int, key_col: str = "doc_id",
-                   table: str = "documents",
-                   cols: str = "doc_id, lang, source") -> str:
-    """DuckDB rendering of :func:`stratified_sample`."""
-    draw = f"(({key_col} * {DRAW_MUL} + {DRAW_ADD}) % 1000)"
-    return f"""
-SELECT * FROM (
-  SELECT {cols},
-         CAST(ROW_NUMBER() OVER (PARTITION BY {group_col}
-              ORDER BY {draw} ASC, {key_col} ASC) AS BIGINT)
-           AS strat_rank
-  FROM {table}
-) _r WHERE strat_rank <= {k}
-"""

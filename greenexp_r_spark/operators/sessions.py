@@ -1,10 +1,8 @@
 """Batch sessionization of the events table — gap-based session
 windows as two analytic passes over ONE user-keyed shuffle.
 
-The streaming twin (streaming/events_stream.py:sessionize) keeps
-O(active users) state and emits sessions as they close; this is the
-backfill/batch form of the same semantics: a session breaks when the
-inactivity gap exceeds ``gap_s``.  Classic two-window shape —
+A session breaks when the inactivity gap exceeds ``gap_s``.  Classic
+two-window shape —
 
   1. ``new_sess`` flag: lag(ts) over (user ORDER BY ts, event_id)
   2. ``sess_seq``: running SUM of the flag over the same order
@@ -19,8 +17,7 @@ Exactness: gap arithmetic on epoch MICROsecond BIGINTs
 (unix_micros ≡ DuckDB epoch_us), ROWS frames made explicit (the
 default RANGE frame would merge tied sort keys — the order is total
 here, but implicit frames are an engine-parity trap), counts BIGINT.
-tests/test_sessions.py pins DuckDB bit-parity AND batch ≡ streaming
-on closed sessions.
+tests/test_sessions.py pins DuckDB bit-parity.
 
 Reference analog: none in GreenExp_R (LLM-pipeline brief).
 """
@@ -29,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-SESSION_GAP_S = 3600           # matches streaming/events_stream.py
+SESSION_GAP_S = 3600           # inactivity gap that closes a session
 
 
 def sessionize_batch(events: DataFrame,

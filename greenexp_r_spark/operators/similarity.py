@@ -384,8 +384,7 @@ def neardup_groups(embeddings: DataFrame,
                        F.col("vec_id_b").alias("dst"))
           .unionByName(pairs.select(F.col("vec_id_b").alias("src"),
                                     F.col("vec_id_a").alias("dst")))
-          .distinct()
-          .localCheckpoint(eager=True))
+          .distinct())
     labels = network.component_labels(eb)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("group_size"))
     return (labels.join(sizes, "label")

@@ -113,10 +113,6 @@ def augment_url_sql(d: Dialect, u: str = "url",
             f"ELSE {u} END")
 
 
-def augment_url(u: str = "url", doc: str = "doc_id") -> Column:
-    return F.expr(augment_url_sql(SPARK, u, doc))
-
-
 def url_dedup_keep_first(pages: DataFrame, url: str = "url",
                          ts: str = "warc_ts") -> DataFrame:
     """One row per canonical URL: the earliest capture (``ts`` asc,

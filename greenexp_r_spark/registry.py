@@ -464,12 +464,6 @@ def _q_knn(spark, sf):
     return b.unionByName(c)
 
 
-# the fixture lattice's directed-edge count — known HERE (the registry
-# constructs the edge table), so the hint is passed at these call
-# sites only; the operators themselves probe unknown inputs
-_LATTICE_EDGES = 4 * C.ROAD_N * (C.ROAD_N - 1)
-
-
 def _q_network(spark, sf):
     """Full-OD bounded search PLUS the euclidean-prefilter loop
     variant (accessibility.R:326-350, VERDICT r04 ask #7) as extra
@@ -480,7 +474,7 @@ def _q_network(spark, sf):
     pts = world.points_df(spark, sf)
     full = network.network_access(
         pts, world.road_edges_df(spark),
-        world.park_entrances_df(spark), n_edges_hint=_LATTICE_EDGES)
+        world.park_entrances_df(spark))
     pref = network.network_access_prefilter(
         pts, world.road_edges_df(spark), world.parks_df(spark),
         world.park_entrances_df(spark))
@@ -488,9 +482,9 @@ def _q_network(spark, sf):
 
 
 def _q_network_weighted(spark, sf):
-    return network.network_access_weighted(
+    return network.network_access(
         world.points_df(spark, sf), world.road_edges_weighted_df(spark),
-        world.park_entrances_df(spark), n_edges_hint=_LATTICE_EDGES)
+        world.park_entrances_df(spark))
 
 
 def _q_network_entrances(spark, sf):
@@ -499,13 +493,13 @@ def _q_network_entrances(spark, sf):
     snapped centroids."""
     return network.network_access(
         world.points_df(spark, sf), world.road_edges_df(spark),
-        world.park_entrance_nodes_df(spark), n_edges_hint=_LATTICE_EDGES)
+        world.park_entrance_nodes_df(spark))
 
 
 def _q_network_extended(spark, sf):
-    return network.network_access_extended(
+    return network.network_access(
         world.points_df(spark, sf), world.road_edges_df(spark),
-        world.park_entrances_df(spark), n_edges_hint=_LATTICE_EDGES)
+        world.park_entrances_df(spark), max_dist=C.EXT_MAX_DIST)
 
 
 def _q_component(spark, sf):

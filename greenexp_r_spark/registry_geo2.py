@@ -266,11 +266,10 @@ FROM cnt c LEFT JOIN area a ON c.point_id = a.point_id
 
 
 def _q_isochrone(s, sf):
-    from .registry import _LATTICE_EDGES
     return network.isochrone_summary(
         world.points_df(s, sf).where(
             F.col("point_id") % ISO_SAMPLE_MOD == 0),
-        world.road_edges_df(s), n_edges_hint=_LATTICE_EDGES)
+        world.road_edges_df(s))
 
 
 N_SCENES = 24
@@ -422,8 +421,9 @@ def _q_domain_stats(s, sf):
         extra_aggs=(F.countDistinct("canon").cast("long")
                     .alias("n_canon"),
                     F.min("canon").alias("first_canon")))
-    # checkpoint the edge set BEFORE the size probe (doctrine: the
-    # probe must not re-run the extraction scan)
+    # checkpoint the edge set: pagerank fetches it and collects the
+    # nodes graph_nodes derives from it, which would otherwise run the
+    # href extraction scan twice
     edges = linkgraph.page_links(pts).localCheckpoint(eager=True)
     pr = linkgraph.pagerank(linkgraph.graph_nodes(pts, edges), edges)
     return (base.join(pr, base["domain"] == pr["host"], "left")

@@ -50,187 +50,6 @@ def hourly_rollup_stream(spark: SparkSession, events_path: str,
                     "n_events", "value_sum_micros"))
 
 
-def downsample_stream(spark: SparkSession, events_path: str,
-                      width_s: int = 900,
-                      watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of operators/downsample.time_bucket_rollup —
-    the hypertable continuous aggregate: per (user, width_s-bucket)
-    OHLC maintained incrementally under an event-time watermark.
-
-    Spark's epoch-anchored tumbling ``window(ts, Ns)`` start instant
-    IS the batch operator's subtract-mod bucket start, and open/close
-    ride the same lexicographic struct MIN/MAX — so the drained
-    stream is bit-equal to the batch rollup (asserted in
-    tests/test_downsample.py), the same stream≡batch contract as the
-    sessionizer.  State per key is one aggregation row per open
-    bucket.  The watermark bounds state only in append/update mode;
-    the availableNow test drain below uses outputMode('complete'),
-    where Spark retains all aggregation state — a long-running
-    deployment should run update mode with a merging sink."""
-    from ..operators import downsample as DS
-
-    events_path = stage_as_dir(events_path)
-    static = spark.read.parquet(events_path)
-    stream = (spark.readStream.schema(static.schema).parquet(events_path)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    return (stream
-            .withWatermark("ts", watermark)
-            .withColumn(DS._US, F.unix_micros(F.col("ts")))
-            .groupBy(F.window("ts", f"{width_s} seconds").alias("w"),
-                     F.col("user_id").alias("key"))
-            # the SAME aggregate list as the batch rollup — shared by
-            # construction (operators/downsample.ohlc_aggs)
-            .agg(*DS.ohlc_aggs())
-            .select("key", F.col("w.start").alias("bucket"),
-                    "n_rows", "sum_micro", "open_v", "close_v",
-                    "min_v", "max_v"))
-
-
-def run_downsample_available_now(spark: SparkSession, events_path: str,
-                                 width_s: int = 900,
-                                 table_name: str = "events_ohlc_stream"
-                                 ) -> DataFrame:
-    q = (downsample_stream(spark, events_path, width_s)
-         .writeStream.format("memory").queryName(table_name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(table_name)
-
-
-def streaming_dedup(spark: SparkSession, events_path: str,
-                    watermark: str = "2 hours") -> DataFrame:
-    """Stateful exact dedup on the stream, with state actually bounded
-    by the event-time watermark: dropDuplicatesWithinWatermark keys on
-    event_id and evicts entries once the watermark passes their event
-    time.  (Plain dropDuplicates(["event_id"]) — round 1 — never
-    evicts when the event-time column isn't part of the key: state
-    grows without bound, contradicting the documented semantics even
-    though the small-scale results were right.)"""
-    events_path = stage_as_dir(events_path)
-    static = spark.read.parquet(events_path)
-    stream = (spark.readStream.schema(static.schema).parquet(events_path)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    return (stream
-            .withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_unique")))
-
-
-SESSION_GAP_S = 3600   # inactivity gap that closes a session
-
-
-def sessionize(spark: SparkSession, events_path: str,
-               gap_s: int = SESSION_GAP_S) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    session windows with an inactivity gap.  State per key is ONE
-    compact open-session tuple (start, last_ts, n, value_sum) — never
-    an event buffer — so state size is O(active users), the 100 TB
-    shape for arbitrary stateful streaming.
-
-    Emits sessions as they CLOSE (append mode): a session closes when
-    a later event of the same user arrives more than `gap_s` after its
-    last event.  The trailing (still-open) session per user stays in
-    state; a production run adds EventTimeTimeout to flush it when
-    the watermark passes start+gap — with availableNow draining a
-    static source (the test harness), timeouts never fire, so the
-    batch-equivalence oracle excludes each user's last session.
-
-    Output: (user_id, session_start, session_end, n_events,
-    value_sum_micros).
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (LongType, StructField, StructType,
-                                   TimestampType)
-
-    out_schema = StructType([
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum_micros", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-        StructField("vsum", LongType()),
-    ])
-    gap_us = gap_s * 1_000_000
-
-    def fn(key, pdfs, state):
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            # timed-out / empty invocation (e.g. with EventTimeTimeout
-            # configured): nothing to fold, keep state as-is
-            return
-        rows = rows.sort_values(["ts", "event_id"])
-        # normalize to epoch MICROseconds regardless of the pandas
-        # resolution Arrow materialized (datetime64[ns] vs [us])
-        ts_us = (rows["ts"].to_numpy().astype("datetime64[us]")
-                 .astype("int64"))
-        vals = (rows["value"] * 1_000_000).round().astype("int64").to_numpy()
-        if state.exists:
-            start, last, n, vsum = state.get
-        else:
-            start = last = int(ts_us[0])
-            n = 0
-            vsum = 0
-        out = []
-        for t, v in zip(ts_us, vals):
-            if n > 0 and t - last > gap_us:
-                out.append((key[0], start, last, n, vsum))
-                start, n, vsum = int(t), 0, 0
-            if n == 0:
-                start = int(t)
-            last = int(t)
-            n += 1
-            vsum += int(v)
-        state.update((int(start), int(last), int(n), int(vsum)))
-        if out:
-            o = pd.DataFrame(out, columns=["user_id", "s", "e",
-                                           "n_events", "value_sum_micros"])
-            yield pd.DataFrame({
-                "user_id": o["user_id"],
-                "session_start": pd.to_datetime(o["s"], unit="us"),
-                "session_end": pd.to_datetime(o["e"], unit="us"),
-                "n_events": o["n_events"],
-                "value_sum_micros": o["value_sum_micros"],
-            })
-
-    events_path = stage_as_dir(events_path)
-    static = spark.read.parquet(events_path)
-    stream = (spark.readStream.schema(static.schema).parquet(events_path)
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    return (stream
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                fn, out_schema, state_schema, "append",
-                GroupStateTimeout.NoTimeout))
-
-
-def run_sessionize_available_now(spark: SparkSession, events_path: str,
-                                 table_name: str = "events_sessions"
-                                 ) -> DataFrame:
-    q = (sessionize(spark, events_path)
-         .writeStream.format("memory").queryName(table_name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(table_name)
-
-
-def run_dedup_available_now(spark: SparkSession, events_path: str,
-                            table_name: str = "events_dedup_stream"
-                            ) -> DataFrame:
-    q = (streaming_dedup(spark, events_path)
-         .writeStream.format("memory").queryName(table_name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(table_name)
-
-
 def run_available_now(spark: SparkSession, events_path: str,
                       table_name: str = "events_hourly_stream") -> DataFrame:
     """Drain the source with availableNow and return the result as a

@@ -297,15 +297,6 @@ def park_entrance_nodes_df(spark: SparkSession) -> DataFrame:
         world_ctes(d, "parks") + "\n" + park_entrance_nodes_sql(d))
 
 
-def with_cell_id(df: DataFrame, x: str = "x", y: str = "y",
-                 cell: int = C.CELL_SIZE) -> DataFrame:
-    """Attach the spatial bucketing key (H3-equivalent integer grid,
-    SURVEY.md §4.3).  cell_id = floor(x/cell)*65536 + floor(y/cell)."""
-    return df.withColumn(
-        "cell_id",
-        (F.floor(F.col(x) / cell) * C.CELL_SHIFT + F.floor(F.col(y) / cell)))
-
-
 def _spark_dialect():
     from .dialect import SPARK
     return SPARK

@@ -78,15 +78,14 @@ def test_sf_to_rast(spark):
 
 
 def test_api_network_weighted_equals_bfs_on_uniform_lattice(spark, pts):
-    """The facade's weighted-Dijkstra network mode must equal the BFS
-    fast path when edge weights are uniform (same lattice, same
-    entrances, same bound)."""
+    """The facade's network mode must equal the network operator on
+    the uniform lattice (same lattice, same entrances, same bound)."""
     from greenexp_r_spark.operators import network
     got = api.greenspace_access(
         pts, world.parks_df(spark), euclidean=False,
         edges=world.road_edges_df(spark),
-        entrances=world.park_entrances_df(spark),
-        min_edge_m=C.NET_HOP).toPandas().sort_values("point_id")
+        entrances=world.park_entrances_df(spark)
+    ).toPandas().sort_values("point_id")
     want = network.network_access(
         pts, world.road_edges_df(spark),
         world.park_entrances_df(spark)).toPandas().sort_values("point_id")

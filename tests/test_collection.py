@@ -62,10 +62,13 @@ def test_reduce_deterministic_under_repartition(spark):
 
 def test_qa_stats(spark):
     sc = T.scene_tiles_df(spark, N_SCENES, res=RES)
-    qa = collection.collection_count_valid(sc).toPandas()
+    # per-tile valid observations: the sum of the per-cell scene counts
+    qa = collection.collection_mean(sc).select("tile_id", "n_scenes") \
+        .toPandas()
+    n_obs = qa["n_scenes"].map(sum)
     n_cells = T.TILE_CELLS ** 2
-    assert (qa["n_obs_total"] <= N_SCENES * n_cells).all()
-    assert (qa["n_obs_total"] >= (N_SCENES - 1) * n_cells * 0.8).all()
+    assert (n_obs <= N_SCENES * n_cells).all()
+    assert (n_obs >= (N_SCENES - 1) * n_cells * 0.8).all()
 
 
 def test_reduce_summary_matches_numpy(spark):

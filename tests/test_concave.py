@@ -103,7 +103,9 @@ def test_points_in_rings_hole_containment():
 
 def test_area_with_holes():
     rings = concave.make_valid_polygon([SQUARE4, HOLE1, HOLE2])
-    assert concave.area_with_holes(rings) == pytest.approx(16 - 1 - 1)
+    cover = np.array([[-1, -1], [5, -1], [5, 5], [-1, 5]], dtype=float)
+    assert concave.intersection_area_holes(rings, cover) \
+        == pytest.approx(16 - 1 - 1)
 
 
 def test_intersection_area_holes_vs_grid():
@@ -129,7 +131,8 @@ def test_holed_fixture_rings_are_valid_and_integer():
             rings = concave.make_valid_polygon(member)
             for r in rings:
                 assert np.all(r == np.round(r))       # integer lattice
-            assert concave.area_with_holes(rings) > 0
+            holes = sum(abs(geom.polygon_area(h)) for h in rings[1:])
+            assert abs(geom.polygon_area(rings[0])) > holes
 
 
 def test_holed_fixture_kernel_matches_sql_parity_form():

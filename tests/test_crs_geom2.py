@@ -46,13 +46,13 @@ def test_make_valid_fixes_orientation():
 def test_multipolygon_roundtrip_and_explode():
     a = G.regular_polygon(0, 0, 5, 6)
     b = G.regular_polygon(100, 100, 8, 5)
-    mb = G.wkb_multipolygon([a, b])
-    parts = G.explode_multipolygon(mb)
+    mb = G.wkb_multipolygon_rings([[a], [b]])
+    parts = G.parse_wkb_rings(mb)
     assert len(parts) == 2
-    np.testing.assert_allclose(parts[0], a)
-    np.testing.assert_allclose(parts[1], b)
-    # plain polygon passes through
-    assert len(G.explode_multipolygon(G.wkb_polygon(a))) == 1
+    np.testing.assert_allclose(parts[0][0], a)
+    np.testing.assert_allclose(parts[1][0], b)
+    # plain polygon passes through as one member
+    assert len(G.parse_wkb_rings(G.wkb_polygon(a))) == 1
 
 
 def test_aggregate_block_mean():

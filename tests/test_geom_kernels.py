@@ -9,11 +9,6 @@ import pytest
 from greenexp_r_spark.kernels import geom as G
 
 
-def test_wkb_point_roundtrip():
-    b = G.wkb_point(123.5, -7.25)
-    assert G.parse_wkb_point(b) == (123.5, -7.25)
-
-
 def test_wkb_polygon_roundtrip():
     ring = G.regular_polygon(100, 200, 50, 7)
     b = G.wkb_polygon(ring)

@@ -61,12 +61,46 @@ def test_pagerank_matches_pure_python(spark):
         assert got[h] == (outdeg[h], pr[h]), h
 
 
-def test_distributed_equals_driver(spark):
-    nodes, e = _mk(spark, EDGES, extra_nodes=["lonely"])
-    drv = sorted(map(tuple, LG.pagerank(nodes, e).collect()))
-    dist = sorted(map(tuple, LG.pagerank(
-        nodes, e, n_edges_hint=LG.PR_DRIVER_EDGE_LIMIT + 1).collect()))
-    assert drv == dist
+def _random_host_graph(seed, n_hosts=40, n_edges=120):
+    import random
+    rng = random.Random(seed)
+    return sorted({(f"h{a}", f"h{b}")
+                   for a, b in ((rng.randrange(n_hosts),
+                                 rng.randrange(n_hosts))
+                                for _ in range(n_edges)) if a != b})
+
+
+def _lattice_host_graph(spark):
+    """The road lattice as a host graph: one host per node, both
+    directions of every road edge as links."""
+    from greenexp_r_spark.operators import network
+    e = (network.bidirectional(world.road_edges_df(spark))
+         .select(F.col("src").cast("string").alias("src"),
+                 F.col("dst").cast("string").alias("dst")))
+    nodes = (e.select(F.col("src").alias("host"))
+             .unionByName(e.select(F.col("dst").alias("host"))).distinct())
+    return nodes, e
+
+
+def test_distributed_equals_driver(spark, monkeypatch):
+    """Both routes of pagerank give identical rows: the default limit
+    takes the driver solve, a limit below the edge count the
+    distributed power iteration — on the fixed graph, a seeded random
+    graph and the road lattice."""
+    from greenexp_r_spark.operators import network
+    graphs = [_mk(spark, EDGES, extra_nodes=["lonely"]),
+              _mk(spark, _random_host_graph(7), extra_nodes=["lonely"]),
+              _lattice_host_graph(spark)]
+    drv = [sorted(map(tuple, LG.pagerank(n, e).collect()))
+           for n, e in graphs]
+    calls = []
+    distributed = LG._pagerank_distributed
+    monkeypatch.setattr(LG, "_pagerank_distributed",
+                        lambda *a: calls.append(1) or distributed(*a))
+    monkeypatch.setattr(network, "DRIVER_EDGE_LIMIT", 3)
+    for (n, e), want in zip(graphs, drv):
+        assert sorted(map(tuple, LG.pagerank(n, e).collect())) == want
+    assert len(calls) == len(graphs)
 
 
 def test_dangling_receives_rank(spark):

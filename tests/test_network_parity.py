@@ -1,5 +1,6 @@
-"""Round-2 network parity operators: weighted Dijkstra, pseudo-
-entrances, extended (full-OD fallback) search.
+"""Network parity: weighted Dijkstra, pseudo-entrances, extended
+(full-OD fallback) search, isochrones, and the size routes of the
+graph solves.
 
 Reference semantics: accessibility.R:223-247 (entrances), :343-356
 (weight = edge_length Dijkstra), :352-358 (full OD matrix fallback).
@@ -36,7 +37,7 @@ def test_weighted_vs_bfs_bounds(spark, pts):
     (same lattice, same entrance seeds)."""
     bfs = network.network_access(
         pts, world.road_edges_df(spark), world.park_entrances_df(spark))
-    wgt = network.network_access_weighted(
+    wgt = network.network_access(
         pts, world.road_edges_weighted_df(spark),
         world.park_entrances_df(spark))
     j = (bfs.select("point_id", F.col("network_dist").alias("d_bfs"))
@@ -71,9 +72,9 @@ def test_extended_agrees_with_bounded(spark, pts):
     ≥ the bound (or null only for disconnected islands)."""
     b = network.network_access(
         pts, world.road_edges_df(spark), world.park_entrances_df(spark))
-    e = network.network_access_extended(
+    e = network.network_access(
         pts, world.road_edges_df(spark), world.park_entrances_df(spark),
-        ext_max_dist=2000.0)
+        max_dist=2000.0)
     j = (b.select("point_id", F.col("network_dist").alias("db"))
          .join(e.select("point_id", F.col("network_dist").alias("de")),
                "point_id"))
@@ -82,21 +83,6 @@ def test_extended_agrees_with_bounded(spark, pts):
     assert mismatch == 0
     beyond = j.where(F.col("db").isNull() & F.col("de").isNotNull())
     assert beyond.where(F.col("de") <= C.NET_MAX_DIST).count() == 0
-
-
-def test_hopset_equals_bfs(spark):
-    """Hop-doubling relaxation (2^3-hop min-dist edge set, rounds/8)
-    must produce the exact BFS distances on the same graph/sources."""
-    eb = network.bidirectional(world.road_edges_df(spark))
-    src = world.park_entrances_df(spark).select(
-        F.col("entrance_node").alias("node_id"))
-    bfs = network.multi_source_dist_bfs(eb, src, max_dist=2000.0) \
-        .orderBy("node_id").toPandas()
-    hs = network.multi_source_dist_hopset(eb, src, max_dist=2000.0) \
-        .orderBy("node_id").toPandas()
-    assert len(bfs) == len(hs)
-    assert (bfs["node_id"].to_numpy() == hs["node_id"].to_numpy()).all()
-    assert (bfs["net_dist"].to_numpy() == hs["net_dist"].to_numpy()).all()
 
 
 def _py_dijkstra(edges, sources, max_dist):
@@ -123,8 +109,8 @@ def _py_dijkstra(edges, sources, max_dist):
 
 
 @pytest.mark.parametrize("seed", [7, 41, 1234])
-def test_hopset_matches_python_dijkstra_random_graph(spark, seed):
-    """Weighted hop-doubling relaxation vs a heap Dijkstra oracle on
+def test_multi_source_dist_matches_python_dijkstra_random_graph(spark, seed):
+    """The DataFrame-level driver solve vs a heap Dijkstra oracle on
     seeded random graphs (integer weights → exact float sums)."""
     import random
     rng = random.Random(seed)
@@ -140,112 +126,119 @@ def test_hopset_matches_python_dijkstra_random_graph(spark, seed):
 
     e = spark.createDataFrame(edges, "src long, dst long, length_m double")
     s = spark.createDataFrame([(x,) for x in set(sources)], "node_id long")
-    got = network.multi_source_dist_hopset(
-        network.bidirectional(e), s, max_dist=max_dist, hop=5.0,
-        k_log2=2).toPandas()
+    got = network.multi_source_dist(
+        network.bidirectional(e), s, max_dist=max_dist).toPandas()
     got_d = dict(zip(got.node_id, got.net_dist))
     assert got_d == want
 
 
-def test_driver_dijkstra_equals_distributed(spark):
-    """Size-routing correctness: the driver-side heap Dijkstra must be
-    value-identical to BOTH distributed relaxations (BFS layering for
-    uniform weights; hop-doubling Bellman-Ford for heterogeneous) on
-    the world graph at the extended bound."""
-    srcs = world.park_entrances_df(spark).select(
-        F.col("entrance_node").alias("node_id"))
-    # uniform lattice, extended bound (deepest search)
-    eb = network.bidirectional(world.road_edges_df(spark))
-    drv = network.multi_source_dist_driver(
-        eb, srcs, max_dist=C.EXT_MAX_DIST).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    bfs = network.multi_source_dist_bfs(
-        eb, srcs, max_dist=C.EXT_MAX_DIST).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    assert len(drv) == len(bfs)
-    assert (drv["node_id"].values == bfs["node_id"].values).all()
-    assert (drv["net_dist"].values == bfs["net_dist"].values).all()
-    # heterogeneous weights at the bounded radius
-    ew = network.bidirectional(world.road_edges_weighted_df(spark))
-    drv_w = network.multi_source_dist_driver(
-        ew, srcs, max_dist=C.NET_MAX_DIST).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    hop = network.multi_source_dist_hopset(
-        ew, srcs, max_dist=C.NET_MAX_DIST,
-        hop=C.WEDGE_BASE, k_log2=2).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    assert len(drv_w) == len(hop)
-    assert (drv_w["node_id"].values == hop["node_id"].values).all()
-    assert (drv_w["net_dist"].values == hop["net_dist"].values).all()
-
-
-def test_auto_routes_small_graph_without_iterating(spark):
-    """On a dimension-sized graph multi_source_dist_auto must return
-    the driver solve (flat two-stage plan, no iterative checkpoints)."""
-    srcs = world.park_entrances_df(spark).select(
-        F.col("entrance_node").alias("node_id"))
-    eb = network.bidirectional(world.road_edges_df(spark))
-    out = network.multi_source_dist_auto(
-        eb, srcs, max_dist=C.NET_MAX_DIST, uniform=True,
-        n_edges_hint=4 * C.ROAD_N * (C.ROAD_N - 1))
-    # a driver-solve result is a parallelized local collection: its
-    # plan contains no joins at all
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert out.count() > 0
-
-
-def test_component_driver_equals_distributed(spark):
-    """Union-find routing parity: labels identical to the iterative
-    min-label/pointer-jumping propagation on the road lattice and on
-    a random multi-component graph."""
-    eb = network.bidirectional(world.road_edges_df(spark))
-    drv = network._component_labels_driver(eb).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    # force the distributed path despite the small graph
-    dist = network.component_labels(
-        eb, n_edges_hint=network.COMPONENT_DRIVER_EDGE_LIMIT + 1
-    ).toPandas().sort_values("node_id").reset_index(drop=True)
-    assert len(drv) == len(dist)
-    assert (drv["node_id"].values == dist["node_id"].values).all()
-    assert (drv["label"].values == dist["label"].values).all()
-
+def _random_graph_bidir(spark, seed):
     import random
-    rng = random.Random(7)
+    rng = random.Random(seed)
     edges = [(rng.randrange(500), rng.randrange(500))
              for _ in range(300)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    both = df.union(df.select(F.col("dst").alias("src"),
+    return df.union(df.select(F.col("dst").alias("src"),
                               F.col("src").alias("dst")))
-    a = network._component_labels_driver(both).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-    b = network.component_labels(
-        both, n_edges_hint=network.COMPONENT_DRIVER_EDGE_LIMIT + 1
-    ).toPandas().sort_values("node_id").reset_index(drop=True)
-    assert (a["node_id"].values == b["node_id"].values).all()
-    assert (a["label"].values == b["label"].values).all()
 
 
-def test_isochrone_driver_equals_distributed(spark, sf_dir):
-    """Size-routed isochrones (round 4): the driver labeled-BFS must
-    reproduce the distributed layering exactly, and the auto router
-    must take the distributed path past the limit."""
-    from pyspark.sql import functions as F
-    from greenexp_r_spark import world
+def _labels(df):
+    return (df.toPandas().sort_values("node_id")
+            .reset_index(drop=True))
 
+
+def test_component_driver_equals_distributed(spark, monkeypatch):
+    """Both routes of component_labels give identical labels, on the
+    road lattice and on a random multi-component graph: the default
+    limit takes the driver solve, a limit below the edge count the
+    distributed min-label/pointer-jumping propagation."""
+    graphs = [network.bidirectional(world.road_edges_df(spark)),
+              _random_graph_bidir(spark, 7)]
+    drv = [_labels(network.component_labels(g)) for g in graphs]
+    calls = []
+    propagate = network._component_labels_distributed
+    monkeypatch.setattr(network, "_component_labels_distributed",
+                        lambda e: calls.append(1) or propagate(e))
+    monkeypatch.setattr(network, "DRIVER_EDGE_LIMIT", 10)
+    for g, want in zip(graphs, drv):
+        got = _labels(network.component_labels(g))
+        assert len(got) == len(want) > 0
+        assert (got["node_id"].values == want["node_id"].values).all()
+        assert (got["label"].values == want["label"].values).all()
+    assert len(calls) == len(graphs)
+
+
+def test_component_labels_decides_and_fetches_in_one_job(spark):
+    """The driver route's size decision and its edge fetch are the
+    same bounded collect: building the lattice's labels runs exactly
+    one Spark job.  The lattice is handed over as an in-memory frame
+    so that its own generator plan (two broadcast jobs) stays out of
+    the count."""
+    eb = spark.createDataFrame(
+        network.bidirectional(world.road_edges_df(spark)).toPandas())
+    sc = spark.sparkContext
+    group = "component-labels-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        network.component_labels(eb)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs == 1
+
+
+def test_road_graph_over_limit_raises(spark, sf_dir, monkeypatch):
+    """Road graphs have one route: past DRIVER_EDGE_LIMIT the network
+    operators refuse the graph, naming the limit."""
+    pts = world.points_df(spark, sf_dir)
+    edges = world.road_edges_df(spark)
+    monkeypatch.setattr(network, "DRIVER_EDGE_LIMIT", 10)
+    with pytest.raises(ValueError, match="DRIVER_EDGE_LIMIT = 10 "):
+        network.network_access(pts, edges, world.park_entrances_df(spark))
+    with pytest.raises(ValueError, match="DRIVER_EDGE_LIMIT = 10 "):
+        network.isochrone_summary(pts, edges)
+    with pytest.raises(ValueError, match="DRIVER_EDGE_LIMIT = 10 "):
+        network.network_access_prefilter(
+            pts, edges, world.parks_df(spark),
+            world.park_entrances_df(spark))
+
+
+def _py_isochrones(edges, seeds, n_layers, hop):
+    """Per-source pure-Python BFS oracle: {(point_id, node): dist}."""
+    from collections import defaultdict
+    adj = defaultdict(set)
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    out = {}
+    for pid, seed in seeds:
+        seen, frontier = {seed}, [seed]
+        out[(pid, seed)] = 0.0
+        for layer in range(1, n_layers + 1):
+            nxt = {m for n in frontier for m in adj[n]} - seen
+            seen |= nxt
+            frontier = nxt
+            out.update({(pid, m): layer * hop for m in nxt})
+    return out
+
+
+def test_isochrone_nodes_match_python_bfs(spark, sf_dir):
+    """The driver labeled-BFS isochrones equal a per-source pure-Python
+    BFS over the same lattice and snapped seeds."""
     pts = world.points_df(spark, sf_dir).where(
         F.col("point_id") % 50 == 0)
     edges = world.road_edges_df(spark)
-    a = network.isochrone_nodes_driver(pts, edges).toPandas() \
-        .sort_values(["point_id", "node_id"]).reset_index(drop=True)
-    b = network.isochrone_nodes(pts, edges).toPandas() \
-        .sort_values(["point_id", "node_id"]).reset_index(drop=True)
-    assert a.equals(b)
-    c = network.isochrone_nodes_auto(
-        pts, edges,
-        n_edges_hint=network.DRIVER_GRAPH_EDGE_LIMIT + 1).toPandas() \
-        .sort_values(["point_id", "node_id"]).reset_index(drop=True)
-    assert c.equals(a)
+    got = network.isochrone_nodes(pts, edges).toPandas()
+    seeds = pts.select(
+        "point_id",
+        (network.snap_node_expr("y") * C.ROAD_N
+         + network.snap_node_expr("x")).alias("node_id")).collect()
+    want = _py_isochrones(
+        [(r[0], r[1]) for r in edges.select("src", "dst").collect()],
+        [(r[0], r[1]) for r in seeds],
+        int(C.BUFFER_M // C.NET_HOP), C.NET_HOP)
+    assert len(got) == len(want) > len(seeds)
+    assert dict(zip(zip(got.point_id, got.node_id), got.net_dist)) == want
 
 
 @pytest.mark.parametrize("seed", [3, 99])
@@ -286,32 +279,6 @@ def test_buckets_tiny_min_edge_exact_and_bounded(seed):
     assert got == want                      # bit-identical, not approx
     # 50k one-pass buckets would take seconds; the clamp caps ~2048
     assert elapsed < 5.0
-
-
-def test_probe_guard_failing_open_never_changes_routing(spark,
-                                                        monkeypatch):
-    """VERDICT r04 ask #8: _warn_if_expensive_probe reads private
-    py4j surface; if that drifts (simulated here by making
-    storageLevel raise), the guard must swallow the failure and the
-    size-routed result must be identical."""
-    eb = network.bidirectional(world.road_edges_df(spark))
-    srcs = eb.select(F.col("src").alias("node_id")).distinct().limit(3)
-    want = network.multi_source_dist_auto(eb, srcs).toPandas() \
-        .sort_values("node_id").reset_index(drop=True)
-
-    from pyspark.sql import DataFrame as _DF
-
-    def boom(self):
-        raise RuntimeError("simulated py4j drift")
-
-    monkeypatch.setattr(_DF, "storageLevel", property(boom))
-    import warnings as _w
-    with _w.catch_warnings():
-        _w.simplefilter("error")        # no warning may escape either
-        got = network.multi_source_dist_auto(eb, srcs).toPandas() \
-            .sort_values("node_id").reset_index(drop=True)
-    assert (got["node_id"].values == want["node_id"].values).all()
-    assert (got["net_dist"].values == want["net_dist"].values).all()
 
 
 def test_prefilter_variant_distinguishes_from_full_od(spark):

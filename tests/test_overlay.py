@@ -12,6 +12,27 @@ from greenexp_r_spark.operators import availability, overlay
 from .conftest import SF_TEST
 
 
+def _holed_parks_wkb_df(spark):
+    """The holed/multipolygon park fixture
+    (registry_geo3.holed_park_rings) as a WKB layer: one row per park,
+    geometry = MULTIPOLYGON whose members may carry interior rings.
+    Returns (park_id, bxmin, bymin, bxmax, bymax, geom_wkb)."""
+    from greenexp_r_spark import registry_geo3 as G3
+    from greenexp_r_spark.kernels import concave as CK
+
+    rows = []
+    for g in range(G3.N_HOLED):
+        members = [CK.make_valid_polygon(m)
+                   for m in G3.holed_park_rings(g)]
+        outer = np.vstack([m[0] for m in members])
+        rows.append((g, float(outer[:, 0].min()), float(outer[:, 1].min()),
+                     float(outer[:, 0].max()), float(outer[:, 1].max()),
+                     bytearray(G.wkb_multipolygon_rings(members))))
+    return spark.createDataFrame(
+        rows, "park_id long, bxmin double, bymin double, "
+              "bxmax double, bymax double, geom_wkb binary")
+
+
 def test_polygon_pct_close_to_grid_pct(spark):
     pts = world.points_df(spark, SF_TEST).where("point_id % 10 = 0")
     parks = world.parks_df(spark)
@@ -103,7 +124,7 @@ def test_greenspace_rings_pct_matches_grid(spark):
                                  in enumerate(obs)],
                                 "point_id long, x double, y double")
     got = overlay.greenspace_rings_pct(
-        pts, overlay.holed_parks_wkb_df(spark)).toPandas() \
+        pts, _holed_parks_wkb_df(spark)).toPandas() \
         .set_index("point_id")["greenspace_rings_pct"]
 
     R = 300.0

@@ -77,19 +77,3 @@ def test_sampling_rates_and_determinism(spark, sf_dir):
     again = docs.select("doc_id", *sampling.sample_cols()).toPandas()
     assert (out.sort_values("doc_id").sampled.values
             == again.sort_values("doc_id").sampled.values).all()
-
-
-def test_stratified_sample_matches_duckdb(spark, sf_dir):
-    from greenexp_r_spark.operators import sampling as S
-    from .oracle_harness import compare
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    got = S.stratified_sample(docs, "lang", 7).select(
-        "doc_id", "lang", "source", "strat_rank")
-    compare(got, S.stratified_sql("lang", 7), sf_dir)
-    # exact-k: every stratum yields min(k, stratum size) rows
-    import pyspark.sql.functions as F
-    per = {r["lang"]: r["n"] for r in
-           got.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    sizes = {r["lang"]: r["n"] for r in docs.groupBy("lang")
-             .agg(F.count("*").alias("n")).collect()}
-    assert per == {g: min(7, n) for g, n in sizes.items()}

@@ -3,6 +3,8 @@ no PII, so detection is proven on crafted rows and absence on the
 real documents table)."""
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from greenexp_r_spark.operators import pii
 
 FIX = [
@@ -56,7 +58,6 @@ def test_gate_columns_match_scrub_pii(spark, sf_dir):
     # the q_text_profile gate shape (chained Column expressions over
     # the augmented text) must equal running scrub_pii on the same
     # augmented column via withColumn stages
-    from pyspark.sql import functions as F
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     gate = docs.select("doc_id", *pii.gate_columns()).collect()
     ref = {r["doc_id"]: r.asDict() for r in pii.scrub_pii(
@@ -74,13 +75,23 @@ def test_gate_columns_match_scrub_pii(spark, sf_dir):
     assert hit > 0  # augmentation makes the gate counts nontrivial
 
 
+def _corpus_stats(df):
+    return pii.scrub_pii(df).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_email").alias("n_email"),
+        F.sum("n_ip").alias("n_ip"),
+        F.sum("n_phone").alias("n_phone"),
+        F.sum(F.col("has_pii").cast("long")).alias("n_docs_with_pii")
+    ).collect()[0]
+
+
 def test_corpus_stats_and_clean_documents(spark, sf_dir):
     df = spark.createDataFrame(FIX, "doc_id long, text string")
-    s = pii.pii_stats(df).collect()[0]
+    s = _corpus_stats(df)
     assert s["n_docs"] == 6
     assert s["n_email"] == 2 and s["n_ip"] == 3
     assert s["n_docs_with_pii"] == 5
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    c = pii.pii_stats(docs).collect()[0]
+    c = _corpus_stats(docs)
     assert c["n_email"] == 0 and c["n_ip"] == 0 and c["n_phone"] == 0

@@ -73,9 +73,3 @@ def test_url_dedup_is_one_keyed_shuffle(spark, sf_dir):
                  .cast("string"), F.lit(".org/p")).alias("url"),
         F.col("doc_id").cast("timestamp").alias("warc_ts"))
     assert _n_exchanges(U.url_dedup_keep_first(pg)) == 1
-
-
-def test_time_bucket_rollup_is_one_aggregate_shuffle(spark, sf_dir):
-    from greenexp_r_spark.operators import downsample as DS
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    assert _n_exchanges(DS.time_bucket_rollup(ev)) == 1

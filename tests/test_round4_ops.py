@@ -1,9 +1,7 @@
 """Round-4 additions: vectorized driver solvers (VERDICT r03 'What's
-wrong #2'), the size-probe contract guard ('What's wrong #3'), and the
-un-hardcoded n_edges_hint routing (ADVICE r03 #1)."""
+wrong #2') and char n-gram Jaccard dedup."""
 
 import heapq
-import warnings
 
 import numpy as np
 import pytest
@@ -113,49 +111,6 @@ def test_min_label_components_empty():
     e = np.array([], dtype=np.int64)
     nodes, labels = network.min_label_components(e, e)
     assert len(nodes) == 0 and len(labels) == 0
-
-
-# ------------------------------------------------- size-probe guard
-
-def test_probe_guard_warns_on_unpersisted_file_join(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = docs.select((F.col("doc_id")).alias("src"),
-                    (F.col("doc_id") + 1).alias("dst"))
-    joined = a.alias("l").join(a.alias("r"), F.col("l.dst") == F.col("r.src")) \
-              .select(F.col("l.src").alias("src"), F.col("r.dst").alias("dst"))
-    with pytest.warns(RuntimeWarning, match="size probe"):
-        network.component_labels(joined.withColumn("length_m", F.lit(1.0))
-                                 .select("src", "dst"))
-
-
-def test_probe_guard_silent_after_checkpoint(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = docs.select((F.col("doc_id")).alias("src"),
-                    (F.col("doc_id") + 1).alias("dst"))
-    joined = a.alias("l").join(a.alias("r"), F.col("l.dst") == F.col("r.src")) \
-              .select(F.col("l.src").alias("src"),
-                      F.col("r.dst").alias("dst")) \
-              .localCheckpoint(eager=True)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        network.component_labels(joined)
-
-
-# ------------------------------------------- hint is caller-supplied
-
-def test_network_access_probes_when_no_hint(spark, sf_dir):
-    """ADVICE r03 #1: with no hint the router must PROBE the actual
-    edge table, not assume the fixture lattice size.  A >limit edge
-    count forced through a tiny DRIVER_GRAPH_EDGE_LIMIT monkeypatch
-    would need a huge fixture; instead assert the hint default is None
-    and that the probe path routes a small graph to the driver solve
-    while n_edges_hint=LIMIT+1 forces the distributed path — same
-    values either way."""
-    import inspect
-    for fn in (network.network_access, network.network_access_weighted,
-               network.network_access_extended):
-        assert inspect.signature(fn).parameters["n_edges_hint"].default \
-            is None
 
 
 # ----------------------------------------- char n-gram Jaccard dedup

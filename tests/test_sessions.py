@@ -1,17 +1,13 @@
-"""Batch sessionization (operators/sessions.py): DuckDB bit-parity,
-gap semantics on a hand fixture, and batch ≡ streaming on closed
-sessions."""
+"""Batch sessionization (operators/sessions.py): DuckDB bit-parity
+and gap semantics on a hand fixture (the pandas gap-split oracle is in
+tests/test_streaming_salting.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
-
 from greenexp_r_spark.operators import sessions as SS
-from greenexp_r_spark.streaming import events_stream
 
-from .conftest import SF_TEST
 from .oracle_harness import compare
 
 
@@ -41,21 +37,3 @@ def test_gap_semantics_fixture(spark):
     assert out[(9, 1)][0] == 1
     assert len(out) == 3
 
-
-def test_batch_equals_streaming_closed_sessions(spark):
-    """The availableNow streaming sessionizer emits CLOSED sessions
-    (each user's trailing session stays in state); the batch operator
-    minus every user's LAST session must equal it exactly."""
-    got = events_stream.run_sessionize_available_now(
-        spark, f"{SF_TEST}/events.parquet")
-    stream = {(r["user_id"], r["session_start"], r["session_end"],
-               r["n_events"]) for r in got.collect()}
-    ev = spark.read.parquet(f"{SF_TEST}/events.parquet")
-    batch = SS.sessionize_batch(ev)
-    last = batch.groupBy("user_id").agg(
-        F.max("sess_seq").alias("last_seq"))
-    closed = (batch.join(last, "user_id")
-              .where(F.col("sess_seq") < F.col("last_seq")))
-    want = {(r["user_id"], r["session_start"], r["session_end"],
-             r["n_events"]) for r in closed.collect()}
-    assert stream == want

@@ -20,7 +20,8 @@ def test_canonical_matches_duckdb_on_augmented(spark):
         "url", F.expr("CAST(regexp_extract(url, 'page/([0-9]+)', 1) "
                       "AS BIGINT)").alias("doc_id"))
     got = pg.select(
-        "url", U.augment_url("url", "doc_id").alias("messy"),
+        "url", F.expr(U.augment_url_sql(U.SPARK, "url", "doc_id"))
+        .alias("messy"),
         F.expr(U.canonical_url_sql(
             U.SPARK, U.augment_url_sql(U.SPARK, "url", "doc_id")))
         .alias("canon"))

@@ -1,8 +1,10 @@
-"""WKB LINESTRING/MULTILINESTRING/MULTIPOINT codec (VERDICT r04 ask
+"""WKB LINESTRING/MULTILINESTRING codec (VERDICT r04 ask
 #4) + the WKB-shipped road layer feeding street sampling with hashes
 unchanged vs the node-table path."""
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pytest
@@ -31,20 +33,12 @@ def test_multilinestring_roundtrip():
         assert (a == g).all()
 
 
-def test_multipoint_roundtrip():
-    pts = np.array([[1.5, 2.5], [3.0, -4.0], [0.0, 0.0]])
-    got = G.parse_wkb_multipoint(G.wkb_multipoint(pts))
-    assert (got == pts).all()
-
-
 def test_wrong_type_raises():
-    b = G.wkb_point(1.0, 2.0)
+    b = struct.pack("<BIdd", 1, 1, 1.0, 2.0)     # a WKB POINT
     with pytest.raises(ValueError, match="linestring"):
         G.parse_wkb_linestring(b)
     with pytest.raises(ValueError, match="linestring"):
         G.parse_wkb_lines(b)
-    with pytest.raises(ValueError, match="multipoint"):
-        G.parse_wkb_multipoint(b)
 
 
 def test_street_cover_wkb_equals_nodes(spark):
