@@ -15,6 +15,19 @@ identical across the engines.  Divergent primitives wrapped here:
                          DuckDB generate_series table function
     split / array ops    split vs string_split, size vs len, element_at
     bit shifts           shiftright() vs >>
+
+The per-row formulas of the pages → exposure path are fragments of
+this kind too, one text each, which the engine runs through
+``selectExpr`` / ``F.expr`` and the oracles embed:
+
+    url from doc id            sources/pages.url_sql
+    capture time               sources/pages.capture_ts_sql
+    html wrap / extraction     sources/pages.html_sql / text_sql
+    page-id parse              sources/pages.page_id_sql
+    geocode LCG (x, y)         world.xy_sql (via Dialect.lcg)
+    NDVI mean / sd             operators/availability.ndvi_sql
+    nearest park columns       operators/accessibility.nearest_sql
+    CDC status                 operators/pages_ops.cdc_status_sql
 """
 
 from __future__ import annotations
@@ -27,6 +40,13 @@ class Dialect:
     @staticmethod
     def floori(x: str) -> str:
         return f"CAST(FLOOR({x}) AS BIGINT)"
+
+    @staticmethod
+    def lcg(x: str, mul: int, add: int, mod: int) -> str:
+        """(x * mul + add) % mod for a non-negative BIGINT x, with x
+        reduced mod ``mod`` first so the product stays inside BIGINT
+        (same value as the unreduced form)."""
+        return f"(((({x}) % {mod}) * {mul} + {add}) % {mod})"
 
     # -- divergent primitives ---------------------------------------------
     def range_select(self, lo, hi, alias: str) -> str:

@@ -7,7 +7,7 @@ definition.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column
 
 
 def buffer_distance_from_speed(speed_kmh: float, time_min: float) -> float:
@@ -22,10 +22,3 @@ def dist2_long(x: Column, y: Column, cx: Column, cy: Column) -> Column:
     dx = (x - cx).cast("long")
     dy = (y - cy).cast("long")
     return dx * dx + dy * dy
-
-
-def bbox(df: DataFrame, x: str = "x", y: str = "y") -> dict:
-    """st_bbox analog (P12): one aggregate row."""
-    r = df.agg(F.min(x).alias("xmin"), F.min(y).alias("ymin"),
-               F.max(x).alias("xmax"), F.max(y).alias("ymax")).collect()[0]
-    return {"xmin": r.xmin, "ymin": r.ymin, "xmax": r.xmax, "ymax": r.ymax}

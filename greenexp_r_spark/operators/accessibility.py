@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import constants as C
 from ..plans.bounded import fetch_at_most
@@ -51,15 +51,15 @@ def euclidean_access(points: DataFrame, parks: DataFrame,
             .join(F.broadcast(p))
             .select("point_id", _dist2()))
     out = cand.groupBy("point_id").agg(F.min("d2").alias("min_d2"))
-    return out.select("point_id", *nearest_columns(buffer_m))
+    return out.selectExpr("point_id", *nearest_sql(buffer_m))
 
 
-def nearest_columns(buffer_m: float = C.BUFFER_M) -> list[Column]:
+def nearest_sql(buffer_m: float = C.BUFFER_M) -> list[str]:
     """(closest_greenspace, greenspace_in_buffer) from the BIGINT
-    ``min_d2``; strict < : accessibility.R:313."""
-    d2 = F.col("min_d2")
-    return [F.sqrt(d2.cast("double")).alias("closest_greenspace"),
-            (d2 < int(buffer_m) ** 2).alias("greenspace_in_buffer")]
+    ``min_d2``; strict < : accessibility.R:313.  One text for the
+    engine's ``selectExpr`` and the oracles."""
+    return ["sqrt(CAST(min_d2 AS DOUBLE)) AS closest_greenspace",
+            f"min_d2 < {int(buffer_m) ** 2} AS greenspace_in_buffer"]
 
 
 BROADCAST_PARK_LIMIT = 200_000   # dim rows beyond which the broadcast

@@ -36,7 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import constants as C
@@ -91,25 +91,24 @@ def ndvi_zonal(points: DataFrame, buffer_m: float = C.BUFFER_M,
     # a point id may arrive in several rows: its moments add up
     agg = pts.mapInPandas(run, schema).groupBy("point_id").agg(
         *(F.sum(c).alias(c) for c in ("s1", "s2", "n_cells")))
-    return agg.select("point_id", *ndvi_columns(add_sd))
+    return agg.selectExpr("point_id", *ndvi_sql(add_sd))
 
 
-def ndvi_columns(add_sd: bool = True) -> list[Column]:
+def ndvi_sql(add_sd: bool = True) -> list[str]:
     """mean_ndvi[, sd_ndvi], n_cells from the integer moments (s1, s2,
-    n_cells) of the NDVI field over a disc."""
-    n = F.col("n_cells")
-    mean = F.col("s1").cast("double") / (F.lit(800.0) * n)
-    out = [mean.alias("mean_ndvi")]
+    n_cells) of the NDVI field over a disc: the one text of the
+    availability values, for the engine's ``selectExpr`` and the
+    oracles alike.  The sample sd (R `sd`, n-1) is one fixed
+    expression tree over the exact moments, so both engines emit the
+    same bits; the scale is cast because Spark reads 800.0 as a
+    DECIMAL."""
+    s1, s2, n = (f"CAST({c} AS DOUBLE)" for c in ("s1", "s2", "n_cells"))
+    scale = "CAST(800.0 AS DOUBLE)"
+    out = [f"{s1} / ({scale} * n_cells) AS mean_ndvi"]
     if add_sd:
-        # sample sd (R `sd`, n-1) from exact integer moments, in a fixed
-        # expression tree so both engines emit the same bits.
-        s1d = F.col("s1").cast("double")
-        s2d = F.col("s2").cast("double")
-        nd = n.cast("double")
-        var = (s2d - s1d * s1d / nd) / (nd - F.lit(1.0))
-        out.append((F.sqrt(var) / F.lit(800.0)).alias("sd_ndvi"))
-    out.append(n)
-    return out
+        var = f"({s2} - {s1} * {s1} / {n}) / ({n} - 1.0)"
+        out.append(f"sqrt({var}) / {scale} AS sd_ndvi")
+    return out + ["n_cells"]
 
 
 def landcover_fractions(points: DataFrame,

@@ -6,7 +6,7 @@ classifier over hashed bag-of-words features, trained to separate a
 The model here is a Bernoulli Naive-Bayes evidence scorer trained in
 ONE distributed counting pass (no gradient loop), which keeps the
 whole train→apply pipeline exactly replayable in ANSI SQL — the
-Lloyd-kmeans-in-SQL precedent (similarity.ivf_train_kmeans):
+Lloyd-kmeans-in-SQL precedent (similarity.ivf_topk_trained):
 
   * features: distinct hashed-word buckets per document
     (word_hash % NB_BUCKETS — the hashing trick; the feature space is
@@ -20,8 +20,7 @@ Lloyd-kmeans-in-SQL precedent (similarity.ivf_train_kmeans):
   * weight: the Laplace-smoothed per-bucket posterior in integer
     micro-units, (SCALE*(n_pos+1)) div (n_all+2) — integer division
     so Spark and the DuckDB oracle agree bit-for-bit (float log-odds
-    would differ in the last ulp across engines; a log-odds variant
-    for real use is `nb_log_odds`, parity-tested in pytest);
+    would differ in the last ulp across engines);
   * apply: explode distinct buckets → BROADCAST join the ≤NB_BUCKETS
     weight table → one doc_id-keyed sum.  The corpus never shuffles
     against the model.
@@ -231,12 +230,3 @@ def nb_weight_array(counts):
         (C.NB_SCALE * (counts["n_pos"].to_numpy() + 1))
         // (counts["n_all"].to_numpy() + 2))
     return W
-
-
-def nb_log_odds(weights: DataFrame) -> DataFrame:
-    """Float log-odds view of the trained model (the form a real
-    scorer sums) — NOT gate-compared (ln differs in the last ulp
-    across engines); parity with a numpy reference is pytest-held."""
-    p = F.col("weight_pm").cast("double") / float(C.NB_SCALE)
-    return weights.select(
-        "bucket", F.log(p / (1.0 - p)).alias("log_odds"))

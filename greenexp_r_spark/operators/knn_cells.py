@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import constants as C
 from ..functions.geo import dist2_long
-from .accessibility import nearest_columns
+from .accessibility import nearest_sql
 
 
 def cell_park_index(parks: DataFrame, search_radius: float,
@@ -86,7 +86,7 @@ def euclidean_access_cells(points: DataFrame, parks: DataFrame,
                F.col("cy")).alias("d2"))
            .groupBy("point_id").agg(F.min("d2").alias("min_d2")))
     out = near.unionByName(far)
-    return out.select("point_id", *nearest_columns(buffer_m))
+    return out.selectExpr("point_id", *nearest_sql(buffer_m))
 
 
 def knn_parks_cells(points: DataFrame, parks: DataFrame, k: int = 5,

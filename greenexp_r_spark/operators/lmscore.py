@@ -17,8 +17,7 @@ This engine's exact-replayable analog of the KenLM 5-gram model:
     integer micro-units:
         cond_pm = (SCALE * (cnt_bigram + 1)) div (cnt_prefix + SMOOTH)
     so the whole train→apply pipeline is bit-exact in SQL (float
-    log-probs would drift in the last ulp across engines; the real
-    log-space view is `lm_log_score`, pytest-held);
+    log-probs would drift in the last ulp across engines);
   * the document score is the MEAN conditional over its bigram
     positions (integer division), and the bucket thresholds are fixed
     constants — the honest analog of CCNet's precomputed percentile
@@ -113,19 +112,3 @@ def lm_buckets(docs: DataFrame) -> DataFrame:
     """Train-and-apply on one corpus — the gate shape."""
     bgt, pret = lm_train(docs)
     return lm_score(docs, bgt, pret)
-
-
-def lm_log_score(docs: DataFrame, bgt: DataFrame,
-                 pret: DataFrame) -> DataFrame:
-    """Float mean log-probability per document (the form a real LM
-    reports; perplexity = exp(-mean)) — NOT gate-compared, pytest-held
-    against a numpy reference."""
-    rows = _bigram_rows(_labeled_words(docs))
-    j = (rows
-         .join(F.broadcast(bgt), "bg", "left")
-         .join(F.broadcast(pret), "pre", "left"))
-    p = ((F.coalesce("cnt_bg", F.lit(0)) + 1).cast("double")
-         / (F.coalesce("cnt_pre", F.lit(0)) + C.LM_SMOOTH).cast("double"))
-    return (j.select("doc_id", F.log(p).alias("lp"))
-            .groupBy("doc_id")
-            .agg(F.avg("lp").alias("mean_log_prob")))

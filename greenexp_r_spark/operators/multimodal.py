@@ -36,10 +36,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (BinaryType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..dialect import SPARK
 from ..sources import pages as P
 
 META_SCHEMA = StructType([
@@ -57,10 +57,7 @@ META_SCHEMA = StructType([
 def pages_with_payload(docs: DataFrame) -> DataFrame:
     """Attach the html binary payload (input_hint pages shape):
     html = b'<html><body>' + text + b'</body></html>'."""
-    html = F.encode(
-        F.concat(F.lit(P.HTML_PRE), F.col("text"),
-                 F.lit(P.HTML_POST)), "UTF-8")
-    return docs.select("doc_id", html.alias("html"))
+    return docs.selectExpr("doc_id", f"{P.html_sql(SPARK)} AS html")
 
 
 # --------------------------------------------------------- PNG codec

@@ -13,11 +13,15 @@ availability (ndvi_calc.R:332-344), accessibility
 instead of a house point id (web pages as address points).
 
 Scale notes (100 TB posture):
-  * ``latest_snapshot`` is ONE hash aggregate on url (max-struct →
-    map-side partials; shuffle volume = O(distinct urls), the payload
-    rides inside the struct only for the winning rows of each partial).
+  * the latest capture per url (``latest_extracted_snapshot``, and
+    ``snapshot_delta`` with its CDC columns) is ONE hash aggregate on
+    url (max-struct → map-side partials; shuffle volume = O(distinct
+    urls), the payload rides inside the struct only for the winning
+    rows of each partial).
   * ``extract_text`` / ``geocode`` are narrow JVM projections
-    (decode/substring/regexp) — zero Python, zero shuffle.
+    (decode/substring/regexp) — zero Python, zero shuffle — rendered
+    from the shared-SQL fragments of sources/pages.py and world.py
+    that the DuckDB oracles embed.
   * exposure is per row: one Arrow pass (kernels/exposure.py) scores
     every family with the small park dim as closure state — no join,
     no checkpoint; a dim above BROADCAST_PARK_LIMIT keeps the
@@ -40,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .. import constants as C
+from ..dialect import SPARK
 from ..functions.geo import dist2_long
 from ..kernels import exposure as XK
 from ..sources import pages as P
@@ -47,59 +52,29 @@ from . import accessibility, availability
 from .knn_cells import euclidean_access_cells
 
 
-def latest_snapshot(pages: DataFrame) -> DataFrame:
-    """Latest capture per url (Common-Crawl snapshot semantics):
-    keep the row with MAX(warc_ts).  Capture times are distinct per
-    url by construction (sources/pages.py); the struct comparator
-    would break ties on the payload deterministically anyway."""
-    s = F.max(F.struct("warc_ts", "html", "text", "lang")).alias("s")
-    g = pages.groupBy("url").agg(s)
-    return g.select("url", "s.warc_ts", "s.html", "s.text", "s.lang")
-
-
-def snapshot_delta(pages: DataFrame, cutoff_us: int) -> DataFrame:
-    """CDC between two crawl snapshots of the append-only pages table:
-    the as-of-`cutoff_us` snapshot vs the current one, per url —
-    the dump-over-dump diff a CC-style pipeline runs to process only
-    what changed (the Iceberg incremental-read analog, computed from
-    the raw capture log).
-
-    ONE url-keyed aggregate computes BOTH snapshots via a conditional
-    struct max (no self-join, no second scan): old = max struct among
-    captures ≤ cutoff, new = max struct overall.  Status:
+def cdc_status_sql(old_ts: str, new_ts: str, old_text: str,
+                   new_text: str) -> str:
+    """CDC status of a url between two crawl snapshots:
       'added'           first captured after the cutoff
       'unchanged'       no capture after the cutoff
       'recrawled_same'  re-captured after the cutoff, same payload
-      'changed'         re-captured after the cutoff, new payload
-    100 TB posture: the only shuffle is the url-keyed agg the snapshot
-    query already pays; at production scale the old side would be the
-    previous run's materialized snapshot and this degenerates to the
-    same single aggregate over the new increment.
-    """
-    cut = F.timestamp_micros(F.lit(cutoff_us))
-    old_s = F.max(F.when(F.col("warc_ts") <= cut,
-                         F.struct("warc_ts", "text"))).alias("o")
-    new_s = F.max(F.struct("warc_ts", "text")).alias("n")
-    g = pages.groupBy("url").agg(old_s, new_s)
-    status = (F.when(F.col("o").isNull(), "added")
-              .when(F.col("n.warc_ts") == F.col("o.warc_ts"),
-                    "unchanged")
-              .when(F.col("n.text") == F.col("o.text"),
-                    "recrawled_same")
-              .otherwise("changed"))
-    return g.select(
-        "url", F.col("o.warc_ts").alias("old_ts"),
-        F.col("n.warc_ts").alias("new_ts"), status.alias("status"))
+      'changed'         re-captured after the cutoff, new payload"""
+    return (f"CASE WHEN {old_ts} IS NULL THEN 'added' "
+            f"WHEN {new_ts} = {old_ts} THEN 'unchanged' "
+            f"WHEN {new_text} = {old_text} THEN 'recrawled_same' "
+            f"ELSE 'changed' END")
 
 
 def snapshot_delta_sql(d, cutoff_us: int) -> str:
-    """Shared-SQL rendering of :func:`snapshot_delta` (assumes a
+    """Oracle plan of :func:`snapshot_delta`'s CDC columns (assumes a
     preceding `pages` CTE) — conditional MAX + two equi-joins back to
     the capture log (engines without struct-max ordering).  The final
     GROUP BY + MAX(text) collapses equal-timestamp captures to ONE row
     with the lexicographically-largest payload, matching the engine's
     struct-max tie-break exactly (struct comparison falls through
     warc_ts to text)."""
+    status = cdc_status_sql("a.old_ts", "a.new_ts", "MAX(po.text)",
+                            "MAX(pn.text)")
     return f"""
 agg AS (
   SELECT url,
@@ -109,11 +84,7 @@ agg AS (
   FROM pages GROUP BY url
 ),
 delta AS (
-  SELECT a.url, a.old_ts, a.new_ts,
-         CASE WHEN a.old_ts IS NULL THEN 'added'
-              WHEN a.new_ts = a.old_ts THEN 'unchanged'
-              WHEN MAX(pn.text) = MAX(po.text) THEN 'recrawled_same'
-              ELSE 'changed' END AS status
+  SELECT a.url, a.old_ts, a.new_ts, {status} AS status
   FROM agg a
   LEFT JOIN pages po ON po.url = a.url AND po.warc_ts = a.old_ts
   JOIN pages pn ON pn.url = a.url AND pn.warc_ts = a.new_ts
@@ -126,43 +97,61 @@ def extract_text(pages: DataFrame) -> DataFrame:
     invariant): decode UTF-8, strip the fixed wrapper.  Emits the
     extracted value as ``text`` — downstream consumers (and the gate's
     value hash) see extraction output, never the stored text column."""
-    ext = F.expr(
-        f"substring(decode(html, 'UTF-8'), {len(P.HTML_PRE) + 1}, "
-        f"length(decode(html, 'UTF-8')) - {P.WRAP_LEN})")
-    return pages.select(
-        "url", "warc_ts", ext.alias("text"), "lang",
-        F.length(ext).cast("long").alias("n_chars"))
+    ext = P.text_sql(SPARK)
+    return pages.selectExpr("url", "warc_ts", f"{ext} AS text", "lang",
+                            f"CAST(length({ext}) AS BIGINT) AS n_chars")
 
 
 def geocode(pages: DataFrame) -> DataFrame:
     """Geocode urls to world coordinates: parse the page id out of the
     url (regexp, JVM) and apply the deterministic LCG the world uses
-    for address points (world.x_expr/y_expr) — the pages analog of
-    the reference's geocoded address input (Ams_Houses).  A url
-    without a page id geocodes to null."""
-    pid = F.regexp_extract(F.col("url"), P.URL_ID_RE, 1).try_cast("long")
-    x = ((pid * C.X_MUL + C.X_ADD) % C.P31) % C.WORLD_SIZE
-    y = ((pid * C.Y_MUL + C.Y_ADD) % C.P31) % C.WORLD_SIZE
-    return pages.withColumn("point_id", pid) \
-                .withColumn("x", x.cast("double")) \
-                .withColumn("y", y.cast("double"))
+    for address points (world.xy_sql) — the pages analog of the
+    reference's geocoded address input (Ams_Houses).  A url without a
+    page id geocodes to null."""
+    from .. import world
+    x, y = world.xy_sql("point_id")
+    return (pages.withColumns({"point_id": F.expr(P.page_id_sql())})
+            .withColumns({"x": F.expr(x), "y": F.expr(y)}))
 
 
 def latest_extracted_snapshot(pages: DataFrame) -> DataFrame:
     """Extraction-first snapshot: extract text per capture (narrow,
     drops the html payload BEFORE the shuffle — the url aggregate then
     carries text once instead of html+text, ~halving shuffle bytes at
-    corpus scale), then the same max-struct argmax per url.  Row-
-    identical to extract_text(latest_snapshot(...)): extraction is a
-    deterministic per-row map and capture times are tie-free."""
+    corpus scale), then the max-struct argmax per url.  Row-identical
+    to extracting the latest capture: extraction is a deterministic
+    per-row map and capture times are tie-free."""
     return _latest_capture(extract_text(pages))
 
 
-def _latest_capture(ext: DataFrame) -> DataFrame:
-    """The max-struct argmax per url over extracted captures."""
-    s = F.max(F.struct("warc_ts", "text", "lang", "n_chars")).alias("s")
-    return (ext.groupBy("url").agg(s)
-            .select("url", "s.warc_ts", "s.text", "s.lang", "s.n_chars"))
+def _latest_capture(ext: DataFrame,
+                    cutoff_us: int | None = None) -> DataFrame:
+    """The max-struct argmax per url over extracted captures: ONE hash
+    aggregate on url (map-side partials; the payload rides inside the
+    struct only for the winning rows of each partial).  With
+    ``cutoff_us`` a conditional struct max over the captures up to the
+    cutoff rides in the same aggregate and adds the CDC columns
+    (old_ts, status)."""
+    aggs = [F.expr("max(struct(warc_ts, text, lang, n_chars)) AS s")]
+    cols = ["url", "s.warc_ts", "s.text", "s.lang", "s.n_chars"]
+    if cutoff_us is not None:
+        cut = SPARK.ts_micros(cutoff_us)
+        aggs.append(F.expr(f"max(CASE WHEN warc_ts <= {cut} "
+                           "THEN struct(warc_ts, text) END) AS o"))
+        cols += ["o.warc_ts AS old_ts", cdc_status_sql(
+            "o.warc_ts", "s.warc_ts", "o.text", "s.text") + " AS status"]
+    return ext.groupBy("url").agg(*aggs).selectExpr(*cols)
+
+
+def snapshot_delta(pages: DataFrame, cutoff_us: int) -> DataFrame:
+    """The extraction-first snapshot of the pages table PLUS the CDC
+    columns between the as-of-``cutoff_us`` snapshot and the current
+    one (old_ts, status) — the dump-over-dump diff a CC-style pipeline
+    runs to process only what changed, from ONE url-keyed aggregate
+    (no self-join, no second scan).  At production scale the old side
+    would be the previous run's materialized snapshot and this
+    degenerates to the same single aggregate over the new increment."""
+    return _latest_capture(extract_text(pages), cutoff_us)
 
 
 def pages_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,28 +160,11 @@ def pages_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pages_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate shape (q_pages_snapshot): the extraction-first snapshot
-    PLUS the as-of-cutoff CDC columns (old_ts, status) from the SAME
-    single url-keyed aggregate — snapshot_delta's conditional struct
-    max rides alongside the snapshot struct, so the gate proves both
-    the byte-identical-text invariant and the dump-over-dump delta
+    """Gate shape (q_pages_snapshot): :func:`snapshot_delta` of the
+    pages table of ``sf_dir`` at the day-23 cutoff, so the gate proves
+    both the byte-identical-text invariant and the dump-over-dump delta
     semantics for one shuffle."""
-    ext = extract_text(P.pages_df(spark, sf_dir))
-    cut = F.timestamp_micros(F.lit(C.SNAP_CUTOFF_US))
-    new_s = F.max(F.struct("warc_ts", "text", "lang", "n_chars")) \
-        .alias("s")
-    old_s = F.max(F.when(F.col("warc_ts") <= cut,
-                         F.struct("warc_ts", "text"))).alias("o")
-    g = ext.groupBy("url").agg(new_s, old_s)
-    status = (F.when(F.col("o").isNull(), "added")
-              .when(F.col("s.warc_ts") == F.col("o.warc_ts"),
-                    "unchanged")
-              .when(F.col("s.text") == F.col("o.text"),
-                    "recrawled_same")
-              .otherwise("changed"))
-    return g.select("url", "s.warc_ts", "s.text", "s.lang",
-                    "s.n_chars", F.col("o.warc_ts").alias("old_ts"),
-                    status.alias("status"))
+    return snapshot_delta(P.pages_df(spark, sf_dir), C.SNAP_CUTOFF_US)
 
 
 def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
@@ -243,10 +215,10 @@ def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
         scored = scored.join(euclidean_access_cells(geo, parks), "point_id")
         access = ["closest_greenspace", "greenspace_in_buffer"]
     else:
-        access = accessibility.nearest_columns()
+        access = accessibility.nearest_sql()
     vgvi = ["vgvi"] if sample_mod is not None else []
-    return scored.select("url", "warc_ts", "x", "y", "n_chars",
-                         *availability.ndvi_columns(), *access, *vgvi)
+    return scored.selectExpr("url", "warc_ts", "x", "y", "n_chars",
+                             *availability.ndvi_sql(), *access, *vgvi)
 
 
 def exposure_over_pages(spark: SparkSession, sf_dir: str,

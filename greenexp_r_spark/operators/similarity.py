@@ -308,31 +308,6 @@ def _train_kmeans_arrays(embeddings: DataFrame, iters: int = 2,
     return qv, lids, Cm, sqrt_cn, rows
 
 
-def ivf_train_kmeans(embeddings: DataFrame, iters: int = 2) -> DataFrame:
-    """Lloyd-refined IVF centroids (the gate's ivf_topk uses
-    deterministic sampled centroids — fine for correctness, but real
-    IVF recall needs trained lists).
-
-    r6 shape: assignment + per-list partial sums fused into one GEMM
-    scan per iteration (`_partial_sums_gemm`); the mean/round
-    requantize runs in Spark SQL over the tiny partials so the
-    arithmetic contract (integer sums exact in double, F.round
-    HALF_UP) is unchanged.  Deterministic end-to-end: init = every
-    IVF_CENTROID_MOD-th vector, ties break on list_id.
-    Returns (list_id, cq, cn) ready for `ivf_topk_trained`."""
-    spark = embeddings.sparkSession
-    _, _, _, _, rows = _train_kmeans_arrays(embeddings, iters)
-    from pyspark.sql.types import (ArrayType, LongType, StructField,
-                                   StructType)
-    schema = StructType([
-        StructField("list_id", LongType()),
-        StructField("cq", ArrayType(LongType())),
-        StructField("cn", LongType()),
-    ])
-    return spark.createDataFrame(
-        [(r.list_id, list(r.cq), r.cn) for r in rows], schema)
-
-
 def ivf_topk_trained(embeddings: DataFrame, k: int = C.ANN_K,
                      n_queries: int = C.ANN_QUERIES,
                      nprobe: int = C.IVF_NPROBE,

@@ -1,4 +1,4 @@
-"""URL canonicalization + canonical-URL crawl dedup — the FineWeb /
+"""URL canonicalization — the FineWeb /
 CCNet-style normalization every web-corpus pipeline runs before any
 URL-keyed dedup: the same page arrives from the crawler as
 ``HTTP://Site.Example.org:80/a/?utm_source=x#frag`` and
@@ -29,19 +29,13 @@ rewrite would need lookahead or replacement backrefs, both
 cross-engine traps); the plan shape is pinned in
 tests/test_plan_shapes.py.
 
-``url_dedup_keep_first`` is the crawl dedup on top: keep the
-earliest capture per canonical URL (warc_ts, then raw url as the
-deterministic tiebreak) — one keyed window, one shuffle.
-
 Reference analog: none in GreenExp_R (LLM-pipeline brief); semantics
 follow the common-crawl canonicalization conventions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-
-from ..dialect import Dialect, SPARK
+from ..dialect import Dialect
 
 TRACKING_PREFIXES = ("utm_", "gclid=", "fbclid=", "ref=")
 
@@ -82,11 +76,6 @@ def escape(lit: str) -> str:
     return "'" + lit.replace("'", "''") + "'"
 
 
-def canonical_url(u: str = "url") -> Column:
-    """The Spark Column — the SAME text the oracle renders."""
-    return F.expr(canonical_url_sql(SPARK, u))
-
-
 def augment_url_sql(d: Dialect, u: str = "url",
                     doc: str = "doc_id") -> str:
     """Deterministic messy-crawl variants for tests/gates: the corpus
@@ -111,16 +100,3 @@ def augment_url_sql(d: Dialect, u: str = "url",
     return (f"CASE ({doc}) % 4 WHEN 1 THEN {up} "
             f"WHEN 2 THEN {ported} WHEN 3 THEN {tracked} "
             f"ELSE {u} END")
-
-
-def url_dedup_keep_first(pages: DataFrame, url: str = "url",
-                         ts: str = "warc_ts") -> DataFrame:
-    """One row per canonical URL: the earliest capture (``ts`` asc,
-    raw ``url`` asc as the deterministic tiebreak), with the
-    canonical key attached as ``canon_url``.  One keyed window —
-    the same single-shuffle shape as the crawl snapshot operator."""
-    out = pages.withColumn("canon_url", canonical_url(url))
-    w = (Window.partitionBy("canon_url")
-         .orderBy(F.col(ts).asc(), F.col(url).asc()))
-    return (out.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))

@@ -32,6 +32,7 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
 
 from .. import constants as C
 from ..sources.tiles import NA_SENTINEL, TILE_CELLS
+from . import availability
 
 PARTIAL_SCHEMA = StructType([
     StructField("point_id", LongType()),
@@ -138,21 +139,7 @@ def ndvi_zonal_tiles(points: DataFrame, tiles: DataFrame,
     agg = partials.groupBy("point_id").agg(
         F.sum("s1").alias("s1"), F.sum("s2").alias("s2"),
         F.sum("n").alias("n_cells"))
-    return _ndvi_stats(agg, add_sd)
-
-
-def _ndvi_stats(agg: DataFrame, add_sd: bool) -> DataFrame:
-    n = F.col("n_cells")
-    mean = F.col("s1").cast("double") / (F.lit(800.0) * n)
-    out = [F.col("point_id"), mean.alias("mean_ndvi")]
-    if add_sd:
-        s1d = F.col("s1").cast("double")
-        s2d = F.col("s2").cast("double")
-        nd = n.cast("double")
-        var = (s2d - s1d * s1d / nd) / (nd - F.lit(1.0))
-        out.append((F.sqrt(var) / F.lit(800.0)).alias("sd_ndvi"))
-    out.append(n)
-    return agg.select(*out)
+    return agg.selectExpr("point_id", *availability.ndvi_sql(add_sd))
 
 
 def ndvi_bands_zonal_tiles(points: DataFrame, s2_tiles: DataFrame,

@@ -46,23 +46,36 @@ def _buffer_cells_sql(d: Dialect, res: int, buffer_m: int,
             f" <= {float(buffer_m) ** 2}")
 
 
+def _ndvi_ctes(d: Dialect, key: str = "point_id",
+               src: str = "SELECT point_id, x, y FROM points") -> str:
+    """cells + agg CTEs: the integer NDVI moments (s1, s2, n_cells)
+    per ``key`` from the oracle's own cell explode."""
+    cells = _buffer_cells_sql(d, C.NDVI_RES, C.BUFFER_M, src=src)
+    return f"""cells AS ({cells}),
+agg AS (
+  SELECT {key}, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
+  FROM (SELECT {key}, {world.ndvi_int_expr('ci', 'cj')} AS v FROM cells) _v
+  GROUP BY {key}
+)"""
+
+
+def _near_cte(key: str = "point_id", src: str = "points") -> str:
+    """near CTE: the BIGINT min_d2 per ``key`` from the oracle's own
+    cross join with the qualifying parks."""
+    return f"""near AS (
+  SELECT {key}, MIN(CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
+       + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT)) AS min_d2
+  FROM {src} CROSS JOIN (SELECT * FROM parks
+                         WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
+  GROUP BY {key}
+)"""
+
+
 def _oracle_ndvi(d: Dialect) -> str:
-    v = world.ndvi_int_expr("ci", "cj")
     return f"""
 {world.world_ctes(d, 'points')},
-cells AS ({_buffer_cells_sql(d, C.NDVI_RES, C.BUFFER_M)}),
-agg AS (
-  SELECT point_id, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
-  FROM (SELECT point_id, {v} AS v FROM cells) _v
-  GROUP BY point_id
-)
-SELECT point_id,
-       CAST(s1 AS DOUBLE) / (800.0 * n_cells) AS mean_ndvi,
-       sqrt((CAST(s2 AS DOUBLE)
-             - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n_cells AS DOUBLE))
-            / (CAST(n_cells AS DOUBLE) - 1.0)) / 800.0 AS sd_ndvi,
-       n_cells
-FROM agg
+{_ndvi_ctes(d)}
+SELECT point_id, {", ".join(availability.ndvi_sql())} FROM agg
 """
 
 
@@ -131,18 +144,8 @@ FROM n LEFT JOIN g ON n.point_id = g.point_id
 def _oracle_euclid(d: Dialect) -> str:
     return f"""
 {world.world_ctes(d, 'points', 'parks')},
-cand AS (
-  SELECT point_id,
-         CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-         + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT) AS d2
-  FROM points CROSS JOIN (SELECT * FROM parks
-                          WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
-),
-agg AS (SELECT point_id, MIN(d2) AS min_d2 FROM cand GROUP BY point_id)
-SELECT point_id,
-       sqrt(CAST(min_d2 AS DOUBLE)) AS closest_greenspace,
-       min_d2 < {C.BUFFER_M ** 2} AS greenspace_in_buffer
-FROM agg
+{_near_cte()}
+SELECT point_id, {", ".join(accessibility.nearest_sql())} FROM near
 """
 
 
@@ -327,44 +330,16 @@ COMPONENT_SEED = 100 * C.ROAD_N + 100
 def _oracle_combined(d: Dialect) -> str:
     """Flagship: per-point availability + accessibility in one row —
     the end-to-end exposure join of BASELINE.json's metric."""
-    ndvi = _oracle_ndvi(d)
-    euclid_cand = f"""
-  SELECT point_id,
-         CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-         + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT) AS d2
-  FROM points CROSS JOIN (SELECT * FROM parks
-                          WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
-"""
+    mean_sd = availability.ndvi_sql()[:-1]      # without n_cells
     return f"""
 {world.world_ctes(d, 'points', 'parks')},
-cells AS ({_buffer_cells_sql(d, C.NDVI_RES, C.BUFFER_M)}),
-agg AS (
-  SELECT point_id, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
-  FROM (SELECT point_id, {world.ndvi_int_expr('ci', 'cj')} AS v
-        FROM cells) _v
-  GROUP BY point_id
-),
-avail AS (
-  SELECT point_id,
-         CAST(s1 AS DOUBLE) / (800.0 * n_cells) AS mean_ndvi,
-         sqrt((CAST(s2 AS DOUBLE)
-               - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-                 / CAST(n_cells AS DOUBLE))
-              / (CAST(n_cells AS DOUBLE) - 1.0)) / 800.0 AS sd_ndvi,
-         n_cells
-  FROM agg
-),
-acc AS (
-  SELECT point_id, MIN(d2) AS min_d2 FROM ({euclid_cand}) _c
-  GROUP BY point_id
-)
-SELECT p.point_id, p.url, p.x, p.y,
-       a.mean_ndvi, a.sd_ndvi,
-       sqrt(CAST(c.min_d2 AS DOUBLE)) AS closest_greenspace,
-       c.min_d2 < {C.BUFFER_M ** 2} AS greenspace_in_buffer
+{_ndvi_ctes(d)},
+{_near_cte()}
+SELECT p.point_id, p.url, p.x, p.y, {", ".join(mean_sd)},
+       {", ".join(accessibility.nearest_sql())}
 FROM points p
-JOIN avail a ON p.point_id = a.point_id
-JOIN acc c ON p.point_id = c.point_id
+JOIN agg a ON p.point_id = a.point_id
+JOIN near n ON p.point_id = n.point_id
 """
 
 

@@ -15,8 +15,8 @@ from __future__ import annotations
 from . import constants as C
 from . import world
 from .dialect import DUCK, Dialect
-from .operators import pages_ops
-from .registry import QSpec, _buffer_cells_sql
+from .operators import accessibility, availability, pages_ops
+from .registry import QSpec, _ndvi_ctes, _near_cte
 from .sources import pages as P
 
 
@@ -25,23 +25,19 @@ def _snap_ctes(d: Dialect) -> str:
     return f"""pages AS ({P.pages_sql(d)}),
 latest AS (SELECT url, MAX(warc_ts) AS warc_ts FROM pages GROUP BY url),
 snap AS (
-  SELECT p.url, p.warc_ts,
-         substring({d.b2s('p.html')}, {len(P.HTML_PRE) + 1},
-                   length({d.b2s('p.html')}) - {P.WRAP_LEN}) AS text,
-         p.lang
+  SELECT p.url, p.warc_ts, {P.text_sql(d, 'p.html')} AS text, p.lang
   FROM pages p JOIN latest l
     ON p.url = l.url AND p.warc_ts = l.warc_ts
 )"""
 
 
 def _geo_cte(d: Dialect) -> str:
-    pid = (f"CAST(regexp_extract(url, '{P.URL_ID_RE}', 1) AS BIGINT)")
+    x, y = world.xy_sql("point_id")
     return f"""geo AS (
-  SELECT url, warc_ts, point_id,
-         {world.x_expr('point_id')} AS x,
-         {world.y_expr('point_id')} AS y,
+  SELECT url, warc_ts, point_id, {x} AS x, {y} AS y,
          CAST(length(text) AS BIGINT) AS n_chars
-  FROM (SELECT url, warc_ts, text, {pid} AS point_id FROM snap) _p
+  FROM (SELECT url, warc_ts, text, {P.page_id_sql()} AS point_id
+        FROM snap) _p
 )"""
 
 
@@ -63,35 +59,15 @@ FROM snap s JOIN delta dl ON s.url = dl.url
 
 def _oracle_exposure_pages(d: Dialect) -> str:
     """Keyed per url, also where urls share a page id."""
-    v = world.ndvi_int_expr("ci", "cj")
-    cells = _buffer_cells_sql(d, C.NDVI_RES, C.BUFFER_M,
-                              src="SELECT url, x, y FROM geo")
     return f"""
 WITH {_snap_ctes(d)},
 {_geo_cte(d)},
 parks AS ({world.parks_sql(d)}),
-cells AS ({cells}),
-agg AS (
-  SELECT url, SUM(v) AS s1, SUM(v * v) AS s2, COUNT(*) AS n_cells
-  FROM (SELECT url, {v} AS v FROM cells) _v
-  GROUP BY url
-),
-near AS (
-  SELECT url, MIN(CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-       + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT)) AS min_d2
-  FROM geo CROSS JOIN (SELECT * FROM parks
-                       WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
-  GROUP BY url
-)
+{_ndvi_ctes(d, "url", "SELECT url, x, y FROM geo")},
+{_near_cte("url", "geo")}
 SELECT g.url, g.warc_ts, g.x, g.y, g.n_chars,
-       CAST(a.s1 AS DOUBLE) / (800.0 * a.n_cells) AS mean_ndvi,
-       sqrt((CAST(a.s2 AS DOUBLE)
-             - CAST(a.s1 AS DOUBLE) * CAST(a.s1 AS DOUBLE)
-               / CAST(a.n_cells AS DOUBLE))
-            / (CAST(a.n_cells AS DOUBLE) - 1.0)) / 800.0 AS sd_ndvi,
-       a.n_cells,
-       sqrt(CAST(n.min_d2 AS DOUBLE)) AS closest_greenspace,
-       n.min_d2 < {C.BUFFER_M ** 2} AS greenspace_in_buffer
+       {", ".join(availability.ndvi_sql())},
+       {", ".join(accessibility.nearest_sql())}
 FROM geo g JOIN agg a ON g.url = a.url
            JOIN near n ON g.url = n.url
 """

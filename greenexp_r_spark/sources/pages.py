@@ -13,9 +13,11 @@ fixture).  ``html`` is the UTF-8 payload ``<html><body>{text}
 ``text`` (the input_hint per-row invariant, checked hash-exactly by
 q_pages_snapshot).
 
-Two renderings, same formulas (the world.py pattern):
-  * ``pages_sql(d)``  — shared-SQL CTE body per Dialect (oracle side);
-  * ``pages_df``      — native Spark DataFrame builder (engine side).
+One text per formula: the url, the capture time, the html wrap and the
+text extraction are shared-SQL fragments (``url_sql``, ``capture_ts_sql``,
+``html_sql``, ``text_sql``, ``page_id_sql``).  ``pages_sql(d)`` embeds
+them in the oracle's UNION ALL of three capture scans; ``pages_df``
+renders the same fragments with ``selectExpr`` over one exploded scan.
 
 All capture-time arithmetic is BIGINT; timestamps are constructed from
 epoch microseconds (timestamp_micros / make_timestamp), which the two
@@ -32,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import constants as C
-from ..dialect import Dialect
+from ..dialect import SPARK, Dialect
 
 # capture-schedule constants (deterministic, integer-exact)
 EPOCH_2024_S = C.EPOCH_2024_S         # 2024-01-01T00:00:00Z (single
@@ -55,33 +57,54 @@ WRAP_LEN = len(HTML_PRE) + len(HTML_POST)
 URL_ID_RE = "page/([0-9]+)$"           # url → doc id (geocoding key)
 
 
-def _s0(doc: str) -> str:
-    return f"(({doc} * {TS0_MUL} + {TS0_ADD}) % {YEAR_S})"
+# the three capture generations: (offset seconds, keep predicate) over
+# the documents row; generation 0 captures every document
+_CAPTURES = (
+    ("0", "true"),
+    (f"1 + {Dialect.lcg('doc_id', RE1_MUL, RE1_ADD, RE1_SPAN)}",
+     f"doc_id % {RE1_MOD} = 0"),
+    (f"{RE2_BASE} + {Dialect.lcg('doc_id', RE2_MUL, RE2_ADD, RE2_SPAN)}",
+     f"doc_id % {RE2_MOD} = 0"),
+)
 
 
-def _url_sql(doc: str = "doc_id") -> str:
+def url_sql(doc: str = "doc_id") -> str:
     return (f"'https://site' || CAST({doc} % 1000 AS STRING)"
             f" || '.example/page/' || CAST({doc} AS STRING)")
+
+
+def capture_ts_sql(d: Dialect, off: str, doc: str = "doc_id") -> str:
+    """Capture time of document ``doc`` at ``off`` seconds after its
+    first capture, built from BIGINT epoch microseconds."""
+    s0 = Dialect.lcg(doc, TS0_MUL, TS0_ADD, YEAR_S)
+    return d.ts_micros(f"({EPOCH_2024_S} + {s0} + {off}) * 1000000")
+
+
+def html_sql(d: Dialect, text: str = "text") -> str:
+    """The UTF-8 html payload wrapping ``text``."""
+    return d.s2b(f"'{HTML_PRE}' || {text} || '{HTML_POST}'")
+
+
+def text_sql(d: Dialect, html: str = "html") -> str:
+    """The text extracted back out of an html payload: decode UTF-8,
+    strip the fixed wrapper by position (never by search)."""
+    s = d.b2s(html)
+    return f"substring({s}, {len(HTML_PRE) + 1}, length({s}) - {WRAP_LEN})"
+
+
+def page_id_sql(url: str = "url") -> str:
+    """The page id of a url (the geocoding key); null for a url
+    without one."""
+    return f"TRY_CAST(regexp_extract({url}, '{URL_ID_RE}', 1) AS BIGINT)"
 
 
 def pages_sql(d: Dialect) -> str:
     """Shared-SQL body of the pages table (UNION ALL of the three
     capture generations over ``documents``)."""
-    wrap = f"'{HTML_PRE}' || text || '{HTML_POST}'"
-
-    def cap(off_s: str, pred: str = "") -> str:
-        us = f"({EPOCH_2024_S} + {_s0('doc_id')} + {off_s}) * 1000000"
-        return (f"SELECT {_url_sql()} AS url, "
-                f"{d.ts_micros(us)} AS warc_ts, "
-                f"{d.s2b(wrap)} AS html, text, lang "
-                f"FROM documents{pred}")
-
-    c0 = cap("0")
-    c1 = cap(f"1 + (doc_id * {RE1_MUL} + {RE1_ADD}) % {RE1_SPAN}",
-             f" WHERE doc_id % {RE1_MOD} = 0")
-    c2 = cap(f"{RE2_BASE} + (doc_id * {RE2_MUL} + {RE2_ADD}) % {RE2_SPAN}",
-             f" WHERE doc_id % {RE2_MOD} = 0")
-    return f"{c0}\nUNION ALL\n{c1}\nUNION ALL\n{c2}"
+    return "\nUNION ALL\n".join(
+        f"SELECT {url_sql()} AS url, {capture_ts_sql(d, off)} AS warc_ts, "
+        f"{html_sql(d)} AS html, text, lang FROM documents WHERE {keep}"
+        for off, keep in _CAPTURES)
 
 
 def _pages_from_docs(doc: DataFrame) -> DataFrame:
@@ -90,28 +113,14 @@ def _pages_from_docs(doc: DataFrame) -> DataFrame:
     re-reads — at 100 TB the documents table is scanned ONCE (the
     shared-SQL rendering keeps UNION ALL for oracle clarity; results
     are row-identical, tests/test_pages.py multiplicity check)."""
-    did = F.col("doc_id")
-    url = F.concat(F.lit("https://site"), (did % 1000).cast("string"),
-                   F.lit(".example/page/"), did.cast("string"))
-    html = F.encode(F.concat(F.lit(HTML_PRE), F.col("text"),
-                             F.lit(HTML_POST)), "UTF-8")
-    s0 = (did * TS0_MUL + TS0_ADD) % YEAR_S
-    caps = F.array(
-        F.struct(F.lit(0).cast("long").alias("off"),
-                 F.lit(True).alias("keep")),
-        F.struct((F.lit(1) + (did * RE1_MUL + RE1_ADD) % RE1_SPAN)
-                 .cast("long").alias("off"),
-                 (did % RE1_MOD == 0).alias("keep")),
-        F.struct((F.lit(RE2_BASE) + (did * RE2_MUL + RE2_ADD) % RE2_SPAN)
-                 .cast("long").alias("off"),
-                 (did % RE2_MOD == 0).alias("keep")))
-    e = (doc.select(did.alias("doc_id"), "text", "lang",
-                    F.explode(caps).alias("c"))
-         .where(F.col("c.keep")))
-    us = (F.lit(EPOCH_2024_S) + s0 + F.col("c.off")) * 1_000_000
-    return e.select(url.alias("url"),
-                    F.timestamp_micros(us.cast("long")).alias("warc_ts"),
-                    html.alias("html"), "text", "lang")
+    caps = ", ".join(f"named_struct('off', CAST({off} AS BIGINT), "
+                     f"'keep', {keep})" for off, keep in _CAPTURES)
+    return (doc.selectExpr("doc_id", "text", "lang",
+                           f"explode(array({caps})) AS c")
+            .where("c.keep")
+            .selectExpr(f"{url_sql()} AS url",
+                        f"{capture_ts_sql(SPARK, 'c.off')} AS warc_ts",
+                        f"{html_sql(SPARK)} AS html", "text", "lang"))
 
 
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,9 +18,9 @@ module reproduces that contract end-to-end:
     tasks, does a ranged read + per-member gunzip + WARC/HTTP parse
     per record, and reconstructs the EXACT input_hint schema
     ``(url, warc_ts, html, text, lang)``; ``text`` is re-extracted
-    from the html bytes JVM-side with the same expression as
-    ``pages_ops.extract_text`` so the byte-identical-text invariant
-    holds by construction.
+    from the html bytes JVM-side with the extraction fragment
+    ``pages.text_sql`` that ``pages_ops.extract_text`` and the oracles
+    use, so the byte-identical-text invariant holds by construction.
   * ``read_warc_record(buf)`` — parse one raw member slice (the
     ranged-GET unit) independently of any file handle.
 
@@ -58,7 +58,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (BinaryType, LongType, StringType,
                                StructField, StructType)
 
-from .pages import HTML_PRE, WRAP_LEN
+from ..dialect import SPARK
+from .pages import text_sql
 
 _CRLF = b"\r\n"
 
@@ -203,8 +204,8 @@ def read_warc(spark: SparkSession, out_dir: str,
     Work is driven by the index (CDX analog), not file listings: each
     task performs ranged reads of its index rows, gunzips members
     independently, and parses WARC + HTTP.  ``text`` is re-extracted
-    from html with the same JVM expression as
-    ``pages_ops.extract_text`` — never trusted from a side channel —
+    from html with the extraction fragment of ``pages_ops.extract_text``
+    (``pages.text_sql``) — never trusted from a side channel —
     so the input_hint byte-identity invariant is structural."""
     if index is None:
         index = spark.read.parquet(os.path.join(out_dir, "index"))
@@ -235,9 +236,5 @@ def read_warc(spark: SparkSession, out_dir: str,
 
     raw = index.select("path", "offset", "length") \
                .mapInPandas(fetch, _RAW_SCHEMA)
-    ext = F.expr(
-        f"substring(decode(html, 'UTF-8'), {len(HTML_PRE) + 1}, "
-        f"length(decode(html, 'UTF-8')) - {WRAP_LEN})")
-    return raw.select(
-        "url", F.timestamp_micros("warc_us").alias("warc_ts"),
-        "html", ext.alias("text"), "lang")
+    return raw.selectExpr("url", "timestamp_micros(warc_us) AS warc_ts",
+                          "html", f"{text_sql(SPARK)} AS text", "lang")

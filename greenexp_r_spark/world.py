@@ -1,11 +1,10 @@
-"""The deterministic synthetic geo-world, in two renderings.
+"""The deterministic synthetic geo-world as shared-SQL fragments.
 
-1. **Shared-SQL CTE fragments** (``points_sql``, ``parks_sql``, ...) —
-   rendered per Dialect; these are the *specification* and the DuckDB
-   oracle source.  All integer arithmetic → bit-identical across engines.
-2. **Spark DataFrame builders** (``points_df``, ``parks_df``, ...) —
-   the engine-side tables used by operators; same formulas expressed
-   with pyspark.sql.functions so Catalyst sees them natively.
+Every table and per-row formula (``points_sql``, ``parks_sql``,
+``xy_sql``, ...) has one text, rendered per Dialect: the DuckDB oracle
+embeds it, and the engine-side builders (``points_df``, ``parks_df``,
+...) run the same text through ``spark.sql`` or ``selectExpr``.  All
+integer arithmetic → bit-identical across engines.
 
 Reference analogs: Ams_Houses / Ams_Parks / network_file
 (GreenExp_R R/data.R:1-77); virtual rasters replace the STAC/terra
@@ -14,24 +13,32 @@ acquisition path (ndvi_calc.R:277-318, land_cover.R:273-347).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from . import constants as C
-from .dialect import Dialect
+from .dialect import SPARK, Dialect
+from .sources import pages as P
 
 # =========================================================================
 # Shared-SQL fragments
 # =========================================================================
 
 
-def x_expr(doc: str = "doc_id") -> str:
-    return (f"CAST((({doc} * {C.X_MUL} + {C.X_ADD}) % {C.P31})"
-            f" % {C.WORLD_SIZE} AS DOUBLE)")
+def xy_sql(pid: str = "doc_id") -> tuple[str, str]:
+    """(x, y) of the non-negative id ``pid``: one LCG step per axis,
+    exact for every BIGINT id (Dialect.lcg reduces before it
+    multiplies)."""
+    def axis(mul: int, add: int) -> str:
+        h = Dialect.lcg(pid, mul, add, C.P31)
+        return f"CAST({h} % {C.WORLD_SIZE} AS DOUBLE)"
+    return axis(C.X_MUL, C.X_ADD), axis(C.Y_MUL, C.Y_ADD)
 
 
-def y_expr(doc: str = "doc_id") -> str:
-    return (f"CAST((({doc} * {C.Y_MUL} + {C.Y_ADD}) % {C.P31})"
-            f" % {C.WORLD_SIZE} AS DOUBLE)")
+def _points_cols() -> list[str]:
+    """point_id, url, x, y of the documents row."""
+    x, y = xy_sql()
+    return ["doc_id AS point_id", f"{P.url_sql()} AS url",
+            f"{x} AS x", f"{y} AS y"]
 
 
 def points_sql(d: Dialect) -> str:
@@ -40,15 +47,8 @@ def points_sql(d: Dialect) -> str:
     This is the input_hint pages table: urls geocode deterministically
     to (x, y); ``text`` rides along byte-identical (invariant P20).
     """
-    return f"""
-    SELECT doc_id AS point_id,
-           'https://site' || CAST(doc_id % 1000 AS STRING)
-               || '.example/page/' || CAST(doc_id AS STRING) AS url,
-           {x_expr()} AS x,
-           {y_expr()} AS y,
-           text, lang
-    FROM documents
-    """
+    return (f"SELECT {', '.join(_points_cols())}, text, lang"
+            " FROM documents")
 
 
 def parks_sql(d: Dialect) -> str:
@@ -149,19 +149,22 @@ def road_edges_sql(d: Dialect) -> str:
     n, last = C.ROAD_N, C.ROAD_N - 1
     del_pred = (f"((eid * {C.ROAD_DEL_MUL} + {C.ROAD_DEL_ADD}) % {C.P31})"
                 f" % {C.ROAD_DEL_MOD} <> 0")
+    # horizontal edge eid = j * last + i; vertical edge
+    # eid = n * last + i * last + j (k = eid - n * last)
+    k = f"(eid - {n * last})"
     return f"""
     SELECT eid AS edge_id, src, dst,
            CAST({C.ROAD_SPACING} AS DOUBLE) AS length_m
     FROM (
-        SELECT (j * {last} + i) AS eid,
-               (j * {n} + i) AS src, (j * {n} + i + 1) AS dst
-        FROM {d.range_select(0, last - 1, "i")}
-        CROSS JOIN {d.range_select(0, last, "j")}
+        SELECT eid,
+               {d.idiv('eid', last)} * {n} + eid % {last} AS src,
+               {d.idiv('eid', last)} * {n} + eid % {last} + 1 AS dst
+        FROM {d.range_select(0, n * last - 1, "eid")}
         UNION ALL
-        SELECT ({n * last} + i * {last} + j) AS eid,
-               (j * {n} + i) AS src, ((j + 1) * {n} + i) AS dst
-        FROM {d.range_select(0, last, "i")}
-        CROSS JOIN {d.range_select(0, last - 1, "j")}
+        SELECT eid,
+               {k} % {last} * {n} + {d.idiv(k, last)} AS src,
+               ({k} % {last} + 1) * {n} + {d.idiv(k, last)} AS dst
+        FROM {d.range_select(n * last, 2 * n * last - 1, "eid")}
     ) e
     WHERE {del_pred}
     """
@@ -231,27 +234,15 @@ def world_ctes(d: Dialect, *names: str) -> str:
 
 
 # =========================================================================
-# Spark DataFrame builders (engine side)
+# Engine-side builders: the fragments above, run by Spark
 # =========================================================================
-
-
-def _hash_col(key, mul: int, add: int, mod: int):
-    return ((key * F.lit(mul) + F.lit(add)) % F.lit(C.P31)) % F.lit(mod)
 
 
 def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages/address-point table from the driver's documents parquet."""
     from .plans.widen import widen
     doc = widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    did = F.col("doc_id")
-    return doc.select(
-        did.alias("point_id"),
-        F.concat(F.lit("https://site"), (did % 1000).cast("string"),
-                 F.lit(".example/page/"), did.cast("string")).alias("url"),
-        _hash_col(did, C.X_MUL, C.X_ADD, C.WORLD_SIZE).cast("double").alias("x"),
-        _hash_col(did, C.Y_MUL, C.Y_ADD, C.WORLD_SIZE).cast("double").alias("y"),
-        F.col("text"), F.col("lang"),
-    )
+    return doc.selectExpr(*_points_cols(), "text", "lang")
 
 
 def synthetic_points(spark: SparkSession, n: int,
@@ -261,42 +252,31 @@ def synthetic_points(spark: SparkSession, n: int,
     without external data (BASELINE.md scaling protocol)."""
     rng = spark.range(0, n, 1, partitions) if partitions \
         else spark.range(n)
-    did = F.col("id")
-    return rng.select(
-        did.alias("point_id"),
-        _hash_col(did, C.X_MUL, C.X_ADD, C.WORLD_SIZE).cast("double").alias("x"),
-        _hash_col(did, C.Y_MUL, C.Y_ADD, C.WORLD_SIZE).cast("double").alias("y"),
-    )
+    x, y = xy_sql("id")
+    return rng.selectExpr("id AS point_id", f"{x} AS x", f"{y} AS y")
 
 
 def parks_df(spark: SparkSession) -> DataFrame:
-    return spark.sql(parks_sql(_spark_dialect()))
+    return spark.sql(parks_sql(SPARK))
 
 
 def trees_df(spark: SparkSession) -> DataFrame:
-    return spark.sql(trees_sql(_spark_dialect()))
+    return spark.sql(trees_sql(SPARK))
 
 
 def road_edges_df(spark: SparkSession) -> DataFrame:
-    return spark.sql(road_edges_sql(_spark_dialect()))
+    return spark.sql(road_edges_sql(SPARK))
 
 
 def park_entrances_df(spark: SparkSession) -> DataFrame:
-    d = _spark_dialect()
     return spark.sql(
-        world_ctes(d, "parks") + "\n" + park_entrances_sql(d))
+        world_ctes(SPARK, "parks") + "\n" + park_entrances_sql(SPARK))
 
 
 def road_edges_weighted_df(spark: SparkSession) -> DataFrame:
-    return spark.sql(road_edges_weighted_sql(_spark_dialect()))
+    return spark.sql(road_edges_weighted_sql(SPARK))
 
 
 def park_entrance_nodes_df(spark: SparkSession) -> DataFrame:
-    d = _spark_dialect()
-    return spark.sql(
-        world_ctes(d, "parks") + "\n" + park_entrance_nodes_sql(d))
-
-
-def _spark_dialect():
-    from .dialect import SPARK
-    return SPARK
+    return spark.sql(world_ctes(SPARK, "parks") + "\n"
+                     + park_entrance_nodes_sql(SPARK))

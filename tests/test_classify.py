@@ -2,8 +2,6 @@
 and incremental cross-corpus dedup (dedup.incremental_pairs)."""
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -87,17 +85,6 @@ def test_apply_is_broadcast_join(spark):
     df = classify.classify(docs, classify.nb_train(docs))
     phys = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in phys or "BroadcastExchange" in phys
-
-
-def test_log_odds_matches_numpy(spark):
-    docs = spark.createDataFrame(list(FIX.items()), "doc_id long, text string")
-    w = classify.nb_train(docs)
-    got = {r.bucket: r.log_odds
-           for r in classify.nb_log_odds(w).collect()}
-    for r in w.collect():
-        p = r.weight_pm / C.NB_SCALE
-        assert math.isclose(got[r.bucket], math.log(p / (1 - p)),
-                            rel_tol=1e-12)
 
 
 # ---------------------------------------------------------------- dedup

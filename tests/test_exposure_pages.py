@@ -176,7 +176,7 @@ def test_flagship_build_py4j_round_trips(spark, monkeypatch):
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
     registry.flagship_exposure_pages(spark, SF_TEST)
     monkeypatch.undo()
-    assert len(sent) <= 700
+    assert len(sent) <= 250
 
 
 def test_bad_column_still_raises_analysis_exception(spark):

@@ -1,10 +1,6 @@
 """Hashed-bigram LM quality bucketing (operators/lmscore.py)."""
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
 from greenexp_r_spark import constants as C
 from greenexp_r_spark.operators import lmscore
 
@@ -101,23 +97,3 @@ def test_model_joins_are_broadcast(spark):
     for line in phys.splitlines():
         if "SortMergeJoin" in line:
             assert "doc_id#" in line, line
-
-
-def test_log_score_matches_math(spark):
-    docs = spark.createDataFrame(list(FIX.items()),
-                                 "doc_id long, text string")
-    bgt, pret = lmscore.lm_train(docs)
-    got = {r.doc_id: r.mean_log_prob
-           for r in lmscore.lm_log_score(docs, bgt, pret).collect()}
-    cnt_bg = {r.bg: r.cnt_bg for r in bgt.collect()}
-    cnt_pre = {r.pre: r.cnt_pre for r in pret.collect()}
-    for d, t in FIX.items():
-        ws = t.split(" ")
-        if len(ws) < 2:
-            assert d not in got
-            continue
-        lps = [math.log((cnt_bg.get(_bg(ws[i], ws[i + 1]), 0) + 1)
-                        / (cnt_pre.get(_wh(ws[i]) % C.LM_BUCKETS, 0)
-                           + C.LM_SMOOTH))
-               for i in range(len(ws) - 1)]
-        assert math.isclose(got[d], sum(lps) / len(lps), rel_tol=1e-12)

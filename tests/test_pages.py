@@ -71,24 +71,26 @@ def test_snapshot_idempotent_and_tie_free(spark):
     dup_ts = (pages.groupBy("url", "warc_ts").count()
               .where("count > 1").count())
     assert dup_ts == 0
-    snap1 = pages_ops.latest_snapshot(pages)
-    snap2 = pages_ops.latest_snapshot(snap1)
+    snap1 = pages_ops.latest_extracted_snapshot(pages)
+    snap2 = pages_ops._latest_capture(snap1)
     a = snap1.toPandas().sort_values("url").reset_index(drop=True)
     b = snap2.toPandas().sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
     # extraction order is immaterial: extract-first (the optimized
     # gate path) equals extract-after-dedup
-    fast = (pages_ops.latest_extracted_snapshot(pages)
+    from pyspark.sql import Window, functions as F
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
+    latest = (pages.withColumn("r", F.row_number().over(w))
+              .where("r = 1").drop("r"))
+    slow = (pages_ops.extract_text(latest)
             .toPandas().sort_values("url").reset_index(drop=True))
-    slow = (pages_ops.extract_text(snap1)
-            .toPandas().sort_values("url").reset_index(drop=True))
-    pd.testing.assert_frame_equal(fast[sorted(fast.columns)],
+    pd.testing.assert_frame_equal(a[sorted(a.columns)],
                                   slow[sorted(slow.columns)])
 
 
 def test_latest_snapshot_counts_and_max_ts(spark):
     pages = P.pages_df(spark, SF_TEST)
-    snap = pages_ops.latest_snapshot(pages)
+    snap = pages_ops.latest_extracted_snapshot(pages)
     n_docs = spark.read.parquet(f"{SF_TEST}/documents.parquet").count()
     assert snap.count() == n_docs          # one row per url
     # recrawled urls: snapshot ts must equal the per-url max
@@ -106,7 +108,7 @@ def test_geocode_matches_world_points(spark):
     points table assigns the same ids."""
     from greenexp_r_spark import world
     geo = pages_ops.geocode(
-        pages_ops.latest_snapshot(P.pages_df(spark, SF_TEST)))
+        pages_ops.latest_extracted_snapshot(P.pages_df(spark, SF_TEST)))
     pts = world.points_df(spark, SF_TEST)
     j = geo.select("point_id", "x", "y").join(
         pts.select("point_id", pts["x"].alias("wx"),
@@ -119,7 +121,7 @@ def test_cell_page_stats_vs_pandas_oracle(spark):
     from greenexp_r_spark import world
     got = pages_ops.cell_page_stats(spark, SF_TEST).toPandas()
     geo = pages_ops.geocode(
-        pages_ops.latest_snapshot(P.pages_df(spark, SF_TEST))
+        pages_ops.latest_extracted_snapshot(P.pages_df(spark, SF_TEST))
     ).select("url", "x", "y").toPandas()
     parks = world.parks_df(spark).select("cx", "cy", "radius").toPandas()
     x = geo["x"].values[:, None]

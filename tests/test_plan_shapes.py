@@ -49,27 +49,19 @@ def test_asof_join_is_one_keyed_shuffle(spark, sf_dir):
 
 
 def test_canonical_url_is_jvm_projection(spark, sf_dir):
-    """canonical_url is a pure JVM projection: zero exchanges and no
+    """The canonical url is a pure JVM projection: zero exchanges and no
     Python eval anywhere in the plan.  (It is NOT whole-stage-codegen:
     the tracking-param filter is a higher-order-function lambda, which
     Spark interprets — acceptable here because the arrays are
     per-url-tiny and the op is ingestion-side, not EXPOSURE-hot; a
     codegen regex rewrite would need lookahead/backrefs, both
     cross-engine parity traps.)"""
+    from greenexp_r_spark.dialect import SPARK
     from greenexp_r_spark.operators import urlnorm as U
     pg = _docs(spark, sf_dir).select(
         F.concat(F.lit("https://S"), F.col("doc_id").cast("string"),
                  F.lit(".org:443/p/?utm_a=1&id=2#f")).alias("url"))
-    out = pg.select(U.canonical_url("url").alias("c"))
+    out = pg.select(F.expr(U.canonical_url_sql(SPARK, "url")).alias("c"))
     plan = _plan(out)
     assert _n_exchanges(out) == 0
     assert "Python" not in plan and "BatchEvalPython" not in plan
-
-
-def test_url_dedup_is_one_keyed_shuffle(spark, sf_dir):
-    from greenexp_r_spark.operators import urlnorm as U
-    pg = _docs(spark, sf_dir).select(
-        F.concat(F.lit("https://s"), (F.col("doc_id") % 7)
-                 .cast("string"), F.lit(".org/p")).alias("url"),
-        F.col("doc_id").cast("timestamp").alias("warc_ts"))
-    assert _n_exchanges(U.url_dedup_keep_first(pg)) == 1

@@ -70,7 +70,8 @@ def test_ivf_kmeans_improves_assignment_cost(spark):
     init = (qv.where(F.col("vec_id") % C.IVF_CENTROID_MOD == 0)
             .select(F.col("vec_id").alias("list_id"),
                     F.col("q").alias("cq"), F.col("norm2").alias("cn")))
-    trained = similarity.ivf_train_kmeans(emb, iters=2)
+    rows = similarity._train_kmeans_arrays(emb, iters=2)[-1]
+    trained = similarity._cent_df_from_rows(spark, rows)
     assert mean_best_cos(trained) >= mean_best_cos(init) - 1e-6
 
 

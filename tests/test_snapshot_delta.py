@@ -27,8 +27,20 @@ def _delta_sql(cutoff_us: int) -> str:
             f"SELECT url, old_ts, new_ts, status FROM delta")
 
 
+def _pages(spark, rows):
+    """A pages table of (url, warc_ts, text) captures: html is the
+    wrapped text, as in every pages table."""
+    return spark.createDataFrame(
+        [(u, ts, bytearray((P.HTML_PRE + tx + P.HTML_POST).encode()), tx,
+          "en") for u, ts, tx in rows],
+        "url string, warc_ts timestamp, html binary, "
+        "text string, lang string")
+
+
 def test_matches_duckdb_oracle(spark):
     df = pages_ops.snapshot_delta(P.pages_df(spark, SF_TEST), CUTOFF_US)
+    df = df.select("url", "old_ts", F.col("warc_ts").alias("new_ts"),
+                   "status")
     oracle_harness.compare(df, _delta_sql(CUTOFF_US), SF_TEST)
 
 
@@ -48,16 +60,14 @@ def test_changed_status_on_mutated_recrawl(spark):
     """A recrawl with a DIFFERENT payload must classify 'changed'."""
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     rows = [
-        ("u1", base, b"", "old text", "en"),
-        ("u1", base + dt.timedelta(days=300), b"", "new text", "en"),
-        ("u2", base, b"", "same", "en"),
-        ("u2", base + dt.timedelta(days=300), b"", "same", "en"),
-        ("u3", base + dt.timedelta(days=300), b"", "late", "en"),
-        ("u4", base, b"", "only old", "en"),
+        ("u1", base, "old text"),
+        ("u1", base + dt.timedelta(days=300), "new text"),
+        ("u2", base, "same"),
+        ("u2", base + dt.timedelta(days=300), "same"),
+        ("u3", base + dt.timedelta(days=300), "late"),
+        ("u4", base, "only old"),
     ]
-    pg = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, "
-              "text string, lang string")
+    pg = _pages(spark, rows)
     cutoff = int((base + dt.timedelta(days=180)).timestamp() * 1_000_000)
     got = {r.url: r.status
            for r in pages_ops.snapshot_delta(pg, cutoff).collect()}
@@ -75,14 +85,12 @@ def test_equal_timestamp_tiebreak_matches_sql(spark):
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     later = base + dt.timedelta(days=300)
     rows = [
-        ("u1", base, b"", "A", "en"), ("u1", base, b"", "B", "en"),
-        ("u1", later, b"", "B", "en"),   # recrawl matches the winner
-        ("u2", base, b"", "A", "en"),
-        ("u2", later, b"", "Z", "en"), ("u2", later, b"", "A", "en"),
+        ("u1", base, "A"), ("u1", base, "B"),
+        ("u1", later, "B"),   # recrawl matches the winner
+        ("u2", base, "A"),
+        ("u2", later, "Z"), ("u2", later, "A"),
     ]
-    pg = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, "
-              "text string, lang string")
+    pg = _pages(spark, rows)
     cutoff = int((base + dt.timedelta(days=180)).timestamp() * 1_000_000)
     got = sorted(pages_ops.snapshot_delta(pg, cutoff)
                  .select("url", "status").collect())
@@ -93,7 +101,7 @@ def test_equal_timestamp_tiebreak_matches_sql(spark):
     con = duckdb.connect()
     vals = ",".join(
         f"('{u}', TIMESTAMP '{ts:%Y-%m-%d %H:%M:%S}', '{tx}')"
-        for u, ts, _h, tx, _l in rows)
+        for u, ts, tx in rows)
     sql = (f"WITH pages AS (SELECT * FROM (VALUES {vals})"
            f" _t(url, warc_ts, text)),"
            f"{pages_ops.snapshot_delta_sql(DUCK, cutoff)} "

@@ -1,13 +1,12 @@
 """URL canonicalization (operators/urlnorm.py): DuckDB bit-parity of
 the shared-SQL canonical form over deterministically-augmented crawl
-urls, hand fixtures for each rule, and the keep-first canonical
-dedup."""
+urls, hand fixtures for each rule, and a urllib reference."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from greenexp_r_spark.dialect import DUCK
+from greenexp_r_spark.dialect import DUCK, SPARK
 from greenexp_r_spark.operators import urlnorm as U
 from greenexp_r_spark.sources import pages as P
 
@@ -15,15 +14,19 @@ from .conftest import SF_TEST
 from .oracle_harness import compare
 
 
+def _canonical():
+    return F.expr(U.canonical_url_sql(SPARK, "url"))
+
+
 def test_canonical_matches_duckdb_on_augmented(spark):
     pg = P.pages_df(spark, SF_TEST).select(
         "url", F.expr("CAST(regexp_extract(url, 'page/([0-9]+)', 1) "
                       "AS BIGINT)").alias("doc_id"))
     got = pg.select(
-        "url", F.expr(U.augment_url_sql(U.SPARK, "url", "doc_id"))
+        "url", F.expr(U.augment_url_sql(SPARK, "url", "doc_id"))
         .alias("messy"),
         F.expr(U.canonical_url_sql(
-            U.SPARK, U.augment_url_sql(U.SPARK, "url", "doc_id")))
+            SPARK, U.augment_url_sql(SPARK, "url", "doc_id")))
         .alias("canon"))
     aug = U.augment_url_sql(DUCK, "url", "doc_id")
     compare(got, f"""
@@ -40,9 +43,9 @@ def test_variants_collapse_to_original_canonical(spark):
         "url", F.expr("CAST(regexp_extract(url, 'page/([0-9]+)', 1) "
                       "AS BIGINT)").alias("doc_id"))
     both = pg.select(
-        U.canonical_url("url").alias("c0"),
+        _canonical().alias("c0"),
         F.expr(U.canonical_url_sql(
-            U.SPARK, U.augment_url_sql(U.SPARK, "url", "doc_id")))
+            SPARK, U.augment_url_sql(SPARK, "url", "doc_id")))
         .alias("c1"),
         F.expr("doc_id % 4").alias("r"))
     # tracked variant keeps its real param; the others are identical
@@ -68,25 +71,8 @@ def test_rule_fixtures(spark):
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = [r["c"] for r in
-           df.select(U.canonical_url("url").alias("c")).collect()]
+           df.select(_canonical().alias("c")).collect()]
     assert got == [w for _, w in cases]
-
-
-def test_url_dedup_keep_first(spark):
-    import datetime as dt
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        ("https://a.org/p", t0, "old"),
-        ("HTTPS://A.org/p/", t0 + dt.timedelta(days=1), "newer"),
-        ("https://a.org/p?utm_x=1", t0 - dt.timedelta(days=1), "first"),
-        ("https://b.org/q", t0, "only"),
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, text string")
-    out = {r["canon_url"]: r["text"]
-           for r in U.url_dedup_keep_first(df).collect()}
-    assert out == {"https://a.org/p": "first",
-                   "https://b.org/q": "only"}
 
 
 # ---------------------------------------------- property vs urllib
@@ -140,7 +126,7 @@ def test_property_matches_urllib(spark):
             u += "?" + "&".join(q)
         u += frag
         df = spark.createDataFrame([(u,)], "url string")
-        got = df.select(U.canonical_url("url").alias("c")) \
+        got = df.select(_canonical().alias("c")) \
                 .collect()[0]["c"]
         assert got == _py_canonical(u), f"url={u!r}"
 
