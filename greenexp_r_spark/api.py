@@ -84,7 +84,11 @@ def greenspace_access(address_location: DataFrame,
     `edges` / an `entrances` table with column entrance_node (the
     dissolved 20 m-buffer node set, accessibility.R:223-247).
 
-    The network variant solves the road graph on the driver
+    The Euclidean variant is `accessibility.euclidean_access`: one
+    bounded fetch of the qualifying parks picks its route (an Arrow
+    kernel pass over the fetched dim, or the cell-index join past
+    `accessibility.BROADCAST_PARK_LIMIT`); no size is passed in.  The
+    network variant solves the road graph on the driver
     (`network.network_access`); a graph of more than
     `network.DRIVER_EDGE_LIMIT` directed edges raises ValueError."""
     from pyspark.sql import functions as F
@@ -109,7 +113,7 @@ def greenspace_access(address_location: DataFrame,
                 address_location, entrance_points(),
                 buffer_m=buffer_distance,
                 min_area_m2=minimum_greenspace_size)
-        return accessibility.euclidean_access_auto(
+        return accessibility.euclidean_access(
             address_location, greenspace, buffer_m=buffer_distance,
             min_area_m2=minimum_greenspace_size)
     if edges is None or entrances is None:

@@ -27,6 +27,8 @@ this kind too, one text each, which the engine runs through
     geocode LCG (x, y)         world.xy_sql (via Dialect.lcg)
     NDVI mean / sd             operators/availability.ndvi_sql
     nearest park columns       operators/accessibility.nearest_sql
+    squared distance (BIGINT)  Dialect.dist2 (numpy mirror:
+                               kernels/exposure.nearest_d2)
     CDC status                 operators/pages_ops.cdc_status_sql
 """
 
@@ -48,7 +50,21 @@ class Dialect:
         (same value as the unreduced form)."""
         return f"(((({x}) % {mod}) * {mul} + {add}) % {mod})"
 
+    def dist2(self, x: str, y: str, cx: str, cy: str) -> str:
+        """BIGINT squared distance from (x, y) to (cx, cy): each
+        difference truncated toward zero to BIGINT, then squared and
+        added in BIGINT — exact for integer-valued coordinates, and
+        the same value in both engines off them."""
+        dx = self.trunc_long(f"({x}) - ({cx})")
+        dy = self.trunc_long(f"({y}) - ({cy})")
+        return f"({dx} * {dx} + {dy} * {dy})"
+
     # -- divergent primitives ---------------------------------------------
+    def trunc_long(self, x: str) -> str:
+        """BIGINT of a DOUBLE, truncated toward zero (Spark's CAST
+        truncates, DuckDB's rounds: CAST(2.7 AS BIGINT) is 3 there)."""
+        raise NotImplementedError
+
     def range_select(self, lo, hi, alias: str) -> str:
         """A FROM-able relation with one BIGINT column `alias` = lo..hi."""
         raise NotImplementedError
@@ -107,6 +123,9 @@ class Dialect:
 class SparkDialect(Dialect):
     name = "spark"
 
+    def trunc_long(self, x):
+        return f"CAST({x} AS BIGINT)"
+
     def range_select(self, lo, hi, alias):
         return f"(SELECT explode(sequence({lo}, {hi})) AS {alias})"
 
@@ -153,6 +172,9 @@ class SparkDialect(Dialect):
 
 class DuckDialect(Dialect):
     name = "duckdb"
+
+    def trunc_long(self, x):
+        return f"CAST(trunc({x}) AS BIGINT)"
 
     def range_select(self, lo, hi, alias):
         return f"(SELECT unnest(generate_series({lo}, {hi})) AS {alias})"

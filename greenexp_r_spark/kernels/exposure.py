@@ -25,9 +25,10 @@ PAIR_CAP = 1 << 21
 def nearest_d2(x: np.ndarray, y: np.ndarray, cx: np.ndarray,
                cy: np.ndarray, cap: int = PAIR_CAP) -> np.ndarray:
     """Minimum squared distance from each (x, y) to the parks (cx, cy),
-    computed as functions.geo.dist2_long does: subtract in double,
-    truncate to int64, square and add in int64.  Rows are taken in
-    blocks of at most ``cap`` (row, park) pairs."""
+    computed as the shared SQL text `Dialect.dist2` does in both
+    engines: subtract in double, truncate toward zero to int64, square
+    and add in int64.  Rows are taken in blocks of at most ``cap``
+    (row, park) pairs."""
     if len(cx) == 0:
         raise ValueError("nearest_d2 needs at least one park")
     out = np.empty(len(x), np.int64)

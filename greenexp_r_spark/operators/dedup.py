@@ -251,35 +251,6 @@ def _simhash_majority(flat, offs, sizes, bits: int = C.SIMHASH_BITS):
     return sim
 
 
-def char_shingle_arrays(corpus: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, sh_arr): distinct char n-gram hash set per document —
-    the character-level dedup representation for text without reliable
-    word boundaries (CJK, concatenated tokens, minified markup) where
-    word-bigram shingles under-segment.  Row-local JVM expressions
-    (sequence → transform → xxhash64(substring)), zero shuffle, and
-    the SAME array shape as shingle_arrays, so the whole MinHash-LSH
-    machinery (signatures, banding, exact-Jaccard verify) reuses it
-    through the `shingler` parameter."""
-    sh = F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length(text) - {n - 1}, 0)), "
-        f"i -> pmod(xxhash64(substring(text, i, {n})), {C.P31})))")
-    return (corpus.select("doc_id", sh.alias("sh_arr"))
-            .where(F.size("sh_arr") >= 1))
-
-
-def ngram_jaccard_pairs(corpus: DataFrame, n: int = 3,
-                        jaccard_threshold: float = C.JACCARD_THRESHOLD
-                        ) -> DataFrame:
-    """Char n-gram Jaccard near-dup pairs: identical plan shape to the
-    word-shingle minhash_lsh_pairs — candidates from banded MinHash
-    over the n-gram sets, then EXACT n-gram Jaccard verification.
-    Completeness vs exhaustive all-pairs Jaccard is asserted on the
-    dup fixture in tests/test_round4_ops.py."""
-    return minhash_lsh_pairs(corpus, jaccard_threshold,
-                             shingler=lambda c: char_shingle_arrays(c, n))
-
-
 # Members per scoring block of an LSH bucket.  A bucket of n members
 # is scored one block pair at a time, so a pair kernel's working set
 # is O(BUCKET_CAP²) however hot the bucket: a 13,746-member MinHash
@@ -489,8 +460,7 @@ def _band_members(sh: DataFrame, *lead) -> DataFrame:
 
 def minhash_lsh_pairs(corpus: DataFrame,
                       jaccard_threshold: float = C.JACCARD_THRESHOLD,
-                      shingler=None, sh: DataFrame | None = None
-                      ) -> DataFrame:
+                      sh: DataFrame | None = None) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + exact Jaccard verify.
 
     Plan: row-local shingle sets and signatures → one row per (band,
@@ -504,7 +474,7 @@ def minhash_lsh_pairs(corpus: DataFrame,
     if sh is None:
         # plain shingle_arrays: the combined shingle_table would also
         # sweep the 60 simhash bit permutations this caller never uses
-        sh = (shingler or shingle_arrays)(corpus)
+        sh = shingle_arrays(corpus)
     return bucket_verify(_band_members(sh), _jaccard_kernel,
                          jaccard_threshold, ("doc_a", "doc_b", "jaccard"))
 

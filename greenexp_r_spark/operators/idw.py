@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import constants as C
+from ..dialect import SPARK
 
 
 def idw_at_points(points: DataFrame, parks: DataFrame, k: int = 5,
@@ -28,12 +29,10 @@ def idw_at_points(points: DataFrame, parks: DataFrame, k: int = 5,
     nearest park centroids, β=2."""
     p = parks.select("park_id", "cx", "cy",
                      F.col(value_col).alias("val"))
-    dx = (F.col("x") - F.col("cx")).cast("long")
-    dy = (F.col("y") - F.col("cy")).cast("long")
     cand = (points.select("point_id", "x", "y")
             .join(F.broadcast(p))
             .select("point_id", "park_id", "val",
-                    (dx * dx + dy * dy).alias("d2")))
+                    F.expr(SPARK.dist2("x", "y", "cx", "cy")).alias("d2")))
     w = Window.partitionBy("point_id").orderBy(F.col("d2").asc(),
                                                F.col("park_id").asc())
     top = cand.withColumn("rank", F.row_number().over(w)) \

@@ -1,8 +1,10 @@
 """Cell-bucketed nearest-neighbor search (SURVEY J2's scale path).
 
-`accessibility.euclidean_access` broadcasts the park table — right
-whenever the greenspace dim fits in memory (it almost always does).
-This module is the other regime: a park layer too large to broadcast.
+`accessibility.euclidean_access` fetches the park dim to the driver
+in one bounded collect and scores it in an Arrow pass — right whenever
+the greenspace dim fits in memory (it almost always does).  This
+module is the other regime, and the route `euclidean_access` takes
+for a dim past BROADCAST_PARK_LIMIT (or an empty one).
 
 Plan: parks explode to every bucket cell within `search_radius` of
 their centroid (the "cell → polygon index"; its size is
@@ -15,7 +17,8 @@ with no park within `search_radius` fall back to the exact broadcast
 path (rare by construction; keeps the operator exact, not
 approximate).
 
-Results are identical to the broadcast path (tests/test_knn_cells.py).
+Results are identical to the kernel route (tests/test_knn_cells.py).
+Candidate d² is the shared `Dialect.dist2` text.
 """
 
 from __future__ import annotations
@@ -23,8 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .. import constants as C
-from ..functions.geo import dist2_long
+from ..dialect import SPARK
 from .accessibility import nearest_sql
+
+# the BIGINT squared distance of a (point, park) candidate row
+_D2 = SPARK.dist2("x", "y", "cx", "cy") + " AS d2"
 
 
 def cell_park_index(parks: DataFrame, search_radius: float,
@@ -59,17 +65,15 @@ def euclidean_access_cells(points: DataFrame, parks: DataFrame,
                            cell: int = C.CELL_SIZE,
                            min_area_m2: float = C.MIN_GREENSPACE_M2
                            ) -> DataFrame:
-    """Drop-in for accessibility.euclidean_access with the cell-index
-    plan; exact (falls back to broadcast for out-of-range points)."""
+    """accessibility.euclidean_access through the cell-index plan;
+    exact (falls back to broadcast for out-of-range points)."""
     idx = cell_park_index(parks, search_radius, cell, min_area_m2)
     pts = points.select(
         "point_id", "x", "y",
         (F.floor(F.col("x") / cell) * C.CELL_SHIFT
          + F.floor(F.col("y") / cell)).alias("cell_id"))
     cand = (pts.join(F.broadcast(idx), "cell_id")
-            .select("point_id", dist2_long(
-                F.col("x"), F.col("y"), F.col("cx"),
-                F.col("cy")).alias("d2")))
+            .selectExpr("point_id", _D2))
     near = cand.groupBy("point_id").agg(F.min("d2").alias("min_d2"))
     # the index is complete for any true-nearest within search_radius
     # (park-to-cell distance ≤ park-to-point distance); a best
@@ -81,9 +85,7 @@ def euclidean_access_cells(points: DataFrame, parks: DataFrame,
     p_all = parks.where(F.col("area_m2") > min_area_m2) \
                  .select("park_id", "cx", "cy")
     far = (missed.join(F.broadcast(p_all))
-           .select("point_id", dist2_long(
-               F.col("x"), F.col("y"), F.col("cx"),
-               F.col("cy")).alias("d2"))
+           .selectExpr("point_id", _D2)
            .groupBy("point_id").agg(F.min("d2").alias("min_d2")))
     out = near.unionByName(far)
     return out.selectExpr("point_id", *nearest_sql(buffer_m))
@@ -114,9 +116,7 @@ def knn_parks_cells(points: DataFrame, parks: DataFrame, k: int = 5,
         (F.floor(F.col("x") / cell) * C.CELL_SHIFT
          + F.floor(F.col("y") / cell)).alias("cell_id"))
     cand = (pts.join(F.broadcast(idx), "cell_id")
-            .select("point_id", "park_id",
-                    dist2_long(F.col("x"), F.col("y"),
-                               F.col("cx"), F.col("cy")).alias("d2")))
+            .selectExpr("point_id", "park_id", _D2))
     w = Window.partitionBy("point_id").orderBy(F.col("d2").asc(),
                                                F.col("park_id").asc())
     top = cand.withColumn("rank", F.row_number().over(w)) \

@@ -25,7 +25,11 @@ property-tested in tests/test_jpeg_codec.py instead.
 
 Scale notes: mapInPandas streams Arrow batches; nothing is collected;
 binary payloads never shuffle (metadata extraction is a narrow map,
-output drops the payload column before any wide op).
+output drops the payload column before any wide op).  The small
+documents parquet arrives as ONE scan partition, which would run the
+codec on one core (14.6 s for 5 k docs at sf0.1), so every codec pass
+first round-robins into plans/widen.pass_tasks tasks, a count taken
+from the source listing that grows with the corpus.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..dialect import SPARK
+from ..plans.widen import pass_tasks
 from ..sources import pages as P
 
 META_SCHEMA = StructType([
@@ -257,59 +262,6 @@ FRAME_BYTES = 256         # fake video: 256-byte frames
 FRAME_SAMPLE_EVERY = 2    # sample every 2nd frame
 FRAME_MS = 40             # 25 fps
 
-# codec work is ~2 ms/document (JPEG FDCT+Huffman dominates); cap a
-# partition at this many documents so one task stays a few seconds
-DOCS_PER_PARTITION = 2000
-
-
-# order-of-magnitude bytes per document row in the source parquet —
-# only the partition-target GROWTH matters, not the exact count
-_EST_DOC_BYTES = 400
-
-
-def _estimate_rows(df: DataFrame) -> int:
-    """Row-count estimate for partition targeting WITHOUT running a
-    Spark job: source parquet bytes / avg doc size (driver-side file
-    listing).  Falls back to an actual count() only when the plan has
-    no file source (e.g. createDataFrame fixtures) — at corpus scale
-    the estimate avoids a full extra pass per codec query (review r5
-    finding: every gate/bench execution paid a count-scan first).
-
-    CONTRACT: inputFiles() sees the UNFILTERED source, so the estimate
-    assumes `df` is (a projection of) the whole table — the shape of
-    every in-repo codec caller.  A heavily-filtered frame would get a
-    full-corpus partition target (many near-empty tasks): such callers
-    must pass n_hint to _codec_partitions instead."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if files:
-        import os
-        from urllib.parse import urlparse
-        try:
-            tot = sum(os.path.getsize(urlparse(f).path) for f in files)
-            if tot > 0:
-                return max(1, tot // _EST_DOC_BYTES)
-        except OSError:
-            pass
-    return df.count()
-
-
-def _codec_partitions(df: DataFrame, n_hint: int | None = None) -> int:
-    """Document-volume-derived partition target for the codec-bound
-    mapInPandas operators (the visibility._obs_partitions doctrine —
-    VERDICT r04 ask #6).  The small documents parquet arrives as ONE
-    scan partition, which would run the per-image codec on a single
-    core (measured 14.6 s for 5 k docs); the target floors at the
-    session parallelism and grows with the document count so a 100×
-    corpus gets 100× partitions, not bigger ones."""
-    sc = df.sparkSession.sparkContext
-    n = n_hint if n_hint is not None else _estimate_rows(df)
-    base = max(4, 2 * sc.defaultParallelism)
-    return max(min(base, max(int(n), 1)), -(-int(n) // DOCS_PER_PARTITION))
-
-
 def thumb_dims(n_bytes: int) -> tuple[int, int]:
     """Deterministic fake source dims, divisible by THUMB_BLOCKS so
     block-mean resize partitions exactly."""
@@ -356,7 +308,7 @@ def thumbnail_stats(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     sel = docs.select("doc_id", "text")
-    return sel.repartition(_codec_partitions(sel)) \
+    return sel.repartition(pass_tasks(sel)) \
               .mapInPandas(batches, schema)
 
 
@@ -406,7 +358,7 @@ def meta_thumbnail(docs: DataFrame) -> DataFrame:
                 rows, columns=[f.name for f in schema.fields])
 
     sel = docs.select("doc_id", "text")
-    return sel.repartition(_codec_partitions(sel)) \
+    return sel.repartition(pass_tasks(sel)) \
               .mapInPandas(batches, schema)
 
 
@@ -445,7 +397,7 @@ def frame_samples(docs: DataFrame) -> DataFrame:
                     out["checksum"].append(int(frame.sum()))
             yield pd.DataFrame(out)
 
-    return pages.repartition(_codec_partitions(pages)) \
+    return pages.repartition(pass_tasks(pages)) \
                 .mapInPandas(batches, schema)
 
 
@@ -479,7 +431,7 @@ def decode_meta(docs: DataFrame) -> DataFrame:
                     out[k].append(meta[k])
             yield pd.DataFrame(out)
 
-    return pages.repartition(_codec_partitions(pages)) \
+    return pages.repartition(pass_tasks(pages)) \
                 .mapInPandas(batches, META_SCHEMA)
 
 
@@ -618,5 +570,5 @@ def audio_segments(docs: DataFrame) -> DataFrame:
                     out["sum_abs"].append(int(np.abs(seg).sum()))
             yield pd.DataFrame(out)
 
-    return base.repartition(_codec_partitions(base)) \
+    return base.repartition(pass_tasks(base)) \
                .mapInPandas(batches, AUDIO_SCHEMA)

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import constants as C
+from ..dialect import SPARK
 from ..plans.bounded import fetch_at_most
 
 
@@ -289,7 +290,6 @@ def network_access_prefilter(points: DataFrame, edges: DataFrame,
     # euclidean candidates through the broadcast cell→park index
     # (equi-join on cell_id + exact integer d² refine — the north_rule
     # join shape, no nested loop even at 10^12 points)
-    from ..functions.geo import dist2_long
     from .pages_ops import cell_membership_index
     r2 = int(buffer_m) ** 2
     idx = cell_membership_index(
@@ -300,8 +300,7 @@ def network_access_prefilter(points: DataFrame, edges: DataFrame,
          + F.floor(F.col("y") / C.CELL_SIZE).cast("long"))
         .alias("cell_id"))
     cand = pts_c.join(F.broadcast(idx), "cell_id").where(
-        dist2_long(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
-        <= F.lit(r2))
+        F.expr(f"{SPARK.dist2('x', 'y', 'cx', 'cy')} <= {r2}"))
     snapped = points.select(
         "point_id",
         (snap_node_expr("y") * C.ROAD_N + snap_node_expr("x"))

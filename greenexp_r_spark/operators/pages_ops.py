@@ -45,7 +45,6 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from .. import constants as C
 from ..dialect import SPARK
-from ..functions.geo import dist2_long
 from ..kernels import exposure as XK
 from ..sources import pages as P
 from . import accessibility, availability
@@ -196,10 +195,9 @@ def exposure_of_pages(pages: DataFrame, parks: DataFrame | None = None,
         spark.sparkContext.defaultParallelism, "url")
     geo = geocode(_latest_capture(ext)).select(
         "url", "warc_ts", "x", "y", "n_chars", "point_id")
-    dim = accessibility.park_centroids(parks)
     # an empty dim has no nearest park: the cell plan's inner join then
     # drops every row, as the oracle's does
-    cx, cy = dim if dim is not None and len(dim[0]) else (None, None)
+    cx, cy = accessibility.park_centroids(parks) or (None, None)
     extra = [StructField(c, LongType()) for c in ("s1", "s2", "n_cells")]
     if cx is not None:
         extra.append(StructField("min_d2", LongType()))
@@ -292,8 +290,7 @@ def cell_page_stats(spark: SparkSession, sf_dir: str,
            .withColumn(
                "in_park",
                F.when(F.col("park_id").isNotNull()
-                      & (dist2_long(F.col("x"), F.col("y"), F.col("cx"),
-                                    F.col("cy"))
+                      & (F.expr(SPARK.dist2("x", "y", "cx", "cy"))
                          <= (F.col("radius") * F.col("radius"))
                          .cast("long")),
                       F.lit(1)).otherwise(F.lit(0))))

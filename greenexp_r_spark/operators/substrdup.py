@@ -14,6 +14,10 @@ spans covers the full repeated region.
 Spark-first shape (the 100 TB posture), mirroring the two-phase
 hash-first plan of dedup.exact_duplicates:
 
+  * the documents round-robin into plans/widen.pass_tasks tasks (a
+    count from the source listing, no Spark job) before the explode:
+    the small documents parquet arrives as one scan partition, and the
+    O(L·chars) Horner evaluation must run on every core;
   * one narrow positional explode emits (doc_id, pos, h) where h is a
     Horner rolling hash of the L characters at pos — the corpus-wide
     shuffle for the repeat-detection aggregate carries ONLY the
@@ -39,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .. import constants as C
+from ..plans.widen import pass_tasks
 
 # minimum duplicated-substring length (characters).  Lee et al. use
 # 50 BPE tokens; the synthetic corpus's documents are short, so 20
@@ -75,13 +80,8 @@ def substring_dedup(docs: DataFrame, L: int = SUBSTR_L) -> DataFrame:
     base = (docs.select("doc_id", "text",
                         F.length("text").cast("long").alias("n_chars"))
             .withColumn("n_pos", F.col("n_chars") - (L - 1)))
-    # the small documents parquet arrives as one scan partition; the
-    # O(L·chars) Horner evaluation must parallelize (the
-    # multimodal._codec_partitions doctrine) — target grows with the
-    # corpus, floors at session parallelism
-    from .multimodal import _codec_partitions
     eligible = base.where(F.col("n_pos") >= 1)
-    eligible = eligible.repartition(_codec_partitions(eligible))
+    eligible = eligible.repartition(pass_tasks(eligible))
     occ = eligible.select(
         "doc_id", "text",
         F.explode(F.sequence(F.lit(1), F.col("n_pos"))).alias("pos")

@@ -1,9 +1,11 @@
 """Visibility family: viewshed, visibility proportion, VGVI
 (vgvi_from_sf / vgvi_from_address / viewshed / visibility_proportion).
 
-Spark lifecycle (SURVEY.md §3.3): observers → applyInPandas over
-observer batches → numpy kernel (kernels/vgvi.py) with the broadcast
-LoS tables → per-observer metrics.  Patches are synthesized in-task
+Spark lifecycle (SURVEY.md §3.3): observers → one round-robin
+exchange into plans/widen.pass_tasks tasks (from the driver's source
+listing: no count job while the plan is built) → mapInPandas over
+observer batches → numpy kernel (kernels/vgvi.py) with the LoS
+tables → per-observer metrics.  Patches are synthesized in-task
 from the closed-form world rasters (kernels/worldgrid.py), so the
 plan is a single narrow stage — the tile-join variant co-partitions
 real raster tiles with observer cells (operators/zonal_tiles.py).
@@ -29,31 +31,12 @@ from ..kernels import vgvi as K
 from ..kernels.exposure import vgvi_at
 from ..kernels.vgvi import KERNEL_BATCH
 from ..kernels.worldgrid import observer_patches
+from ..plans.widen import pass_tasks
 
 
 def _chunks(pdf: pd.DataFrame, size: int = KERNEL_BATCH):
     for lo in range(0, len(pdf), size):
         yield pdf.iloc[lo:lo + size]
-
-
-OBS_PER_PARTITION = 2_000     # kernel cost is linear in observers; a
-# partition of 2k observers is ~seconds of Arrow-batched numpy — small
-# enough for retry granularity, large enough to amortize worker setup
-
-
-def _obs_partitions(obs: DataFrame, n_obs_hint: int | None = None) -> int:
-    """Observer-volume-derived partition target (VERDICT r04 ask #6).
-    The r4 shape `repartition(2·defaultParallelism)` fixed the
-    partition COUNT while observer volume grows 100× — at scale each
-    partition's patch batch outgrows executor memory.  Target:
-    ceil(n/OBS_PER_PARTITION), floored at the session's parallelism
-    (2·cores, so small jobs still use the machine) and capped at n so
-    tiny inputs don't schedule empty tasks.  Pass ``n_obs_hint`` when
-    the caller knows the count (skips one cheap count job)."""
-    sc = obs.sparkSession.sparkContext
-    n = n_obs_hint if n_obs_hint is not None else obs.count()
-    base = max(4, 2 * sc.defaultParallelism)
-    return max(min(base, max(int(n), 1)), -(-int(n) // OBS_PER_PARTITION))
 
 
 def _disk_mask(r: int) -> np.ndarray:
@@ -71,8 +54,7 @@ def _disk_mask(r: int) -> np.ndarray:
 def viewshed_metrics(points: DataFrame,
                      max_distance: float = C.VIS_MAX_DIST,
                      res: float = C.VIS_RES,
-                     sample_mod: int = 10,
-                     n_obs_hint: int | None = None) -> DataFrame:
+                     sample_mod: int = 10) -> DataFrame:
     """(point_id, visible_cells, disk_cells, visibility_proportion) for
     every sample_mod-th point (viewshed + visibility_proportion.R)."""
     r = int(round(max_distance / res))
@@ -96,7 +78,7 @@ def viewshed_metrics(points: DataFrame,
                     "visibility_proportion": nvis / disk,
                 })
 
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
+    return obs.repartition(pass_tasks(obs)) \
               .mapInPandas(run, "point_id long, visible_cells long, "
                            "disk_cells long, visibility_proportion double")
 
@@ -104,8 +86,7 @@ def viewshed_metrics(points: DataFrame,
 def viewshed_raster(points: DataFrame,
                     max_distance: float = C.VIS_MAX_DIST,
                     res: float = C.VIS_RES,
-                    sample_mod: int = 100,
-                    n_obs_hint: int | None = None) -> DataFrame:
+                    sample_mod: int = 100) -> DataFrame:
     """The reference's actual viewshed OUTPUT (R/viewshed.R:152-162):
     the masked 0/1 raster — cells on some LoS ray get 1/0 visibility,
     cells outside the radial mask are NA (omitted here).  Emitted as
@@ -118,12 +99,11 @@ def viewshed_raster(points: DataFrame,
                 .select("point_id", "x", "y")
     # observer_patches gives (dsm, greenspace, eye heights)
     return _viewshed_rows(
-        obs, r, res, lambda xs, ys: observer_patches(xs, ys, r, res)[::2],
-        n_obs_hint)
+        obs, r, res, lambda xs, ys: observer_patches(xs, ys, r, res)[::2])
 
 
-def _viewshed_rows(obs: DataFrame, r: int, res: float, heights,
-                   n_obs_hint: int | None) -> DataFrame:
+def _viewshed_rows(obs: DataFrame, r: int, res: float,
+                   heights) -> DataFrame:
     """Masked 0/1 viewshed raster rows (point_id, ci, cj, visible) of
     each observer, one per cell of the radial mask, in world raster
     indexing; ``heights(xs, ys)`` gives the observers' (n, (2r+1)²)
@@ -147,7 +127,7 @@ def _viewshed_rows(obs: DataFrame, r: int, res: float, heights,
                     "visible": vis[:, midx].reshape(-1).astype("int32"),
                 })
 
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
+    return obs.repartition(pass_tasks(obs)) \
         .mapInPandas(run, "point_id long, ci long, cj long, visible int")
 
 
@@ -155,19 +135,16 @@ def vgvi_points(points: DataFrame,
                 max_distance: float = C.VIS_MAX_DIST,
                 res: float = C.VIS_RES,
                 fun: int = 1, m: float = C.VGVI_M, b: float = C.VGVI_B,
-                sample_mod: int = 10,
-                n_obs_hint: int | None = None) -> DataFrame:
+                sample_mod: int = 10) -> DataFrame:
     """(point_id, vgvi) — vgvi_from_sf over every sample_mod-th point."""
     obs = points.where(F.col("point_id") % sample_mod == 0) \
                 .select("point_id", "x", "y")
-    return _vgvi_over(obs, ["point_id"], max_distance, res, fun, m, b,
-                      n_obs_hint)
+    return _vgvi_over(obs, ["point_id"], max_distance, res, fun, m, b)
 
 
 def _vgvi_over(obs: DataFrame, id_cols: list[str],
                max_distance: float, res: float,
-               fun: int, m: float, b: float,
-               n_obs_hint: int | None = None) -> DataFrame:
+               fun: int, m: float, b: float) -> DataFrame:
     """Run the VGVI kernel over an observer DataFrame carrying
     arbitrary id columns + (x, y); returns id columns + vgvi.
     Shared by point / line-sample / polygon-grid observers
@@ -182,7 +159,7 @@ def _vgvi_over(obs: DataFrame, id_cols: list[str],
                 pdf["x"].to_numpy(), pdf["y"].to_numpy(),
                 max_distance, res, fun, m, b))
 
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
+    return obs.repartition(pass_tasks(obs)) \
         .mapInPandas(run, schema)
 
 
@@ -247,8 +224,7 @@ def vgvi_from_address(points: DataFrame,
                       res: float = C.VIS_RES,
                       fun: int = 1, m: float = C.VGVI_M,
                       b: float = C.VGVI_B,
-                      sample_mod: int = 25,
-                      n_obs_hint: int | None = None) -> DataFrame:
+                      sample_mod: int = 25) -> DataFrame:
     """Mean VGVI over seeded random sample points in each address
     buffer (vgvi_from_address.R:259-270 uses st_sample — we seed the
     rejection sampler by point_id for reproducibility, SURVEY P10).
@@ -331,7 +307,7 @@ def vgvi_from_address(points: DataFrame,
                 out["n_samples"] = out["n_samples"].astype("int64")
                 yield out
 
-    return obs.repartition(_obs_partitions(obs, n_obs_hint)) \
+    return obs.repartition(pass_tasks(obs)) \
               .mapInPandas(run, schema)
 
 
@@ -367,8 +343,7 @@ def flat_height_sql(ci: str, cj: str) -> str:
 def viewshed_flat_raster(points: DataFrame,
                          max_distance: float = FLAT_MAX_DIST,
                          res: float = FLAT_RES,
-                         sample_mod: int = 25,
-                         n_obs_hint: int | None = None) -> DataFrame:
+                         sample_mod: int = 25) -> DataFrame:
     """Masked 0/1 viewshed raster on the flat-DTM integer-building
     world — bit-identical to a DuckDB replay of the LoS trie
     (kernels/lostrie.py), shrinking the rows-only set to the pure
@@ -390,4 +365,4 @@ def viewshed_flat_raster(points: DataFrame,
                               (n, nc, nc)).reshape(n, -1)
         return flat_height(pci, pcj), np.full(n, FLAT_OBSERVER)
 
-    return _viewshed_rows(obs, r, res, heights, n_obs_hint)
+    return _viewshed_rows(obs, r, res, heights)

@@ -1,4 +1,4 @@
-"""Scan-parallelism floor for single-row-group inputs.
+"""Task counts decided on the driver from the source-file listing.
 
 The driver's test tables are written as ONE parquet row group per
 file, so a scan cannot be split below file granularity no matter what
@@ -17,6 +17,8 @@ safe under retries: Spark sorts before repartitioning
 is deterministic.  No engine result depends on partition layout
 (no spark_partition_id / monotonically_increasing_id / rand anywhere
 in the tree), so plans change but hashes cannot.
+
+`pass_tasks()` sizes the Python passes from the same listing.
 """
 
 from __future__ import annotations
@@ -30,6 +32,23 @@ from pyspark.sql import DataFrame
 # sub-second, so the exchange is pure overhead (measured at sf0.1:
 # ~+0.2-0.4 s per query across the exposure family for zero gain)
 WIDEN_MIN_BYTES = 4 << 20
+
+# a Python pass takes one task per 2000 rows of ~400 source bytes
+PASS_ROWS_PER_TASK, PASS_ROW_BYTES = 2000, 400
+
+
+def source_bytes(df: DataFrame) -> int | None:
+    """Size of the files `df` reads (driver-side listing), or None
+    when it reads none or their size cannot be read."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    try:
+        tot = sum(os.path.getsize(urlparse(f).path) for f in files)
+    except OSError:
+        return None
+    return tot if files else None
 
 
 def widen(df: DataFrame,
@@ -53,18 +72,26 @@ def widen(df: DataFrame,
     # an input of unknown size (no file listing, or a non-local
     # s3a/hdfs path) stays as scanned: widening it blind is the
     # overhead the size gate exists to avoid
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    try:
-        tot = sum(os.path.getsize(urlparse(f).path) for f in files)
-    except OSError:
-        return df
-    if not files or tot < WIDEN_MIN_BYTES:
+    tot = source_bytes(df)
+    if tot is None or tot < WIDEN_MIN_BYTES:
         return df
     target = max(2, min(df.sparkSession.sparkContext.defaultParallelism,
                         tot // bytes_per_task))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def pass_tasks(df: DataFrame) -> int:
+    """Task count of a Python pass (`mapInPandas`) over `df`, with no
+    Spark job: max(base, ceil(source bytes / (2000 × 400 B))), base =
+    max(4, 2 · defaultParallelism); base for a frame with no file
+    source.  `mapInPandas` streams Arrow batches, so a task's memory
+    does not grow with its partition: the target grows with the input
+    for parallelism and retry granularity, and empty tasks cost almost
+    nothing, so tiny inputs get base too.  The listing sees the whole
+    source: a filtered frame, such as observers sampled from every
+    10th–100th point, gets its whole source's target."""
+    base = max(4, 2 * df.sparkSession.sparkContext.defaultParallelism)
+    per_task = PASS_ROWS_PER_TASK * PASS_ROW_BYTES
+    return max(base, -(-(source_bytes(df) or 0) // per_task))

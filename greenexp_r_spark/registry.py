@@ -59,12 +59,12 @@ agg AS (
 )"""
 
 
-def _near_cte(key: str = "point_id", src: str = "points") -> str:
+def _near_cte(d: Dialect, key: str = "point_id",
+              src: str = "points") -> str:
     """near CTE: the BIGINT min_d2 per ``key`` from the oracle's own
     cross join with the qualifying parks."""
     return f"""near AS (
-  SELECT {key}, MIN(CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-       + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT)) AS min_d2
+  SELECT {key}, MIN({d.dist2('x', 'y', 'cx', 'cy')}) AS min_d2
   FROM {src} CROSS JOIN (SELECT * FROM parks
                          WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
   GROUP BY {key}
@@ -144,7 +144,7 @@ FROM n LEFT JOIN g ON n.point_id = g.point_id
 def _oracle_euclid(d: Dialect) -> str:
     return f"""
 {world.world_ctes(d, 'points', 'parks')},
-{_near_cte()}
+{_near_cte(d)}
 SELECT point_id, {", ".join(accessibility.nearest_sql())} FROM near
 """
 
@@ -153,9 +153,7 @@ def _oracle_knn(d: Dialect, k: int = 5) -> str:
     return f"""
 {world.world_ctes(d, 'points', 'parks')},
 cand AS (
-  SELECT point_id, park_id,
-         CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-         + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT) AS d2
+  SELECT point_id, park_id, {d.dist2('x', 'y', 'cx', 'cy')} AS d2
   FROM points CROSS JOIN (SELECT * FROM parks
                           WHERE area_m2 > {C.MIN_GREENSPACE_M2}) p
 ),
@@ -257,10 +255,7 @@ snapped AS (
 cand AS (
   SELECT p.point_id, pk.park_id
   FROM points p JOIN parks pk
-    ON (CAST(p.x AS BIGINT) - CAST(pk.cx AS BIGINT))
-       * (CAST(p.x AS BIGINT) - CAST(pk.cx AS BIGINT))
-       + (CAST(p.y AS BIGINT) - CAST(pk.cy AS BIGINT))
-       * (CAST(p.y AS BIGINT) - CAST(pk.cy AS BIGINT)) <= {r2}
+    ON {d.dist2('p.x', 'p.y', 'pk.cx', 'pk.cy')} <= {r2}
   WHERE pk.area_m2 > {C.MIN_GREENSPACE_M2}
 ),
 pref AS (
@@ -334,7 +329,7 @@ def _oracle_combined(d: Dialect) -> str:
     return f"""
 {world.world_ctes(d, 'points', 'parks')},
 {_ndvi_ctes(d)},
-{_near_cte()}
+{_near_cte(d)}
 SELECT p.point_id, p.url, p.x, p.y, {", ".join(mean_sd)},
        {", ".join(accessibility.nearest_sql())}
 FROM points p
@@ -345,8 +340,7 @@ JOIN near n ON p.point_id = n.point_id
 
 def _combined_from_points(points, parks):
     avail = availability.ndvi_zonal(points)
-    access = accessibility.euclidean_access_auto(
-        points, parks, n_parks_hint=C.N_PARKS)
+    access = accessibility.euclidean_access(points, parks)
     return (points.select("point_id", "url", "x", "y")
             .join(avail.drop("n_cells"), "point_id")
             .join(access, "point_id")

@@ -19,8 +19,7 @@ def _oracle_idw(d: Dialect, k: int = 5) -> str:
 {world.world_ctes(d, 'points', 'parks')},
 cand AS (
   SELECT point_id, park_id, radius AS val,
-         CAST(x - cx AS BIGINT) * CAST(x - cx AS BIGINT)
-         + CAST(y - cy AS BIGINT) * CAST(y - cy AS BIGINT) AS d2
+         {d.dist2('x', 'y', 'cx', 'cy')} AS d2
   FROM points CROSS JOIN parks
 ),
 top AS (
@@ -116,9 +115,7 @@ pts AS (
 ),
 cand AS (
   SELECT p.ci, p.cj, k.park_id, k.radius AS val,
-         CAST(p.x - k.cx * 2 AS BIGINT) * CAST(p.x - k.cx * 2 AS BIGINT)
-         + CAST(p.y - k.cy * 2 AS BIGINT) * CAST(p.y - k.cy * 2 AS BIGINT)
-             AS d2
+         {d.dist2('p.x', 'p.y', 'k.cx * 2', 'k.cy * 2')} AS d2
   FROM pts p CROSS JOIN parks k
 ),
 top AS (

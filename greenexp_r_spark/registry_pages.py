@@ -64,7 +64,7 @@ WITH {_snap_ctes(d)},
 {_geo_cte(d)},
 parks AS ({world.parks_sql(d)}),
 {_ndvi_ctes(d, "url", "SELECT url, x, y FROM geo")},
-{_near_cte("url", "geo")}
+{_near_cte(d, "url", "geo")}
 SELECT g.url, g.warc_ts, g.x, g.y, g.n_chars,
        {", ".join(availability.ndvi_sql())},
        {", ".join(accessibility.nearest_sql())}
@@ -74,8 +74,7 @@ FROM geo g JOIN agg a ON g.url = a.url
 
 
 def _oracle_cell_stats(d: Dialect, cell: int = C.CELL_SIZE) -> str:
-    d2 = ("CAST(g.x - p.cx AS BIGINT) * CAST(g.x - p.cx AS BIGINT)"
-          " + CAST(g.y - p.cy AS BIGINT) * CAST(g.y - p.cy AS BIGINT)")
+    d2 = d.dist2("g.x", "g.y", "p.cx", "p.cy")
     return f"""
 WITH {_snap_ctes(d)},
 {_geo_cte(d)},

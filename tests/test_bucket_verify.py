@@ -159,7 +159,6 @@ def test_building_near_dup_operators_runs_no_job(spark):
     def build():
         dedup.minhash_lsh_pairs(aug)
         dedup.minhash_lsh_pairs(aug, sh=dedup.shingle_table(aug))
-        dedup.ngram_jaccard_pairs(aug)
         dedup.incremental_pairs(aug.where(F.col("doc_id") < 1_000_000),
                                 aug.where(F.col("doc_id") >= 1_000_000))
         similarity.neardup_pairs(emb)

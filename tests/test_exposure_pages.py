@@ -108,7 +108,7 @@ def test_large_park_dim_takes_the_cell_index_route(spark, monkeypatch):
 
 def test_nearest_d2_over_row_blocks():
     """rows × parks far above the cap: blocks of a few rows each give
-    the brute-force BIGINT minimum (dist2_long's truncation)."""
+    the brute-force BIGINT minimum (Dialect.dist2's truncation)."""
     rng = np.random.default_rng(5)
     x, y = rng.uniform(-2e4, 4e4, (2, 1_000))
     cx, cy = rng.uniform(0, 2e4, (2, 37))

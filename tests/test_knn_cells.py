@@ -1,5 +1,5 @@
-"""Cell-index kNN must equal the broadcast path exactly, including
-the out-of-range fallback."""
+"""Cell-index kNN must equal euclidean_access' kernel route exactly,
+including the out-of-range fallback."""
 
 from __future__ import annotations
 

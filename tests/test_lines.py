@@ -91,20 +91,19 @@ def test_meta_thumbnail_equals_components(spark, sf_dir):
         merged[thumb.columns.tolist()], thumb)
 
 
-def test_codec_partitions_track_document_volume(spark):
+def test_codec_partitions_track_document_volume(spark, monkeypatch):
     """The codec-bound mapInPandas operators must not run on the
     single scan partition a small parquet arrives as (measured: the
     per-image codec took 14.6 s single-core at sf0.1), and the target
     must grow with the corpus, not stay fixed at 2x cores."""
-    df = spark.range(1)
+    from greenexp_r_spark.plans import widen
     base = max(4, 2 * spark.sparkContext.defaultParallelism)
-    assert multimodal._codec_partitions(df, n_hint=1) == 1
-    assert multimodal._codec_partitions(df, n_hint=100) == min(base, 100)
-    n = 10_000_000
-    assert multimodal._codec_partitions(df, n_hint=n) == max(
-        base, -(-n // multimodal.DOCS_PER_PARTITION))
     docs = spark.createDataFrame(
         [(i, "text body here") for i in range(50)],
         "doc_id long, text string")
-    out = multimodal.meta_thumbnail(docs)
-    assert out.rdd.getNumPartitions() == min(base, 50)
+    assert multimodal.meta_thumbnail(docs).rdd.getNumPartitions() == base
+    n = 1_000_000
+    monkeypatch.setattr(widen, "source_bytes",
+                        lambda df: n * widen.PASS_ROW_BYTES)
+    assert multimodal.meta_thumbnail(docs).rdd.getNumPartitions() == max(
+        base, -(-n // widen.PASS_ROWS_PER_TASK))

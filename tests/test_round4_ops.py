@@ -1,5 +1,6 @@
 """Round-4 additions: vectorized driver solvers (VERDICT r03 'What's
-wrong #2') and char n-gram Jaccard dedup."""
+wrong #2') and the exhaustive all-pairs Jaccard oracle of the
+near-dup tests."""
 
 import heapq
 
@@ -113,7 +114,7 @@ def test_min_label_components_empty():
     assert len(nodes) == 0 and len(labels) == 0
 
 
-# ----------------------------------------- char n-gram Jaccard dedup
+# ------------------------------------- exhaustive all-pairs Jaccard
 
 def all_pairs_jaccard(sh, threshold):
     """Exhaustive oracle: (doc_a, doc_b, jaccard) for every pair of
@@ -129,49 +130,3 @@ def all_pairs_jaccard(sh, threshold):
     return (l.crossJoin(r).where(F.col("doc_a") < F.col("doc_b"))
             .select("doc_a", "doc_b", jac.alias("jaccard"))
             .where(F.col("jaccard") >= threshold))
-
-
-def test_ngram_jaccard_pairs_sound_and_highJ_complete(spark, sf_dir):
-    """Char-3-gram Jaccard near-dup (the character-level dedup family
-    member) vs exhaustive all-pairs Jaccard: every reported pair must
-    exist in the exhaustive set WITH THE SAME exact Jaccard
-    (soundness — the verify step is exact), and every true pair at
-    J ≥ 0.9 must be found (the banded-LSH miss probability at 0.9 is
-    1−(1−0.81)⁴ ≈ 1.3e-3 per pair; on this deterministic fixture the
-    high-J set is recalled in full).  Threshold-adjacent pairs may be
-    probabilistically missed — inherent to LSH, matching the word-
-    shingle gate oracle which replays the banding rather than
-    exhaustive search."""
-    from pyspark.sql import functions as F
-    from greenexp_r_spark import constants as C
-    from greenexp_r_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .limit(120)
-    corpus = dedup.augmented_corpus(docs)
-    got = dedup.ngram_jaccard_pairs(corpus).toPandas()
-    got_map = {(a, b): j for a, b, j in got.itertuples(index=False)}
-
-    # exhaustive oracle: all-pairs exact Jaccard over the same arrays
-    want = all_pairs_jaccard(dedup.char_shingle_arrays(corpus),
-                             C.JACCARD_THRESHOLD).toPandas()
-    want_map = {(a, b): j for a, b, j in want.itertuples(index=False)}
-    assert len(want_map) > 0              # fixture has near-dups
-    # soundness: reported ⊆ true, values exact
-    for pair, j in got_map.items():
-        assert pair in want_map and want_map[pair] == j
-    # high-J completeness
-    high = {p for p, j in want_map.items() if j >= 0.9}
-    assert high and high <= set(got_map)
-
-
-def test_char_shingles_catch_wordless_neardups(spark):
-    """Documents without word boundaries: word-bigram shingling sees
-    nothing (< 2 words), char n-grams still pair them."""
-    rows = [(1, "abcdefghijklmnopqrstuvwxyz0123456789" * 4),
-            (2, "abcdefghijklmnopqrstuvwxyz0123456789" * 4 + "zz"),
-            (3, "completely-different-single-token-value-here")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    from greenexp_r_spark.operators import dedup
-    pairs = dedup.ngram_jaccard_pairs(docs).toPandas()
-    assert set(map(tuple, pairs[["doc_a", "doc_b"]].values)) == {(1, 2)}

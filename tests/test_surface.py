@@ -23,6 +23,10 @@ count; a docstring does not, since prose that names a function does not
 run it), except `api.py`'s own definitions, which are the public
 surface, and the reference functions in `TEST_REFERENCES`, which tests
 use as the oracle for product code.
+
+And no function of a reached module takes a size or route hint: task
+counts and routes come from what the driver already knows (a source
+file listing, a bounded fetch), not from a number the caller passes.
 """
 
 from __future__ import annotations
@@ -52,10 +56,6 @@ TEST_REFERENCES = {
     "kernels.concave.points_in_rings",
     # the per-block entropy coder: the oracle of the vectorized one
     "kernels.jpeg._encode_block",
-    # the char-n-gram variant of minhash_lsh_pairs has no gate leaf
-    # yet; deleting it takes char_shingle_arrays and the `shingler`
-    # hook with it
-    "operators.dedup.ngram_jaccard_pairs",
     # the DataFrame NB training: the oracle of the fused classifier
     "operators.classify.nb_train",
     # the reference JFIF encoder whose streams the decoder tests read
@@ -216,3 +216,23 @@ def test_every_definition_is_named_by_the_product():
         "definitions the product never names (wire them in or delete "
         f"them with their tests): {sorted(unnamed - TEST_REFERENCES)}; "
         f"named since: {sorted(TEST_REFERENCES - unnamed)}")
+
+
+def test_no_reached_function_takes_a_hint():
+    hinted = []
+    for m in sorted(_reached()):
+        tree = ast.parse(_module_file(m).read_text())
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.Lambda)):
+                continue
+            a = node.args
+            for arg in (*a.posonlyargs, *a.args, *a.kwonlyargs,
+                        a.vararg, a.kwarg):
+                if arg is not None and arg.arg.endswith("_hint"):
+                    hinted.append(f"{m.removeprefix(PKG + '.')}."
+                                  f"{getattr(node, 'name', '<lambda>')}"
+                                  f"({arg.arg})")
+    assert hinted == [], (
+        "size/route hints (derive them on the driver instead): "
+        f"{hinted}")

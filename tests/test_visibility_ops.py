@@ -94,31 +94,26 @@ def test_vgvi_polygons_masked_grid(spark):
         assert (d2 <= r * r + 1e-6).all()
 
 
-def test_partitions_track_observer_volume(spark):
-    """VERDICT r04 ask #6: the repartition target must grow with
-    observer volume instead of being fixed at 2x cores."""
-    from greenexp_r_spark.operators import visibility as V
-    df = spark.range(1)
+def test_partitions_track_observer_volume(spark, monkeypatch):
+    """VERDICT r04 ask #6: the task target grows with the observers'
+    source volume instead of being fixed at 2x cores — decided from
+    the driver's file listing, with no count job."""
+    from greenexp_r_spark.plans import widen
     base = max(4, 2 * spark.sparkContext.defaultParallelism)
-    assert V._obs_partitions(df, n_obs_hint=1) == 1
-    assert V._obs_partitions(df, n_obs_hint=100) == min(base, 100)
-    assert V._obs_partitions(df, n_obs_hint=10_000_000) == \
-        10_000_000 // V.OBS_PER_PARTITION
-    # strictly monotone past the parallelism floor
-    p1 = V._obs_partitions(df, n_obs_hint=1_000_000)
-    p2 = V._obs_partitions(df, n_obs_hint=100_000_000)
-    assert base <= p1 < p2
-    # no hint: derived from an actual count, same value
-    n = df.sparkSession.range(5000).selectExpr(
-        "id as point_id", "CAST(id AS DOUBLE) x", "CAST(id AS DOUBLE) y")
-    assert V._obs_partitions(n) == V._obs_partitions(n, n_obs_hint=5000)
-
-
-def test_viewshed_hint_does_not_change_results(spark):
-    from greenexp_r_spark.operators import visibility as V
-    pts = world.points_df(spark, SF_TEST).limit(40)
-    a = V.viewshed_metrics(pts, sample_mod=1).toPandas() \
-        .sort_values("point_id").reset_index(drop=True)
-    b = V.viewshed_metrics(pts, sample_mod=1, n_obs_hint=40).toPandas() \
-        .sort_values("point_id").reset_index(drop=True)
-    assert a.equals(b)
+    pts = world.points_df(spark, SF_TEST)
+    tiny = pts.limit(3)
+    # a small source, or a frame with no file source at all: base,
+    # also below base rows (empty tasks cost almost nothing)
+    assert visibility.vgvi_points(tiny, sample_mod=1) \
+        .rdd.getNumPartitions() == base
+    assert widen.pass_tasks(spark.range(1)) == base
+    # a filtered frame gets its whole source's target
+    assert widen.pass_tasks(pts.where("point_id % 100 = 0")) == \
+        widen.pass_tasks(pts)
+    per_task = widen.PASS_ROWS_PER_TASK * widen.PASS_ROW_BYTES
+    for n_tasks in (base, base + 1, 10 * base):
+        monkeypatch.setattr(widen, "source_bytes",
+                            lambda df, b=n_tasks * per_task: b)
+        assert widen.pass_tasks(pts) == n_tasks
+        assert visibility.viewshed_metrics(pts) \
+            .rdd.getNumPartitions() == n_tasks

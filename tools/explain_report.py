@@ -53,10 +53,10 @@ QUERIES = _all_queries()
 
 # queries whose plan MUST be free of nested-loop/cartesian joins
 # (the round-1 all-pairs shapes were re-blocked into equi-joins).
-# The accessibility family intentionally keeps a broadcast cross of
-# the tiny park dim (candidate generation + map-side min-agg); it is
-# size-routed to the cell-index equi-join for large dims
-# (accessibility.euclidean_access_auto), so it is exempt here.
+# The Euclidean accessibility family scores the park dim it fetched
+# in one bounded collect inside an Arrow pass (no join at all); only
+# an empty or past-the-limit dim takes the cell-index equi-join
+# (accessibility.euclidean_access, pages_ops.exposure_of_pages).
 NO_BNLJ_REQUIRED = {
     "q_dedup_neardup", "q_embedding_neardup",
     "q_availability_ndvi", "q_cover_pct",
@@ -64,20 +64,17 @@ NO_BNLJ_REQUIRED = {
     # round 4: bbox candidate generation re-blocked into a bucketed
     # equi-join (2km grid key), so the cells side hash-joins
     "q_greenspace_shapes",
+    "q_exposure_combined", "q_accessibility_euclidean",
+    "q_exposure_pages",
+    # the observer generators explode, they join nothing
+    "q_visibility_rows",
 }
 
 # deliberate tiny-dim broadcast crosses (documented, size-routed or
 # candidate-bounded) — annotated instead of flagged
 EXEMPT_NOTE = {
-    "q_exposure_combined": "broadcast cross of the 60-row park dim, "
-                           "size-routed via euclidean_access_auto",
-    "q_accessibility_euclidean": "same broadcast park-dim cross",
     "q_knn_parks": "broadcast park-dim cross on the brute variant "
                "+ the cells variant's exact-fallback slice",
-    "q_exposure_pages": "broadcast cross only on the cell-index exact "
-                        "fallback slice (points with no indexed park "
-                        "within search_radius) against the tiny park "
-                        "dim",
     "q_network_subdivision": "range×range cross only inside the "
                              "fixture polyline generator (lattice "
                              "enumeration); the operators themselves "
@@ -95,11 +92,6 @@ EXEMPT_NOTE = {
     "q_street_green_cover": "street sample points × the tiny park "
                             "dim (broadcast) before the per-sample "
                             "min-distance aggregate",
-    "q_visibility_rows": "tiny broadcast crosses inside the "
-                         "visibility observers union (line/polygon "
-                         "observer generators against fixture dims); "
-                         "the viewshed kernels themselves are "
-                         "mapInPandas over the points side only",
 }
 
 CHECKS = {
