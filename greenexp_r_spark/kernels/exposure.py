@@ -16,23 +16,21 @@ import pandas as pd
 from .. import constants as C
 from . import ndvi_intervals as NI
 from . import vgvi as V
+from .budget import chunk_rows
 from .worldgrid import observer_patches
-
-# (row, park) squared distances held at once: 16 MB of int64
-PAIR_CAP = 1 << 21
 
 
 def nearest_d2(x: np.ndarray, y: np.ndarray, cx: np.ndarray,
-               cy: np.ndarray, cap: int = PAIR_CAP) -> np.ndarray:
+               cy: np.ndarray) -> np.ndarray:
     """Minimum squared distance from each (x, y) to the parks (cx, cy),
     computed as the shared SQL text `Dialect.dist2` does in both
     engines: subtract in double, truncate toward zero to int64, square
-    and add in int64.  Rows are taken in blocks of at most ``cap``
-    (row, park) pairs."""
+    and add in int64.  Rows are taken in chunks whose (row, park)
+    int64 differences fit the kernel budget (kernels/budget.py)."""
     if len(cx) == 0:
         raise ValueError("nearest_d2 needs at least one park")
     out = np.empty(len(x), np.int64)
-    step = max(1, cap // len(cx))
+    step = chunk_rows(8 * len(cx))
     for lo in range(0, len(x), step):
         sl = slice(lo, lo + step)
         dx = (x[sl, None] - cx[None, :]).astype(np.int64)
@@ -46,11 +44,12 @@ def vgvi_at(x: np.ndarray, y: np.ndarray,
             fun: int = 1, m: float = C.VGVI_M,
             b: float = C.VGVI_B) -> np.ndarray:
     """VGVI (vgvi_from_sf) of the synthetic world at observers (x, y),
-    KERNEL_BATCH observers per kernel call to bound patch memory."""
+    vgvi.obs_per_chunk(r) observers per kernel call."""
     r = int(round(max_distance / res))
+    step = V.obs_per_chunk(r)
     out = np.empty(len(x))
-    for lo in range(0, len(x), V.KERNEL_BATCH):
-        sl = slice(lo, lo + V.KERNEL_BATCH)
+    for lo in range(0, len(x), step):
+        sl = slice(lo, lo + step)
         dsm, gs, h0 = observer_patches(x[sl], y[sl], r, res)
         out[sl] = V.vgvi_batch(dsm, gs, h0, r, res, max_distance,
                                fun, m, b)

@@ -27,6 +27,8 @@ in an LRU of at most MAX_TILES tiles (CACHE_BYTES in all), whatever the
 number or spread of the points: points are taken in tile order, and a
 run of points whose tiles exceed the cap is halved until it fits.  Row prefixes of one tile
 fit in int32 because |v| ≤ 799 (v² ≤ 638,401; 128 · 638,401 < 2³¹).
+Points are taken in runs whose chord table fits the kernel budget
+(kernels/budget.py): 528 points of a 300 m disc at 10 m cells.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from collections import OrderedDict
 import numpy as np
 
 from .. import constants as C
+from .budget import chunk_rows
 
 TILE = 128
 MAX_TILES = 512
@@ -181,9 +184,10 @@ def _chords(x, y, r, res, square):
     return p, cj, a, b
 
 
-# points per chunk: ~CHORDS_PER_CHUNK chords, so the working set does
-# not grow with the Arrow batch
-CHORDS_PER_CHUNK = 1 << 18
+# the chord table's columns (point, row, both ends, x, dy², both clip
+# bounds), 8 bytes each: a chunk holds the kernel budget's worth of
+# chords, so the working set does not grow with the Arrow batch
+CHORD_BYTES = 8 * 8
 
 
 def disc_sums(x: np.ndarray, y: np.ndarray, buffer_m: float,
@@ -200,7 +204,7 @@ def disc_sums(x: np.ndarray, y: np.ndarray, buffer_m: float,
     order = np.argsort(_pack(np.floor(x / res).astype(np.int64) // TILE,
                              np.floor(y / res).astype(np.int64) // TILE),
                        kind="stable")
-    step = max(1, CHORDS_PER_CHUNK // int(2 * r / res + 2))
+    step = chunk_rows(CHORD_BYTES * int(2 * r / res + 2))
     todo = [(i, min(i + step, n)) for i in range(0, n, step)]
     out = np.zeros((3, n), np.int64)
     while todo:

@@ -35,20 +35,24 @@ from functools import lru_cache
 import numpy as np
 
 from . import lostrie
+from .budget import chunk_rows
 
 NEG = -9999.0
 
-# observers per numpy batch: bounds patch memory to ~500·(2r+1)²·8B
-# (~26 MB at r=40) regardless of partition size, keeping the kernel's
-# working set cache-friendly and partition-count-independent
-KERNEL_BATCH = 500
+
+def obs_per_chunk(r: int) -> int:
+    """Observers per kernel call at radius r: the budget over one
+    observer's row of the sweep's tangents (8 bytes a trie node)."""
+    return chunk_rows(8 * len(_trie_levels(r)[1]))
 
 
+@lru_cache(maxsize=64)
 def decay_weights(max_d: int, radius: float, fun: int, m: float,
                   b: float) -> np.ndarray:
     """Per-ring decay weights w[0..max_d-1] (vgvi.cpp:199-213):
     trapezoid integral with n=200 of f over [d - min_dist, d] where
-    d = ring/radius and min_dist = 1/radius."""
+    d = ring/radius and min_dist = 1/radius.  Cached: every kernel
+    call of one radius reuses them (callers must not write to them)."""
     n = 200
     d = np.arange(1, max_d + 1, dtype=float) / radius
     min_dist = d[0]
@@ -66,16 +70,23 @@ def decay_weights(max_d: int, radius: float, fun: int, m: float,
 
 @lru_cache(maxsize=4)
 def _trie_levels(r: int):
-    """The LoS trie of radius r (kernels/lostrie.py): the node ids of
-    each depth; each node's parent (-1 for a root), patch cell and
-    distance in cells; the node ids grouped by cell (1-5 a cell at
-    r=40), each group's start and cell."""
+    """The LoS trie of radius r (kernels/lostrie.py), its nodes
+    renumbered depth by depth: each depth's (start, stop) node range;
+    each node's parent (-1 for a root), patch cell and distance in
+    cells; the node ids grouped by cell (1-5 a cell at r=40), each
+    group's start and cell."""
     _, parent, dx, dy = lostrie.los_trie(r)
     depth = np.zeros(len(parent), np.int64)
     for i, p in enumerate(parent):    # parents precede children
         if p >= 0:
             depth[i] = depth[p] + 1
-    levels = [np.nonzero(depth == d)[0] for d in range(depth.max() + 1)]
+    order = np.argsort(depth, kind="stable")
+    new_id = np.empty_like(order)
+    new_id[order] = np.arange(len(order))
+    parent = np.where(parent[order] >= 0, new_id[parent[order]], -1)
+    dx, dy = dx[order], dy[order]
+    bounds = np.searchsorted(depth[order], np.arange(depth.max() + 2))
+    levels = list(zip(bounds[:-1].tolist(), bounds[1:].tolist()))
     cell = (r - dy) * (2 * r + 1) + (dx + r)
     # the float operations of sqrt((x0-col)² + (y0-row)²),
     # viewshed.cpp:146-149
@@ -96,7 +107,8 @@ def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
     The reference's ray sweep with the shared max_tan_vec (k_i==1 reset
     included) is the static LoS trie of kernels/lostrie.py, swept one
     depth at a time (r steps, not 8r rays); arrays are node-major
-    (nodes, observers), so parent gathers read contiguous rows.  The
+    (nodes, observers) with each depth's nodes contiguous, so a depth
+    is a slice and parent gathers read contiguous rows.  The
     mask is the ray sweep's bit for bit (tests/test_lostrie.py).
     """
     nobs = dsm_patches.shape[0]
@@ -112,17 +124,17 @@ def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
     act_idx = np.nonzero(active)[0]
     levels, parent, cell, dist, by_cell, starts, cells = _trie_levels(r)
     # tangent of every (node, observer)
-    t = np.ascontiguousarray(dsm_patches[act_idx][:, cell].T)
+    t = dsm_patches[act_idx].T[cell]
     t -= h0[act_idx][None, :]
     t /= dist[:, None]
-    # running maximum over each node and its ancestors
-    run = np.empty_like(t)
+    # each depth in turn: seen where the tangent beats the running
+    # maximum of the ancestors, then t becomes that running maximum
     seen = np.empty(t.shape, dtype=bool)
-    for d, idx in enumerate(levels):
-        tl = t[idx]
-        prev = run[parent[idx]] if d else np.full(tl.shape, NEG)
-        seen[idx] = tl > prev
-        run[idx] = np.maximum(prev, tl)
+    for d, (lo, hi) in enumerate(levels):
+        tl = t[lo:hi]
+        prev = t[parent[lo:hi]] if d else NEG
+        np.greater(tl, prev, out=seen[lo:hi])
+        np.maximum(prev, tl, out=tl)
     # a cell is visible when any node carrying it is
     seen = seen[by_cell]
     hit = seen[starts]
@@ -137,12 +149,29 @@ def viewshed_batch(dsm_patches: np.ndarray, h0: np.ndarray,
     return vis
 
 
+@lru_cache(maxsize=4)
+def _shifted_rings(r: int, res: float) -> np.ndarray:
+    """The ring index of each patch cell's 1-based neighbour (see
+    vgvi_batch); cached per (r, res), read-only."""
+    nc = 2 * r + 1
+    shifted = np.arange(nc * nc) + 1
+    s_rows, s_cols = divmod(shifted, nc)      # may run off the last row
+    # patch-center xy in patch coordinates (cell units → meters)
+    sx = (s_cols + 0.5) * res
+    sy = -(s_rows + 0.5) * res                # ymax - (row+0.5)res, ymax=0
+    ox = (r + 0.5) * res
+    oy = -(r + 0.5) * res
+    d_m = np.sqrt((ox - sx) ** 2 + (oy - sy) ** 2)
+    ring = np.floor(d_m + 0.5).astype(np.int64)   # round half away (d>0)
+    return np.maximum(ring, 1)
+
+
 def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
                h0: np.ndarray, r: int, res: float, radius: float,
                fun: int, m: float, b: float) -> np.ndarray:
     """VGVI per observer (vgvi.cpp part B), given patch heights,
-    greenspace mask patches and eye heights.  Returns (n_obs,) VGVI.
-    """
+    greenspace mask patches (bool, or 0/1 floats) and eye heights.
+    Returns (n_obs,) VGVI.  The mask is read at visible cells only."""
     nobs = dsm_patches.shape[0]
     nc = 2 * r + 1
     ncell = nc * nc
@@ -160,16 +189,7 @@ def vgvi_batch(dsm_patches: np.ndarray, gs_patches: np.ndarray,
     # set*, so multi-observer reference runs read a different (true
     # right-neighbor) cell there; parity is defined against the
     # per-observer crop, the only extent that is observer-independent.
-    shifted = np.arange(ncell) + 1
-    s_rows, s_cols = divmod(shifted, nc)      # may run off the last row
-    # patch-center xy in patch coordinates (cell units → meters)
-    sx = (s_cols + 0.5) * res
-    sy = -(s_rows + 0.5) * res                # ymax - (row+0.5)res, ymax=0
-    ox = (r + 0.5) * res
-    oy = -(r + 0.5) * res
-    d_m = np.sqrt((ox - sx) ** 2 + (oy - sy) ** 2)
-    ring = np.floor(d_m + 0.5).astype(np.int64)   # round half away (d>0)
-    ring = np.maximum(ring, 1)
+    ring = _shifted_rings(r, float(res))
 
     # per-(observer, ring) visible-cell and green counts in one pass
     obs, cell = np.nonzero(vis)

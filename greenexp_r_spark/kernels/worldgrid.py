@@ -82,20 +82,24 @@ def greenspace(x: np.ndarray, y: np.ndarray) -> np.ndarray:
 def patch_fields(cx: np.ndarray, ry: np.ndarray,
                  ox: np.ndarray, oy: np.ndarray,
                  reach: float) -> tuple[np.ndarray, np.ndarray]:
-    """(dsm, greenspace), each (n_obs, n_rows·n_cols), for per-observer
-    patches whose cell (row, col) sits at (cx[:, col], ry[:, row]).
+    """(dsm, park), each (n_obs, n_rows·n_cols), for per-observer
+    patches whose cell (row, col) sits at (cx[:, col], ry[:, row]):
+    the float64 heights of dsm() and the bool mask whose 0/1 floats
+    are greenspace().
 
     Every field is separable, so the sines, the building-block hash
     terms and the park-disc distances are evaluated once per column
     and once per row, then broadcast — the same IEEE operations, so
     the values are those of dsm()/greenspace() at each cell centre.
-    A park is tested only against observers its disc can reach
-    (centre distance ≤ radius + reach), the same candidate pruning as
-    the J7 join, applied inside the kernel."""
+    The DSM is the terrain plus the block heights zeroed inside parks,
+    added in place: base + 0.0 is base exactly (base ≥ 5).  A park is
+    tested only against observers its disc can reach (centre distance
+    ≤ radius + reach), the same candidate pruning as the J7 join,
+    applied inside the kernel."""
     n = len(cx)
     col = lambda a: a[:, None, :]
     row = lambda a: a[:, :, None]
-    base = 10.0 + col(5.0 * np.sin(cx / 2000.0)) * row(np.sin(ry / 2000.0))
+    dsm = 10.0 + col(5.0 * np.sin(cx / 2000.0)) * row(np.sin(ry / 2000.0))
     # building_height's hash as (column term + row term) mod BH_MOD,
     # each term reduced first (their sum fits uint32)
     hx, hy = ((np.floor(c / BLOCK).astype(np.int64) * mul % BH_MOD)
@@ -103,22 +107,28 @@ def patch_fields(cx: np.ndarray, ry: np.ndarray,
                                                 (ry, BH_MUL2)))
     h = col(hx) + row(hy)
     np.subtract(h, np.uint32(BH_MOD), out=h, where=h >= BH_MOD)
-    b = _HEIGHT_BY_H175[h % np.uint32(175)]
-    park = np.zeros(base.shape, dtype=bool)
-    for pcx, pcy, r in park_discs():
-        near = np.nonzero((ox - pcx) ** 2 + (oy - pcy) ** 2
-                          <= (r + reach) ** 2)[0]
-        if len(near):
-            park[near] |= (col((cx[near] - pcx) ** 2)
-                           + row((ry[near] - pcy) ** 2) <= r * r)
-    dsm = np.where(park, base, base + b)
-    return dsm.reshape(n, -1), park.reshape(n, -1).astype(float)
+    h %= np.uint32(175)
+    b = _HEIGHT_BY_H175[h]
+    del h
+    park = np.zeros(dsm.shape, dtype=bool)
+    discs = park_discs()
+    near = ((ox[:, None] - discs[:, 0]) ** 2
+            + (oy[:, None] - discs[:, 1]) ** 2
+            <= (discs[:, 2] + reach) ** 2)
+    for k in np.nonzero(near.any(axis=0))[0]:
+        pcx, pcy, r = discs[k]
+        obs = np.nonzero(near[:, k])[0]
+        park[obs] |= (col((cx[obs] - pcx) ** 2)
+                      + row((ry[obs] - pcy) ** 2) <= r * r)
+    b[park] = 0.0
+    dsm += b
+    return dsm.reshape(n, -1), park.reshape(n, -1)
 
 
 def observer_patches(xs: np.ndarray, ys: np.ndarray, r: int, res: float):
-    """Synthesize (n, (2r+1)²) DSM and greenspace patches centered on
-    each observer's cell center, plus eye heights (DTM + 1.7 m,
-    vgvi_from_sf.R:240-244)."""
+    """Synthesize (n, (2r+1)²) DSM patches and bool greenspace masks
+    centered on each observer's cell center, plus eye heights (DTM +
+    1.7 m, vgvi_from_sf.R:240-244)."""
     nc = 2 * r + 1
     # observer cell center on the world grid
     ccx = (np.floor(xs / res) + 0.5) * res

@@ -123,7 +123,8 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
 
       1. TRAIN — per-batch integer count partials over the
          NB_BUCKETS-sized feature space (bucket presence per doc via
-         `word_hashes_np` + np.unique; the stopword label per doc);
+         one np.unique over the batch's (doc, bucket) keys; the
+         stopword label per doc);
          the partials are summed per bucket in Spark, so the driver
          collects ≤ NB_BUCKETS rows whatever the task count, into the
          weight array (SCALE·(n_pos+1)) // (n_all+2) — same
@@ -136,15 +137,11 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
     `classify`/`nb_train` for external weight tables): distinct
     bucket sets per doc, exact integer sums, truncating division on
     positive operands."""
-    import numpy as np
     import pandas as pd
     from collections.abc import Iterator
     from pyspark.sql.types import (BooleanType, LongType, StructField,
                                    StructType)
 
-    from .dedup import word_hashes_np
-
-    B = C.NB_BUCKETS
     sel = docs.select("doc_id", "text")
     W = nb_weight_array(nb_bucket_counts(nb_count_partials(sel))
                         .toPandas())
@@ -161,21 +158,57 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         Wv = bc.value
         for pdf in it:
-            ids, nf, ev = [], [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                bk = np.unique(word_hashes_np(text) % B)
-                ids.append(did)
-                nf.append(len(bk))
-                ev.append(int(Wv[bk].sum()))
-            nfa = np.array(nf, dtype=np.int64)
-            eva = np.array(ev, dtype=np.int64)
+            nfa, eva = _nb_evidence(pdf["text"], Wv)
             sc_ = eva // nfa          # every doc has >= 1 bucket
             yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
+                "doc_id": pdf["doc_id"].astype("int64"),
                 "n_feat": nfa, "evidence_pm": eva, "score_pm": sc_,
                 "clf_keep": sc_ >= C.NB_KEEP_PM})
 
     return sel.mapInPandas(score, out_schema)
+
+
+def _doc_buckets(texts):
+    """(document index, bucket) of each document's distinct feature
+    buckets (word hash mod NB_BUCKETS), sorted by document, and each
+    word's owning document — one pass over the batch
+    (`dedup.batch_word_hashes`), no per-document Python."""
+    import numpy as np
+    from .dedup import batch_word_hashes
+    B = C.NB_BUCKETS
+    wh, owner = batch_word_hashes(texts)
+    u = np.unique(owner * B + wh % B)
+    return u // B, u % B, owner
+
+
+def _nb_evidence(texts, W):
+    """(n_feat, evidence) int64 per document: how many distinct buckets
+    it has and the sum of their weights W."""
+    import numpy as np
+    doc, bk, _ = _doc_buckets(texts)
+    nf = np.bincount(doc, minlength=len(texts)).astype(np.int64)
+    if not len(bk):                 # an empty batch
+        return nf, nf
+    # every document has a word, so a bucket: doc runs start at cumsum
+    return nf, np.add.reduceat(W[bk], np.cumsum(nf) - nf).astype(np.int64)
+
+
+def _nb_counts(texts):
+    """(n_all, n_pos) int64 per bucket over a batch: how many documents,
+    all and stopword-labelled (stopwords · NB_STOP_NUM ≥ words), have
+    a word in it."""
+    import numpy as np
+    import pandas as pd
+    B = C.NB_BUCKETS
+    texts = list(texts)
+    doc, bk, owner = _doc_buckets(texts)
+    words = pd.Series(" ".join(texts).split(" ") if texts else [],
+                      dtype=object)
+    stop = np.bincount(owner, weights=words.isin(C.STOPWORDS_EN),
+                       minlength=len(texts))
+    pos = stop * C.NB_STOP_NUM >= np.bincount(owner, minlength=len(texts))
+    return (np.bincount(bk, minlength=B).astype(np.int64),
+            np.bincount(bk[pos[doc]], minlength=B).astype(np.int64))
 
 
 def nb_count_partials(docs: DataFrame) -> DataFrame:
@@ -187,10 +220,7 @@ def nb_count_partials(docs: DataFrame) -> DataFrame:
     from collections.abc import Iterator
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .dedup import word_hashes_np
-
     B = C.NB_BUCKETS
-    stopset = frozenset(C.STOPWORDS_EN)
     cnt_schema = StructType([StructField("bucket", LongType()),
                              StructField("n_pos", LongType()),
                              StructField("n_all", LongType())])
@@ -199,14 +229,9 @@ def nb_count_partials(docs: DataFrame) -> DataFrame:
         allc = np.zeros(B, dtype=np.int64)
         posc = np.zeros(B, dtype=np.int64)
         for pdf in it:
-            for text in pdf["text"]:
-                ws = text.split(" ")
-                pos = (sum(w in stopset for w in ws) * C.NB_STOP_NUM
-                       >= len(ws))
-                bk = np.unique(word_hashes_np(text) % B)
-                allc[bk] += 1
-                if pos:
-                    posc[bk] += 1
+            a, p = _nb_counts(pdf["text"])
+            allc += a
+            posc += p
         nz = np.flatnonzero(allc)
         yield pd.DataFrame({"bucket": nz, "n_pos": posc[nz],
                             "n_all": allc[nz]})

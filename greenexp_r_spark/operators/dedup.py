@@ -126,6 +126,39 @@ def word_hashes_np(text: str):
     return c1 * C.WORDHASH_P1 + c2 * C.WORDHASH_P2 + lens
 
 
+def batch_word_hashes(texts):
+    """(word hashes, owning document index) of every word of a batch of
+    documents: `word_hashes_np` of each text, concatenated, computed in
+    one pass over the batch's joined characters.  Joined by single
+    spaces, the batch splits into exactly its documents' words; the
+    characters are bytes for an ASCII batch, else code points (UTF-32),
+    which is what Spark's ascii() and length() read."""
+    import numpy as np
+    texts = list(texts)
+    if not texts:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    joined = " ".join(texts)
+    try:
+        cp = np.frombuffer(joined.encode("ascii"), dtype=np.uint8)
+    except UnicodeEncodeError:
+        cp = np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
+                           dtype=np.uint32)
+    sp = np.flatnonzero(cp == 32)
+    starts = np.concatenate(([0], sp + 1))
+    lens = np.concatenate((sp, [len(cp)])) - starts
+    safe = max(len(cp) - 1, 0)
+    cc = cp if len(cp) else np.zeros(1, dtype=cp.dtype)
+    c1 = np.where(lens >= 1, cc[np.minimum(starts, safe)], 95) \
+        .astype(np.int64)
+    c2 = np.where(lens >= 2, cc[np.minimum(starts + 1, safe)],
+                  np.where(lens == 1, 95, 0)).astype(np.int64)
+    doc_start = np.zeros(len(texts), np.int64)
+    np.cumsum(np.fromiter((len(t) + 1 for t in texts[:-1]), np.int64,
+                          len(texts) - 1), out=doc_start[1:])
+    owner = np.searchsorted(doc_start, starts, side="right") - 1
+    return c1 * C.WORDHASH_P1 + c2 * C.WORDHASH_P2 + lens, owner
+
+
 def _doc_shingles_np(text: str):
     """One document's word-bigram shingle stream (pre-distinct):
     shingle = (wh_i·MUL + wh_{i+1}) mod P31 over `word_hashes_np`.
@@ -615,35 +648,44 @@ def simhash_pairs(corpus: DataFrame,
                   sh: DataFrame | None = None) -> DataFrame:
     """Pairs with simhash hamming distance ≤ 3, found by pigeonhole
     block LSH: a pair differing in ≤3 of 60 bits damages ≤3 of the
-    4 15-bit blocks, so it must agree on ≥1 — an equi-join whose
-    blocking keyspace is 32_768 values per block (candidate volume
-    stays O(n·dup_rate), not O(n²/16) like round 1's nibbles).
+    4 15-bit blocks, so it must agree on ≥1 — a bucket per (block,
+    value), 32_768 values per block (candidate volume stays
+    O(n·dup_rate), not O(n²/16) like round 1's nibbles).
 
-    One route at every size, all of it in the JVM after the signature
-    pass: the block self-join, distinct pairs, and the hamming
-    distance as bit_count(sim_a ^ sim_b).  A hot block is a wide join
-    key, which the sort-merge join spills and AQE's skew handling
-    splits; no task holds a bucket's pair matrix, and building the
-    plan runs no job.  Output: (doc_a, doc_b, hamming)."""
+    The buckets go to `bucket_verify` with a popcount kernel: the
+    signature pass feeds one bucket shuffle, so it runs once also over
+    a cached input (a self-join ran it once per join side there), and
+    a hot block is scored in blocks like the other near-dup operators'
+    buckets.  Building the plan runs no job.
+    Output: (doc_a, doc_b, hamming INT), doc_a < doc_b."""
+    from functools import partial
+
     sig = simhash_signatures(corpus, sh=sh)
     blk_arr = F.array(*[
-        F.shiftright(F.col("simhash"), C.SIMHASH_BLOCK_BITS * k)
-        .bitwiseAND((1 << C.SIMHASH_BLOCK_BITS) - 1)
+        F.struct(F.lit(k).alias("bk"),
+                 F.shiftright(F.col("simhash"), C.SIMHASH_BLOCK_BITS * k)
+                 .bitwiseAND((1 << C.SIMHASH_BLOCK_BITS) - 1).alias("bv"))
         for k in range(C.SIMHASH_BLOCKS)])
-    # one exchange on the block key under both join sides (a sort-merge
-    # join needs this distribution anyway): Spark reuses it, so the
-    # signature pass runs once.  Over a cached input AQE cannot match
-    # the two sides' cache stages and the pass runs once per side.
-    blk = sig.select("doc_id", "simhash",
-                     F.posexplode(blk_arr).alias("bk", "bv")) \
-        .repartition("bk", "bv")
-    l = blk.select(F.col("doc_id").alias("doc_a"),
-                   F.col("simhash").alias("sim_a"), "bk", "bv")
-    r = blk.select(F.col("doc_id").alias("doc_b"),
-                   F.col("simhash").alias("sim_b"), "bk", "bv")
-    cand = (l.join(r, ["bk", "bv"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "sim_a", "sim_b").distinct())
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (cand.select("doc_a", "doc_b", ham.alias("hamming"))
-            .where(F.col("hamming") <= max_hamming))
+    members = sig.select(F.explode(blk_arr).alias("bucket"),
+                         F.col("doc_id").alias("id"), "simhash")
+    pairs = bucket_verify(members,
+                          partial(_hamming_kernel, max_hamming=max_hamming),
+                          0.0, ("doc_a", "doc_b", "hamming"))
+    return pairs.where(F.col("doc_a") < F.col("doc_b")).select(
+        "doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
+
+
+def _hamming_kernel(fields, cap, max_hamming):
+    """`bucket_verify` kernel: the hamming distance of the members'
+    64-bit simhashes, NaN above ``max_hamming``."""
+    import numpy as np
+    sim = fields["simhash"].to_numpy().view(np.uint64)
+    ones = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None],
+                         axis=1).sum(axis=1)
+
+    def score(a0, a1, b0, b1):
+        x = sim[a0:a1, None] ^ sim[None, b0:b1]
+        ham = ones[x[..., None].view(np.uint8)].sum(axis=-1)
+        return np.where(ham <= max_hamming, ham, np.nan)
+
+    return score

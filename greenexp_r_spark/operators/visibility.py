@@ -28,13 +28,13 @@ from pyspark.sql.types import (DoubleType, LongType, StructField,
 
 from .. import constants as C
 from ..kernels import vgvi as K
+from ..kernels.budget import chunk_rows
 from ..kernels.exposure import vgvi_at
-from ..kernels.vgvi import KERNEL_BATCH
 from ..kernels.worldgrid import observer_patches
 from ..plans.widen import pass_tasks
 
 
-def _chunks(pdf: pd.DataFrame, size: int = KERNEL_BATCH):
+def _chunks(pdf: pd.DataFrame, size: int):
     for lo in range(0, len(pdf), size):
         yield pdf.iloc[lo:lo + size]
 
@@ -64,8 +64,9 @@ def viewshed_metrics(points: DataFrame,
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         mask = _disk_mask(r)
         disk = int(mask.sum())
+        step = K.obs_per_chunk(r)
         for full in it:
-            for pdf in _chunks(full):
+            for pdf in _chunks(full, step):
                 xs = pdf["x"].to_numpy()
                 ys = pdf["y"].to_numpy()
                 dsm, _, h0 = observer_patches(xs, ys, r, res)
@@ -112,8 +113,9 @@ def _viewshed_rows(obs: DataFrame, r: int, res: float,
     mrow, mcol = np.divmod(midx, 2 * r + 1)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        step = K.obs_per_chunk(r)
         for full in it:
-            for pdf in _chunks(full):
+            for pdf in _chunks(full, step):
                 xs = pdf["x"].to_numpy()
                 ys = pdf["y"].to_numpy()
                 vis = K.viewshed_batch(*heights(xs, ys), r)
@@ -289,9 +291,10 @@ def vgvi_from_address(points: DataFrame,
         sy = (y[:, None] + acc_dy).reshape(-1)
         return np.repeat(pid, need), sx, sy
 
-    # chunk so observers (points × 30 samples) per kernel call stay
-    # ≤ KERNEL_BATCH — bounds patch memory like the other kernels
-    pts_per_chunk = max(KERNEL_BATCH // sample_points, 1)
+    # addresses per chunk: the budget over an address's largest
+    # temporary, its block of 4·sample_points uint64 draws (vgvi_at
+    # chunks the observers itself)
+    pts_per_chunk = chunk_rows(8 * 4 * sample_points)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for full in it:

@@ -10,6 +10,7 @@ from .dialect import DUCK, Dialect
 from .functions import text as T
 from .operators import idw, network, overlay, streets
 from .registry import QSpec
+from .sources import pages as P
 
 ISO_SAMPLE_MOD = 25
 
@@ -649,7 +650,7 @@ def _q_crs_utm(s, sf):
     from .functions import crs as CR
 
     from .plans.widen import widen
-    docs = widen(s.read.parquet(f"{sf}/documents.parquet"))
+    docs = widen(P.documents_df(s, sf))
     base = docs.where(F.col("doc_id") % UTM_SAMPLE_MOD == 0).select(
         F.col("doc_id").alias("point_id"),
         F.expr(_LON_SQL).alias("lon"),

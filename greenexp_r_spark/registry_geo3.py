@@ -14,6 +14,7 @@ from .dialect import DUCK, Dialect
 from .kernels import concave as CK
 from .operators import netprep
 from .registry import QSpec, _buffer_cells_sql
+from .sources import pages as P
 
 # ------------------------------------------------------ concave parks
 #
@@ -224,8 +225,7 @@ def _run_shared_sql(s, sf, sql_text: str):
     # expose the driver parquet under that name for the Spark render
     # shared-SQL consumers are aggregation-shaped; A/B showed the
     # widen exchange slower than the raw scan (0.45 s vs 0.74 s)
-    s.read.parquet(f"{sf}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    P.documents_df(s, sf).createOrReplaceTempView("documents")
     return s.sql(sql_text)
 
 

@@ -12,11 +12,12 @@ from .functions import text as T
 from .operators import (classify, dedup, multimodal, pii, similarity,
                         splits, textqa)
 from .registry import QSpec
+from .sources import pages as P
 
 
 def _docs(spark, sf):
     from .plans.widen import widen
-    return widen(spark.read.parquet(f"{sf}/documents.parquet"))
+    return widen(P.documents_df(spark, sf))
 
 
 def _docs_raw(spark, sf):
@@ -27,7 +28,7 @@ def _docs_raw(spark, sf):
     internally are faster raw (q_seq_pack 0.31 vs 1.20, q_text_profile
     0.33 vs 0.48, q_line_dedup 1.07 vs 1.98, q_decontaminate 0.38 vs
     0.64, exact dedup 1.0 vs 2.5, multimodal codecs ~1 s less)."""
-    return spark.read.parquet(f"{sf}/documents.parquet")
+    return P.documents_df(spark, sf)
 
 
 def _emb(spark, sf):

@@ -56,6 +56,20 @@ WRAP_LEN = len(HTML_PRE) + len(HTML_POST)
 
 URL_ID_RE = "page/([0-9]+)$"           # url → doc id (geocoding key)
 
+# the driver's documents table, declared so that building a query over
+# it runs no schema-inference job
+DOCUMENTS_SCHEMA = ("doc_id BIGINT, text STRING, lang STRING, "
+                    "source STRING, n_chars BIGINT")
+
+
+def documents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The driver's ``documents`` parquet under DOCUMENTS_SCHEMA, the
+    one reader of it.  A column stored with another type is not
+    detected while the plan is built; reading it raises
+    FAILED_READ_FILE (tests/test_pages.py)."""
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(
+        f"{sf_dir}/documents.parquet")
+
 
 # the three capture generations: (offset seconds, keep predicate) over
 # the documents row; generation 0 captures every document
@@ -127,8 +141,7 @@ def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-side pages table (exact input_hint schema) from the
     driver's documents parquet."""
     from ..plans.widen import widen
-    return _pages_from_docs(
-        widen(spark.read.parquet(f"{sf_dir}/documents.parquet")))
+    return _pages_from_docs(widen(documents_df(spark, sf_dir)))
 
 
 def synthetic_pages(spark: SparkSession, n: int,

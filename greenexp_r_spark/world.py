@@ -241,7 +241,7 @@ def world_ctes(d: Dialect, *names: str) -> str:
 def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pages/address-point table from the driver's documents parquet."""
     from .plans.widen import widen
-    doc = widen(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    doc = widen(P.documents_df(spark, sf_dir))
     return doc.selectExpr(*_points_cols(), "text", "lang")
 
 

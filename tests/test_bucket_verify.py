@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from greenexp_r_spark import constants as C
 from greenexp_r_spark.operators import dedup, similarity
+from greenexp_r_spark.sources import pages as P
 from tests.conftest import SF_TEST
 from tests.test_round4_ops import all_pairs_jaccard
 
@@ -165,9 +166,10 @@ def test_building_near_dup_operators_runs_no_job(spark):
 
     sc = spark.sparkContext
     assert _build_jobs(sc, "near-dup-build", build) == 0
-    # the dedup union query: no job beyond reading its parquet schema
-    n_read = _build_jobs(sc, "parquet-read", lambda: spark.read.parquet(
-        f"{SF_TEST}/documents.parquet"))
+    # the dedup union query: no job (its documents schema is declared)
+    n_read = _build_jobs(sc, "parquet-read",
+                         lambda: P.documents_df(spark, SF_TEST))
+    assert n_read == 0
     assert _build_jobs(
         sc, "dedup-union-build",
         lambda: registry_pipeline._q_dedup_neardup_union(spark, SF_TEST)) \

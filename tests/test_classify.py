@@ -119,3 +119,42 @@ def test_incremental_never_pairs_within_a_side(spark):
         "doc_id long, text string")
     got = dedup.incremental_pairs(base, new).collect()
     assert got == []
+
+
+def _per_document_reference(texts, W):
+    """The per-document loops the batch kernels replaced:
+    np.unique(word_hashes_np(text) % B) and a Python stopword count."""
+    import numpy as np
+    B = C.NB_BUCKETS
+    stopset = frozenset(C.STOPWORDS_EN)
+    nf, ev = [], []
+    allc = np.zeros(B, dtype=np.int64)
+    posc = np.zeros(B, dtype=np.int64)
+    for text in texts:
+        bk = np.unique(dedup.word_hashes_np(text) % B)
+        nf.append(len(bk))
+        ev.append(int(W[bk].sum()))
+        ws = text.split(" ")
+        allc[bk] += 1
+        if sum(w in stopset for w in ws) * C.NB_STOP_NUM >= len(ws):
+            posc[bk] += 1
+    return np.array(nf), np.array(ev), allc, posc
+
+
+def test_batch_kernels_equal_the_per_document_loops():
+    import numpy as np
+    texts = ["", " ", "a", "a  b", "the cat of a dog", "x" * 70 + " y",
+             "héllo wörld the", "日本 語 of", "😀 ok and the", "ß",
+             "trailing ", " leading", "Ünïcödé  ünd the a"]
+    rng = np.random.default_rng(7)
+    W = rng.integers(0, 1000, C.NB_BUCKETS).astype(np.int64)
+    nf, ev, allc, posc = _per_document_reference(texts, W)
+    got_nf, got_ev = classify._nb_evidence(texts, W)
+    got_all, got_pos = classify._nb_counts(texts)
+    assert got_nf.tolist() == nf.tolist() and got_ev.tolist() == ev.tolist()
+    assert np.array_equal(got_all, allc) and np.array_equal(got_pos, posc)
+    # an all-ASCII batch takes the byte path
+    ascii_texts = [t for t in texts if t.isascii()]
+    nf, ev, allc, posc = _per_document_reference(ascii_texts, W)
+    assert classify._nb_evidence(ascii_texts, W)[1].tolist() == ev.tolist()
+    assert np.array_equal(classify._nb_counts(ascii_texts)[0], allc)

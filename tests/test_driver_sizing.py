@@ -16,6 +16,7 @@ from greenexp_r_spark.dialect import DUCK, SPARK
 from greenexp_r_spark.kernels.exposure import nearest_d2
 from greenexp_r_spark.operators import (accessibility, multimodal,
                                         substrdup, visibility)
+from greenexp_r_spark.sources import pages as P
 
 from .conftest import SF_TEST
 
@@ -136,8 +137,8 @@ def test_building_the_python_passes_runs_no_job(spark):
         substrdup.substring_dedup(docs)
 
     assert _jobs(sc, "passes-build", build)[1] == 0
-    _, n_read = _jobs(sc, "sizing-parquet-read", lambda: spark.read
-                      .parquet(f"{SF_TEST}/documents.parquet"))
+    _, n_read = _jobs(sc, "sizing-parquet-read",
+                      lambda: P.documents_df(spark, SF_TEST))
     assert _jobs(sc, "visibility-rows-build", lambda: registry
                  ._q_visibility_rows(spark, SF_TEST))[1] == n_read
     assert _jobs(sc, "euclid-build", lambda: accessibility

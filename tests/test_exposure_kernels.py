@@ -9,10 +9,13 @@ replaced, kept here as test oracles:
   separable patch synthesis against the full (n, (2r+1)²) evaluation
   and the level-wise LoS-trie viewshed against the sequential ray
   sweep, bit for bit at r=40 over 2,000 geocoded observers;
+* the traced peak of the exposure kernel against the kernel budget;
 * widen() on a source whose size cannot be read.
 """
 
 from __future__ import annotations
+
+import tracemalloc
 
 import numpy as np
 import pandas as pd
@@ -20,6 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from greenexp_r_spark import api, constants as C, world
+from greenexp_r_spark.kernels import budget, exposure as XK
 from greenexp_r_spark.kernels import ndvi_intervals as NI
 from greenexp_r_spark.kernels import vgvi as K, worldgrid as W
 from greenexp_r_spark.operators import availability
@@ -191,7 +195,7 @@ def _old_patches(xs, ys, r, res):
     building = np.where(h % 7 < 2, 6.0 + (h % 25).astype(float), 0.0)
     base = 10.0 + 5.0 * np.sin(px / 2000.0) * np.sin(py / 2000.0)
     dsm = np.where(park, base, base + building)
-    return dsm, park.astype(float), W.dtm(ccx, ccy) + C.OBSERVER_HEIGHT
+    return dsm, park, W.dtm(ccx, ccy) + C.OBSERVER_HEIGHT
 
 
 def _old_reduction(vis, gs_int, ring, radius, fun, m, b):
@@ -225,8 +229,9 @@ def observers():
 
 def test_viewshed_matches_ray_sweep_exposure_observers(observers):
     xs, ys = observers
-    for lo in range(0, len(xs), K.KERNEL_BATCH):
-        sl = slice(lo, lo + K.KERNEL_BATCH)
+    step = K.obs_per_chunk(R40)
+    for lo in range(0, len(xs), step):
+        sl = slice(lo, lo + step)
         dsm, _, h0 = W.observer_patches(xs[sl], ys[sl], R40, C.VIS_RES)
         got = K.viewshed_batch(dsm, h0, R40)
         assert got.tobytes() == ray_sweep(dsm, h0, R40).tobytes()
@@ -234,8 +239,9 @@ def test_viewshed_matches_ray_sweep_exposure_observers(observers):
 
 def test_separable_patches_byte_identical(observers):
     xs, ys = observers
-    for lo in range(0, len(xs), K.KERNEL_BATCH):
-        sl = slice(lo, lo + K.KERNEL_BATCH)
+    step = K.obs_per_chunk(R40)
+    for lo in range(0, len(xs), step):
+        sl = slice(lo, lo + step)
         got = W.observer_patches(xs[sl], ys[sl], R40, C.VIS_RES)
         want = _old_patches(xs[sl], ys[sl], R40, C.VIS_RES)
         for g, w in zip(got, want):
@@ -269,8 +275,9 @@ def test_vgvi_reduction_bit_identical(observers, fun):
     radius, m, b = C.VIS_MAX_DIST, C.VGVI_M, C.VGVI_B
     shifted, ring = _rings(r, res)
     ncell = len(ring)
-    for lo in range(0, len(xs), K.KERNEL_BATCH):
-        sl = slice(lo, lo + K.KERNEL_BATCH)
+    step = K.obs_per_chunk(R40)
+    for lo in range(0, len(xs), step):
+        sl = slice(lo, lo + step)
         dsm, gs, h0 = W.observer_patches(xs[sl], ys[sl], r, res)
         got = K.vgvi_batch(dsm, gs, h0, r, res, radius, fun, m, b)
         gs_int = np.zeros(gs.shape, np.int64)
@@ -296,6 +303,46 @@ def test_vgvi_reduction_max_d_one():
     want = _old_reduction(K.viewshed_batch(dsm, h0, r), gs_int, ring,
                           3.0, 1, 0.5, 8.0)
     assert got.tobytes() == want.tobytes() and got[1] == 1.0
+
+
+# ------------------------------------------------- kernel budget
+
+# what score keeps per row (its input and output frames and the
+# per-row columns between them), and how many budget-sized chunk
+# temporaries may be live at once
+FRAME_BYTES_PER_ROW = 256
+LIVE_CHUNKS = 8
+
+
+def _score_peak(n):
+    pid = np.arange(n, dtype=np.int64)
+    pdf = pd.DataFrame({
+        "point_id": pid,
+        "x": (((pid * C.X_MUL + C.X_ADD) % C.P31) % C.WORLD_SIZE) * 1.0,
+        "y": (((pid * C.Y_MUL + C.Y_ADD) % C.P31) % C.WORLD_SIZE) * 1.0})
+    discs = W.park_discs()
+    # the prefix tiles are a worker-lifetime cache with their own cap
+    # (test_prefix_memory_capped_on_scattered_input): load them first
+    XK.score(pdf, discs[:, 0], discs[:, 1], sample_mod=10)
+    tracemalloc.start()
+    try:
+        out = XK.score(pdf, discs[:, 0], discs[:, 1], sample_mod=10)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out["vgvi"].notna().sum() == n // 10
+    return peak
+
+
+@pytest.mark.parametrize("n", [5_000, 20_000])
+def test_score_memory_is_bounded_by_the_kernel_budget(n):
+    """The exposure kernel's traced peak is its frames plus a few
+    budget-sized chunks, however many rows and observers a batch
+    holds.  With 500-observer VGVI patches and 2^18-chord NDVI chunks
+    it was 117 MB at 5,000 rows and 169 MB at 20,000; in chunks sized
+    by the budget it is ~9 and ~10 MB."""
+    bound = LIVE_CHUNKS * budget.WORKSET_BYTES + FRAME_BYTES_PER_ROW * n
+    assert _score_peak(n) <= bound
 
 
 # ----------------------------------------------------------- widen

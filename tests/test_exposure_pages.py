@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .conftest import SF_TEST
 
 from greenexp_r_spark import constants as C, registry, world
-from greenexp_r_spark.kernels import exposure as XK
+from greenexp_r_spark.kernels import budget, exposure as XK
 from greenexp_r_spark.kernels import ndvi_intervals as NI
 from greenexp_r_spark.operators import (accessibility, availability,
                                         knn_cells, pages_ops, visibility)
@@ -106,13 +106,14 @@ def test_large_park_dim_takes_the_cell_index_route(spark, monkeypatch):
     pd.testing.assert_frame_equal(_by_url(df), want, check_exact=True)
 
 
-def test_nearest_d2_over_row_blocks():
-    """rows × parks far above the cap: blocks of a few rows each give
-    the brute-force BIGINT minimum (Dialect.dist2's truncation)."""
+def test_nearest_d2_over_row_blocks(monkeypatch):
+    """rows × parks far above the budget: blocks of a few rows each
+    give the brute-force BIGINT minimum (Dialect.dist2's truncation)."""
+    monkeypatch.setattr(budget, "WORKSET_BYTES", 800)
     rng = np.random.default_rng(5)
     x, y = rng.uniform(-2e4, 4e4, (2, 1_000))
     cx, cy = rng.uniform(0, 2e4, (2, 37))
-    got = XK.nearest_d2(x, y, cx, cy, cap=100)
+    got = XK.nearest_d2(x, y, cx, cy)
     want = [min(int(xi - a) ** 2 + int(yi - b) ** 2
                 for a, b in zip(cx, cy)) for xi, yi in zip(x, y)]
     assert got.tolist() == want
@@ -122,7 +123,8 @@ def test_nearest_d2_over_row_blocks():
 
 def test_one_pass_plan_and_build_jobs(spark):
     """One MapInPandas, no join, no checkpointed RDD; building the
-    DataFrame runs only the parquet schema read and the park collect."""
+    DataFrame runs only the park collect (the documents schema is
+    declared, so reading it runs no job)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
@@ -133,13 +135,13 @@ def test_one_pass_plan_and_build_jobs(spark):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
 
-    _, n_schema = jobs_of("expo-schema", lambda: spark.read.parquet(
-        f"{SF_TEST}/documents.parquet"))
+    _, n_schema = jobs_of("expo-schema",
+                          lambda: P.documents_df(spark, SF_TEST))
     _, n_parks = jobs_of("expo-parks", lambda: accessibility
                          .park_centroids(world.parks_df(spark)))
     df, n_build = jobs_of("expo-build", lambda: registry
                           .flagship_exposure_pages(spark, SF_TEST))
-    assert n_parks == 1
+    assert n_schema == 0 and n_parks == 1
     assert n_build == n_schema + n_parks
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1

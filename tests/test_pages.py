@@ -253,3 +253,31 @@ def test_exposure_over_pages_matches_families(spark):
                           m["closest_greenspace_ac"].values)
     assert (m["greenspace_in_buffer"]
             == m["greenspace_in_buffer_ac"]).all()
+
+
+def test_documents_reader_on_mistyped_columns(spark, tmp_path):
+    """The declared schema is what a build sees: a documents file whose
+    doc_id is stored as strings builds with BIGINT ids and fails when
+    read, with Spark's typed parquet mismatch; an INT32 n_chars is
+    widened to BIGINT."""
+    docs = {"doc_id": [1, 2], "text": ["a", "b"], "lang": ["en", "en"],
+            "source": ["s", "s"], "n_chars": [1, 1]}
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    pd.DataFrame(dict(docs, doc_id=["1", "2"])).to_parquet(
+        bad / "documents.parquet", index=False)
+    df = P.documents_df(spark, str(bad))
+    assert df.schema.simpleString() == (
+        "struct<doc_id:bigint,text:string,lang:string,source:string,"
+        "n_chars:bigint>")
+    try:
+        df.collect()
+        raise AssertionError("a string doc_id was read as BIGINT")
+    except Exception as e:    # py4j wraps the SparkException
+        assert "PARQUET_COLUMN_DATA_TYPE_MISMATCH" in str(e)
+    narrow = tmp_path / "narrow"
+    narrow.mkdir()
+    pd.DataFrame(dict(docs, n_chars=pd.array([3, 4], dtype="int32"))) \
+        .to_parquet(narrow / "documents.parquet", index=False)
+    got = P.documents_df(spark, str(narrow)).orderBy("doc_id").collect()
+    assert [(r.doc_id, r.n_chars) for r in got] == [(1, 3), (2, 4)]

@@ -129,34 +129,32 @@ def test_building_simhash_pairs_runs_no_job(spark):
     assert n_jobs == 0
 
 
-def _python_above_block_exchange(node, below=False):
-    """(python nodes above the (bk, bv) exchange, those below it)."""
+def _python_nodes(node):
+    """Python node names of an adaptive plan's query stages, a cached
+    relation's own plan excluded."""
     name = node.nodeName()
-    head = node.toString().split("\n")[0]
-    if name == "Exchange" and "hashpartitioning(bk#" in head:
-        below = True
-    above, under = [], []
-    if any(p in name for p in PYTHON_NODES):
-        (under if below else above).append(name)
+    if "QueryStage" in name:
+        return _python_nodes(node.plan())
+    out = [name] if any(p in name for p in PYTHON_NODES) else []
     kids = node.children()
     for i in range(kids.size()):
-        a, u = _python_above_block_exchange(kids.apply(i), below)
-        above += a
-        under += u
-    return above, under
+        out += _python_nodes(kids.apply(i))
+    return out
 
 
-def test_simhash_verify_plan_is_jvm_only(spark):
-    """The signature pass is the plan's only Python; everything from
-    the block exchange up (join, distinct, bit_count) runs in the JVM,
-    and on an uncached input both join sides share the exchange, so
-    the pass runs once."""
+def test_simhash_pairs_run_one_signature_pass(spark):
+    """The block buckets go to bucket_verify: over a cached input the
+    plan is one signature pass, one bucket shuffle and one verify pass,
+    with no join (a block self-join ran the signature pass once per
+    join side there)."""
     aug = dedup.augmented_corpus(
-        spark.read.parquet(f"{SF_TEST}/documents.parquet"))
-    df = dedup.simhash_pairs(aug)
-    initial = df._jdf.queryExecution().executedPlan().executedPlan()
-    above, under = _python_above_block_exchange(initial)
-    assert above == [] and under == ["MapInPandas", "MapInPandas"]
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().executedPlan()
-    assert "ReusedExchange" in final.toString()
+        spark.read.parquet(f"{SF_TEST}/documents.parquet")).persist()
+    try:
+        aug.count()
+        df = dedup.simhash_pairs(aug)
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().executedPlan()
+        assert sorted(_python_nodes(final)) == ["MapInArrow", "MapInPandas"]
+        assert "Join" not in final.toString()
+    finally:
+        aug.unpersist()

@@ -92,6 +92,10 @@ EXEMPT_NOTE = {
     "q_street_green_cover": "street sample points × the tiny park "
                             "dim (broadcast) before the per-sample "
                             "min-distance aggregate",
+    "q_quality_classifier": "BM25's (document, term) rows × the "
+                            "one-row corpus statistics (document "
+                            "count, mean length; broadcast) before "
+                            "the per-document score sum",
 }
 
 CHECKS = {
